@@ -47,9 +47,7 @@ object VolumeStreams {
     import spark.implicits._
     require(format == "graftchunks" || format == "zarr" || format == "zarr3",
       s"unknown ingest format: $format")
-    val outMeta = inputMeta.copy(
-      dimZ = inputMeta.dimZ * s, dimY = inputMeta.dimY * s, dimX = inputMeta.dimX * s,
-      ncz = inputMeta.ncz * s, ncy = inputMeta.ncy * s, ncx = inputMeta.ncx * s)
+    val outMeta = inputMeta.upscaled(s)
     ChunkVolume.writeSidecar(outDir + "/", outMeta, Map("scale" -> s.toString, "streaming" -> "true"))
     spark.readStream
       .schema(chunkSchema)

@@ -12,66 +12,32 @@ package graft.volume
   */
 object ChunkKernels {
 
-  /** Nearest-neighbor ×s upscale of one chunk, emitted as s³ ALIGNED child
+  /** Nearest-neighbor ×s upscale of one chunk, emitted as ALIGNED child
     * chunks each with the parent's dims — so the output chunk grid is the
     * s-fold subdivision of the input grid and NO shuffle/rechunk is needed
     * at any scale (unlike the reference, which rechunks the 3375×-larger
     * array back to input chunk shape — Screenshots/upscale_streaming.png).
-    *
     * Child (i,j,k) covers global z ∈ [s·z0 + i·nz, s·z0 + (i+1)·nz).
     * Returns (i, j, k, childData) tuples.
-    */
-  def upscaleChildren(
-      data: Array[Byte],
-      nz: Int,
-      ny: Int,
-      nx: Int,
-      bpp: Int,
-      s: Int,
-  ): Iterator[(Int, Int, Int, Array[Byte])] =
-    upscaleChildrenImpl(data, nz, ny, nx, bpp, s, reuse = false)
-
-  /** Allocation-free twin of [[upscaleChildren]]: every emitted tuple
-    * SHARES one child buffer, overwritten on each `next()`. The JVM
-    * zeroing of s³ fresh child arrays is a full extra write pass over the
-    * upscaled volume (measured 46% of the kernel single-thread: 2.57 s
-    * zeroing vs 5.58 s total per ×15 chunk-set — ProfVolR21, r21), and at
-    * 32 threads that pass is pure memory-bandwidth, so eliding it moves
-    * the wall clock where instruction-count tuning cannot.
     *
+    * Emits only the children with z-index i ∈ [iLo, iHi) (all s³ when
+    * iLo = 0, iHi = s), from a source Z-SLAB: `data` holds the chunk's
+    * source rows from `srcZOff` on in C order, while nz/ny/nx stay the FULL
+    * chunk dims. The kernel touches source z ∈ [⌊iLo·nz/s⌋, ⌊(iHi·nz−1)/s⌋],
+    * which the caller must cover. This lets MhdReader.readUpscaled plan a
+    * ×s upscale as one task per (chunk, child z-slab).
+    *
+    * `reuse = true` makes every emitted tuple SHARE one child buffer,
+    * overwritten on each `next()`: it elides the JVM zeroing of s³ fresh
+    * arrays, measured at 46% of the ×15 kernel (OPTIMIZATION_r21.md §6).
     * CONTRACT: callers must fully consume each child (encode/write/fold)
     * before advancing the iterator, and must never retain, collect, sort
-    * or shuffle the emitted arrays. Safe for the strictly-streaming
-    * object-chained sink pipelines (ChunkStore/ZarrStore/Zarr3Store
-    * foreachPartition writers); NOT for general Dataset lineage — which
-    * is why [[ChunkVolume.upscale]] only uses it behind the explicit
-    * `reuseChildBuffers` opt-in. Every byte of the shared buffer is
+    * or shuffle the emitted arrays — safe for the strictly-streaming
+    * foreachPartition sink writers, NOT for general Dataset lineage (see
+    * [[ChunkVolume.upscale]]). Every byte of the shared buffer is
     * overwritten for every child (each output row is either arraycopied
     * from an earlier row of the SAME child or element-filled in full),
-    * pinned by UpscaleReuseSpec against the allocating form.
-    */
-  def upscaleChildrenReusing(
-      data: Array[Byte],
-      nz: Int,
-      ny: Int,
-      nx: Int,
-      bpp: Int,
-      s: Int,
-  ): Iterator[(Int, Int, Int, Array[Byte])] =
-    upscaleChildrenImpl(data, nz, ny, nx, bpp, s, reuse = true)
-
-  /** Child-SLAB form of [[upscaleChildren]]: emits only children with
-    * z-index i ∈ [iLo, iHi), generated from a source Z-SLAB instead of the
-    * whole chunk — `data` holds the chunk's source rows [srcZOff,
-    * srcZOff + slabNz) in C order (nz/ny/nx stay the FULL chunk dims; the
-    * kernel only ever touches source z ∈ [⌊iLo·nz/s⌋, ⌊(iHi·nz−1)/s⌋],
-    * which the caller must cover). Bytes are identical to the
-    * corresponding children of the whole-chunk form (UpscaleSlabSpec) —
-    * this exists so a ×s upscale can be planned as nChunks·s independent
-    * tasks (one per (chunk, child-z-slab)) instead of nChunks: with
-    * near-equal whole-chunk tasks the scheduler quantizes into waves
-    * (measured 86.9% core occupancy on the ×15 headline — ProfWaveR21,
-    * r21), while slab tasks pack tightly at any core count.
+    * pinned by UpscaleIdentitySpec against the allocating form.
     */
   def upscaleChildrenSlab(
       data: Array[Byte],
@@ -84,28 +50,13 @@ object ChunkKernels {
       iLo: Int,
       iHi: Int,
       reuse: Boolean,
-  ): Iterator[(Int, Int, Int, Array[Byte])] =
-    upscaleChildrenImpl(data, nz, ny, nx, bpp, s, reuse, iLo, iHi, srcZOff)
-
-  private def upscaleChildrenImpl(
-      data: Array[Byte],
-      nz: Int,
-      ny: Int,
-      nx: Int,
-      bpp: Int,
-      s: Int,
-      reuse: Boolean,
-      iLo: Int = 0,
-      iHi: Int = -1, // -1 = s (default: all children)
-      srcZOff: Int = 0,
   ): Iterator[(Int, Int, Int, Array[Byte])] = {
     require(s >= 1, s"scale must be >= 1, got $s")
-    val iEnd = if (iHi < 0) s else iHi
     val srcRowBytes = nx * bpp
     val outRowBytes = nx * bpp // child dims == parent dims
     var shared: Array[Byte] = null
     for {
-      i <- Iterator.range(iLo, iEnd)
+      i <- Iterator.range(iLo, iHi)
       j <- Iterator.range(0, s)
       k <- Iterator.range(0, s)
     } yield {

@@ -17,7 +17,18 @@ final case class Chunk(
     z0: Long, y0: Long, x0: Long,
     nz: Int, ny: Int, nx: Int,
     data: Array[Byte],
-)
+) {
+  /** Child (i, j, k) of this chunk under a ×s upscale: one cell of the
+    * s-fold subdivision of its grid cell, with this chunk's dims. Only the
+    * position and dims are read, never `data`.
+    */
+  def child(s: Int)(c: (Int, Int, Int, Array[Byte])): Chunk = {
+    val (i, j, k, out) = c
+    Chunk(cz * s + i, cy * s + j, cx * s + k,
+      z0 * s + i.toLong * nz, y0 * s + j.toLong * ny, x0 * s + k.toLong * nx,
+      nz, ny, nx, out)
+  }
+}
 
 /** Volume-level metadata carried on the driver (the Spark analog of the
   * reference's MHD-header dict + dask chunk grid — SURVEY.md §1.1).
@@ -33,6 +44,10 @@ final case class VolumeMeta(
   def isUnsigned: Boolean = elementType.startsWith("MET_U")
   def isFloating: Boolean = elementType == "MET_FLOAT" || elementType == "MET_DOUBLE"
   def nVoxels: Long = dimZ * dimY * dimX
+
+  /** The s-fold subdivision of this grid: the meta of a ×s upscale. */
+  def upscaled(s: Int): VolumeMeta = copy(
+    dimZ = dimZ * s, dimY = dimY * s, dimX = dimX * s, ncz = ncz * s, ncy = ncy * s, ncx = ncx * s)
 }
 
 /** A distributed dense 3D volume: Dataset[Chunk] + metadata. The engine's
@@ -48,41 +63,27 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   /** Nearest-neighbor ×s upscale (T1 scale path): each chunk emits s³
     * aligned child chunks — embarrassingly parallel, zero shuffle,
     * unlike the reference's output rechunk (upscale_streaming.py:126).
+    *
+    * `reuseChildBuffers = true` emits every child in ONE shared per-task
+    * buffer, eliding the JVM zeroing of s³ fresh arrays per input chunk —
+    * a full extra memory-write pass over the upscaled volume (46% of the
+    * ×15 kernel single-thread, OPTIMIZATION_r21.md §6). OPT-IN ONLY: the
+    * downstream plan must be a strictly-streaming object chain that fully
+    * consumes each chunk before the next (the foreachPartition sink
+    * writers are; any plan that retains, collects, sorts or shuffles Chunk
+    * objects is NOT). UpscaleIdentitySpec pins store-byte identity between
+    * the two forms through every sink.
     */
-  def upscale(s: Int): ChunkVolume = upscale(s, reuseChildBuffers = false)
-
-  /** `reuseChildBuffers = true` emits every child chunk in ONE shared
-    * per-task buffer (ChunkKernels.upscaleChildrenReusing) — eliding the
-    * JVM zeroing of s³ fresh arrays per input chunk, a full extra
-    * memory-write pass over the upscaled volume (46% of the ×15 kernel
-    * single-thread; ProfVolR21 r21). OPT-IN ONLY: the downstream plan
-    * must be a strictly-streaming object chain that fully consumes each
-    * chunk before the next (the foreachPartition sink writers are; any
-    * plan that retains, collects, sorts or shuffles Chunk objects is
-    * NOT). Gated queries and general lineage keep the allocating default;
-    * UpscaleReuseSpec pins store-byte identity between the two forms
-    * through every sink.
-    */
-  def upscale(s: Int, reuseChildBuffers: Boolean): ChunkVolume = {
+  def upscale(s: Int, reuseChildBuffers: Boolean = false): ChunkVolume = {
     require(s >= 1, s"scale must be >= 1, got $s")
     if (s == 1) return this
     val bpp = meta.bytesPerVoxel
     import chunks.sparkSession.implicits._
     val out = chunks.flatMap { c =>
-      val children =
-        if (reuseChildBuffers) ChunkKernels.upscaleChildrenReusing(c.data, c.nz, c.ny, c.nx, bpp, s)
-        else ChunkKernels.upscaleChildren(c.data, c.nz, c.ny, c.nx, bpp, s)
-      children.map {
-        case (i, j, k, child) =>
-          Chunk(
-            c.cz * s + i, c.cy * s + j, c.cx * s + k,
-            c.z0 * s + i.toLong * c.nz, c.y0 * s + j.toLong * c.ny, c.x0 * s + k.toLong * c.nx,
-            c.nz, c.ny, c.nx, child)
-      }
+      ChunkKernels.upscaleChildrenSlab(c.data, 0, c.nz, c.ny, c.nx, bpp, s,
+        iLo = 0, iHi = s, reuse = reuseChildBuffers).map(c.child(s))
     }
-    ChunkVolume(out, meta.copy(
-      dimZ = meta.dimZ * s, dimY = meta.dimY * s, dimX = meta.dimX * s,
-      ncz = meta.ncz * s, ncy = meta.ncy * s, ncx = meta.ncx * s))
+    ChunkVolume(out, meta.upscaled(s))
   }
 
   /** Stride-2 decimation (T3) on the global lattice; chunk-local. */
@@ -591,9 +592,15 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     * materializing rows): each upscaled child chunk joins its parent
     * chunk (a join over CHUNK rows, |chunks|·s³ of them, not voxels) and
     * a byte kernel asserts label preservation element-wise. Returns
-    * one row: (n_checked, n_match).
+    * one row: (n_checked, n_match). `up` must be on the s-fold
+    * subdivision of this grid (dims ×s, same chunk shape, grid counts ×s),
+    * else the join would silently drop children: IllegalArgumentException.
     */
   def verifyUpscale(up: ChunkVolume, s: Int): DataFrame = {
+    def grid(m: VolumeMeta) = s"dims (${m.dimZ},${m.dimY},${m.dimX}) " +
+      s"chunks (${m.chunkZ},${m.chunkY},${m.chunkX}) grid (${m.ncz},${m.ncy},${m.ncx})"
+    require(grid(up.meta) == grid(meta.upscaled(s)),
+      s"verifyUpscale: ${grid(up.meta)} is not the x$s subdivision of ${grid(meta)}")
     val bpp = meta.bytesPerVoxel
     import chunks.sparkSession.implicits._
     val parents = chunks

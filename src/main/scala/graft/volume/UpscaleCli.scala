@@ -116,15 +116,12 @@ object UpscaleCli {
     // ChunkVolume.upscale's contract
     val sinkStreams = a.mode != "outline" && a.pyramidLevels == 1 &&
       a.format != "zarr3-sharded"
-    // straight MHD upscale→sink flows take the fused child-slab task plan
-    // (MhdReader.readUpscaled): identical chunks/bytes, finer scheduler
-    // granularity (r21 — the per-chunk plan quantizes into task waves)
+    // MHD input takes the child-slab task plan (MhdReader.readUpscaled);
+    // TIFF pages are read whole, then upscaled
     val upscaled =
       if (isTiff) Tiff.read(spark, a.input).upscale(a.scale, reuseChildBuffers = sinkStreams)
-      else if (sinkStreams)
-        MhdReader.readUpscaled(spark, meta, chunks._1, chunks._2, chunks._3,
-          a.scale, reuseChildBuffers = true)
-      else MhdReader.read(spark, meta, chunks._1, chunks._2, chunks._3).upscale(a.scale)
+      else MhdReader.readUpscaled(spark, meta, chunks._1, chunks._2, chunks._3,
+        a.scale, reuseChildBuffers = sinkStreams)
     val processed = if (a.mode == "outline") upscaled.outline() else upscaled
     out += s"Upscaled shape (z,y,x): (${z * a.scale}, ${y * a.scale}, ${x * a.scale})"
     val provenance = Map(

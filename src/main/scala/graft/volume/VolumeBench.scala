@@ -73,13 +73,10 @@ object VolumeBench {
   def upscale(spark: SparkSession, mhdPath: String, s: Int, outDir: String): Double = {
     val meta = MhdMeta.parse(mhdPath)
     val t0 = System.nanoTime()
-    // readUpscaled: the fused child-slab task plan (one unit per
-    // (chunk, child z-slab) instead of per chunk) — same chunks, bytes and
-    // store as read(...).upscale(s), finer scheduler granularity
-    // (ProfWaveR21 measured the per-chunk plan at 86.9% core occupancy).
-    // reuseChildBuffers: the sink is a strictly-streaming foreachPartition
-    // writer, so the kernel's child buffers are safely shared (elides the
-    // zeroing pass - ChunkVolume.upscale scaladoc, r21)
+    // readUpscaled: the MHD plan, one task unit per (chunk, child z-slab)
+    // (MhdReader scaladoc). reuseChildBuffers: the sink is a
+    // strictly-streaming foreachPartition writer, so the kernel's child
+    // buffers are safely shared (elides the zeroing pass, OPTIMIZATION_r21.md §6)
     val vol = MhdReader.readUpscaled(spark, meta, chunkZ = 8,
       chunkY = meta.dimY.toInt, chunkX = meta.dimX.toInt, s, reuseChildBuffers = true)
     ChunkStore.write(vol, outDir,

@@ -45,7 +45,8 @@ class ChunkKernelsSpec extends AnyFunSuite {
     for (nz <- 1 to 4; ny <- 1 to 4; nx <- 1 to 4; s <- 1 to 3) {
       def label(z: Int, y: Int, x: Int): Long = (z * 100 + y * 10 + x + 7).toLong
       val data = pack(nz, ny, nx, label)
-      val children = ChunkKernels.upscaleChildren(data, nz, ny, nx, 4, s).toSeq
+      val children = ChunkKernels.upscaleChildrenSlab(data, 0, nz, ny, nx, 4, s,
+        iLo = 0, iHi = s, reuse = false).toSeq
       assert(children.size === s * s * s)
       for ((i, j, k, child) <- children; zc <- 0 until nz; yc <- 0 until ny; xc <- 0 until nx) {
         val gz = i * nz + zc; val gy = j * ny + yc; val gx = k * nx + xc

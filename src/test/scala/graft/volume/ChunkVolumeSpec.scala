@@ -50,6 +50,16 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("verifyUpscale: checks every voxel on the x2 subdivision, rejects another grid") {
+    val n = dz * dy * dx * 8
+    val r = vol.verifyUpscale(vol.upscale(2), 2).collect().head
+    assert((r.getLong(0), r.getLong(1)) === ((n, n)))
+    // same dims, other chunk shape: the chunk join would drop children
+    val regridded = vol.upscale(2).rechunk(10, 8, 12)
+    val e = intercept[IllegalArgumentException](vol.verifyUpscale(regridded, 2))
+    assert(e.getMessage.contains("chunks (10,8,12)") && e.getMessage.contains("chunks (5,4,6)"))
+  }
+
   test("pyramid: level i+1 (z,y,x) == level i (2z,2y,2x)") {
     val pyr = vol.pyramid(3).map(v => collectVox(v.toVoxels))
     for (i <- 0 until 2; ((z, y, x), l) <- pyr(i + 1)) {

@@ -3,7 +3,7 @@ package graft.volume
 import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end lifecycle test (FIXTURES.md: replicate the screenshot
@@ -26,6 +26,15 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
          |ElementDataFile = f.raw
          |""".stripMargin)
     dir
+  }
+
+  /** The CLI's `--scale 2 --chunk-mb 1` MHD flow built by hand on the
+    * composed plan: `read(…).upscale(2)` on the CLI's chunk grid.
+    */
+  private def composedX2: ChunkVolume = {
+    val meta = MhdMeta.parse(fixtureDir.resolve("f.mhd").toString)
+    val (cz, cy, cx) = ChunkPlanner.chooseChunks(meta.shapeZyx, meta.bytesPerVoxel, 1)
+    MhdReader.read(spark, meta, cz, cy, cx).upscale(2)
   }
 
   test("full lifecycle: transcript lines, written store, label preservation") {
@@ -122,6 +131,13 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     def nFiles(p: String): Long =
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).filter(Files.isRegularFile(_)).count()
     assert(nFiles(outSh) < nFiles(plain))
+    // chunk files byte-identical to the composed plan's
+    val ref = fixtureDir.resolve("out_zarr3_sharded_ref")
+    val up = composedX2
+    val m = up.meta
+    Zarr3Store.writeSharded(up.rechunk(m.chunkZ * 2, m.chunkY * 2, m.chunkX * 2), ref.toString,
+      innerShape = (m.chunkZ, m.chunkY, m.chunkX), UpscaleCli.zarrCodec("zstd"))
+    UpscaleIdentitySpec.assertSameStore(ref, Paths.get(outSh), chunkFilesOnly = true)
   }
 
   test("--compressor lz4: the reference CLI's Blosc(lz4, BITSHUFFLE) output end-to-end") {
@@ -173,6 +189,11 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     val l0 = PyramidWriter.readLevel(spark, outP, 0)
     val l1 = PyramidWriter.readLevel(spark, outP, 1)
     assert(l0.meta.dimZ === 12 && l1.meta.dimZ === 6)
+    // chunk files byte-identical to the composed plan's
+    val ref = fixtureDir.resolve("pyr_ref")
+    PyramidWriter.write(composedX2.outline(), 2, ref.toString, 2,
+      UpscaleCli.zarrCodec("zstd"))
+    UpscaleIdentitySpec.assertSameStore(ref, Paths.get(outP), chunkFilesOnly = true)
   }
 
   test("argument parsing: flags, validation, unknown rejection") {
