@@ -729,8 +729,8 @@ object ZarrStore {
   }
 
   /** Validate, pad, and compress ONE chunk to its zarr file bytes WITHOUT
-    * writing — split from [[encodeChunkFile]] so the bench can isolate
-    * codec CPU from file I/O (vol_atlas_x15_stage_encode).
+    * writing — split from [[encodeChunkFile]] so the v2 writer and the
+    * v3 writers (`Zarr3Store`, plain and sharded) share one encoder.
     */
   private[graft] def encodeChunkBytes(c: Chunk, meta: VolumeMeta, codec: Codec): Array[Byte] = {
     val (ckZ, ckY, ckX) = (meta.chunkZ, meta.chunkY, meta.chunkX)

@@ -33,7 +33,8 @@ def parse_bench(path):
     out of the driver's captured stdout (the `tail` field). The capture
     window is byte-bounded from the left, so the first lines (and the
     long `total` line's head) may be cut — parse whatever JSON objects
-    survive whole."""
+    survive whole. When no volume_headline or atlas_summary survives, the
+    headline medians come from total_summary's `headlines` map."""
     with open(path) as f:
         doc = json.load(f)
     vol, atlas, tot, summary = None, None, None, None
@@ -59,9 +60,12 @@ def parse_bench(path):
     # (no _runN samples, so spread() renders nothing), always short
     # enough to survive alongside total_summary
     vol = vol or atlas
+    headline_src = summary or doc.get("parsed") or {}
+    if not vol and "headlines" in headline_src:
+        vol = {"queries": headline_src["headlines"]}
     if not vol:
         sys.exit(f"could not find a volume_headline or atlas_summary "
-                 f"JSON line in {path}")
+                 f"JSON line, or total_summary headlines, in {path}")
     return vol, tot, summary
 
 
