@@ -13,6 +13,7 @@ import java.nio.file.{Files, Paths}
   * the independent python encoder.
   */
 class Zarr3Spec extends AnyFunSuite with SparkSpec {
+  import ZarrStoreSpec.{relFiles, words}
 
   private def tmp(): String = {
     val d = Files.createTempDirectory("graft_z3spec")
@@ -37,6 +38,127 @@ class Zarr3Spec extends AnyFunSuite with SparkSpec {
       assert(Files.exists(Paths.get(p, "zarr.json")))
       assert(Files.exists(Paths.get(p, "c", "0", "0", "0"))) // v3 key layout
     }
+  }
+
+  test("format goldens: zarr.json (plain, sharded, NGFF 0.5 group) and every v3 writer's file list") {
+    val svol = ZarrStoreSpec.goldenVol(spark)
+    val plain = tmp()
+    Zarr3Store.write(svol, plain, BloscCodec("zstd", 5, 2),
+      Map("graft:source" -> "atlas \"x\".mhd", "k" -> "v"))
+    assert(Files.readString(Paths.get(plain, "zarr.json")) ===
+        """{
+        |    "zarr_format": 3,
+        |    "node_type": "array",
+        |    "shape": [7, 6, 5],
+        |    "data_type": "uint32",
+        |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [3, 4, 2]}},
+        |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+        |    "fill_value": 0,
+        |    "codecs": [
+        |        {"name": "bytes", "configuration": {"endian": "little"}},
+        |        {"name": "blosc", "configuration": {"cname": "zstd", "clevel": 5, "shuffle": "bitshuffle", "typesize": 4, "blocksize": 0}}
+        |    ],
+        |    "attributes": {"graft:source": "atlas \"x\".mhd", "k": "v"}
+        |}""".stripMargin)
+    assert(relFiles(plain) === words(
+      "c/0/0/0 c/0/0/1 c/0/0/2 c/0/1/0 c/0/1/1 c/0/1/2 c/1/0/0 c/1/0/1 c/1/0/2 " +
+      "c/1/1/0 c/1/1/1 c/1/1/2 c/2/0/0 c/2/0/1 c/2/0/2 c/2/1/0 c/2/1/1 c/2/1/2 " +
+      "zarr.json"))
+    val sharded = tmp()
+    Zarr3Store.writeSharded(svol, sharded, (3, 2, 1), GzipCodec(6))
+    assert(Files.readString(Paths.get(sharded, "zarr.json")) ===
+        """{
+        |    "zarr_format": 3,
+        |    "node_type": "array",
+        |    "shape": [7, 6, 5],
+        |    "data_type": "uint32",
+        |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [3, 4, 2]}},
+        |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+        |    "fill_value": 0,
+        |    "codecs": [
+        |        {"name": "sharding_indexed", "configuration": {"chunk_shape": [3, 2, 1], "codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": "gzip", "configuration": {"level": 6}}], "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": "crc32c"}], "index_location": "end"}}
+        |    ],
+        |    "attributes": {}
+        |}""".stripMargin)
+    assert(relFiles(sharded) === words(
+      "c/0/0/0 c/0/0/1 c/0/0/2 c/0/1/0 c/0/1/1 c/0/1/2 c/1/0/0 c/1/0/1 c/1/0/2 " +
+      "c/1/1/0 c/1/1/1 c/1/1/2 c/2/0/0 c/2/0/1 c/2/0/2 c/2/1/0 c/2/1/1 c/2/1/2 " +
+      "zarr.json"))
+    val group = tmp()
+    PyramidWriter.writeV3(svol, levels = 2, group, upscaleFactor = 2)
+    assert(Files.readString(Paths.get(group, "zarr.json")) ===
+        """{
+        |  "zarr_format": 3,
+        |  "node_type": "group",
+        |  "attributes": {
+        |    "ome": {
+        |      "version": "0.5",
+        |      "multiscales": [{
+        |        "name": "labels",
+        |        "axes": [
+        |          {"name": "z", "type": "space", "unit": "micrometer"},
+        |          {"name": "y", "type": "space", "unit": "micrometer"},
+        |          {"name": "x", "type": "space", "unit": "micrometer"}
+        |        ],
+        |        "datasets": [
+        |        {
+        |          "path": "0",
+        |          "coordinateTransformations": [{
+        |            "type": "scale",
+        |            "scale": [1.0, 0.125, 0.25]
+        |          }]
+        |        },
+        |        {
+        |          "path": "1",
+        |          "coordinateTransformations": [{
+        |            "type": "scale",
+        |            "scale": [2.0, 0.25, 0.5]
+        |          }]
+        |        }
+        |        ]
+        |      }]
+        |    }
+        |  }
+        |}
+        |""".stripMargin)
+    assert(relFiles(group) === words(
+      "0/c/0/0/0 0/c/0/0/1 0/c/0/0/2 0/c/0/1/0 0/c/0/1/1 0/c/0/1/2 0/c/1/0/0 " +
+      "0/c/1/0/1 0/c/1/0/2 0/c/1/1/0 0/c/1/1/1 0/c/1/1/2 0/c/2/0/0 0/c/2/0/1 " +
+      "0/c/2/0/2 0/c/2/1/0 0/c/2/1/1 0/c/2/1/2 0/zarr.json 1/c/0/0/0 1/c/0/0/1 " +
+      "1/c/1/0/0 1/c/1/0/1 1/zarr.json zarr.json"))
+    // the two documents no writer above emits: a raw big-endian array
+    // with a non-zero fill, and a sharded array with its index first
+    assert(Zarr3Store.zarrJson(
+      ZarrStore.ZarrMeta(Seq(6, 5, 4), Seq(3, 2, 3), ">u2", Raw, 7L, "/")) ===
+        """{
+        |    "zarr_format": 3,
+        |    "node_type": "array",
+        |    "shape": [6, 5, 4],
+        |    "data_type": "uint16",
+        |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [3, 2, 3]}},
+        |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+        |    "fill_value": 7,
+        |    "codecs": [
+        |        {"name": "bytes", "configuration": {"endian": "big"}}
+        |    ],
+        |    "attributes": {}
+        |}""".stripMargin)
+    assert(Zarr3Store.shardedZarrJson(
+      ZarrStore.ZarrMeta(Seq(6, 5, 4), Seq(6, 4, 4), "<u4", ZstdCodec(3), 0L, "/"),
+      Zarr3Store.ShardingMeta(Seq(3, 2, 2), indexCrc32c = false, indexAtEnd = false)) ===
+        """{
+        |    "zarr_format": 3,
+        |    "node_type": "array",
+        |    "shape": [6, 5, 4],
+        |    "data_type": "uint32",
+        |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [6, 4, 4]}},
+        |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+        |    "fill_value": 0,
+        |    "codecs": [
+        |        {"name": "sharding_indexed", "configuration": {"chunk_shape": [3, 2, 2], "codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": "zstd", "configuration": {"level": 3, "checksum": false}}], "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}}], "index_location": "start"}}
+        |    ],
+        |    "attributes": {}
+        |}""".stripMargin)
   }
 
   test("metadata: zarrJson → parseZarrJson is the identity on the codec and dtype") {

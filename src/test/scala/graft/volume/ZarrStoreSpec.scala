@@ -9,6 +9,7 @@ import java.nio.file.{Files, Paths}
   * (the reference's on-disk format: upscale_streaming.py:103–127).
   */
 class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
+  import ZarrStoreSpec.{relFiles, words}
 
   private val (dz, dy, dx) = (7L, 6L, 5L)
 
@@ -56,6 +57,140 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
       val raw = ZarrStore.Zlib(5).decompress(Files.readAllBytes(Paths.get(dir, n)), full)
       assert(raw.length === full, s"chunk $n not padded to full shape")
     }
+  }
+
+  test("format goldens: .zattrs, the pyramid's .zgroup/.zattrs/.zmetadata and both v2 writers' file lists") {
+    val svol = ZarrStoreSpec.goldenVol(spark)
+    val arr = Files.createTempDirectory("zarr_gold").toString + "/a.zarr"
+    ZarrStore.write(svol, arr, ZarrStore.ZstdCodec(3), Map("graft:source" -> "atlas \"x\".mhd"))
+    assert(Files.readString(Paths.get(arr, ".zattrs")) ===
+        """{
+        |    "graft:elementType": "MET_UINT",
+        |    "graft:source": "atlas \"x\".mhd",
+        |    "graft:spacing": [0.5, 0.25, 2.0]
+        |}""".stripMargin)
+    assert(relFiles(arr) === words(
+      ".zarray .zattrs 0.0.0 0.0.1 0.0.2 0.1.0 0.1.1 0.1.2 1.0.0 1.0.1 1.0.2 1.1.0 " +
+      "1.1.1 1.1.2 2.0.0 2.0.1 2.0.2 2.1.0 2.1.1 2.1.2"))
+    val pyr = Files.createTempDirectory("zarr_gold").toString + "/p.zarr"
+    PyramidWriter.write(svol, levels = 2, pyr, upscaleFactor = 2)
+    assert(Files.readString(Paths.get(pyr, ".zgroup")) ===
+        """{
+        |    "zarr_format": 2
+        |}""".stripMargin)
+    assert(Files.readString(Paths.get(pyr, ".zattrs")) ===
+        """{
+        |  "multiscales": [{
+        |    "version": "0.4",
+        |    "name": "labels",
+        |    "axes": [
+        |      {"name": "z", "type": "space", "unit": "micrometer"},
+        |      {"name": "y", "type": "space", "unit": "micrometer"},
+        |      {"name": "x", "type": "space", "unit": "micrometer"}
+        |    ],
+        |    "datasets": [
+        |    {
+        |      "path": "0",
+        |      "coordinateTransformations": [{
+        |        "type": "scale",
+        |        "scale": [1.0, 0.125, 0.25]
+        |      }]
+        |    },
+        |    {
+        |      "path": "1",
+        |      "coordinateTransformations": [{
+        |        "type": "scale",
+        |        "scale": [2.0, 0.25, 0.5]
+        |      }]
+        |    }
+        |    ]
+        |  }],
+        |  "image-label": true
+        |}
+        |""".stripMargin)
+    assert(Files.readString(Paths.get(pyr, ".zmetadata")) ===
+        """{
+        |  "metadata" : {
+        |    ".zgroup" : {
+        |      "zarr_format" : 2
+        |    },
+        |    ".zattrs" : {
+        |      "multiscales" : [ {
+        |        "version" : "0.4",
+        |        "name" : "labels",
+        |        "axes" : [ {
+        |          "name" : "z",
+        |          "type" : "space",
+        |          "unit" : "micrometer"
+        |        }, {
+        |          "name" : "y",
+        |          "type" : "space",
+        |          "unit" : "micrometer"
+        |        }, {
+        |          "name" : "x",
+        |          "type" : "space",
+        |          "unit" : "micrometer"
+        |        } ],
+        |        "datasets" : [ {
+        |          "path" : "0",
+        |          "coordinateTransformations" : [ {
+        |            "type" : "scale",
+        |            "scale" : [ 1.0, 0.125, 0.25 ]
+        |          } ]
+        |        }, {
+        |          "path" : "1",
+        |          "coordinateTransformations" : [ {
+        |            "type" : "scale",
+        |            "scale" : [ 2.0, 0.25, 0.5 ]
+        |          } ]
+        |        } ]
+        |      } ],
+        |      "image-label" : true
+        |    },
+        |    "0/.zarray" : {
+        |      "zarr_format" : 2,
+        |      "shape" : [ 7, 6, 5 ],
+        |      "chunks" : [ 3, 4, 2 ],
+        |      "dtype" : "<u4",
+        |      "compressor" : {
+        |        "id" : "zstd",
+        |        "level" : 3
+        |      },
+        |      "fill_value" : 0,
+        |      "order" : "C",
+        |      "filters" : null,
+        |      "dimension_separator" : "."
+        |    },
+        |    "0/.zattrs" : {
+        |      "graft:elementType" : "MET_UINT",
+        |      "graft:spacing" : [ 0.5, 0.25, 2.0 ]
+        |    },
+        |    "1/.zarray" : {
+        |      "zarr_format" : 2,
+        |      "shape" : [ 4, 3, 3 ],
+        |      "chunks" : [ 3, 3, 2 ],
+        |      "dtype" : "<u4",
+        |      "compressor" : {
+        |        "id" : "zstd",
+        |        "level" : 3
+        |      },
+        |      "fill_value" : 0,
+        |      "order" : "C",
+        |      "filters" : null,
+        |      "dimension_separator" : "."
+        |    },
+        |    "1/.zattrs" : {
+        |      "graft:elementType" : "MET_UINT",
+        |      "graft:spacing" : [ 0.5, 0.25, 2.0 ]
+        |    }
+        |  },
+        |  "zarr_consolidated_format" : 1
+        |}""".stripMargin)
+    assert(relFiles(pyr) === words(
+      ".graft_volume_meta.json .zattrs .zgroup .zmetadata 0/.zarray 0/.zattrs 0/0.0.0 " +
+      "0/0.0.1 0/0.0.2 0/0.1.0 0/0.1.1 0/0.1.2 0/1.0.0 0/1.0.1 0/1.0.2 0/1.1.0 " +
+      "0/1.1.1 0/1.1.2 0/2.0.0 0/2.0.1 0/2.0.2 0/2.1.0 0/2.1.1 0/2.1.2 1/.zarray " +
+      "1/.zattrs 1/0.0.0 1/0.0.1 1/1.0.0 1/1.0.1"))
   }
 
   test("parseZarray: spec fields, defaults, and unsupported-codec guard") {
@@ -339,4 +474,29 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
     val notGroup = intercept[IllegalArgumentException] { PyramidWriter.openGroup(arr) }
     assert(notGroup.getMessage.contains(".zgroup"))
   }
+}
+
+object ZarrStoreSpec {
+
+  /** The format-golden fixture: the suite's 7×6×5 volume on its (3,4,2)
+    * grid, with non-unit (x,y,z) spacing so the goldens pin the number
+    * forms of `graft:spacing` and the multiscales scales.
+    */
+  def goldenVol(spark: org.apache.spark.sql.SparkSession): ChunkVolume = {
+    val vox = spark.range(7 * 6 * 5).selectExpr(
+      "id div 30 as z", "(id div 5) % 6 as y", "id % 5 as x", "(id * 7) % 250 as label")
+    val v = ChunkVolume.fromVoxels(vox, 7, 6, 5, 3, 4, 2)
+    v.copy(meta = v.meta.copy(spacingX = 0.5, spacingY = 0.25, spacingZ = 2.0))
+  }
+
+  /** Every regular file under `root`, as sorted `/`-separated relative paths. */
+  def relFiles(root: String): Seq[String] = {
+    val r = Paths.get(root)
+    val s = Files.walk(r)
+    try s.filter(Files.isRegularFile(_)).toArray.toSeq
+      .map(p => r.relativize(p.asInstanceOf[java.nio.file.Path]).toString).sorted
+    finally s.close()
+  }
+
+  def words(s: String): Seq[String] = s.split(" ").toSeq
 }
