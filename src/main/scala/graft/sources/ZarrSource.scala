@@ -188,13 +188,7 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
             elem, 1.0, 1.0, 1.0)
           ZarrStore.initArray(writeDir, vm0, codec)
         }
-      // a parsed blosc codec carries no typesize (that lives per chunk
-      // header on read) — the writer needs it for the shuffle transforms
-      val writeCodec = zm.codec match {
-        case b: ZarrStore.BloscCodec => b.withTypesize(vm.bytesPerVoxel)
-        case c => c
-      }
-      new ZarrWriterFactory(writeDir, writeCodec, vm, fc)
+      new ZarrWriterFactory(writeDir, ZarrStore.forElements(zm.codec, vm.bytesPerVoxel), vm, fc)
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit =
@@ -283,8 +277,8 @@ class ZarrReaderFactory extends PartitionReaderFactory {
       override def next(): Boolean = {
         if (!it.hasNext) return false
         val (cz, cy, cx) = it.next()
-        val sep = p.zm.dimSeparator
-        val bytes = Fio.readAllIfExists(Fio.child(p.dir, s"$cz$sep$cy$sep$cx"))(p.fc)
+        val bytes = Fio.readAllIfExists(
+          Fio.child(p.dir, ZarrStore.chunkKey(p.zm.dimSeparator, cz, cy, cx)))(p.fc)
         val c = ZarrStore.decodeChunk(bytes, p.zm, p.vm, cz, cy, cx)
         row = new GenericInternalRow(Array[Any](
           c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data))

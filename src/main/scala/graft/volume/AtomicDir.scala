@@ -58,6 +58,21 @@ object AtomicDir {
   /** A fresh hidden sibling to stage a new store tree in. */
   def tempSibling(dest: String)(implicit fc: FioConf): String = sibling(dest, ".__tmp-")
 
+  /** Build a new store tree at `dest` all-or-nothing: sweep crash
+    * leftovers, let `body` fill a fresh temp sibling, then [[publish]]
+    * it — or, if `body` throws, delete the sibling in the background and
+    * rethrow, leaving any existing store untouched.
+    */
+  def stage(dest: String)(body: String => Unit)(implicit fc: FioConf): Unit = {
+    val d = Fio.qualify(dest)
+    sweepLeftovers(d)
+    val dir = tempSibling(d)
+    Fio.mkdirs(dir)
+    try body(dir)
+    catch { case e: Throwable => deleteInBackground(dir); throw e }
+    publish(dir, d)
+  }
+
   /** Publish `tmp` at `dest`: rename any existing `dest` aside, move
     * `tmp` into place, retire the old tree in the background. If the
     * final move fails the old store is restored, so a failed publish is

@@ -53,15 +53,10 @@ object ChunkStore {
   def write(vol: ChunkVolume, path: String, level: Int = 1,
       extraProvenance: Map[String, String] = Map.empty): Unit = {
     implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    Fio.mkdirs(dir)
-    try {
+    AtomicDir.stage(path) { dir =>
       appendChunks(vol.chunks, dir, vol.meta, level)
       ChunkVolume.writeSidecar(dir, vol.meta, extraProvenance)
-    } catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    }
   }
 
   /** Append chunk files into an existing store (same file format, no

@@ -1,8 +1,15 @@
 package graft.volume
 
 import graft.io.{Fio, FioConf}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
-/** Multiscale pyramid sink (K3) + OME-style `multiscales` metadata.
+/** Multiscale pyramid sink (K3) + OME-style `multiscales` metadata, in
+  * two dialects over one level loop: an OME-Zarr v2 group (NGFF 0.4,
+  * [[write]]) and an OME-NGFF 0.5 zarr v3 group ([[writeV3]]). Both
+  * dialects render the same multiscales entry and read it back through
+  * one parser; only the group documents and the level array writer
+  * differ.
   *
   * Mirrors write_ome_zarr_pyramid (upscale_streaming_enhance.py:190–255):
   * level i is written under `level=i/`, and the group attrs carry one
@@ -16,62 +23,61 @@ object PyramidWriter {
 
   import ChunkVolume.jsonStr
 
-  def multiscalesJson(meta: VolumeMeta, upscaleFactor: Int, levels: Int, name: String = "labels"): String = {
+  /** The body of one multiscales entry — name, axes and one `datasets`
+    * scale transform per level — with every line indented by `pad`.
+    */
+  private def multiscaleEntry(
+      meta: VolumeMeta, upscaleFactor: Int, levels: Int, name: String, pad: String): String = {
     val datasets = (0 until levels).map { i =>
       val f = (1 << i).toDouble / upscaleFactor
-      s"""    {
-         |      "path": "$i",
-         |      "coordinateTransformations": [{
-         |        "type": "scale",
-         |        "scale": [${meta.spacingZ * f}, ${meta.spacingY * f}, ${meta.spacingX * f}]
-         |      }]
-         |    }""".stripMargin
+      s"""$pad{
+         |$pad  "path": "$i",
+         |$pad  "coordinateTransformations": [{
+         |$pad    "type": "scale",
+         |$pad    "scale": [${meta.spacingZ * f}, ${meta.spacingY * f}, ${meta.spacingX * f}]
+         |$pad  }]
+         |$pad}""".stripMargin
     }.mkString(",\n")
+    val axes = Seq("z", "y", "x")
+      .map(a => s"""$pad  {"name": "$a", "type": "space", "unit": "micrometer"}""")
+      .mkString(",\n")
+    s"""$pad"name": ${jsonStr(name)},
+       |$pad"axes": [
+       |$axes
+       |$pad],
+       |$pad"datasets": [
+       |$datasets
+       |$pad]""".stripMargin
+  }
+
+  def multiscalesJson(meta: VolumeMeta, upscaleFactor: Int, levels: Int, name: String = "labels"): String =
     s"""{
        |  "multiscales": [{
        |    "version": "0.4",
-       |    "name": ${jsonStr(name)},
-       |    "axes": [
-       |      {"name": "z", "type": "space", "unit": "micrometer"},
-       |      {"name": "y", "type": "space", "unit": "micrometer"},
-       |      {"name": "x", "type": "space", "unit": "micrometer"}
-       |    ],
-       |    "datasets": [
-       |$datasets
-       |    ]
+       |${multiscaleEntry(meta, upscaleFactor, levels, name, "    ")}
        |  }],
        |  "image-label": true
        |}
        |""".stripMargin
-  }
 
-  /** Write `levels` pyramid levels of `vol` as a REAL OME-Zarr v2 group:
-    * `.zgroup` + `multiscales` group attrs (`.zattrs`), levels as
-    * spec-compliant zarr arrays under `path/0`, `path/1`, … — the layout
-    * `zarr.open_group` / napari / dask read directly
-    * (upscale_streaming_enhance.py:190–255). Levels execute sequentially,
-    * each a chunk-local decimation of the previous — same lifecycle as the
-    * reference's per-level `da.store` loop.
+  /** The one level loop of both dialects: build the pyramid, hand level
+    * i to `writeLevel` at `<group>/i`, then let `finish` add the group
+    * documents — all staged and published as one group ([[AtomicDir]]):
+    * overwrite semantics like the reference's rmtree, but atomic and
+    * without an O(files) driver delete. Levels execute sequentially, each
+    * a chunk-local decimation of the previous — same lifecycle as the
+    * reference's per-level `da.store` loop. One chunk tuple serves every
+    * level (reference: create_dataset(..., chunks=chunks) per level):
+    * decimation halves per-chunk extents on the global lattice
+    * (non-uniform grid), so each level ≥ 1 is re-blocked to the base chunk
+    * shape clamped to its dims — zarr requires uniform chunks.
     */
-  def write(vol: ChunkVolume, levels: Int, path: String, upscaleFactor: Int = 1,
-      codec: ZarrStore.Codec = ZarrStore.ZstdCodec()): Unit = {
+  private def writeGroup(vol: ChunkVolume, levels: Int, path: String)(
+      writeLevel: (ChunkVolume, String) => Unit)(finish: String => Unit)(
+      implicit fc: FioConf): Unit = {
     val pyr = vol.pyramid(levels)
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    // overwrite semantics like the reference's rmtree, but atomic and
-    // without an O(files) driver delete: stage the whole group in a temp
-    // sibling, publish with O(1) renames at the end (see AtomicDir)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    val stage = dir
-    Fio.mkdirs(dir)
-    Fio.writeString(Fio.child(dir, ".zgroup"), "{\n    \"zarr_format\": 2\n}")
-    // one chunk tuple for every level (reference: create_dataset(...,
-    // chunks=chunks) per level): decimation halves per-chunk extents on
-    // the global lattice (non-uniform grid), so re-block each level to the
-    // base chunk shape clamped to its dims — zarr requires uniform chunks.
     val (bz, by, bx) = (vol.meta.chunkZ, vol.meta.chunkY, vol.meta.chunkX)
-    try {
+    AtomicDir.stage(path) { dir =>
       pyr.zipWithIndex.foreach { case (level, i) =>
         val uniform =
           if (i == 0) level
@@ -79,15 +85,29 @@ object PyramidWriter {
             math.min(bz.toLong, level.meta.dimZ).toInt,
             math.min(by.toLong, level.meta.dimY).toInt,
             math.min(bx.toLong, level.meta.dimX).toInt)
-        ZarrStore.write(uniform, s"$stage/$i", codec)
+        writeLevel(uniform, Fio.child(dir, i.toString))
       }
-      Fio.writeString(Fio.child(stage, ".zattrs"), multiscalesJson(vol.meta, upscaleFactor, levels))
-      writeConsolidatedMetadata(stage, levels)
-      ChunkVolume.writeSidecar(stage, vol.meta, Map(
+      finish(dir)
+    }
+  }
+
+  /** Write `levels` pyramid levels of `vol` as a REAL OME-Zarr v2 group:
+    * `.zgroup` + `multiscales` group attrs (`.zattrs`) + consolidated
+    * `.zmetadata`, levels as spec-compliant zarr arrays under `path/0`,
+    * `path/1`, … — the layout `zarr.open_group` / napari / dask read
+    * directly (upscale_streaming_enhance.py:190–255).
+    */
+  def write(vol: ChunkVolume, levels: Int, path: String, upscaleFactor: Int = 1,
+      codec: ZarrStore.Codec = ZarrStore.ZstdCodec()): Unit = {
+    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
+    writeGroup(vol, levels, path)(ZarrStore.write(_, _, codec)) { dir =>
+      Fio.writeString(Fio.child(dir, ".zgroup"), "{\n    \"zarr_format\": 2\n}")
+      Fio.writeString(Fio.child(dir, ".zattrs"), multiscalesJson(vol.meta, upscaleFactor, levels))
+      writeConsolidatedMetadata(dir, levels)
+      ChunkVolume.writeSidecar(dir, vol.meta, Map(
         "pyramid_levels" -> levels.toString,
         "upscale_factor" -> upscaleFactor.toString))
-    } catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    }
   }
 
   /** Zarr v2 CONSOLIDATED metadata (`.zmetadata`,
@@ -98,8 +118,6 @@ object PyramidWriter {
     * ONE — the standard convention for cloud-hosted OME-Zarr.
     */
   private def writeConsolidatedMetadata(path: String, levels: Int)(implicit fc: FioConf): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
     val docs = scala.collection.mutable.LinkedHashMap[String, JValue]()
     def add(key: String, file: String): Unit =
       Fio.readStringIfExists(file).foreach(body => docs(key) = JsonMethods.parse(body))
@@ -126,39 +144,16 @@ object PyramidWriter {
     def levels: Int = levelPaths.length
   }
 
-  /** Open a pyramid group by its METADATA, the way a zarr client does:
-    * consolidated `.zmetadata` when present (the one-GET cloud path,
-    * `zarr.open_consolidated`), else `.zgroup` + `.zattrs`
-    * (`zarr.open_group`). Returns the parsed `multiscales` entry; fails
-    * loudly on a missing group, a non-v2 group, or attrs without
-    * multiscales — never guesses level directories from listings.
+  /** The first multiscales entry under `holder` (`.zattrs` of a v2
+    * group, `attributes.ome` of an NGFF 0.5 group) as a [[PyramidGroup]];
+    * fails loudly on a missing entry, empty datasets or a dataset
+    * without a path.
     */
-  def openGroup(path: String)(implicit fc: FioConf): PyramidGroup = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    require(Fio.isDirectory(path), s"$path: not a directory (no zarr group here)")
-    val zmeta = Fio.readStringIfExists(Fio.child(path, ".zmetadata"))
-    val (groupDoc, attrsDoc): (JValue, JValue) =
-      zmeta match {
-        case Some(body) =>
-          val c = JsonMethods.parse(body)
-          require((c \ "zarr_consolidated_format") == JInt(1),
-            s"$path/.zmetadata: unsupported zarr_consolidated_format (want 1)")
-          val docs = c \ "metadata"
-          (docs \ ".zgroup", docs \ ".zattrs")
-        case None =>
-          val zgroup = Fio.readStringIfExists(Fio.child(path, ".zgroup"))
-          val zattrs = Fio.readStringIfExists(Fio.child(path, ".zattrs"))
-          require(zgroup.nonEmpty, s"$path: no .zmetadata and no .zgroup — not a zarr group")
-          require(zattrs.nonEmpty, s"$path: group has no .zattrs (no multiscales metadata)")
-          (JsonMethods.parse(zgroup.get), JsonMethods.parse(zattrs.get))
-      }
-    require((groupDoc \ "zarr_format") == JInt(2),
-      s"$path: zarr_format ${JsonMethods.compact(JsonMethods.render(groupDoc \ "zarr_format"))} (want 2)")
-    val multiscales = (attrsDoc \ "multiscales") match {
+  private def parseMultiscales(path: String, holder: JValue, holderName: String): PyramidGroup = {
+    val multiscales = (holder \ "multiscales") match {
       case JArray(ms :: _) => ms
       case _ => throw new IllegalArgumentException(
-        s"$path: .zattrs carries no multiscales entry — a zarr group, but not a pyramid")
+        s"$path: $holderName carries no multiscales entry — a zarr group, but not a pyramid")
     }
     val name = (multiscales \ "name") match {
       case JString(n) => n
@@ -194,18 +189,51 @@ object PyramidWriter {
     PyramidGroup(path, name, levelPaths, scales)
   }
 
+  /** Open a pyramid group by its METADATA, the way a zarr client does:
+    * consolidated `.zmetadata` when present (the one-GET cloud path,
+    * `zarr.open_consolidated`), else `.zgroup` + `.zattrs`
+    * (`zarr.open_group`). Returns the parsed `multiscales` entry; fails
+    * loudly on a missing group, a non-v2 group, or attrs without
+    * multiscales — never guesses level directories from listings.
+    */
+  def openGroup(path: String)(implicit fc: FioConf): PyramidGroup = {
+    require(Fio.isDirectory(path), s"$path: not a directory (no zarr group here)")
+    val zmeta = Fio.readStringIfExists(Fio.child(path, ".zmetadata"))
+    val (groupDoc, attrsDoc): (JValue, JValue) =
+      zmeta match {
+        case Some(body) =>
+          val c = JsonMethods.parse(body)
+          require((c \ "zarr_consolidated_format") == JInt(1),
+            s"$path/.zmetadata: unsupported zarr_consolidated_format (want 1)")
+          val docs = c \ "metadata"
+          (docs \ ".zgroup", docs \ ".zattrs")
+        case None =>
+          val zgroup = Fio.readStringIfExists(Fio.child(path, ".zgroup"))
+          val zattrs = Fio.readStringIfExists(Fio.child(path, ".zattrs"))
+          require(zgroup.nonEmpty, s"$path: no .zmetadata and no .zgroup — not a zarr group")
+          require(zattrs.nonEmpty, s"$path: group has no .zattrs (no multiscales metadata)")
+          (JsonMethods.parse(zgroup.get), JsonMethods.parse(zattrs.get))
+      }
+    require((groupDoc \ "zarr_format") == JInt(2),
+      s"$path: zarr_format ${JsonMethods.compact(JsonMethods.render(groupDoc \ "zarr_format"))} (want 2)")
+    parseMultiscales(path, attrsDoc, ".zattrs")
+  }
+
+  /** The array path of `level`, which the group's metadata must declare
+    * — a directory of that name alone is not a level.
+    */
+  private def levelPath(g: PyramidGroup, level: Int): String = {
+    require(level >= 0 && level < g.levels,
+      s"${g.path}: level $level out of range — multiscales declares ${g.levels} levels")
+    Fio.child(g.path, g.levelPaths(level))
+  }
+
   /** Read back one pyramid level THROUGH the group metadata (the read
     * half of view_upscaled.py:11): resolve `multiscales.datasets[level]
-    * .path` via [[openGroup]], then open that zarr array. A level that
-    * is not declared in the metadata is an error even if a directory of
-    * that name exists.
+    * .path` via [[openGroup]], then open that zarr array.
     */
-  def readLevel(spark: org.apache.spark.sql.SparkSession, path: String, level: Int): ChunkVolume = {
-    val g = openGroup(path)
-    require(level >= 0 && level < g.levels,
-      s"$path: level $level out of range — multiscales declares ${g.levels} levels")
-    ZarrStore.read(spark, Fio.child(path, g.levelPaths(level)))
-  }
+  def readLevel(spark: org.apache.spark.sql.SparkSession, path: String, level: Int): ChunkVolume =
+    ZarrStore.read(spark, levelPath(openGroup(path), level))
 
   // ------------------------------------------------------ NGFF 0.5 (v3)
 
@@ -213,17 +241,7 @@ object PyramidWriter {
     * under `attributes.ome` with the version at the `ome` level — the
     * layout ome-zarr-py ≥ 0.5 / zarr-python 3 read.
     */
-  def ngff05GroupJson(meta: VolumeMeta, upscaleFactor: Int, levels: Int, name: String = "labels"): String = {
-    val datasets = (0 until levels).map { i =>
-      val f = (1 << i).toDouble / upscaleFactor
-      s"""        {
-         |          "path": "$i",
-         |          "coordinateTransformations": [{
-         |            "type": "scale",
-         |            "scale": [${meta.spacingZ * f}, ${meta.spacingY * f}, ${meta.spacingX * f}]
-         |          }]
-         |        }""".stripMargin
-    }.mkString(",\n")
+  def ngff05GroupJson(meta: VolumeMeta, upscaleFactor: Int, levels: Int, name: String = "labels"): String =
     s"""{
        |  "zarr_format": 3,
        |  "node_type": "group",
@@ -231,60 +249,32 @@ object PyramidWriter {
        |    "ome": {
        |      "version": "0.5",
        |      "multiscales": [{
-       |        "name": ${jsonStr(name)},
-       |        "axes": [
-       |          {"name": "z", "type": "space", "unit": "micrometer"},
-       |          {"name": "y", "type": "space", "unit": "micrometer"},
-       |          {"name": "x", "type": "space", "unit": "micrometer"}
-       |        ],
-       |        "datasets": [
-       |$datasets
-       |        ]
+       |${multiscaleEntry(meta, upscaleFactor, levels, name, "        ")}
        |      }]
        |    }
        |  }
        |}
        |""".stripMargin
-  }
 
   /** Write the pyramid as an OME-NGFF 0.5 group: zarr v3 group document
-    * + levels as zarr v3 arrays under `0/`, `1/`, … — the same level
-    * lifecycle/rechunk discipline as the v2 [[write]], atomic-published
-    * as one group.
+    * + levels as zarr v3 arrays under `0/`, `1/`, … With `shardInner`,
+    * levels are sharded — the at-scale NGFF layout: object count per
+    * level scales with SHARDS (the level's chunk grid), reads stay one
+    * inner chunk; the level's uniform chunk shape must be a multiple of
+    * the inner shape (writeSharded fails loud).
     */
   def writeV3(vol: ChunkVolume, levels: Int, path: String, upscaleFactor: Int = 1,
       codec: ZarrStore.Codec = ZarrStore.ZstdCodec(),
       shardInner: Option[(Int, Int, Int)] = None): Unit = {
-    val pyr = vol.pyramid(levels)
     implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    Fio.mkdirs(dir)
-    Fio.writeString(Fio.child(dir, "zarr.json"),
-      ngff05GroupJson(vol.meta, upscaleFactor, levels))
-    val (bz, by, bx) = (vol.meta.chunkZ, vol.meta.chunkY, vol.meta.chunkX)
-    try {
-      pyr.zipWithIndex.foreach { case (level, i) =>
-        val uniform =
-          if (i == 0) level
-          else level.rechunk(
-            math.min(bz.toLong, level.meta.dimZ).toInt,
-            math.min(by.toLong, level.meta.dimY).toInt,
-            math.min(bx.toLong, level.meta.dimX).toInt)
-        shardInner match {
-          // sharded levels: the at-scale NGFF layout — object count per
-          // level scales with SHARDS (the level's chunk grid), reads
-          // stay one inner chunk; the level's uniform chunk shape must
-          // be a multiple of the inner shape (writeSharded fails loud)
-          case Some(inner) =>
-            Zarr3Store.writeSharded(uniform, Fio.child(dir, i.toString), inner, codec)
-          case None =>
-            Zarr3Store.write(uniform, Fio.child(dir, i.toString), codec)
-        }
+    writeGroup(vol, levels, path) { (level, dir) =>
+      shardInner match {
+        case Some(inner) => Zarr3Store.writeSharded(level, dir, inner, codec)
+        case None => Zarr3Store.write(level, dir, codec)
       }
-    } catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    } { dir =>
+      Fio.writeString(Fio.child(dir, "zarr.json"), ngff05GroupJson(vol.meta, upscaleFactor, levels))
+    }
   }
 
   /** Open an NGFF 0.5 group by its `zarr.json`: v3 group node,
@@ -292,8 +282,6 @@ object PyramidWriter {
     * Fails loudly on v2 groups (use [[openGroup]]) or missing ome attrs.
     */
   def openGroupV3(path: String)(implicit fc: FioConf): PyramidGroup = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
     val doc = Fio.readStringIfExists(Fio.child(path, "zarr.json"))
     require(doc.nonEmpty, s"$path: no zarr.json — not a zarr v3 group")
     val v = JsonMethods.parse(doc.get)
@@ -301,47 +289,10 @@ object PyramidWriter {
     require((v \ "node_type") == JString("group"), s"$path: not a group node")
     val ome = v \ "attributes" \ "ome"
     require(ome != JNothing, s"$path: group carries no attributes.ome (not NGFF >= 0.5)")
-    val multiscales = (ome \ "multiscales") match {
-      case JArray(ms :: _) => ms
-      case _ => throw new IllegalArgumentException(
-        s"$path: attributes.ome has no multiscales — an NGFF group, but not a pyramid")
-    }
-    val name = (multiscales \ "name") match { case JString(n) => n; case _ => "" }
-    val datasets = (multiscales \ "datasets") match {
-      case JArray(ds) if ds.nonEmpty => ds
-      case _ => throw new IllegalArgumentException(s"$path: multiscales has no datasets")
-    }
-    val levelPaths = datasets.map { d =>
-      (d \ "path") match {
-        case JString(p) => p
-        case _ => throw new IllegalArgumentException(s"$path: multiscales dataset missing path")
-      }
-    }
-    val scales = datasets.map { d =>
-      (d \ "coordinateTransformations") match {
-        case JArray(ts) =>
-          ts.collectFirst { case t if (t \ "type") == JString("scale") =>
-            (t \ "scale") match {
-              case JArray(vs) => vs.map {
-                case JDouble(dd) => dd
-                case JInt(n) => n.toDouble
-                case other => throw new IllegalArgumentException(
-                  s"$path: non-numeric scale component $other")
-              }
-              case _ => throw new IllegalArgumentException(s"$path: scale transform without scale array")
-            }
-          }.getOrElse(Seq.empty)
-        case _ => Seq.empty
-      }
-    }
-    PyramidGroup(path, name, levelPaths, scales)
+    parseMultiscales(path, ome, "attributes.ome")
   }
 
   /** Read one level of an NGFF 0.5 group through its metadata. */
-  def readLevelV3(spark: org.apache.spark.sql.SparkSession, path: String, level: Int): ChunkVolume = {
-    val g = openGroupV3(path)
-    require(level >= 0 && level < g.levels,
-      s"$path: level $level out of range — multiscales declares ${g.levels} levels")
-    Zarr3Store.read(spark, Fio.child(path, g.levelPaths(level)))
-  }
+  def readLevelV3(spark: org.apache.spark.sql.SparkSession, path: String, level: Int): ChunkVolume =
+    Zarr3Store.read(spark, levelPath(openGroupV3(path), level))
 }

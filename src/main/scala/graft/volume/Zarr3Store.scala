@@ -1,7 +1,7 @@
 package graft.volume
 
 import graft.io.{Fio, FioConf}
-import graft.volume.ZarrStore.{BloscCodec, Codec, GzipCodec, Raw, ZarrMeta, ZstdCodec}
+import graft.volume.ZarrStore.{BloscCodec, Codec, GzipCodec, Raw, ZarrMeta, ZstdCodec, num}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -9,18 +9,22 @@ import org.json4s.jackson.JsonMethods
 /** Zarr v3 scan/write (zarr-specs v3.0 — the current spec, the one
   * OME-NGFF 0.5 targets): `zarr.json` metadata document, named
   * `data_type`s, a codec PIPELINE (`bytes` endianness codec + optional
-  * compressor), and `c/`-prefixed slash-separated chunk keys. Everything
-  * below the metadata layer — blosc container incl. bitshuffle, zstd,
-  * chunk encode/decode, fill-value semantics, AtomicDir publish — is the
-  * SAME battle-tested machinery as the v2 store; v3 is a metadata and
-  * layout dialect over it, which is exactly how zarr-python implemented
-  * it too. Supported codecs: `bytes` (both endians) alone, or followed by
+  * compressor), and `c/`-prefixed slash-separated chunk keys. v3 is a
+  * metadata and layout dialect over the v2 store's machinery, which is
+  * exactly how zarr-python implemented it too: this object supplies only
+  * its documents, its chunk key ([[chunkKey]]) and, for sharded arrays,
+  * its per-shard encoder; staging and AtomicDir publish, executor-side
+  * chunk landing, the append document check and the planned-grid reader
+  * are [[ZarrStore]]'s layout layer, and the blosc container incl.
+  * bitshuffle, zstd, chunk encode/decode and fill-value semantics are its
+  * codecs. Supported codecs: `bytes` (both endians) alone, or followed by
   * ONE of `blosc` (all reference cnames/shuffles), `zstd`, `gzip`
   * (RFC-1952 — distinct from v2's RFC-1950 `zlib`). `sharding_indexed`
   * is fully supported (writeSharded/readSharded/pointLookupSharded/
   * readBoxSharded below — one file per shard with the spec's crc32c'd
-  * uint64-LE index); only [[parseZarrJson]], the UNsharded entry point
-  * used by append paths, still refuses sharded documents by name.
+  * uint64-LE index, read and verified in one place, [[ShardFile]]);
+  * [[parseZarrJson]], the unsharded parser the appender checks an
+  * existing document with, refuses sharded documents by name.
   */
 object Zarr3Store {
 
@@ -44,19 +48,22 @@ object Zarr3Store {
     case other => throw new IllegalArgumentException(s"bad blosc shuffle '$other'")
   }
 
-  /** The compressor codec object for `m` (empty for Raw), prefixed with
-    * ", " so it appends to the `bytes` codec in a pipeline array.
+  /** The `bytes`-led codec pipeline of `m`: the array pipeline of a
+    * plain array, the inner pipeline of a sharded one.
     */
-  private def compressorJson(m: ZarrMeta): String = m.codec match {
-    case Raw => ""
-    case b: BloscCodec =>
-      s""", {"name": "blosc", "configuration": {"cname": "${b.cname}", "clevel": ${b.clevel}, "shuffle": "${shuffleName(b.shuffle)}", "typesize": ${m.bpp}, "blocksize": 0}}"""
-    case ZstdCodec(l) =>
-      s""", {"name": "zstd", "configuration": {"level": $l, "checksum": false}}"""
-    case GzipCodec(l) =>
-      s""", {"name": "gzip", "configuration": {"level": $l}}"""
-    case other => throw new IllegalArgumentException(
-      s"codec ${other.id.getOrElse("?")} has no zarr v3 form here (use blosc/zstd/gzip/raw)")
+  private def pipelineJson(m: ZarrMeta): Seq[String] = {
+    val endian = if (m.bigEndian) "big" else "little"
+    s"""{"name": "bytes", "configuration": {"endian": "$endian"}}""" +: (m.codec match {
+      case Raw => Nil
+      case b: BloscCodec =>
+        Seq(s"""{"name": "blosc", "configuration": {"cname": "${b.cname}", "clevel": ${b.clevel}, "shuffle": "${shuffleName(b.shuffle)}", "typesize": ${m.bpp}, "blocksize": 0}}""")
+      case ZstdCodec(l) =>
+        Seq(s"""{"name": "zstd", "configuration": {"level": $l, "checksum": false}}""")
+      case GzipCodec(l) =>
+        Seq(s"""{"name": "gzip", "configuration": {"level": $l}}""")
+      case other => throw new IllegalArgumentException(
+        s"codec ${other.id.getOrElse("?")} has no zarr v3 form here (use blosc/zstd/gzip/raw)")
+    })
   }
 
   private def attrsJson(attrs: Map[String, String]): String =
@@ -64,16 +71,12 @@ object Zarr3Store {
       .map { case (k, v) => ChunkVolume.jsonStr(k) + ": " + ChunkVolume.jsonStr(v) }
       .mkString(", ")
 
-  /** The `zarr.json` document for an array (spec key order). `attrs`
-    * lands under the spec's user-metadata `attributes` member — the v3
-    * home for the write provenance the v2 sink records in `.zattrs`.
+  /** An array document (spec key order) around its array `codecs`.
+    * `attrs` lands under the spec's user-metadata `attributes` member —
+    * the v3 home for the write provenance the v2 sink records in
+    * `.zattrs`.
     */
-  def zarrJson(m: ZarrMeta, attrs: Map[String, String] = Map.empty): String = {
-    val compressor = compressorJson(m) match {
-      case "" => ""
-      case s => ",\n        " + s.stripPrefix(", ")
-    }
-    val endian = if (m.bigEndian) "big" else "little"
+  private def arrayJson(m: ZarrMeta, codecs: Seq[String], attrs: Map[String, String]): String =
     s"""{
        |    "zarr_format": 3,
        |    "node_type": "array",
@@ -83,11 +86,14 @@ object Zarr3Store {
        |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
        |    "fill_value": ${m.fillValue},
        |    "codecs": [
-       |        {"name": "bytes", "configuration": {"endian": "$endian"}}$compressor
+       |        ${codecs.mkString(",\n        ")}
        |    ],
        |    "attributes": {${attrsJson(attrs)}}
        |}""".stripMargin
-  }
+
+  /** The `zarr.json` document for a plain array. */
+  def zarrJson(m: ZarrMeta, attrs: Map[String, String] = Map.empty): String =
+    arrayJson(m, pipelineJson(m), attrs)
 
   /** The `zarr.json` document for a SHARDED array: chunk_grid carries the
     * shard shape, the single array codec is `sharding_indexed` nesting
@@ -98,33 +104,13 @@ object Zarr3Store {
       m: ZarrMeta,
       sh: ShardingMeta,
       attrs: Map[String, String] = Map.empty): String = {
-    val endian = if (m.bigEndian) "big" else "little"
     val loc = if (sh.indexAtEnd) "end" else "start"
     val idxCodecs =
       """[{"name": "bytes", "configuration": {"endian": "little"}}""" +
         (if (sh.indexCrc32c) """, {"name": "crc32c"}]""" else "]")
-    s"""{
-       |    "zarr_format": 3,
-       |    "node_type": "array",
-       |    "shape": [${m.shape.mkString(", ")}],
-       |    "data_type": "${NameOfDtype(m.dtype.substring(1))}",
-       |    "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [${m.chunks.mkString(", ")}]}},
-       |    "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
-       |    "fill_value": ${m.fillValue},
-       |    "codecs": [
-       |        {"name": "sharding_indexed", "configuration": {"chunk_shape": [${sh.innerChunks.mkString(", ")}], "codecs": [{"name": "bytes", "configuration": {"endian": "$endian"}}${compressorJson(m)}], "index_codecs": $idxCodecs, "index_location": "$loc"}}
-       |    ],
-       |    "attributes": {${attrsJson(attrs)}}
-       |}""".stripMargin
-  }
-
-  private def num(j: JValue): Long = j match {
-    case JInt(n) => n.toLong
-    case JLong(n) => n
-    case JDouble(d) => d.toLong
-    case JDecimal(d) => d.toLong
-    case JNull => 0L
-    case other => throw new IllegalArgumentException(s"expected number, got $other")
+    arrayJson(m, Seq(
+      s"""{"name": "sharding_indexed", "configuration": {"chunk_shape": [${sh.innerChunks.mkString(", ")}], "codecs": [${pipelineJson(m).mkString(", ")}], "index_codecs": $idxCodecs, "index_location": "$loc"}}"""),
+      attrs)
   }
 
   /** A `bytes`-led codec pipeline → (bigEndian, compressor). Shared by
@@ -303,16 +289,17 @@ object Zarr3Store {
     (ZarrMeta(shapeN, chunkN, endianTag, codec, fillValue, sep), sharding)
   }
 
-  private def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta = ZarrMeta(
-    shape = Seq(vol.dimZ, vol.dimY, vol.dimX),
-    chunks = Seq(vol.chunkZ, vol.chunkY, vol.chunkX),
-    dtype = ZarrStore.DtypeOf(vol.elementType),
-    codec = codec match {
-      case b: BloscCodec => b.withTypesize(vol.bytesPerVoxel)
-      case c => c
-    },
-    fillValue = 0L,
-    dimSeparator = "/")
+  private def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta =
+    ZarrStore.metaOf(vol, codec).copy(dimSeparator = "/")
+
+  /** v3 `default` chunk key: `c<sep>z<sep>y<sep>x` in chunk-grid
+    * coordinates (shard-grid coordinates for a sharded array).
+    */
+  private[volume] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
+    "c" + sep + ZarrStore.chunkKey(sep, cz, cy, cx)
+
+  private def readDoc(dir: String)(implicit fc: FioConf): (ZarrMeta, Option[ShardingMeta]) =
+    parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
 
   /** Write a ChunkVolume as a zarr v3 array: driver writes `zarr.json`,
     * executors land `c/z/y/x` chunk files (same AtomicDir all-or-nothing
@@ -323,90 +310,43 @@ object Zarr3Store {
       path: String,
       codec: Codec = ZstdCodec(),
       extraAttrs: Map[String, String] = Map.empty): Unit = {
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    Fio.mkdirs(dir)
     val zm = metaOf(vol.meta, codec)
-    Fio.writeString(Fio.child(dir, "zarr.json"), zarrJson(zm, extraAttrs))
-    val pathStr = dir
-    val meta = vol.meta
-    val effCodec = zm.codec
-    try {
-      vol.chunks.foreachPartition { (it: Iterator[Chunk]) =>
-        it.foreach { c =>
-          // FileSystem.create makes parents, so the c/z/y/ tree needs no mkdirs
-          Fio.writeBytes(Fio.child(pathStr, s"c/${c.cz}/${c.cy}/${c.cx}"),
-            ZarrStore.encodeChunkBytes(c, meta, effCodec))
-        }
-      }
-    } catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    val (meta, eff) = (vol.meta, zm.codec)
+    ZarrStore.writeArray(vol.chunks, path, Seq("zarr.json" -> zarrJson(zm, extraAttrs)),
+      chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff))
   }
 
-  /** Append chunk files into an existing zarr v3 array — the
-    * incremental-ingest building block (v3 chunks are independent files,
-    * so micro-batches append idempotently; a re-landed coordinate
-    * overwrites its own file). Writes `zarr.json` on first call.
+  /** Append chunk files into a zarr v3 array — the incremental-ingest
+    * building block (v3 chunks are independent files, so micro-batches
+    * append idempotently; a re-landed coordinate overwrites its own
+    * file). Writes `zarr.json` on first call; later calls fail loud if it
+    * describes another layout, or a sharded array.
     */
   def appendChunks(
       chunks: org.apache.spark.sql.Dataset[Chunk],
       path: String,
       meta: VolumeMeta,
       codec: Codec = ZstdCodec()): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    val dir = Fio.qualify(path)
-    Fio.mkdirs(dir)
     val zm = metaOf(meta, codec)
-    val doc = Fio.child(dir, "zarr.json")
-    if (!Fio.exists(doc)) Fio.writeString(doc, zarrJson(zm))
-    val pathStr = dir
-    val effCodec = zm.codec
-    chunks.foreachPartition { (it: Iterator[Chunk]) =>
-      it.foreach { c =>
-        Fio.writeBytes(Fio.child(pathStr, s"c/${c.cz}/${c.cy}/${c.cx}"),
-          ZarrStore.encodeChunkBytes(c, meta, effCodec))
-      }
-    }
+    val eff = zm.codec
+    ZarrStore.appendArray(chunks, path, "zarr.json", zarrJson(zm), zm, parseZarrJson,
+      chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff))
   }
 
   /** Read a zarr v3 array directory as a ChunkVolume: grid planned from
     * `zarr.json` alone, absent chunk files decode as fill_value, chunk
-    * keys resolved through the `default` encoding (`c/` prefix + the
+    * keys resolved through the `default` encoding (`c` prefix + the
     * configured separator).
     */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val dir = Fio.qualify(path)
-    val (zm0, sharding) = parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
-    sharding match {
-      case Some(sh) => return readSharded(spark, dir, zm0, sh)
-      case None => ()
+    readDoc(dir) match {
+      case (zm, Some(sh)) => readSharded(spark, dir, zm, sh)
+      case (zm, None) =>
+        val sep = zm.dimSeparator
+        ZarrStore.readArray(spark, dir, zm, ZarrStore.volumeMeta(zm), chunkKey(sep, _, _, _))
     }
-    val zm = zm0
-    val Seq(dz, dy, dx) = zm.shape
-    val Seq(cz, cy, cx) = zm.chunks
-    val Seq(ncz0, ncy0, ncx0) = zm.gridShape
-    val vm = VolumeMeta(dz, dy, dx, cz, cy, cx, ncz0, ncy0, ncx0, zm.elementType,
-      spacingX = 1.0, spacingY = 1.0, spacingZ = 1.0)
-    val pathStr = dir
-    val sep = zm.dimSeparator
-    val (ncy, ncx) = (vm.ncy, vm.ncx)
-    import spark.implicits._
-    val nChunks = vm.ncz.toLong * ncy * ncx
-    val chunks = spark.range(nChunks)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map { idx =>
-        val icz = (idx / (ncy.toLong * ncx)).toInt
-        val icy = ((idx / ncx) % ncy).toInt
-        val icx = (idx % ncx).toInt
-        // default chunk key encoding: "c" <sep> z <sep> y <sep> x
-        val bytes = Fio.readAllIfExists(Fio.child(pathStr, Seq("c", icz, icy, icx).mkString(sep)))
-        ZarrStore.decodeChunk(bytes, zm, vm, icz, icy, icx)
-      }
-    ChunkVolume(chunks, vm)
   }
 
   // ------------------------------------------------------------------
@@ -424,20 +364,14 @@ object Zarr3Store {
   /** Sentinel for an absent inner chunk: offset = nbytes = 2^64−1. */
   private val Missing = -1L
 
-  private def crc32cOf(bytes: Array[Byte], len: Int): Int = {
-    val c = new java.util.zip.CRC32C
-    c.update(bytes, 0, len)
-    c.getValue.toInt
-  }
+  /** The INNER-chunk view of a sharded array: inner chunk shape + the
+    * inner pipeline, what [[ZarrStore.decodeChunk]] decodes a cell with.
+    */
+  private def innerMeta(zm: ZarrMeta, sh: ShardingMeta): ZarrMeta = zm.copy(chunks = sh.innerChunks)
 
   /** Engine metadata for the INNER chunk grid of a sharded array. */
-  private def innerVm(zm: ZarrMeta, sh: ShardingMeta): VolumeMeta = {
-    val Seq(dz, dy, dx) = zm.shape
-    val Seq(iz, iy, ix) = sh.innerChunks
-    VolumeMeta(dz, dy, dx, iz, iy, ix,
-      ((dz + iz - 1) / iz).toInt, ((dy + iy - 1) / iy).toInt, ((dx + ix - 1) / ix).toInt,
-      zm.elementType, spacingX = 1.0, spacingY = 1.0, spacingZ = 1.0)
-  }
+  private def innerVm(zm: ZarrMeta, sh: ShardingMeta): VolumeMeta =
+    ZarrStore.volumeMeta(innerMeta(zm, sh))
 
   /** Encode one SHARD chunk (the full shard extent, trimmed at array
     * edges) into its shard-file bytes: split into inner chunks on the
@@ -524,24 +458,80 @@ object Zarr3Store {
     out
   }
 
-  /** Parse a shard file's index → (offset, nbytes) per inner cell in
-    * C-order; verifies the crc32c when declared. `idxBytes` are exactly
-    * the [[ShardingMeta.indexLen]] bytes at the declared location.
+  /** One shard file opened for cell reads, over `readAt(offset, length)`
+    * of its whole-file bytes or of a positioned [[graft.io.FioRandom]]:
+    * the index is read from its declared location and its crc32c
+    * verified when declared, and every cell's blob is bounds-checked
+    * against the file before it is read.
     */
-  private[volume] def parseShardIndex(
-      idxBytes: Array[Byte], sh: ShardingMeta, zm: ZarrMeta, name: String): Array[Long] = {
-    val nCells = sh.innerGridPerShard(zm.chunks).product
-    if (sh.indexCrc32c) {
-      val want = java.nio.ByteBuffer.wrap(idxBytes, nCells * 16, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      val got = crc32cOf(idxBytes, nCells * 16)
-      require(got == want,
-        f"shard $name: index crc32c mismatch (stored 0x$want%08x, computed 0x$got%08x) — " +
-          "refusing to address chunks off a corrupt index")
+  private final class ShardFile(
+      name: String, size: Long, readAt: (Long, Int) => Array[Byte],
+      zm: ZarrMeta, sh: ShardingMeta) {
+    val indexLen: Int = sh.indexLen(zm.chunks)
+    require(size >= indexLen, s"shard $name: $size bytes is shorter than its $indexLen-byte index")
+    private val entries: Array[Long] = {
+      val nCells = sh.innerGridPerShard(zm.chunks).product
+      val idx = readAt(if (sh.indexAtEnd) size - indexLen else 0L, indexLen)
+      if (sh.indexCrc32c) {
+        val want = java.nio.ByteBuffer.wrap(idx, nCells * 16, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        val crc = new java.util.zip.CRC32C
+        crc.update(idx, 0, nCells * 16)
+        val got = crc.getValue.toInt
+        require(got == want,
+          f"shard $name: index crc32c mismatch (stored 0x$want%08x, computed 0x$got%08x) — " +
+            "refusing to address chunks off a corrupt index")
+      }
+      val buf = java.nio.ByteBuffer.wrap(idx, 0, nCells * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      Array.fill(nCells * 2)(buf.getLong)
     }
-    val buf = java.nio.ByteBuffer.wrap(idxBytes, 0, nCells * 16)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    Array.fill(nCells * 2)(buf.getLong)
+
+    /** Stored bytes of inner `cell` (C-order in the shard); 0 if missing. */
+    def blobLen(cell: Int): Long = {
+      val off = entries(cell * 2); val len = entries(cell * 2 + 1)
+      if (off == Missing) 0L
+      else {
+        require(off >= 0 && len >= 0 && len <= Int.MaxValue && off + len <= size,
+          s"shard $name: inner cell $cell addresses [$off, ${off + len}) outside the file")
+        len
+      }
+    }
+
+    /** Inner `cell`'s blob; `None` = missing = all fill_value. */
+    def blob(cell: Int): Option[Array[Byte]] = {
+      val len = blobLen(cell)
+      if (entries(cell * 2) == Missing) None else Some(readAt(entries(cell * 2), len.toInt))
+    }
+  }
+
+  private def shardOfBytes(name: String, b: Array[Byte], zm: ZarrMeta, sh: ShardingMeta) =
+    new ShardFile(name, b.length.toLong, (off, len) =>
+      java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + len), zm, sh)
+
+  private def shardOfFile(raf: graft.io.FioRandom, zm: ZarrMeta, sh: ShardingMeta) =
+    new ShardFile(raf.path, raf.size, raf.readAt, zm, sh)
+
+  /** The inner cells the box [z0,z1)×[y0,y1)×[x0,x1) touches, grouped by
+    * shard (sorted shard-grid coordinates), each cell as its global
+    * inner-grid (z, y, x) and its C-order index in the shard. The box is
+    * clamped to the array [0, shape) first: a box reaching below 0 or
+    * past the shape plans no shard outside the grid, and a box wholly
+    * outside plans none.
+    */
+  private def boxCells(zm: ZarrMeta, sh: ShardingMeta,
+      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long)
+      : Seq[((Int, Int, Int), Seq[(Int, Int, Int, Int)])] = {
+    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
+    def axis(lo: Long, hi: Long, d: Int): Range = {
+      val (a, b) = (math.max(lo, 0L), math.min(hi, zm.shape(d)))
+      val i = sh.innerChunks(d)
+      if (a >= b) Range(0, 0) else (a / i).toInt to ((b - 1) / i).toInt
+    }
+    val cells = for {
+      gcz <- axis(z0, z1, 0); gcy <- axis(y0, y1, 1); gcx <- axis(x0, x1, 2)
+    } yield (gcz, gcy, gcx, ((gcz % nIz) * nIy + gcy % nIy) * nIx + gcx % nIx)
+    cells.groupBy { case (gcz, gcy, gcx, _) => (gcz / nIz, gcy / nIy, gcx / nIx) }
+      .toSeq.sortBy(_._1)
   }
 
   /** Write a ChunkVolume as a SHARDED zarr v3 array: the volume's chunk
@@ -565,22 +555,8 @@ object Zarr3Store {
     val sh = ShardingMeta(inner, indexCrc32c = true, indexAtEnd = indexAtEnd)
     val zm = metaOf(m, codec)
     val ivm = innerVm(zm, sh)
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    Fio.mkdirs(dir)
-    Fio.writeString(Fio.child(dir, "zarr.json"), shardedZarrJson(zm, sh, extraAttrs))
-    val pathStr = dir
-    try {
-      vol.chunks.foreachPartition { (it: Iterator[Chunk]) =>
-        it.foreach { c =>
-          Fio.writeBytes(Fio.child(pathStr, s"c/${c.cz}/${c.cy}/${c.cx}"),
-            encodeShard(c, zm, sh, ivm))
-        }
-      }
-    } catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    ZarrStore.writeArray(vol.chunks, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)),
+      chunkKey("/", _, _, _), c => encodeShard(c, zm, sh, ivm))
   }
 
   /** Scan a sharded array: one task per shard reads the file once,
@@ -591,56 +567,25 @@ object Zarr3Store {
     * unsharded.
     */
   private def readSharded(
-      spark: SparkSession, pathStr: String, zm: ZarrMeta, sh: ShardingMeta)(
+      spark: SparkSession, dir: String, zm: ZarrMeta, sh: ShardingMeta)(
       implicit fc: FioConf): ChunkVolume = {
-    val ivm = innerVm(zm, sh)
+    val (izm, ivm) = (innerMeta(zm, sh), innerVm(zm, sh))
     val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    val Seq(nscz0, nscy0, nscx0) = zm.gridShape
-    val (nscz, nscy, nscx) = (nscz0, nscy0, nscx0)
+    val Seq(_, nscy, nscx) = zm.gridShape
     val sep = zm.dimSeparator
     import spark.implicits._
-    val nShards = nscz.toLong * nscy * nscx
-    val chunks = spark.range(nShards)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .flatMap { idx =>
-        val scz = (idx / (nscy.toLong * nscx)).toInt
-        val scy = ((idx / nscx) % nscy).toInt
-        val scx = (idx % nscx).toInt
-        val f = Fio.child(pathStr, Seq("c", scz, scy, scx).mkString(sep))
-        val shardBytes = Fio.readAllIfExists(f)
-        val idxLen = sh.indexLen(zm.chunks)
-        val entries = shardBytes.map { b =>
-          require(b.length >= idxLen,
-            s"shard $f: ${b.length} bytes is shorter than its $idxLen-byte index")
-          val idxBytes = new Array[Byte](idxLen)
-          System.arraycopy(b, if (sh.indexAtEnd) b.length - idxLen else 0, idxBytes, 0, idxLen)
-          parseShardIndex(idxBytes, sh, zm, f)
-        }
-        // inner ZarrMeta drives decodeChunk: inner chunk shape + inner codec
-        val izm = ZarrMeta(zm.shape, sh.innerChunks, zm.dtype, zm.codec, zm.fillValue, sep)
-        Iterator.range(0, nIz * nIy * nIx).flatMap { cell =>
-          val lz = cell / (nIy * nIx); val rem = cell % (nIy * nIx)
-          val ly = rem / nIx; val lx = rem % nIx
-          val gcz = scz * nIz + lz; val gcy = scy * nIy + ly; val gcx = scx * nIx + lx
-          if (gcz >= ivm.ncz || gcy >= ivm.ncy || gcx >= ivm.ncx) Iterator.empty
-          else {
-            val blob = entries.flatMap { e =>
-              val off = e(cell * 2); val len = e(cell * 2 + 1)
-              if (off == Missing) None
-              else {
-                require(off >= 0 && len >= 0 && off + len <= shardBytes.get.length
-                    && len <= Int.MaxValue,
-                  s"shard $f: inner cell $cell addresses [$off, ${off + len}) outside the file")
-                val b = new Array[Byte](len.toInt)
-                System.arraycopy(shardBytes.get, off.toInt, b, 0, len.toInt)
-                Some(b)
-              }
-            }
-            Iterator.single(ZarrStore.decodeChunk(blob, izm, ivm, gcz, gcy, gcx))
-          }
-        }
+    val chunks = ZarrStore.gridIndices(spark, zm.gridShape).flatMap { idx =>
+      val (scz, scy, scx) = ZarrStore.cellOf(idx, nscy, nscx)
+      val f = Fio.child(dir, chunkKey(sep, scz, scy, scx))
+      val shard = Fio.readAllIfExists(f).map(shardOfBytes(f, _, zm, sh))
+      Iterator.range(0, nIz * nIy * nIx).flatMap { cell =>
+        val (lz, ly, lx) = ZarrStore.cellOf(cell, nIy, nIx)
+        val (gcz, gcy, gcx) = (scz * nIz + lz, scy * nIy + ly, scx * nIx + lx)
+        if (gcz >= ivm.ncz || gcy >= ivm.ncy || gcx >= ivm.ncx) Iterator.empty
+        else Iterator.single(
+          ZarrStore.decodeChunk(shard.flatMap(_.blob(cell)), izm, ivm, gcz, gcy, gcx))
       }
+    }
     ChunkVolume(chunks, ivm)
   }
 
@@ -661,14 +606,19 @@ object Zarr3Store {
       codec: Codec = ZstdCodec(),
       extraAttrs: Map[String, String] = Map.empty): Unit = {
     implicit val fc: FioConf = FioConf.of(spark)
-    val (zm, sharding) = parseZarrJsonAny(
-      Fio.readString(Fio.child(Fio.qualify(srcPath), "zarr.json")))
-    require(sharding.isEmpty, s"$srcPath is already sharded — nothing to compact")
-    val vol = read(spark, srcPath)
+    require(readDoc(Fio.qualify(srcPath))._2.isEmpty, s"$srcPath is already sharded — nothing to compact")
     writeSharded(
-      vol.rechunk(shardShape._1, shardShape._2, shardShape._3),
+      read(spark, srcPath).rechunk(shardShape._1, shardShape._2, shardShape._3),
       destPath, innerShape, codec, extraAttrs = extraAttrs)
-    val _ = zm // parsed for the fail-loud sharded check only
+  }
+
+  /** A sharded array's directory and layout; fails loud on an unsharded one. */
+  private def openSharded(path: String)(implicit fc: FioConf): (String, ZarrMeta, ShardingMeta) = {
+    val dir = Fio.qualify(path)
+    val (zm, shOpt) = readDoc(dir)
+    val sh = shOpt.getOrElse(throw new IllegalArgumentException(
+      s"$path is not a sharded array — use Zarr3Store.read (+ cropVoxels for a box)"))
+    (dir, zm, sh)
   }
 
   /** Evidence-carrying point lookup against a sharded store: TWO
@@ -683,89 +633,31 @@ object Zarr3Store {
     * tasks cover only the INTERSECTING shards, and each task positioned-
     * reads its shard's index plus only the inner chunks the box touches
     * (never the shard body). Returns (z, y, x, label) voxels of
-    * [z0,z1)×[y0,y1)×[x0,x1); [[boxProbeSharded]] carries the matching
-    * evidence for the shape pin.
+    * [z0,z1)×[y0,y1)×[x0,x1) ∩ the array; [[boxProbeSharded]] carries the
+    * matching evidence for the shape pin.
     */
   def readBoxSharded(
       spark: SparkSession, path: String,
       z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): DataFrame = {
     require(z0 < z1 && y0 < y1 && x0 < x1, s"empty ROI [$z0,$z1)×[$y0,$y1)×[$x0,$x1)")
     implicit val fc: FioConf = FioConf.of(spark)
-    val dir = Fio.qualify(path)
-    val (zm, shOpt) = parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
-    val sh = shOpt.getOrElse(throw new IllegalArgumentException(
-      s"$path is not a sharded array — use Zarr3Store.read + cropVoxels"))
-    val ivm = innerVm(zm, sh)
-    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    val Seq(sz, sy, sx) = zm.chunks
-    val dirStr = dir
+    val (dir, zm, sh) = openSharded(path)
+    val (izm, ivm) = (innerMeta(zm, sh), innerVm(zm, sh))
     val sep = zm.dimSeparator
-    val bpp = zm.bpp
-    val unsigned = ivm.isUnsigned
-    // shard coords intersecting the box (driver-planned, O(shards-in-box))
-    val shardCoords = for {
-      scz <- (z0 / sz).toInt to ((z1 - 1) / sz).toInt
-      scy <- (y0 / sy).toInt to ((y1 - 1) / sy).toInt
-      scx <- (x0 / sx).toInt to ((x1 - 1) / sx).toInt
-    } yield (scz, scy, scx)
+    val plan = boxCells(zm, sh, z0, z1, y0, y1, x0, x1)
     import spark.implicits._
-    val izm = ZarrMeta(zm.shape, sh.innerChunks, zm.dtype, zm.codec, zm.fillValue, sep)
-    spark.createDataset(shardCoords)
-      .repartition(math.min(shardCoords.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (scz, scy, scx) =>
-        val f = Fio.child(dirStr, Seq("c", scz, scy, scx).mkString(sep))
-        val Seq(iz, iy, ix) = sh.innerChunks
-        // intersecting inner cells of this shard, bounded to the array grid
-        val cells = for {
-          gcz <- math.max(scz * nIz, (z0 / iz).toInt) to
-            math.min(math.min((scz + 1) * nIz - 1, ivm.ncz - 1), ((z1 - 1) / iz).toInt)
-          gcy <- math.max(scy * nIy, (y0 / iy).toInt) to
-            math.min(math.min((scy + 1) * nIy - 1, ivm.ncy - 1), ((y1 - 1) / iy).toInt)
-          gcx <- math.max(scx * nIx, (x0 / ix).toInt) to
-            math.min(math.min((scx + 1) * nIx - 1, ivm.ncx - 1), ((x1 - 1) / ix).toInt)
-        } yield (gcz, gcy, gcx)
-        if (cells.isEmpty) Iterator.empty
-        else {
-          val raf: graft.io.FioRandom = Fio.openRandomIfExists(f).orNull
-          try {
-            val entries =
-              if (raf == null) null
-              else {
-                val idxLen = sh.indexLen(zm.chunks)
-                val idxBytes = new Array[Byte](idxLen)
-                raf.readFully(if (sh.indexAtEnd) raf.size - idxLen else 0L, idxBytes)
-                parseShardIndex(idxBytes, sh, zm, f)
-              }
-            cells.iterator.flatMap { case (gcz, gcy, gcx) =>
-              val cell = ((gcz - scz * nIz) * nIy + (gcy - scy * nIy)) * nIx + (gcx - scx * nIx)
-              val blob =
-                if (entries == null) None
-                else {
-                  val off = entries(cell * 2); val len = entries(cell * 2 + 1)
-                  if (off == Missing) None
-                  else {
-                    require(off >= 0 && len >= 0 && len <= Int.MaxValue
-                        && off + len <= raf.size,
-                      s"shard $f: inner cell $cell addresses [$off, ${off + len}) outside the file")
-                    Some(raf.readAt(off, len.toInt))
-                  }
-                }
-              val c = ZarrStore.decodeChunk(blob, izm, ivm, gcz, gcy, gcx)
-              // trim to the box and emit voxels (the cropVoxels kernel)
-              val bz = math.max(z0, c.z0); val ez = math.min(z1, c.z0 + c.nz)
-              val by = math.max(y0, c.y0); val ey = math.min(y1, c.y0 + c.ny)
-              val bx = math.max(x0, c.x0); val ex = math.min(x1, c.x0 + c.nx)
-              val (nz, ny, nx) = ((ez - bz).toInt, (ey - by).toInt, (ex - bx).toInt)
-              val box = ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp,
-                (bz - c.z0).toInt, (by - c.y0).toInt, (bx - c.x0).toInt, nz, ny, nx)
-              Iterator.range(0, nz * ny * nx).map { i =>
-                val z = i / (ny * nx); val rem = i % (ny * nx)
-                (bz + z, by + rem / nx, bx + rem % nx,
-                  ChunkKernels.decodeLong(box, i, bpp, unsigned))
-              }.toSeq
-            }.toSeq
-          } finally if (raf != null) raf.close()
-        }
+    spark.createDataset(plan)
+      .repartition(math.max(1, math.min(plan.size, spark.sparkContext.defaultParallelism)))
+      .flatMap { case ((scz, scy, scx), cells) =>
+        val raf = Fio.openRandomIfExists(Fio.child(dir, chunkKey(sep, scz, scy, scx)))
+        try {
+          val shard = raf.map(shardOfFile(_, zm, sh))
+          // strict over `cells`: every read completes before the file closes
+          cells.flatMap { case (gcz, gcy, gcx, cell) =>
+            val c = ZarrStore.decodeChunk(shard.flatMap(_.blob(cell)), izm, ivm, gcz, gcy, gcx)
+            ChunkVolume.voxelsInBox(c, z0, z1, y0, y1, x0, x1, zm.bpp, ivm.isUnsigned)
+          }
+        } finally raf.foreach(_.close())
       }
       .toDF("z", "y", "x", "label")
   }
@@ -784,96 +676,47 @@ object Zarr3Store {
       path: String,
       z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long)(
       implicit fc: FioConf): ShardBoxProbe = {
-    val dir = Fio.qualify(path)
-    val (zm, shOpt) = parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
-    val sh = shOpt.getOrElse(throw new IllegalArgumentException(s"$path is not sharded"))
-    val ivm = innerVm(zm, sh)
-    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    val Seq(sz, sy, sx) = zm.chunks
-    val Seq(iz, iy, ix) = sh.innerChunks
-    val sep = zm.dimSeparator
-    var shards = 0
+    val (dir, zm, sh) = openSharded(path)
+    val plan = boxCells(zm, sh, z0, z1, y0, y1, x0, x1)
     var innerRead = 0
     var bytesRead = 0L
     var fileBytes = 0L
-    for {
-      scz <- (z0 / sz).toInt to ((z1 - 1) / sz).toInt
-      scy <- (y0 / sy).toInt to ((y1 - 1) / sy).toInt
-      scx <- (x0 / sx).toInt to ((x1 - 1) / sx).toInt
-    } {
-      val f = Fio.child(dir, Seq("c", scz, scy, scx).mkString(sep))
-      shards += 1
-      Fio.openRandomIfExists(f).foreach { raf =>
-        fileBytes += raf.size
-        val idxLen = sh.indexLen(zm.chunks)
-        bytesRead += idxLen
+    for (((scz, scy, scx), cells) <- plan)
+      Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, scz, scy, scx))).foreach { raf =>
         try {
-          val idxBytes = new Array[Byte](idxLen)
-          raf.readFully(if (sh.indexAtEnd) raf.size - idxLen else 0L, idxBytes)
-          val entries = parseShardIndex(idxBytes, sh, zm, f)
-          for {
-            gcz <- math.max(scz * nIz, (z0 / iz).toInt) to
-              math.min(math.min((scz + 1) * nIz - 1, ivm.ncz - 1), ((z1 - 1) / iz).toInt)
-            gcy <- math.max(scy * nIy, (y0 / iy).toInt) to
-              math.min(math.min((scy + 1) * nIy - 1, ivm.ncy - 1), ((y1 - 1) / iy).toInt)
-            gcx <- math.max(scx * nIx, (x0 / ix).toInt) to
-              math.min(math.min((scx + 1) * nIx - 1, ivm.ncx - 1), ((x1 - 1) / ix).toInt)
-          } {
-            val cell = ((gcz - scz * nIz) * nIy + (gcy - scy * nIy)) * nIx + (gcx - scx * nIx)
-            innerRead += 1
-            if (entries(cell * 2) != Missing) bytesRead += entries(cell * 2 + 1)
-          }
+          val shard = shardOfFile(raf, zm, sh)
+          fileBytes += raf.size
+          bytesRead += shard.indexLen
+          cells.foreach { case (_, _, _, cell) => innerRead += 1; bytesRead += shard.blobLen(cell) }
         } finally raf.close()
       }
-    }
-    val Seq(nscz, nscy, nscx) = zm.gridShape
-    ShardBoxProbe(shards, nscz * nscy * nscx,
+    val ivm = innerVm(zm, sh)
+    ShardBoxProbe(plan.size, zm.gridShape.product,
       innerRead, ivm.ncz * ivm.ncy * ivm.ncx, bytesRead, fileBytes)
   }
 
   def pointLookupSharded(path: String, z: Long, y: Long, x: Long)(
       implicit fc: FioConf): ShardProbe = {
-    val dir = Fio.qualify(path)
-    val (zm, shOpt) = parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
-    val sh = shOpt.getOrElse(throw new IllegalArgumentException(
-      s"$path is not a sharded array — use Zarr3Store.read"))
+    val (dir, zm, sh) = openSharded(path)
     require(z >= 0 && y >= 0 && x >= 0
       && z < zm.shape(0) && y < zm.shape(1) && x < zm.shape(2),
       s"point ($z,$y,$x) outside array ${zm.shape.mkString("x")}")
-    val Seq(sz, sy, sx) = zm.chunks
-    val Seq(iz, iy, ix) = sh.innerChunks
-    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    val (scz, scy, scx) = ((z / sz).toInt, (y / sy).toInt, (x / sx).toInt)
-    val (lz, ly, lx) = (((z % sz) / iz).toInt, ((y % sy) / iy).toInt, ((x % sx) / ix).toInt)
-    val cell = (lz * nIy + ly) * nIx + lx
-    val sep = zm.dimSeparator
-    val f = Fio.child(dir, Seq("c", scz, scy, scx).mkString(sep))
-    val ivm = innerVm(zm, sh)
-    val izm = ZarrMeta(zm.shape, sh.innerChunks, zm.dtype, zm.codec, zm.fillValue, sep)
-    val (gcz, gcy, gcx) = (scz * nIz + lz, scy * nIy + ly, scx * nIx + lx)
-    val rafOpt = Fio.openRandomIfExists(f)
-    if (rafOpt.isEmpty)
-      return ShardProbe(zm.fillValue, shardsOpened = 0, bytesRead = 0L, fileBytes = 0L)
-    val raf = rafOpt.get
-    try {
-      val fileLen = raf.size
-      val idxLen = sh.indexLen(zm.chunks)
-      require(fileLen >= idxLen, s"shard $f shorter than its index")
-      val idxBytes = new Array[Byte](idxLen)
-      raf.readFully(if (sh.indexAtEnd) fileLen - idxLen else 0L, idxBytes)
-      val entries = parseShardIndex(idxBytes, sh, zm, f)
-      val off = entries(cell * 2); val len = entries(cell * 2 + 1)
-      val blob = if (off == Missing) None else {
-        require(off >= 0 && len >= 0 && off + len <= fileLen && len <= Int.MaxValue,
-          s"shard $f: cell $cell addresses [$off, ${off + len}) outside the file")
-        Some(raf.readAt(off, len.toInt))
-      }
-      val inner = ZarrStore.decodeChunk(blob, izm, ivm, gcz, gcy, gcx)
-      val bpp = zm.bpp
-      val vi = (((z - inner.z0) * inner.ny + (y - inner.y0)) * inner.nx + (x - inner.x0)).toInt
-      val label = ChunkKernels.decodeLong(inner.data, vi, bpp, ivm.isUnsigned)
-      ShardProbe(label, shardsOpened = 1,
-        bytesRead = idxLen + blob.map(_.length.toLong).getOrElse(0L), fileBytes = fileLen)
-    } finally raf.close()
+    // a point is the one-voxel box: one shard, one inner cell
+    val Seq(((scz, scy, scx), Seq((gcz, gcy, gcx, cell)))) =
+      boxCells(zm, sh, z, z + 1, y, y + 1, x, x + 1)
+    Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, scz, scy, scx))) match {
+      case None => ShardProbe(zm.fillValue, shardsOpened = 0, bytesRead = 0L, fileBytes = 0L)
+      case Some(raf) =>
+        try {
+          val shard = shardOfFile(raf, zm, sh)
+          val blob = shard.blob(cell)
+          val ivm = innerVm(zm, sh)
+          val inner = ZarrStore.decodeChunk(blob, innerMeta(zm, sh), ivm, gcz, gcy, gcx)
+          val vi = (((z - inner.z0) * inner.ny + (y - inner.y0)) * inner.nx + (x - inner.x0)).toInt
+          val label = ChunkKernels.decodeLong(inner.data, vi, zm.bpp, ivm.isUnsigned)
+          ShardProbe(label, shardsOpened = 1,
+            bytesRead = shard.indexLen + blob.map(_.length.toLong).getOrElse(0L), fileBytes = raf.size)
+        } finally raf.close()
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.volume
 
 import graft.io.{Fio, FioConf}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import java.io.ByteArrayOutputStream
@@ -26,6 +26,14 @@ import java.util.zip.{Deflater, Inflater}
   *  - dtype tags with explicit endianness (`<u4`, `>u4`, `|u1`, …): the
   *    writer emits little-endian (chunk payloads are LE in memory), the
   *    reader byte-swaps big-endian arrays on decode.
+  *
+  * The end of this object is the zarr LAYOUT LAYER that the v3 dialect
+  * ([[Zarr3Store]], plain and sharded) shares: [[chunkKey]] here and
+  * `Zarr3Store.chunkKey` are the only code that turns chunk coordinates
+  * into paths, and one writer, one appender (which checks an existing
+  * document against the layout it would write) and one planned-grid
+  * reader serve both dialects — each supplies only its documents, its
+  * key and its per-chunk encoder.
   *
   * This store is interop-first; the sibling [[ChunkStore]] (GCS2 headers
   * with per-chunk label stats) remains the value-indexed internal format.
@@ -603,16 +611,18 @@ object ZarrStore {
        |}""".stripMargin
   }
 
+  /** A JSON number of a zarr document as a Long (`null` fill_value → 0). */
+  private[volume] def num(j: JValue): Long = j match {
+    case JInt(n) => n.toLong
+    case JLong(n) => n
+    case JDouble(d) => d.toLong
+    case JDecimal(d) => d.toLong
+    case JNull => 0L
+    case other => throw new IllegalArgumentException(s"expected number, got $other")
+  }
+
   def parseZarray(json: String): ZarrMeta = {
     val v = JsonMethods.parse(json)
-    def num(j: JValue): Long = j match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case JDouble(d) => d.toLong
-      case JDecimal(d) => d.toLong
-      case JNull => 0L // fill_value null -> 0
-      case other => throw new IllegalArgumentException(s"expected number, got $other")
-    }
     val JInt(fmt) = v \ "zarr_format"
     require(fmt == 2, s"only zarr v2 supported, got $fmt")
     val JArray(shape) = v \ "shape"
@@ -662,20 +672,30 @@ object ZarrStore {
     }
   }
 
-  private def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta = ZarrMeta(
+  /** The array layout a write of `vol` with `codec` produces (blosc's
+    * typesize set from the dtype; `.` separator — [[Zarr3Store]] swaps
+    * in `/`).
+    */
+  private[volume] def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta = ZarrMeta(
     shape = Seq(vol.dimZ, vol.dimY, vol.dimX),
     chunks = Seq(vol.chunkZ, vol.chunkY, vol.chunkX),
     dtype = DtypeOf(vol.elementType),
-    codec = codec match {
-      case b: BloscCodec => b.withTypesize(vol.bytesPerVoxel)
-      case c => c
-    },
+    codec = forElements(codec, vol.bytesPerVoxel),
     fillValue = 0L)
 
-  /** Write a ChunkVolume as a zarr v2 array directory. Chunk files are
-    * written straight from executor tasks (the driver only writes the two
-    * metadata documents), so the write parallelizes like the reference's
-    * dask `to_zarr` and scales with the cluster, not the driver.
+  /** `codec` ready to encode `bpp`-byte elements: blosc's shuffle needs
+    * the typesize, which a parsed document does not carry (it lives in
+    * each chunk header).
+    */
+  private[graft] def forElements(codec: Codec, bpp: Int): Codec = codec match {
+    case b: BloscCodec => b.withTypesize(bpp)
+    case c => c
+  }
+
+  /** Write a ChunkVolume as a zarr v2 array directory: `.zarray` and
+    * `.zattrs` from the driver, chunk files straight from executor tasks,
+    * so the write parallelizes like the reference's dask `to_zarr` and
+    * scales with the cluster, not the driver.
     *
     * Overwrite is ALL-OR-NOTHING like the reference's pre-delete+rewrite
     * (upscale_streaming.py:118–127), but via [[AtomicDir]]: the new store
@@ -685,13 +705,7 @@ object ZarrStore {
     */
   def write(vol: ChunkVolume, path: String, codec: Codec = ZstdCodec(),
       extraAttrs: Map[String, String] = Map.empty): Unit = {
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    val dest = Fio.qualify(path)
-    AtomicDir.sweepLeftovers(dest)
-    val dir = AtomicDir.tempSibling(dest)
-    Fio.mkdirs(dir)
     val zm = metaOf(vol.meta, codec)
-    Fio.writeString(Fio.child(dir, ".zarray"), zarrayJson(zm))
     // .zattrs: spacing + provenance (user attrs per the spec; zarr/dask
     // readers ignore unknown keys). Spacing is stored (x,y,z) like MHD's
     // ElementSpacing so round-trips preserve the header convention.
@@ -699,33 +713,29 @@ object ZarrStore {
       "graft:spacing" -> s"[${vol.meta.spacingX}, ${vol.meta.spacingY}, ${vol.meta.spacingZ}]",
       "graft:elementType" -> ChunkVolume.jsonStr(vol.meta.elementType),
     ) ++ extraAttrs.map { case (k, v) => k -> ChunkVolume.jsonStr(v) }
-    Fio.writeString(Fio.child(dir, ".zattrs"),
-      attrs.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"    ${ChunkVolume.jsonStr(k)}: $v" }
-        .mkString("{\n", ",\n", "\n}"))
-    try writeChunkFiles(vol.chunks, dir, vol.meta, zm.codec)
-    catch { case e: Throwable => AtomicDir.deleteInBackground(dir); throw e }
-    AtomicDir.publish(dir, dest)
+    val zattrs = attrs.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"    ${ChunkVolume.jsonStr(k)}: $v" }
+      .mkString("{\n", ",\n", "\n}")
+    val (meta, eff) = (vol.meta, zm.codec)
+    writeArray(vol.chunks, path, Seq(".zarray" -> zarrayJson(zm), ".zattrs" -> zattrs),
+      chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
   }
 
-  /** Append chunk files into an existing zarr array directory — the
+  /** Append chunk files into a zarr v2 array directory — the
     * incremental-ingest building block: zarr chunks are independent
     * files, so streaming micro-batches append idempotently (a re-landed
-    * chunk coordinate overwrites its own file). Writes the metadata
-    * documents on first call.
+    * chunk coordinate overwrites its own file). Writes `.zarray` on first
+    * call; later calls fail loud if it describes another layout.
     */
   def appendChunks(
       chunks: org.apache.spark.sql.Dataset[Chunk],
       path: String,
       meta: VolumeMeta,
       codec: Codec = ZstdCodec()): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    val dir = Fio.qualify(path)
-    Fio.mkdirs(dir)
     val zm = metaOf(meta, codec)
-    val zarrayPath = Fio.child(dir, ".zarray")
-    if (!Fio.exists(zarrayPath)) Fio.writeString(zarrayPath, zarrayJson(zm))
-    writeChunkFiles(chunks, dir, meta, zm.codec)
+    val eff = zm.codec
+    appendArray(chunks, path, ".zarray", zarrayJson(zm), zm, parseZarray,
+      chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
   }
 
   /** Validate, pad, and compress ONE chunk to its zarr file bytes WITHOUT
@@ -758,36 +768,24 @@ object ZarrStore {
   }
 
   /** Validate, pad, compress, and write ONE chunk's file — the per-row
-    * kernel shared by the Dataset writer and the DSv2 write path.
+    * kernel of the DSv2 write path.
     */
   private[graft] def encodeChunkFile(
       c: Chunk, pathStr: String, meta: VolumeMeta, codec: Codec)(implicit fc: FioConf): Unit =
-    Fio.writeBytes(Fio.child(pathStr, s"${c.cz}.${c.cy}.${c.cx}"), encodeChunkBytes(c, meta, codec))
+    Fio.writeBytes(Fio.child(pathStr, chunkKey(".", c.cz, c.cy, c.cx)),
+      encodeChunkBytes(c, meta, codec))
 
   /** Create an array directory with its `.zarray` only (no chunks yet) —
     * the driver-side step of the DSv2 write path; executors then land
     * chunk files independently. Returns the effective (zarr, volume)
-    * metadata. No-op (returning the EXISTING metadata) if the array is
-    * already initialized.
+    * metadata; an existing `.zarray` must describe the same layout.
     */
   private[graft] def initArray(path: String, meta: VolumeMeta, codec: Codec)(
       implicit fc: FioConf): (ZarrMeta, VolumeMeta) = {
-    val dir = Fio.qualify(path)
-    Fio.mkdirs(dir)
-    val zarrayPath = Fio.child(dir, ".zarray")
-    if (!Fio.exists(zarrayPath))
-      Fio.writeString(zarrayPath, zarrayJson(metaOf(meta, codec)))
+    val zm = metaOf(meta, codec)
+    ensureDocument(Fio.qualify(path), ".zarray", zarrayJson(zm), zm, parseZarray)
     readMeta(path)
   }
-
-  private def writeChunkFiles(
-      chunks: org.apache.spark.sql.Dataset[Chunk],
-      pathStr: String,
-      meta: VolumeMeta,
-      codec: Codec)(implicit fc: FioConf): Unit =
-    chunks.foreachPartition { (it: Iterator[Chunk]) =>
-      it.foreach(c => encodeChunkFile(c, pathStr, meta, codec))
-    }
 
   /** Read `.zarray` (+ spacing attr if present) into engine metadata. */
   def readMeta(path: String)(implicit fc: FioConf): (ZarrMeta, VolumeMeta) = {
@@ -802,12 +800,7 @@ object ZarrStore {
         .map(a => (a(0), a(1), a(2)))
         .getOrElse((1.0, 1.0, 1.0))
     }
-    val Seq(dz, dy, dx) = zm.shape
-    val Seq(cz, cy, cx) = zm.chunks
-    val Seq(ncz, ncy, ncx) = zm.gridShape
-    val vm = VolumeMeta(dz, dy, dx, cz, cy, cx, ncz, ncy, ncx, zm.elementType,
-      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
-    (zm, vm)
+    (zm, volumeMeta(zm, spacing))
   }
 
   /** Decode one chunk file's bytes to the engine's trimmed little-endian
@@ -852,21 +845,113 @@ object ZarrStore {
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val (zm, vm) = readMeta(path)
-    val pathStr = Fio.qualify(path)
     val sep = zm.dimSeparator
-    val (ncy, ncx) = (vm.ncy, vm.ncx)
+    readArray(spark, Fio.qualify(path), zm, vm, chunkKey(sep, _, _, _))
+  }
+
+  // ------------------------------------------------------------------
+  // The zarr layout layer, shared by this store and the v3 dialect
+  // ([[Zarr3Store]], plain and sharded). A dialect supplies only its
+  // metadata documents, its chunk key and its per-chunk encoder; staging,
+  // executor-side chunk landing, the append document check and the
+  // planned-grid reader are written once, here.
+
+  /** v2 chunk key: `z<sep>y<sep>x` in chunk-grid coordinates. */
+  private[graft] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
+    s"$cz$sep$cy$sep$cx"
+
+  /** Engine metadata for a zarr array's chunk grid. */
+  private[volume] def volumeMeta(
+      zm: ZarrMeta, spacing: (Double, Double, Double) = (1.0, 1.0, 1.0)): VolumeMeta = {
+    val Seq(dz, dy, dx) = zm.shape
+    val Seq(cz, cy, cx) = zm.chunks
+    val Seq(ncz, ncy, ncx) = zm.gridShape
+    VolumeMeta(dz, dy, dx, cz, cy, cx, ncz, ncy, ncx, zm.elementType,
+      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
+  }
+
+  /** Write a whole array all-or-nothing ([[AtomicDir.stage]]): the
+    * metadata `docs` (file name → body) from the driver, then every
+    * chunk encoded and landed under its `key` from executor tasks.
+    */
+  private[volume] def writeArray(
+      chunks: Dataset[Chunk], path: String, docs: Seq[(String, String)],
+      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+    AtomicDir.stage(path) { dir =>
+      docs.foreach { case (name, body) => Fio.writeString(Fio.child(dir, name), body) }
+      landChunks(chunks, dir, key, encode)
+    }
+  }
+
+  /** Land chunks into an array in place: write its document `docName`
+    * if absent, else require the one on disk (read back by `parse`) to
+    * describe the layout `zm` these chunks are encoded with.
+    */
+  private[volume] def appendArray(
+      chunks: Dataset[Chunk], path: String, docName: String, doc: => String,
+      zm: ZarrMeta, parse: String => ZarrMeta,
+      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+    val dir = Fio.qualify(path)
+    ensureDocument(dir, docName, doc, zm, parse)
+    landChunks(chunks, dir, key, encode)
+  }
+
+  private def ensureDocument(dir: String, docName: String, doc: => String,
+      zm: ZarrMeta, parse: String => ZarrMeta)(implicit fc: FioConf): Unit = {
+    Fio.mkdirs(dir)
+    val docPath = Fio.child(dir, docName)
+    Fio.readStringIfExists(docPath) match {
+      case None => Fio.writeString(docPath, doc)
+      case Some(body) =>
+        val (onDisk, wanted) = (layoutOf(parse(body)), layoutOf(zm))
+        require(onDisk == wanted,
+          s"$docPath describes $onDisk, but this append would write $wanted — " +
+            "refusing to land chunk files the document would mis-describe")
+    }
+  }
+
+  /** The layout an append must agree on; blosc's typesize is set from the
+    * dtype on both sides, as the DSv2 write path does.
+    */
+  private def layoutOf(m: ZarrMeta): String =
+    s"shape [${m.shape.mkString(", ")}], chunks [${m.chunks.mkString(", ")}], " +
+      s"dtype ${m.dtype}, codec ${forElements(m.codec, m.bpp)}, separator '${m.dimSeparator}'"
+
+  private def landChunks(chunks: Dataset[Chunk], dir: String,
+      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte])(implicit fc: FioConf): Unit =
+    chunks.foreachPartition { (it: Iterator[Chunk]) =>
+      // FileSystem.create makes parents, so nested keys need no mkdirs
+      it.foreach(c => Fio.writeBytes(Fio.child(dir, key(c.cz, c.cy, c.cx)), encode(c)))
+    }
+
+  /** A chunk grid planned from metadata alone (no listing) as C-order
+    * linear cell indices spread over the cluster:
+    * range → repartition(defaultParallelism).
+    */
+  private[volume] def gridIndices(spark: SparkSession, grid: Seq[Int]): Dataset[Long] = {
     import spark.implicits._
-    val nChunks = vm.ncz.toLong * ncy * ncx
-    val chunks = spark.range(nChunks)
+    spark.range(grid.map(_.toLong).product)
       .repartition(spark.sparkContext.defaultParallelism)
       .as[Long]
-      .map { idx =>
-        val cz = (idx / (ncy.toLong * ncx)).toInt
-        val cy = ((idx / ncx) % ncy).toInt
-        val cx = (idx % ncx).toInt
-        val bytes = Fio.readAllIfExists(Fio.child(pathStr, s"$cz$sep$cy$sep$cx"))
-        decodeChunk(bytes, zm, vm, cz, cy, cx)
-      }
+  }
+
+  /** C-order linear cell index → (cz, cy, cx) on a grid of ncy×ncx cells per plane. */
+  private[volume] def cellOf(idx: Long, ncy: Int, ncx: Int): (Int, Int, Int) =
+    ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
+
+  /** Read every chunk of the planned grid from its `key`; absent files
+    * decode as fill_value.
+    */
+  private[volume] def readArray(spark: SparkSession, dir: String, zm: ZarrMeta, vm: VolumeMeta,
+      key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume = {
+    import spark.implicits._
+    val (ncy, ncx) = (vm.ncy, vm.ncx)
+    val chunks = gridIndices(spark, zm.gridShape).map { idx =>
+      val (cz, cy, cx) = cellOf(idx, ncy, ncx)
+      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
+    }
     ChunkVolume(chunks, vm)
   }
 }

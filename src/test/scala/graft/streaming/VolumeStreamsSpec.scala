@@ -47,10 +47,7 @@ class VolumeStreamsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamed ingest into a REAL zarr v2 array converges to the batch result") {
-    import graft.volume.ZarrStore
-    val dir = Files.createTempDirectory("vstream_z")
-    val inDir = dir.resolve("in").toString
-    val outDir = dir.resolve("out.zarr").toString
+    import graft.volume.{Zarr3Store, ZarrStore}
     val (dz, dy, dx) = (6L, 5L, 4L)
     val vox = spark.range(dz * dy * dx).select(
       expr(s"id div ${dy * dx}").as("z"),
@@ -59,21 +56,29 @@ class VolumeStreamsSpec extends AnyFunSuite with SparkSpec {
       expr(s"id % 53").as("label"),
     )
     val vol = ChunkVolume.fromVoxels(vox, dz, dy, dx, 3, 5, 4)
-    vol.chunks.filter(col("cz") === 0).write.mode("append").parquet(inDir)
-    val query = VolumeStreams.upscaleIngest(spark, inDir, outDir, vol.meta, s = 2, format = "zarr")
-    try {
-      query.processAllAvailable()
-      vol.chunks.filter(col("cz") === 1).write.mode("append").parquet(inDir)
-      query.processAllAvailable()
-    } finally query.stop()
-    // the result is a spec-compliant zarr array equal to the batch upscale
-    val za = ZarrStore.parseZarray(
-      Files.readString(java.nio.file.Paths.get(outDir, ".zarray")))
-    assert(za.shape === Seq(dz * 2, dy * 2, dx * 2))
-    val streamed = ZarrStore.read(spark, outDir).toVoxels.collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
     val batch = vol.upscale(2).toVoxels.collect()
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
-    assert(streamed === batch)
+    // the same ingest into both zarr dialects: v2 (.zarray) and v3 (zarr.json)
+    for (format <- Seq("zarr", "zarr3")) {
+      val dir = Files.createTempDirectory("vstream_z")
+      val inDir = dir.resolve("in").toString
+      val outDir = dir.resolve("out.zarr").toString
+      vol.chunks.filter(col("cz") === 0).write.mode("append").parquet(inDir)
+      val query = VolumeStreams.upscaleIngest(spark, inDir, outDir, vol.meta, s = 2, format = format)
+      try {
+        query.processAllAvailable()
+        vol.chunks.filter(col("cz") === 1).write.mode("append").parquet(inDir)
+        query.processAllAvailable()
+      } finally query.stop()
+      // the result is a spec-compliant zarr array equal to the batch upscale
+      def doc(name: String): String = Files.readString(java.nio.file.Paths.get(outDir, name))
+      val (shape, back) =
+        if (format == "zarr") (ZarrStore.parseZarray(doc(".zarray")).shape, ZarrStore.read(spark, outDir))
+        else (Zarr3Store.parseZarrJson(doc("zarr.json")).shape, Zarr3Store.read(spark, outDir))
+      assert(shape === Seq(dz * 2, dy * 2, dx * 2), format)
+      val streamed = back.toVoxels.collect()
+        .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
+      assert(streamed === batch, format)
+    }
   }
 }
