@@ -81,6 +81,25 @@ final class FioRandom(private val in: FSDataInputStream, val size: Long, val pat
   def close(): Unit = in.close()
 }
 
+/** The one positioned-read handle of a Spark task ([[Fio.taskRandom]]):
+  * opened lazily on the first `apply`, reopened when the path changes,
+  * and closed when the task completes — drained or not. A scan that ends
+  * in `.take(1)` or `.limit` leaves its partition iterator unfinished, so
+  * only the task-completion listener can close the handle in time.
+  */
+final class FioTaskRandom private[io] (implicit fc: FioConf) {
+  private var raf: FioRandom = null
+  Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+  def apply(path: String): FioRandom = {
+    if (raf != null && raf.path != path) close()
+    if (raf == null) raf = Fio.openRandom(path)
+    raf
+  }
+
+  def close(): Unit = if (raf != null) { raf.close(); raf = null }
+}
+
 /** Positioned-WRITE handle. The Hadoop FileSystem API is append-only, so
   * parallel pwrite sinks (BigTIFF slice write, detached NRRD raw) are a
   * POSIX-filesystem capability, not a portable one. This handle unwraps
@@ -280,6 +299,11 @@ object Fio {
     val st = fs.getFileStatus(p)
     new FioRandom(fs.open(p), st.getLen, path)
   }
+
+  /** The task-scoped positioned-read handle (see [[FioTaskRandom]]); call
+    * once per task, inside `mapPartitions`.
+    */
+  def taskRandom()(implicit fc: FioConf): FioTaskRandom = new FioTaskRandom
 
   /** Like openRandom but `None` when the file is absent — one metadata
     * round-trip, not exists()+open().

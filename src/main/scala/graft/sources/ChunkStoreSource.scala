@@ -81,6 +81,23 @@ object ChunkStoreSource {
     case Or(l, r) => filterKeeps(l, known) || filterKeeps(r, known)
     case _ => true
   }
+
+  /** Geometry of the first DSv2 write to a new `format` store: options
+    * `dimZ dimY dimX chunkZ chunkY chunkX` (required) and `elementType`
+    * (MET_* tag, default MET_UINT).
+    */
+  private[sources] def firstWriteMeta(opts: CaseInsensitiveStringMap, format: String): VolumeMeta = {
+    def req(k: String): Long = {
+      val v = opts.get(k)
+      require(v != null,
+        s"$format write to a new store requires option '$k' " +
+          "(dimZ/dimY/dimX/chunkZ/chunkY/chunkX)")
+      v.toLong
+    }
+    VolumeMeta.uniform(req("dimZ"), req("dimY"), req("dimX"),
+      req("chunkZ").toInt, req("chunkY").toInt, req("chunkX").toInt,
+      Option(opts.get("elementType")).getOrElse("MET_UINT"))
+  }
 }
 
 class ChunkStoreTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -141,20 +158,7 @@ class ChunkStoreWriteBuilder(path: String, info: LogicalWriteInfo)
       val vm =
         if (appendToExisting) ChunkVolume.readSidecar(dest)
         else {
-          def req(k: String): Long = {
-            val v = opts.get(k)
-            require(v != null,
-              s"graftchunks write to a new store requires option '$k' " +
-                "(dimZ/dimY/dimX/chunkZ/chunkY/chunkX)")
-            v.toLong
-          }
-          val (dz, dy, dx) = (req("dimZ"), req("dimY"), req("dimX"))
-          val (cz, cy, cx) = (req("chunkZ").toInt, req("chunkY").toInt, req("chunkX").toInt)
-          val elem = Option(opts.get("elementType")).getOrElse("MET_UINT")
-          val vm0 = VolumeMeta(
-            dz, dy, dx, cz, cy, cx,
-            ((dz + cz - 1) / cz).toInt, ((dy + cy - 1) / cy).toInt, ((dx + cx - 1) / cx).toInt,
-            elem, 1.0, 1.0, 1.0)
+          val vm0 = ChunkStoreSource.firstWriteMeta(opts, ChunkStoreSource.Name)
           ChunkVolume.writeSidecar(writeDir, vm0, Map("writer" -> "dsv2"))
           vm0
         }
@@ -238,11 +242,9 @@ class ChunkStoreScan(path: String, filters: Array[Filter], targetBytes: Long)
       try Some(ChunkVolume.readSidecar(path)) catch { case _: Exception => None }
     def payloadBytes(name: String): Long = geom match {
       case Some(vm) =>
-        val Array(cz, cy, cx) = name.split("\\.").map(_.toLong)
-        val nz = math.min(vm.chunkZ.toLong, vm.dimZ - cz * vm.chunkZ)
-        val ny = math.min(vm.chunkY.toLong, vm.dimY - cy * vm.chunkY)
-        val nx = math.min(vm.chunkX.toLong, vm.dimX - cx * vm.chunkX)
-        math.max(1L, nz * ny * nx * vm.bytesPerVoxel)
+        val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
+        val (_, _, _, nz, ny, nx) = vm.cell(cz, cy, cx)
+        math.max(1L, nz.toLong * ny * nx * vm.bytesPerVoxel)
       case None => Fio.size(Fio.child(dir, name))
     }
     val survivors = Fio.listNames(dir).iterator
@@ -269,33 +271,27 @@ class ChunkStoreScan(path: String, filters: Array[Filter], targetBytes: Long)
         val Array(cz, cy, cx) = name.split("\\.").map(_.toLong); (cz, cy, cx)
       }
     ChunkPacking.pack(survivors.iterator, payloadBytes, targetBytes)
-      .map(g => ChunkFilesPartition(g.map(n => (Fio.child(dir, n), n)), fc): InputPartition)
+      .map(g => ChunkFilesPartition(dir, g, fc): InputPartition)
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new ChunkFileReaderFactory
 }
 
-final case class ChunkFilesPartition(files: Seq[(String, String)], fc: FioConf) extends InputPartition
+final case class ChunkFilesPartition(dir: String, names: Seq[String], fc: FioConf) extends InputPartition
 
 class ChunkFileReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChunkFilesPartition]
     new PartitionReader[InternalRow] {
-      private val it = p.files.iterator
+      private val it = p.names.iterator
       private var row: InternalRow = _
 
       override def next(): Boolean = {
         if (!it.hasNext) return false
-        val (file, name) = it.next()
-        val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
-        val bytes = Fio.readAllBytes(file)(p.fc)
-        val h = ChunkStore.readHeader(bytes)
-        val data = new Array[Byte](h.rawLen)
-        com.github.luben.zstd.Zstd.decompressByteArray(
-          data, 0, h.rawLen, bytes, ChunkStore.HeaderBytes, bytes.length - ChunkStore.HeaderBytes)
+        val (h, c) = ChunkStore.decodeFile(p.dir, it.next())(p.fc)
         row = new GenericInternalRow(Array[Any](
-          cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, h.lmin, h.lmax, data))
+          c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, h.lmin, h.lmax, c.data))
         true
       }
 

@@ -11,9 +11,10 @@ import graft.volume.AtomicDir
   *    [[AtomicDir]]. A job failure leaves the destination untouched.
   *  - [[StoreStaging.Append]]: stage chunk files under a fixed hidden
   *    `.__staging/<id>/` inside the store, publish per-file atomic
-  *    renames at commit — O(chunks written by THIS job) metadata work,
-  *    bounded by the append, not the store. Readers never see staging
-  *    (they address chunks by coordinate and never list).
+  *    renames at commit, nested keys included — O(chunks written by THIS
+  *    job) metadata work, bounded by the append, not the store. Readers
+  *    never see staging (they address chunks by coordinate and never
+  *    list).
   *
   * `commit(finalize)` runs the builder's finalizer (e.g. the graftchunks
   * stats-index merge) against the staged tree BEFORE a swap publishes
@@ -55,9 +56,7 @@ private[sources] object StoreStaging {
       Fio.child(stagingRoot, java.util.UUID.randomUUID().toString.take(8))
     }
     override def commit(finalize: String => Unit): Unit = {
-      Fio.listNames(writeDir).foreach { name =>
-        Fio.renameOverwrite(Fio.child(writeDir, name), Fio.child(dest, name))
-      }
+      publishFiles(writeDir, dest)
       Fio.delete(writeDir)
       // drop the (now usually empty) staging root; a concurrent writer's
       // live dir makes this fail harmlessly
@@ -66,5 +65,18 @@ private[sources] object StoreStaging {
       finalize(dest)
     }
     override def abort(): Unit = AtomicDir.deleteInBackground(writeDir)
+
+    /** Rename every staged FILE over its destination, recursing into
+      * nested keys (a `/`-separated zarr's `cz/cy/cx`): renaming a staged
+      * directory would replace the store's whole subtree.
+      */
+    private def publishFiles(src: String, dst: String): Unit =
+      Fio.list(src).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) {
+          Fio.mkdirs(Fio.child(dst, name))
+          publishFiles(Fio.child(src, name), Fio.child(dst, name))
+        } else Fio.renameOverwrite(Fio.child(src, name), Fio.child(dst, name))
+      }
   }
 }

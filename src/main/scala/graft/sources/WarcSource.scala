@@ -80,8 +80,9 @@ object WarcSource {
 
   /** Positioned-read + inflate a set of (path, off, end) member spans —
     * the executor kernel shared by single-file and multi-file indexed
-    * reads. Tasks keep one open handle per distinct path (spans arrive
-    * grouped by file within a partition in practice).
+    * reads. Each task reads through one [[Fio.taskRandom]] handle,
+    * reopened per distinct path (spans arrive grouped by file within a
+    * partition in practice).
     */
   private def readSpans(spark: SparkSession, spans: Seq[(String, Long, Long)]): DataFrame = {
     implicit val fc: FioConf = FioConf.of(spark)
@@ -89,22 +90,13 @@ object WarcSource {
     val df = spark.createDataset(spans)
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
-        var raf: FioRandom = null
-        var rafPath: String = null
-        Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          if (raf != null) { raf.close(); raf = null }
-        })
+        val file = Fio.taskRandom()
         it.map { case (path, off, end) =>
-          if (raf == null || rafPath != path) {
-            if (raf != null) raf.close()
-            raf = Fio.openRandom(path)
-            rafPath = path
-          }
           // members over ~1 GiB are unconventional but legal; fail loud
           // rather than silently wrapping the buffer size negative
           require(end - off <= Int.MaxValue,
             s"$path: member at $off spans ${end - off} bytes — beyond the 2 GiB single-member buffer")
-          val comp = raf.readAt(off, (end - off).toInt)
+          val comp = file(path).readAt(off, (end - off).toInt)
           val rec = parseRecord(inflateMember(comp, path, off), path, off)
           (rec.warcType, rec.url, rec.httpStatus, rec.contentType, rec.body, off)
         }
@@ -218,11 +210,7 @@ object WarcSource {
       .select(col("value"), input_file_name().as("manifest"))
       .as[(String, String)]
       .mapPartitions { it =>
-        var raf: FioRandom = null
-        var rafPath: String = null
-        Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          if (raf != null) { raf.close(); raf = null }
-        })
+        val file = Fio.taskRandom()
         it.filter(_._1.trim.nonEmpty).map { case (line, manifest) =>
           val cut = manifest.lastIndexOf(".ranges/")
           require(cut > 0, s"range manifest $manifest is not under a <file>.warc.gz.ranges/ directory")
@@ -233,12 +221,7 @@ object WarcSource {
           val (off, end) = (parts(0).toLong, parts(1).toLong)
           require(end > off && end - off <= Int.MaxValue,
             s"$path: manifest range [$off, $end) is empty or beyond the 2 GiB member buffer")
-          if (raf == null || rafPath != path) {
-            if (raf != null) raf.close()
-            raf = Fio.openRandom(path)
-            rafPath = path
-          }
-          val comp = raf.readAt(off, (end - off).toInt)
+          val comp = file(path).readAt(off, (end - off).toInt)
           val rec = parseRecord(inflateMember(comp, path, off), path, off)
           (rec.warcType, rec.url, rec.httpStatus, rec.contentType, rec.body, off)
         }

@@ -171,24 +171,11 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
       val (zm, vm) =
         if (appendToExisting) ZarrStore.readMeta(dest)
         else {
-          def req(k: String): Long = {
-            val v = opts.get(k)
-            require(v != null,
-              s"zarr write to a new store requires option '$k' " +
-                "(dimZ/dimY/dimX/chunkZ/chunkY/chunkX)")
-            v.toLong
-          }
-          val (dz, dy, dx) = (req("dimZ"), req("dimY"), req("dimX"))
-          val (cz, cy, cx) = (req("chunkZ").toInt, req("chunkY").toInt, req("chunkX").toInt)
-          val elem = Option(opts.get("elementType")).getOrElse("MET_UINT")
           val codec = UpscaleCli.zarrCodec(Option(opts.get("compressor")).getOrElse("zstd"))
-          val vm0 = VolumeMeta(
-            dz, dy, dx, cz, cy, cx,
-            ((dz + cz - 1) / cz).toInt, ((dy + cy - 1) / cy).toInt, ((dx + cx - 1) / cx).toInt,
-            elem, 1.0, 1.0, 1.0)
-          ZarrStore.initArray(writeDir, vm0, codec)
+          ZarrStore.initArray(writeDir, ChunkStoreSource.firstWriteMeta(opts, ZarrSource.Name), codec)
         }
-      new ZarrWriterFactory(writeDir, ZarrStore.forElements(zm.codec, vm.bytesPerVoxel), vm, fc)
+      new ZarrWriterFactory(writeDir, zm.dimSeparator,
+        ZarrStore.forElements(zm.codec, vm.bytesPerVoxel), vm, fc)
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit =
@@ -197,7 +184,7 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
   }
 }
 
-class ZarrWriterFactory(dir: String, codec: ZarrStore.Codec, vm: VolumeMeta, fc: FioConf)
+class ZarrWriterFactory(dir: String, sep: String, codec: ZarrStore.Codec, vm: VolumeMeta, fc: FioConf)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
@@ -207,7 +194,8 @@ class ZarrWriterFactory(dir: String, codec: ZarrStore.Codec, vm: VolumeMeta, fc:
           row.getLong(3), row.getLong(4), row.getLong(5),
           row.getInt(6), row.getInt(7), row.getInt(8),
           row.getBinary(9))
-        ZarrStore.encodeChunkFile(c, dir, vm, codec)(fc)
+        Fio.writeBytes(Fio.child(dir, ZarrStore.chunkKey(sep, c.cz, c.cy, c.cx)),
+          ZarrStore.encodeChunkBytes(c, vm, codec))(fc)
       }
       override def commit(): WriterCommitMessage = new WriterCommitMessage {}
       override def abort(): Unit = ()
@@ -250,10 +238,8 @@ class ZarrScan(path: String, filters: Array[Filter], targetBytes: Long)
     } yield (cz, cy, cx)
     val bpv = vm.bytesPerVoxel.toLong
     def payloadBytes(c: (Int, Int, Int)): Long = {
-      val nz = math.min(vm.chunkZ.toLong, vm.dimZ - c._1.toLong * vm.chunkZ)
-      val ny = math.min(vm.chunkY.toLong, vm.dimY - c._2.toLong * vm.chunkY)
-      val nx = math.min(vm.chunkX.toLong, vm.dimX - c._3.toLong * vm.chunkX)
-      nz * ny * nx * bpv
+      val (_, _, _, nz, ny, nx) = vm.cell(c._1, c._2, c._3)
+      nz.toLong * ny * nx * bpv
     }
     ChunkPacking.pack(coords, payloadBytes, targetBytes)
       .map(g => ZarrChunksPartition(pathStr, zm, vm, g, fc): InputPartition)

@@ -1,6 +1,5 @@
 package graft.volume
 
-import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.SparkSession
 import java.nio.{ByteBuffer, ByteOrder}
 
@@ -10,15 +9,15 @@ import java.nio.{ByteBuffer, ByteOrder}
   *
   * Self-contained little-endian BigTIFF (magic 43, 8-byte offsets), one
   * uncompressed single-strip page per z. Every byte's file position is a
-  * pure function of (dims, bpp): slice z lives at 16 + z·sliceBytes and
-  * the IFD chain follows the last slice. The driver therefore writes only
-  * the header + IFD table (a few hundred KB for thousands of pages) and
-  * EXECUTOR tasks fill their chunks' bytes with positioned writes over
-  * disjoint ranges — no slab collect, no driver serialization point, I/O
-  * parallelism = task parallelism. (Requires the output path on a shared
-  * POSIX mount in multi-node deployments, like any side-file sink.)
-  * The reader mirrors the pattern: driver parses the tiny IFD chain,
-  * executors read their slices positionally.
+  * pure function of (dims, bpp): the pages are the C-order payload at
+  * offset 16 (slice z at 16 + z·sliceBytes) and the IFD chain follows the
+  * last slice. This object owns only the header + IFD table (a few
+  * hundred KB for thousands of pages); [[RawPayload.write]] lands the
+  * chunks from executor tasks — no slab collect, no driver serialization
+  * point, I/O parallelism = task parallelism. (Requires the output path
+  * on a shared POSIX mount in multi-node deployments, like any side-file
+  * sink.) The reader mirrors the pattern: driver parses the tiny IFD
+  * chain, executors read their slices positionally.
   */
 object BigTiff {
 
@@ -36,9 +35,9 @@ object BigTiff {
   private val TagSampleFormat = 339
   private val TypeShort = 3; private val TypeLong = 4; private val TypeLong8 = 16
 
-  /** Export a volume as a multi-page BigTIFF, one page per z slice.
-    * The driver writes header + IFD chain (offsets precomputed); executor
-    * tasks write their chunks' voxels directly at their final positions.
+  /** Export a volume as a multi-page BigTIFF, one page per z slice: the
+    * header + IFD chain (offsets precomputed) around the payload that
+    * [[RawPayload.write]] lands.
     */
   def write(vol: ChunkVolume, path: String): Unit = {
     val m = vol.meta
@@ -51,11 +50,7 @@ object BigTiff {
     val nTags = 10
     val ifdSize = 8 + nTags * 20 + 8
 
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    Fio.delete(path)
-    // full size up front: unwritten gaps read as zeros (background)
-    val f = Fio.openRandomWrite(path, preallocate = firstIfd + m.dimZ * ifdSize)
-    try {
+    RawPayload.write(vol, path, dataStart, firstIfd + m.dimZ * ifdSize) { f =>
       val header = ByteBuffer.allocate(16).order(ByteOrder.LITTLE_ENDIAN)
       header.put('I'.toByte).put('I'.toByte).putShort(43).putShort(8).putShort(0).putLong(firstIfd)
       f.writeFully(0L, header.array())
@@ -84,35 +79,6 @@ object BigTiff {
         f.writeFully(ifdPos, buf.array())
         ifdPos += ifdSize
       }
-    } finally f.close()
-
-    // executor fill: each chunk's bytes land at positions disjoint from
-    // every other chunk's, so tasks write concurrently with no
-    // coordination. Full-width chunks (x0=0, nx=dimX) write one
-    // contiguous run per chunk-slice; others write per row.
-    val pathStr = Fio.qualify(path)
-    vol.chunks.foreachPartition { (it: Iterator[Chunk]) =>
-      val ch = Fio.openRandomRewrite(pathStr)
-      try {
-        it.foreach { c =>
-          var zl = 0
-          while (zl < c.nz) {
-            val slicePos = dataStart + (c.z0 + zl) * sliceBytes
-            if (c.x0 == 0 && c.nx == dimX) {
-              ch.writeFully(slicePos + c.y0 * dimX * bpp,
-                c.data, zl * c.ny * c.nx * bpp, c.ny * c.nx * bpp)
-            } else {
-              var y = 0
-              while (y < c.ny) {
-                ch.writeFully(slicePos + ((c.y0 + y) * dimX + c.x0) * bpp,
-                  c.data, ((zl * c.ny + y) * c.nx) * bpp, c.nx * bpp)
-                y += 1
-              }
-            }
-            zl += 1
-          }
-        }
-      } finally ch.close()
     }
   }
 

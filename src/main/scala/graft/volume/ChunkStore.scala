@@ -151,13 +151,14 @@ object ChunkStore {
     Fio.listNames(pathStr)
       .filter(_.matches("\\d+\\.\\d+\\.\\d+"))
 
-  private[volume] def decodeFile(pathStr: String, name: String)(implicit fc: FioConf): Chunk = {
+  /** One chunk file's header and its decoded chunk. */
+  private[graft] def decodeFile(pathStr: String, name: String)(implicit fc: FioConf): (Header, Chunk) = {
     val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
     val bytes = Fio.readAllBytes(Fio.child(pathStr, name))
     val h = readHeader(bytes)
     val data = new Array[Byte](h.rawLen)
     Zstd.decompressByteArray(data, 0, h.rawLen, bytes, HeaderBytes, bytes.length - HeaderBytes)
-    Chunk(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, data)
+    (h, Chunk(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, data))
   }
 
   def read(spark: SparkSession, path: String): ChunkVolume = {
@@ -167,7 +168,7 @@ object ChunkStore {
     val names = chunkFileNames(pathStr)
     import spark.implicits._
     val chunks = spark.createDataset(names).repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions(_.map(decodeFile(pathStr, _)))
+      .mapPartitions(_.map(decodeFile(pathStr, _)._2))
     ChunkVolume(chunks, meta)
   }
 
@@ -206,7 +207,7 @@ object ChunkStore {
         }
       }
       .mapPartitions(_.map { name =>
-        val c = decodeFile(pathStr, name)
+        val c = decodeFile(pathStr, name)._2
         val nElems = c.nz * c.ny * c.nx
         var count = 0L
         var i = 0

@@ -48,6 +48,30 @@ final case class VolumeMeta(
   /** The s-fold subdivision of this grid: the meta of a ×s upscale. */
   def upscaled(s: Int): VolumeMeta = copy(
     dimZ = dimZ * s, dimY = dimY * s, dimX = dimX * s, ncz = ncz * s, ncy = ncy * s, ncx = ncx * s)
+
+  /** Origin and extent (z0, y0, x0, nz, ny, nx) of grid cell (cz,cy,cx):
+    * the chunk dims, clipped at the volume's far edge.
+    */
+  def cell(cz: Int, cy: Int, cx: Int): (Long, Long, Long, Int, Int, Int) = {
+    val z0 = cz.toLong * chunkZ; val y0 = cy.toLong * chunkY; val x0 = cx.toLong * chunkX
+    (z0, y0, x0, math.min(chunkZ.toLong, dimZ - z0).toInt,
+      math.min(chunkY.toLong, dimY - y0).toInt, math.min(chunkX.toLong, dimX - x0).toInt)
+  }
+}
+
+object VolumeMeta {
+
+  /** Cells of size `chunk` needed to cover `dim`. */
+  def cells(dim: Long, chunk: Int): Int = ((dim + chunk - 1) / chunk).toInt
+
+  /** The meta of a (dimZ, dimY, dimX) volume on a uniform
+    * (chunkZ, chunkY, chunkX) grid, ragged at the far edges.
+    */
+  def uniform(dimZ: Long, dimY: Long, dimX: Long, chunkZ: Int, chunkY: Int, chunkX: Int,
+      elementType: String, spacing: (Double, Double, Double) = (1.0, 1.0, 1.0)): VolumeMeta =
+    VolumeMeta(dimZ, dimY, dimX, chunkZ, chunkY, chunkX,
+      cells(dimZ, chunkZ), cells(dimY, chunkY), cells(dimX, chunkX), elementType,
+      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
 }
 
 /** A distributed dense 3D volume: Dataset[Chunk] + metadata. The engine's
@@ -513,7 +537,8 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     */
   def rechunk(newChunkZ: Int, newChunkY: Int, newChunkX: Int): ChunkVolume = {
     val bpp = meta.bytesPerVoxel
-    val (dimZ, dimY, dimX) = (meta.dimZ, meta.dimY, meta.dimX)
+    val grid = VolumeMeta.uniform(meta.dimZ, meta.dimY, meta.dimX, newChunkZ, newChunkY, newChunkX,
+      meta.elementType, (meta.spacingX, meta.spacingY, meta.spacingZ))
     import chunks.sparkSession.implicits._
     val pieces = chunks.flatMap { c =>
       for {
@@ -537,10 +562,7 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
       .groupByKey(p => (p._1, p._2, p._3))
       .mapGroups { (key, it) =>
         val (tz, ty, tx) = key
-        val z0 = tz.toLong * newChunkZ; val y0 = ty.toLong * newChunkY; val x0 = tx.toLong * newChunkX
-        val nz = math.min(newChunkZ.toLong, dimZ - z0).toInt
-        val ny = math.min(newChunkY.toLong, dimY - y0).toInt
-        val nx = math.min(newChunkX.toLong, dimX - x0).toInt
+        val (z0, y0, x0, nz, ny, nx) = grid.cell(tz, ty, tx)
         val data = new Array[Byte](nz * ny * nx * bpp)
         it.foreach { case (_, _, _, gz0, gy0, gx0, bnz, bny, bnx, box) =>
           ChunkKernels.placeBox(data, ny, nx, bpp,
@@ -548,11 +570,7 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
         }
         Chunk(tz, ty, tx, z0, y0, x0, nz, ny, nx, data)
       }
-    ChunkVolume(out, meta.copy(
-      chunkZ = newChunkZ, chunkY = newChunkY, chunkX = newChunkX,
-      ncz = ((dimZ + newChunkZ - 1) / newChunkZ).toInt,
-      ncy = ((dimY + newChunkY - 1) / newChunkY).toInt,
-      ncx = ((dimX + newChunkX - 1) / newChunkX).toInt))
+    ChunkVolume(out, grid)
   }
 
   /** Long-form VoxelTable view: DataFrame(z,y,x,label) — for joining into
@@ -743,13 +761,7 @@ object ChunkVolume {
       elementType: String = "MET_UINT",
       spacing: (Double, Double, Double) = (1.0, 1.0, 1.0),
   ): ChunkVolume = {
-    val meta = VolumeMeta(
-      dimZ, dimY, dimX, chunkZ, chunkY, chunkX,
-      ncz = ((dimZ + chunkZ - 1) / chunkZ).toInt,
-      ncy = ((dimY + chunkY - 1) / chunkY).toInt,
-      ncx = ((dimX + chunkX - 1) / chunkX).toInt,
-      elementType = elementType,
-      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
+    val meta = VolumeMeta.uniform(dimZ, dimY, dimX, chunkZ, chunkY, chunkX, elementType, spacing)
     val bpp = meta.bytesPerVoxel
     val spark = vox.sparkSession
     import spark.implicits._
@@ -759,10 +771,7 @@ object ChunkVolume {
       .groupByKey { case (z, y, x, _) => ((z / chunkZ).toInt, (y / chunkY).toInt, (x / chunkX).toInt) }
       .mapGroups { (key, it) =>
         val (cz, cy, cx) = key
-        val z0 = cz.toLong * chunkZ; val y0 = cy.toLong * chunkY; val x0 = cx.toLong * chunkX
-        val nz = math.min(chunkZ.toLong, dimZ - z0).toInt
-        val ny = math.min(chunkY.toLong, dimY - y0).toInt
-        val nx = math.min(chunkX.toLong, dimX - x0).toInt
+        val (z0, y0, x0, nz, ny, nx) = meta.cell(cz, cy, cx)
         val data = new Array[Byte](nz * ny * nx * bpp)
         it.foreach { case (z, y, x, label) =>
           val i = ((z - z0).toInt * ny + (y - y0).toInt) * nx + (x - x0).toInt

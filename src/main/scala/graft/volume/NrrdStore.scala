@@ -1,6 +1,6 @@
 package graft.volume
 
-import graft.io.{Fio, FioConf, FioRandom}
+import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.SparkSession
 import java.io.BufferedInputStream
 import java.nio.charset.StandardCharsets
@@ -15,10 +15,11 @@ import java.util.zip.GZIPInputStream
   * `key:=value` pairs, and CRLF headers.
   *
   * Scale shapes by encoding:
-  *   - `raw`: the MhdReader discipline verbatim — the driver parses the
-  *     header only, executors read their chunks with positioned
-  *     row-run reads at `dataOffset + voxelOffset`; a 100 TB file never
-  *     concentrates anywhere.
+  *   - `raw`: the payload is the same C-order layout as an MHD `.raw`,
+  *     starting at `dataOffset`, so it goes through the one positioned
+  *     scan [[RawPayload.scan]] — the driver parses the header only,
+  *     executors read their chunks with the MHD plan (contiguous-run fast
+  *     paths, partition cap); a 100 TB file never concentrates anywhere.
   *   - `gzip`: a single gzip stream is sequentially decodable ONLY, so
   *     the scan is one task that streams the decode and emits chunks a
   *     chunk-z SLAB at a time (working set = one slab, the reference
@@ -162,72 +163,10 @@ object NrrdStore {
   }
 
   def read(spark: SparkSession, n: NrrdMeta, chunkZ: Int, chunkY: Int, chunkX: Int): ChunkVolume = {
-    val meta = VolumeMeta(
-      dimZ = n.dimZ, dimY = n.dimY, dimX = n.dimX,
-      chunkZ = chunkZ, chunkY = chunkY, chunkX = chunkX,
-      ncz = ((n.dimZ + chunkZ - 1) / chunkZ).toInt,
-      ncy = ((n.dimY + chunkY - 1) / chunkY).toInt,
-      ncx = ((n.dimX + chunkX - 1) / chunkX).toInt,
-      elementType = n.elementType,
-      spacingX = n.spacingXyz._1, spacingY = n.spacingXyz._2, spacingZ = n.spacingXyz._3)
-    if (n.encoding == "raw") readRaw(spark, n, meta) else readGzip(spark, n, meta)
-  }
-
-  /** Positioned per-chunk row-run reads, exactly the MHD scan but offset
-    * by the header length (the S1/S3 scale path).
-    */
-  private def readRaw(spark: SparkSession, n: NrrdMeta, meta: VolumeMeta): ChunkVolume = {
-    implicit val fc: FioConf = FioConf.of(spark)
-    val (path, base, msb, bpp) = (n.path, n.dataOffset, n.bigEndian, meta.bytesPerVoxel)
-    val (dimZ, dimY, dimX) = (meta.dimZ, meta.dimY, meta.dimX)
-    val (ncz, ncy, ncx) = (meta.ncz, meta.ncy, meta.ncx)
-    val (chunkZ, chunkY, chunkX) = (meta.chunkZ, meta.chunkY, meta.chunkX)
-    import spark.implicits._
-    val chunks = spark.range(ncz.toLong * ncy * ncx).mapPartitions { ids =>
-      var raf: FioRandom = null
-      // close unconditionally at task end: hasNext-exhaustion alone would
-      // leak the handle on a partially consumed scan (.limit, task abort)
-      Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-        if (raf != null) { raf.close(); raf = null }
-      })
-      def handle() = {
-        if (raf == null) raf = Fio.openRandom(path)
-        raf
-      }
-      val it = ids.map { id =>
-        val cz = (id / (ncy.toLong * ncx)).toInt
-        val cy = ((id / ncx) % ncy).toInt
-        val cx = (id % ncx).toInt
-        val z0 = cz.toLong * chunkZ; val y0 = cy.toLong * chunkY; val x0 = cx.toLong * chunkX
-        val nz = math.min(chunkZ.toLong, dimZ - z0).toInt
-        val ny = math.min(chunkY.toLong, dimY - y0).toInt
-        val nx = math.min(chunkX.toLong, dimX - x0).toInt
-        val data = new Array[Byte](nz * ny * nx * bpp)
-        val ch = handle()
-        val rowBytes = nx * bpp
-        var z = 0
-        while (z < nz) {
-          var y = 0
-          while (y < ny) {
-            val srcOff = base + (((z0 + z) * dimY + (y0 + y)) * dimX + x0) * bpp
-            ch.readFully(srcOff, data, (z * ny + y) * rowBytes, rowBytes)
-            y += 1
-          }
-          z += 1
-        }
-        if (msb) ChunkKernels.swapEndianInPlace(data, bpp)
-        Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, data)
-      }
-      new Iterator[Chunk] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && raf != null) { raf.close(); raf = null }
-          h
-        }
-        def next(): Chunk = it.next()
-      }
-    }
-    ChunkVolume(chunks, meta)
+    val meta = VolumeMeta.uniform(n.dimZ, n.dimY, n.dimX, chunkZ, chunkY, chunkX,
+      n.elementType, n.spacingXyz)
+    if (n.encoding == "raw") RawPayload.scan(spark, n.path, n.dataOffset, n.bigEndian, meta)
+    else readGzip(spark, n, meta)
   }
 
   /** One sequential decode task: streams the gzip payload a chunk-z slab
@@ -237,10 +176,8 @@ object NrrdStore {
   private def readGzip(spark: SparkSession, n: NrrdMeta, meta: VolumeMeta): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val (path, base, msb, bpp) = (n.path, n.dataOffset, n.bigEndian, meta.bytesPerVoxel)
-    val (dimZ, dimY, dimX) = (meta.dimZ, meta.dimY, meta.dimX)
-    val (ncy, ncx) = (meta.ncy, meta.ncx)
-    val (chunkZ, chunkY, chunkX) = (meta.chunkZ, meta.chunkY, meta.chunkX)
-    val nczL = meta.ncz
+    val (dimY, dimX) = (meta.dimY, meta.dimX)
+    val (ncz, ncy, ncx) = (meta.ncz, meta.ncy, meta.ncx)
     import spark.implicits._
     // one element, ONE partition — and the body still guards on the ids
     // iterator so an empty partition can never duplicate the decode
@@ -249,8 +186,7 @@ object NrrdStore {
       val fin = Fio.openStream(path)
       fin.seek(base) // FSDataInputStream positioned seek to the payload
       val gz = new GZIPInputStream(new BufferedInputStream(fin), 1 << 16)
-      // close unconditionally at task end — the last-slab close below only
-      // fires when the iterator fully drains (.limit / abort would leak)
+      // close at task end, drained or not (.limit / abort)
       Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
         try gz.close() catch { case _: java.io.IOException => () }
       })
@@ -262,9 +198,8 @@ object NrrdStore {
           off += r
         }
       }
-      Iterator.range(0, nczL).flatMap { cz =>
-        val z0 = cz.toLong * chunkZ
-        val nz = math.min(chunkZ.toLong, dimZ - z0).toInt
+      Iterator.range(0, ncz).flatMap { cz =>
+        val nz = meta.cell(cz, 0, 0)._4
         val slabBytes = nz.toLong * dimY * dimX * bpp
         require(slabBytes <= Int.MaxValue,
           s"$path: gzip NRRD z-slab of $slabBytes bytes exceeds the 2 GiB JVM array " +
@@ -274,14 +209,12 @@ object NrrdStore {
         readFully(slab, slab.length)
         if (msb) ChunkKernels.swapEndianInPlace(slab, bpp)
         Iterator.tabulate(ncy * ncx) { j =>
-          val cy = j / ncx; val cx = j % ncx
-          val y0 = cy.toLong * chunkY; val x0 = cx.toLong * chunkX
-          val ny = math.min(chunkY.toLong, dimY - y0).toInt
-          val nx = math.min(chunkX.toLong, dimX - x0).toInt
+          val (cy, cx) = (j / ncx, j % ncx)
+          val (z0, y0, x0, _, ny, nx) = meta.cell(cz, cy, cx)
           val data = ChunkKernels.extractBox(slab, dimY.toInt, dimX.toInt, bpp,
             0, y0.toInt, x0.toInt, nz, ny, nx)
           Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, data)
-        } ++ { if (cz == nczL - 1) { gz.close(); Iterator.empty } else Iterator.empty }
+        }
       }
       }
     }
@@ -289,13 +222,11 @@ object NrrdStore {
   }
 
   /** Export as attached-raw little-endian NRRD: the driver writes the
-    * text header, executor tasks land their chunks' bytes at final
-    * positions with positioned writes (the BigTiff.write discipline —
-    * disjoint ranges, no coordination, body moves once).
+    * text header, executor tasks land the payload behind it
+    * ([[RawPayload.write]]).
     */
   def write(vol: ChunkVolume, path: String): Unit = {
     val m = vol.meta
-    val bpp = m.bytesPerVoxel
     val header =
       s"""NRRD0004
          |# graft volume export
@@ -308,30 +239,6 @@ object NrrdStore {
          |""".stripMargin + "\n"
     val headerBytes = header.getBytes(StandardCharsets.US_ASCII)
     val base = headerBytes.length.toLong
-    implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    Fio.delete(path)
-    val f = Fio.openRandomWrite(path, preallocate = base + m.nVoxels * bpp)
-    // full size up front: unwritten gaps read as zeros (background)
-    try f.writeFully(0L, headerBytes) finally f.close()
-
-    val (dimY, dimX) = (m.dimY, m.dimX)
-    val pathStr = Fio.qualify(path)
-    vol.chunks.foreachPartition { (it: Iterator[Chunk]) =>
-      val ch = Fio.openRandomRewrite(pathStr)
-      try {
-        it.foreach { c =>
-          var zl = 0
-          while (zl < c.nz) {
-            var y = 0
-            while (y < c.ny) {
-              val p = base + (((c.z0 + zl) * dimY + (c.y0 + y)) * dimX + c.x0) * bpp
-              ch.writeFully(p, c.data, ((zl * c.ny + y) * c.nx) * bpp, c.nx * bpp)
-              y += 1
-            }
-            zl += 1
-          }
-        }
-      } finally ch.close()
-    }
+    RawPayload.write(vol, path, base, base + m.nVoxels * m.bytesPerVoxel)(_.writeFully(0L, headerBytes))
   }
 }

@@ -1,6 +1,6 @@
 package graft.volume
 
-import graft.io.{Fio, FioConf, FioRandom}
+import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.SparkSession
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Inflater
@@ -229,7 +229,7 @@ object Tiff {
           // full tiles are padded at the edges, so the tile buffer must fit too
           require(tileW.toLong * tileL.toLong * (bits / 8) <= Int.MaxValue,
             s"$path: tile $tileW x $tileL exceeds the 2 GiB buffer limit")
-          val nTiles = ((width.toLong + tileW - 1) / tileW) * ((height.toLong + tileL - 1) / tileL)
+          val nTiles = VolumeMeta.cells(width, tileW).toLong * VolumeMeta.cells(height, tileL)
           require(tOffsets.length.toLong == nTiles && tCounts.length.toLong == nTiles,
             s"$path: tile count ${tOffsets.length}/${tCounts.length} disagrees with " +
               s"$width x $height at $tileW x $tileL (want $nTiles)")
@@ -240,7 +240,7 @@ object Tiff {
           require(offsets.nonEmpty && offsets.length == counts.length,
             s"$path: StripOffsets/StripByteCounts missing or mismatched (${offsets.length} vs ${counts.length})")
           val rowsPerStrip = if (rps <= 0 || rps > height) height else rps
-          require(offsets.length == (height + rowsPerStrip - 1) / rowsPerStrip,
+          require(offsets.length == VolumeMeta.cells(height, rowsPerStrip),
             s"$path: strip count ${offsets.length} disagrees with height $height / RowsPerStrip $rowsPerStrip")
           requireSaneByteCounts("StripByteCounts", counts)
           pages += Page(width, height, bits, sf, compression, predictor, rowsPerStrip,
@@ -450,12 +450,8 @@ object Tiff {
       s"$path: pages disagree on shape/dtype")
     val elementType = elementTypeOf(p0.bits, p0.sampleFormat)
     val bpp = p0.bits / 8
-    val meta = VolumeMeta(
-      dimZ = tm.pages.length.toLong, dimY = p0.height.toLong, dimX = p0.width.toLong,
-      chunkZ = 1, chunkY = p0.height, chunkX = p0.width,
-      ncz = tm.pages.length, ncy = 1, ncx = 1,
-      elementType = elementType,
-      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
+    val meta = VolumeMeta.uniform(tm.pages.length, p0.height, p0.width, 1, p0.height, p0.width,
+      elementType, spacing)
     // per-page strip/tile tables ship in the task closure: O(pages·strips)
     // longs — IFD metadata, not pixel data
     val pages = tm.pages.toArray
@@ -466,15 +462,15 @@ object Tiff {
     val sliceBytes = (h.toLong * w.toLong * bpp).toInt
     import spark.implicits._
     val chunks = spark.range(pages.length.toLong).mapPartitions { ids =>
-      var raf: FioRandom = null
-      val it = ids.map { z =>
-        if (raf == null) raf = Fio.openRandom(path)
+      val file = Fio.taskRandom()
+      ids.map { z =>
+        val raf = file(path)
         val pg = pages(z.toInt)
         val data = new Array[Byte](sliceBytes)
         if (pg.tiled) {
           // left-to-right, top-to-bottom tile grid; edge tiles arrive
           // padded to the full tile size and are clipped on copy
-          val tilesAcross = (pg.width + pg.tileWidth - 1) / pg.tileWidth
+          val tilesAcross = VolumeMeta.cells(pg.width, pg.tileWidth)
           val tileBytes = pg.tileWidth * pg.tileLength * bpp
           var t = 0
           while (t < pg.chunkOffsets.length) {
@@ -510,12 +506,8 @@ object Tiff {
             strip += 1
           }
         }
-        if (bigEndian) ZarrStore.byteSwap(data, bpp)
+        if (bigEndian) ChunkKernels.swapEndianInPlace(data, bpp)
         Chunk(z.toInt, 0, 0, z, 0L, 0L, 1, h, w, data)
-      }
-      new Iterator[Chunk] {
-        def hasNext: Boolean = { val hn = it.hasNext; if (!hn && raf != null) { raf.close(); raf = null }; hn }
-        def next(): Chunk = it.next()
       }
     }
     ChunkVolume(chunks, meta)

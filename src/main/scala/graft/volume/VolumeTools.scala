@@ -18,10 +18,14 @@ import org.apache.spark.sql.SparkSession
   */
 object VolumeTools {
 
+  /** A store written by UpscaleCli: zarr v2 (`.zarray`), zarr v3
+    * (`zarr.json`, plain or sharded) or the internal chunk store.
+    */
   private def readStore(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: graft.io.FioConf = graft.io.FioConf.of(spark)
-    if (graft.io.Fio.exists(graft.io.Fio.child(path, ".zarray")))
-      ZarrStore.read(spark, path)
+    def has(doc: String) = graft.io.Fio.exists(graft.io.Fio.child(path, doc))
+    if (has(".zarray")) ZarrStore.read(spark, path)
+    else if (has("zarr.json")) Zarr3Store.read(spark, path)
     else ChunkStore.read(spark, path)
   }
 

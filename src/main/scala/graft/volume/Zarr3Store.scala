@@ -404,10 +404,7 @@ object Zarr3Store {
       if (gcz >= ivm.ncz || gcy >= ivm.ncy || gcx >= ivm.ncx) {
         entries(cell * 2) = Missing; entries(cell * 2 + 1) = Missing
       } else {
-        val z0 = gcz.toLong * iz; val y0 = gcy.toLong * iy; val x0 = gcx.toLong * ix
-        val nz = math.min(iz.toLong, ivm.dimZ - z0).toInt
-        val ny = math.min(iy.toLong, ivm.dimY - y0).toInt
-        val nx = math.min(ix.toLong, ivm.dimX - x0).toInt
+        val (z0, y0, x0, nz, ny, nx) = ivm.cell(gcz, gcy, gcx)
         val box =
           if (nz == iz && ny == iy && nx == ix) {
             if (fullBox == null) fullBox = ByteKernels.allocBytes(fullLen)

@@ -578,7 +578,7 @@ object ZarrStore {
       dtype.substring(1),
       throw new IllegalArgumentException(s"unsupported zarr dtype: $dtype"))
     def gridShape: Seq[Int] =
-      shape.zip(chunks).map { case (d, c) => ((d + c - 1) / c).toInt }
+      shape.zip(chunks).map { case (d, c) => VolumeMeta.cells(d, c) }
     def chunkElems: Int = chunks.product
   }
 
@@ -658,20 +658,6 @@ object ZarrStore {
     ZarrMeta(shape.map(num), chunks.map(num(_).toInt), dtype, codec, num(v \ "fill_value"), sep)
   }
 
-  /** In-place little<->big endian element swap (no-op for bpp == 1). */
-  private[volume] def byteSwap(data: Array[Byte], bpp: Int): Unit = {
-    if (bpp <= 1) return
-    var i = 0
-    while (i < data.length) {
-      var a = 0; var b = bpp - 1
-      while (a < b) {
-        val t = data(i + a); data(i + a) = data(i + b); data(i + b) = t
-        a += 1; b -= 1
-      }
-      i += bpp
-    }
-  }
-
   /** The array layout a write of `vol` with `codec` produces (blosc's
     * typesize set from the dtype; `.` separator — [[Zarr3Store]] swaps
     * in `/`).
@@ -738,9 +724,9 @@ object ZarrStore {
       chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
   }
 
-  /** Validate, pad, and compress ONE chunk to its zarr file bytes WITHOUT
-    * writing — split from [[encodeChunkFile]] so the v2 writer and the
-    * v3 writers (`Zarr3Store`, plain and sharded) share one encoder.
+  /** Validate, pad, and compress ONE chunk to its zarr file bytes — the
+    * one encoder of the v2 writers (batch and DSv2) and the v3 writers
+    * (`Zarr3Store`, plain and sharded).
     */
   private[graft] def encodeChunkBytes(c: Chunk, meta: VolumeMeta, codec: Codec): Array[Byte] = {
     val (ckZ, ckY, ckX) = (meta.chunkZ, meta.chunkY, meta.chunkX)
@@ -749,10 +735,7 @@ object ZarrStore {
     // whose grid drifted (e.g. raw decimate output) instead of
     // silently misplacing voxels — callers rechunk first.
     require(
-      c.z0 == c.cz.toLong * ckZ && c.y0 == c.cy.toLong * ckY && c.x0 == c.cx.toLong * ckX
-        && c.nz == math.min(ckZ.toLong, meta.dimZ - c.z0).toInt
-        && c.ny == math.min(ckY.toLong, meta.dimY - c.y0).toInt
-        && c.nx == math.min(ckX.toLong, meta.dimX - c.x0).toInt,
+      meta.cell(c.cz, c.cy, c.cx) == ((c.z0, c.y0, c.x0, c.nz, c.ny, c.nx)),
       s"chunk (${c.cz},${c.cy},${c.cx}) at (${c.z0},${c.y0},${c.x0}) size " +
         s"(${c.nz},${c.ny},${c.nx}) is not on the uniform ($ckZ,$ckY,$ckX) grid — " +
         "rechunk before ZarrStore.write")
@@ -766,14 +749,6 @@ object ZarrStore {
       }
     codec.compress(payload)
   }
-
-  /** Validate, pad, compress, and write ONE chunk's file — the per-row
-    * kernel of the DSv2 write path.
-    */
-  private[graft] def encodeChunkFile(
-      c: Chunk, pathStr: String, meta: VolumeMeta, codec: Codec)(implicit fc: FioConf): Unit =
-    Fio.writeBytes(Fio.child(pathStr, chunkKey(".", c.cz, c.cy, c.cx)),
-      encodeChunkBytes(c, meta, codec))
 
   /** Create an array directory with its `.zarray` only (no chunks yet) —
     * the driver-side step of the DSv2 write path; executors then land
@@ -811,10 +786,7 @@ object ZarrStore {
       bytes: Option[Array[Byte]], zm: ZarrMeta, vm: VolumeMeta,
       cz: Int, cy: Int, cx: Int): Chunk = {
     val bpp = zm.bpp
-    val z0 = cz.toLong * vm.chunkZ; val y0 = cy.toLong * vm.chunkY; val x0 = cx.toLong * vm.chunkX
-    val nz = math.min(vm.chunkZ.toLong, vm.dimZ - z0).toInt
-    val ny = math.min(vm.chunkY.toLong, vm.dimY - y0).toInt
-    val nx = math.min(vm.chunkX.toLong, vm.dimX - x0).toInt
+    val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
     val data = bytes match {
       case None =>
         val fill = new Array[Byte](nz * ny * nx * bpp)
@@ -831,7 +803,7 @@ object ZarrStore {
               s"zarr chunk ($cz,$cy,$cx) failed to decode " +
                 s"(${raw.length} bytes, codec ${zm.codec.id.getOrElse("raw")}): ${e.getMessage}", e)
           }
-        if (zm.bigEndian) byteSwap(full, bpp)
+        if (zm.bigEndian) ChunkKernels.swapEndianInPlace(full, bpp)
         if (nz == vm.chunkZ && ny == vm.chunkY && nx == vm.chunkX) full
         else ChunkKernels.extractBox(full, vm.chunkY, vm.chunkX, bpp, 0, 0, 0, nz, ny, nx)
     }
@@ -865,9 +837,7 @@ object ZarrStore {
       zm: ZarrMeta, spacing: (Double, Double, Double) = (1.0, 1.0, 1.0)): VolumeMeta = {
     val Seq(dz, dy, dx) = zm.shape
     val Seq(cz, cy, cx) = zm.chunks
-    val Seq(ncz, ncy, ncx) = zm.gridShape
-    VolumeMeta(dz, dy, dx, cz, cy, cx, ncz, ncy, ncx, zm.elementType,
-      spacingX = spacing._1, spacingY = spacing._2, spacingZ = spacing._3)
+    VolumeMeta.uniform(dz, dy, dx, cz, cy, cx, zm.elementType, spacing)
   }
 
   /** Write a whole array all-or-nothing ([[AtomicDir.stage]]): the

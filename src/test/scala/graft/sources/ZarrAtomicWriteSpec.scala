@@ -42,7 +42,7 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
       .option("chunkZ", 4).option("chunkY", 3).option("chunkX", 2)
 
   /** A chunk frame whose LAST coordinate is off-grid → its task throws in
-    * encodeChunkFile after sibling partitions have already landed files.
+    * the chunk encoder after sibling partitions have already landed files.
     */
   private def poisoned(seed: Long) = {
     import spark.implicits._
@@ -121,15 +121,40 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Re-key a `.`-separated v2 store to `/`: chunk `a.b.c` moves to
+    * `a/b/c` and `.zarray` declares the separator.
+    */
+  private def rekeySlash(dest: Path): Unit = {
+    val names = { val it = Files.list(dest); try it.toArray.map(_.asInstanceOf[Path]) finally it.close() }
+    for (p <- names; n = p.getFileName.toString if n.matches("\\d+\\.\\d+\\.\\d+")) {
+      val to = dest.resolve(n.replace('.', '/'))
+      Files.createDirectories(to.getParent)
+      Files.move(p, to)
+    }
+    val za = dest.resolve(".zarray")
+    Files.writeString(za, Files.readString(za)
+      .replace("\"dimension_separator\": \".\"", "\"dimension_separator\": \"/\""))
+  }
+
   test("append success upserts atomically per chunk file") {
-    val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "u.zarr")
-    ZarrStore.write(vol(7), dest.toString)
-    // upsert every chunk with new content; commit publishes per-file renames
-    vol(31).chunks.toDF().write.format("zarr").mode("append").save(dest.toString)
-    assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) ===
-      collectVox(mkVox(31)))
-    AtomicDir.awaitQuiescent()
-    assert(siblings(dest).isEmpty)
+    for (sep <- Seq(".", "/")) {
+      val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "u.zarr")
+      ZarrStore.write(vol(7), dest.toString)
+      if (sep == "/") rekeySlash(dest)
+      // upsert every chunk with new content; commit publishes per-file renames
+      vol(31).chunks.toDF().write.format("zarr").mode("append").save(dest.toString)
+      assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) ===
+        collectVox(mkVox(31)), s"separator '$sep'")
+      // the append keys chunks the way the store declares: no stray `.` keys
+      if (sep == "/") {
+        val it = Files.list(dest)
+        try assert(!it.toArray.exists(_.asInstanceOf[Path].getFileName.toString
+          .matches("\\d+\\.\\d+\\.\\d+")))
+        finally it.close()
+      }
+      AtomicDir.awaitQuiescent()
+      assert(siblings(dest).isEmpty)
+    }
   }
 
   test("graftchunks DSv2 overwrite failure is a no-op; commit publishes store WITH stats index") {

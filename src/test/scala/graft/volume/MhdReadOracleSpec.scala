@@ -5,12 +5,14 @@ import java.nio.file.Files
 import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `MhdReader` against the fixture's analytic value, voxel by voxel. The
+/** The one positioned raw scan — `MhdReader` and raw `NrrdStore`, which
+  * share it — against the fixture's analytic value, voxel by voxel. The
   * composed and fused upscale plans share the reader's positioned reads,
   * so comparing them with each other cannot catch a read defect; this
   * oracle decodes the chunk bytes itself and shares no code with the
   * reader. The chunk shapes hit each read case — full plane, full-x rows
-  * and general row runs — on a grid that is ragged on every axis.
+  * and general row runs — on a grid that is ragged on every axis; the
+  * NRRD payload sits behind its header, at a non-zero offset.
   */
 class MhdReadOracleSpec extends AnyFunSuite with SparkSpec {
 
@@ -37,9 +39,11 @@ class MhdReadOracleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("read and readUpscaled equal the analytic fixture: every read case, LE uint32, MSB uint16") {
-    for ((et, bpp, msb) <- Seq(("MET_UINT", 4, false), ("MET_USHORT", 2, true))) {
-      val mhd = MhdMeta.parse(
-        MhdFixture.write(Files.createTempDirectory("oracle"), dz, dy, dx, et, bpp, msb))
+    for ((et, nrrdType, bpp, msb) <- Seq(("MET_UINT", "uint32", 4, false), ("MET_USHORT", "uint16", 2, true))) {
+      val d = Files.createTempDirectory("oracle")
+      val mhd = MhdMeta.parse(MhdFixture.write(d, dz, dy, dx, et, bpp, msb))
+      val nrrd = NrrdStore.parseHeader(MhdFixture.writeNrrd(d, dz, dy, dx, nrrdType, bpp, msb))
+      assert(nrrd.encoding === "raw" && nrrd.dataOffset > 0 && nrrd.elementType === et)
       for ((name, (cz, cy, cx)) <- shapes) {
         val what = s"$et msb=$msb $name ($cz,$cy,$cx)"
         val vol = MhdReader.read(spark, mhd, cz, cy, cx)
@@ -48,6 +52,9 @@ class MhdReadOracleSpec extends AnyFunSuite with SparkSpec {
         assertAnalytic(vol, 1, bpp, what)
         // slab reads start mid-chunk: s = 3 splits each 5-plane chunk
         assertAnalytic(MhdReader.readUpscaled(spark, mhd, cz, cy, cx, 3), 3, bpp, s"$what x3")
+        val fromNrrd = NrrdStore.read(spark, nrrd, cz, cy, cx)
+        assert(fromNrrd.meta === vol.meta)
+        assertAnalytic(fromNrrd, 1, bpp, s"raw NRRD $what")
       }
     }
   }
@@ -61,5 +68,10 @@ class MhdReadOracleSpec extends AnyFunSuite with SparkSpec {
     // 13·10·3 = 390 chunks, above the cap: capped
     assert(390 > cap)
     assert(MhdReader.read(spark, mhd, 1, 1, 5).chunks.rdd.getNumPartitions === cap)
+    // raw NRRD scans on the same plan
+    val nrrd = NrrdStore.parseHeader(MhdFixture.writeNrrd(
+      Files.createTempDirectory("oracle_parts"), dz, dy, dx, "uint32", 4, msb = false))
+    assert(NrrdStore.read(spark, nrrd, 5, 4, 5).chunks.rdd.getNumPartitions === 27)
+    assert(NrrdStore.read(spark, nrrd, 1, 1, 5).chunks.rdd.getNumPartitions === cap)
   }
 }

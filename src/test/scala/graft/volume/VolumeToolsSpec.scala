@@ -63,6 +63,10 @@ class VolumeToolsSpec extends AnyFunSuite with SparkSpec {
     ChunkStore.write(up, storeOut)
     assert(VolumeTools.run(spark, Seq("verify", mhd, storeOut, "2", "1", "5", "3")).last ===
       "MATCH: label preserved")
+    // a zarr v3 store (`zarr.json`, no engine sidecar), as `UpscaleCli --format zarr3` writes
+    val zarr3Out = dir.resolve("up3.zarr").toString
+    Zarr3Store.write(up, zarr3Out)
+    assert(VolumeTools.run(spark, Seq("verify", mhd, zarr3Out, "2", "1", "5", "3")) === v1)
   }
 
   test("lookup: voxel read + region join, hit and miss (lookup_test2.py)") {

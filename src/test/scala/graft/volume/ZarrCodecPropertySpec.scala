@@ -56,9 +56,9 @@ class ZarrCodecPropertySpec extends AnyFunSuite {
     check(Prop.forAll(payloads, Gen.oneOf(1, 2, 4, 8)) { (data: Array[Byte], t: Int) =>
       val aligned = java.util.Arrays.copyOf(data, data.length - data.length % t max t)
       val once = aligned.clone()
-      ZarrStore.byteSwap(once, t)
+      ChunkKernels.swapEndianInPlace(once, t)
       val twice = once.clone()
-      ZarrStore.byteSwap(twice, t)
+      ChunkKernels.swapEndianInPlace(twice, t)
       java.util.Arrays.equals(twice, aligned) &&
         (t == 1 || aligned.length < t || !java.util.Arrays.equals(once, aligned) ||
           aligned.grouped(t).forall(g => g.toSeq == g.reverse.toSeq))

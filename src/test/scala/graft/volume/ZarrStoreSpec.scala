@@ -339,7 +339,7 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
     for (p <- Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
          if p.getFileName.toString.matches("\\d+\\.\\d+\\.\\d+")) {
       val b = Files.readAllBytes(p)
-      ZarrStore.byteSwap(b, 4)
+      ChunkKernels.swapEndianInPlace(b, 4)
       Files.write(p, b)
     }
     val za = Files.readString(Paths.get(dir, ".zarray")).replace("\"<u4\"", "\">u4\"")
