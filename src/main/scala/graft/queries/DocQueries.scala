@@ -570,41 +570,44 @@ object DocQueries {
     * loop: forward margins (m_i), hard-sigmoid errors (e_i), per-bucket
     * gradient sums (gb_i), truncating-div updates (w_i, b_i). DuckDB
     * `//` and Spark `div`/JVM `/` all truncate toward zero — the
-    * div-parity the whole fixed-point contract rides on.
+    * div-parity the whole fixed-point contract rides on. Every CTE read
+    * more than once (tok, feat, lab, den, e_i, w_i, b_i) is MATERIALIZED:
+    * DuckDB 1.0 inlines each reference, so the chain would be re-evaluated
+    * per path.
     */
   private def gdReplayCtes(buckets: Int = 256, gdIters: Int = 3): String = {
     val header = s"""
         rows AS (SELECT doc_id AS id, text AS txt FROM documents),
-        tok AS (SELECT id, unnest(string_split(txt, ' ')) AS tok FROM rows),
-        feat AS (SELECT DISTINCT id,
+        tok AS MATERIALIZED (SELECT id, unnest(string_split(txt, ' ')) AS tok FROM rows),
+        feat AS MATERIALIZED (SELECT DISTINCT id,
                    CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % $buckets AS b FROM tok),
         stats AS (SELECT id, CAST(SUM(c) AS BIGINT) AS n_tokens,
                          CAST(MAX(c) AS BIGINT) AS top
                   FROM (SELECT id, tok, COUNT(*) AS c FROM tok GROUP BY 1, 2)
                   GROUP BY 1),
-        lab AS (SELECT id, CAST(n_tokens >= 10 AND top * 5 <= n_tokens AS BIGINT) AS y
+        lab AS MATERIALIZED (SELECT id, CAST(n_tokens >= 10 AND top * 5 <= n_tokens AS BIGINT) AS y
                 FROM stats),
-        den AS (SELECT COUNT(*) * 16 AS den FROM lab),
+        den AS MATERIALIZED (SELECT COUNT(*) * 16 AS den FROM lab),
         m1 AS (SELECT id, y, CAST(0 AS BIGINT) AS margin FROM lab)"""
     val iters = (1 to gdIters).map { i =>
       val e =
-        s"""e$i AS (SELECT id, CAST(LEAST(1000000, GREATEST(0, margin // 4 + 500000))
+        s"""e$i AS MATERIALIZED (SELECT id, CAST(LEAST(1000000, GREATEST(0, margin // 4 + 500000))
                       - y * 1000000 AS BIGINT) AS err FROM m$i)"""
       val gb =
         s"""gb$i AS (SELECT f.b, CAST(SUM(e.err) AS BIGINT) AS g
                      FROM feat f JOIN e$i e USING (id) GROUP BY 1)"""
       val w =
         if (i == 1)
-          "w1 AS (SELECT b, CAST(-(g // (SELECT den FROM den)) AS BIGINT) AS w FROM gb1)"
+          "w1 AS MATERIALIZED (SELECT b, CAST(-(g // (SELECT den FROM den)) AS BIGINT) AS w FROM gb1)"
         else
-          s"""w$i AS (SELECT p.b, CAST(p.w - (g.g // (SELECT den FROM den)) AS BIGINT) AS w
+          s"""w$i AS MATERIALIZED (SELECT p.b, CAST(p.w - (g.g // (SELECT den FROM den)) AS BIGINT) AS w
                       FROM w${i - 1} p JOIN gb$i g USING (b))"""
       val b =
         if (i == 1)
-          """b1 AS (SELECT CAST(-(CAST(SUM(err) AS BIGINT) // (SELECT den FROM den))
+          """b1 AS MATERIALIZED (SELECT CAST(-(CAST(SUM(err) AS BIGINT) // (SELECT den FROM den))
                       AS BIGINT) AS w FROM e1)"""
         else
-          s"""b$i AS (SELECT CAST((SELECT w FROM b${i - 1})
+          s"""b$i AS MATERIALIZED (SELECT CAST((SELECT w FROM b${i - 1})
                         - (CAST(SUM(err) AS BIGINT) // (SELECT den FROM den))
                         AS BIGINT) AS w FROM e$i)"""
       val m =
@@ -668,7 +671,10 @@ object DocQueries {
     * embeddings, `pair` the within-candidate-set pairwise cosines, and
     * each step r picks argmax of `0.5·simq − 0.5·max sim(c, picked)`
     * (ties → smaller id) — the same arithmetic, visit order, and
-    * tie-break as [[graft.functions.MmrKernel.select]].
+    * tie-break as [[graft.functions.MmrKernel.select]]. Step r reads
+    * `sel<r−1>` three times (join, NOT EXISTS, UNION ALL), so `cand`,
+    * `pair` and every `sel<r>` are MATERIALIZED: inlined, DuckDB 1.0
+    * would re-evaluate the whole chain ~3^k times.
     */
   private def mmrReplayCtes(nCand: Int, k: Int): String = {
     val header = s"""
@@ -681,18 +687,18 @@ object DocQueries {
                  list_inner_product(qe, ce)
                    / (SQRT(list_inner_product(qe, qe)) * SQRT(list_inner_product(ce, ce))) AS cos_sim
           FROM q, c WHERE query_id <> neighbor_id),
-        cand AS (
+        cand AS MATERIALIZED (
           SELECT query_id, neighbor_id, cos_sim, ce FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                        ORDER BY cos_sim DESC, neighbor_id) AS rk
             FROM scored) WHERE rk <= $nCand),
-        pair AS (
+        pair AS MATERIALIZED (
           SELECT a.query_id, a.neighbor_id AS ia, b.neighbor_id AS ib,
                  list_inner_product(a.ce, b.ce)
                    / (SQRT(list_inner_product(a.ce, a.ce)) * SQRT(list_inner_product(b.ce, b.ce))) AS sim
           FROM cand a JOIN cand b
             ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id),
-        sel1 AS (
+        sel1 AS MATERIALIZED (
           SELECT query_id, neighbor_id, CAST(1 AS BIGINT) AS mmr_rank,
                  0.5 * cos_sim - 0.5 * 0.0 AS score
           FROM (SELECT query_id, neighbor_id, cos_sim,
@@ -716,7 +722,7 @@ object DocQueries {
                        ROW_NUMBER() OVER (PARTITION BY query_id
                          ORDER BY 0.5 * cos_sim - 0.5 * maxs DESC, neighbor_id) AS rn
                 FROM cand$r) WHERE rn = 1),
-        sel$r AS (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM pk$r)"""
+        sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM pk$r)"""
     }
     (header +: steps).mkString(",\n        ")
   }

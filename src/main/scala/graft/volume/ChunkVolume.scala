@@ -362,24 +362,32 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   }
 
   /** ROI crop: voxels of the half-open box [z0,z1)×[y0,y1)×[x0,x1),
-    * PRUNED at the chunk level first — a narrow filter on chunk
-    * coordinates drops every non-intersecting chunk before any byte is
-    * decoded (the P4 point-lookup contract generalized to boxes), then
-    * each surviving chunk trims to its intersection with one
-    * extractBox. No shuffle anywhere; cost is O(chunks ∩ ROI).
+    * PRUNED at the chunk level first by [[intersecting]] (the P4
+    * point-lookup contract generalized to boxes), then each surviving
+    * chunk trims to its intersection with one extractBox. No shuffle
+    * anywhere; cost is O(chunks ∩ ROI).
     */
   def cropVoxels(z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): DataFrame = {
     require(z0 < z1 && y0 < y1 && x0 < x1, s"empty ROI [$z0,$z1)×[$y0,$y1)×[$x0,$x1)")
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
-    chunks
-      .filter(c => c.z0 < z1 && z0 < c.z0 + c.nz
-        && c.y0 < y1 && y0 < c.y0 + c.ny
-        && c.x0 < x1 && x0 < c.x0 + c.nx)
+    intersecting(z0, z1, y0, y1, x0, x1)
       .flatMap(voxelsInBox(_, z0, z1, y0, y1, x0, x1, bpp, unsigned))
       .toDF("z", "y", "x", "label")
   }
+
+  /** The chunks that meet the half-open box [z0,z1)×[y0,y1)×[x0,x1), as
+    * one Column predicate on the geometry columns. On a zarr read
+    * Catalyst pushes it below the decode projection, so a dropped chunk's
+    * file is never read, and a parquet chunk store ([[ChunkVolume.read]])
+    * gets its upper bounds as scan filters. Chunks from an MHD or TIFF
+    * scan are all read, then dropped here.
+    */
+  private def intersecting(z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): Dataset[Chunk] =
+    chunks.filter(col("z0") < z1 && lit(z0) < col("z0") + col("nz")
+      && col("y0") < y1 && lit(y0) < col("y0") + col("ny")
+      && col("x0") < x1 && lit(x0) < col("x0") + col("nx"))
 
   /** Maximum-intensity projection along z, chunk form: each chunk
     * collapses its own z-extent to ONE (ny·nx) plane locally (body never
@@ -699,21 +707,19 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     }.toDF("z", "y", "x", "value")
   }
 
-  /** Point lookup WITHOUT a volume scan (P4): range predicates on the chunk
-    * coordinate columns prune to the single owning chunk (parquet row-group
-    * min/max stats after a sorted write; a narrow filter in memory), then
-    * one element is decoded. Mirrors verify_labels.py:21 /
-    * view_with_labels.py:24 touching exactly one zarr chunk.
+  /** Point lookup WITHOUT a volume scan (P4): the one-voxel box of
+    * [[intersecting]] keeps only the owning chunk, then one element is
+    * decoded. On a zarr read Catalyst pushes that predicate below the
+    * decode, so exactly one chunk file is read, as verify_labels.py:21 /
+    * view_with_labels.py:24 touch one zarr chunk. MHD and TIFF reads
+    * still read their chunks in partition order until the owner turns up.
     */
   def pointLookup(z: Long, y: Long, x: Long): Option[Long] = {
     require(!meta.isFloating, "pointLookup decodes integral labels")
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
-    chunks
-      .filter(col("z0") <= z && lit(z) < col("z0") + col("nz")
-        && col("y0") <= y && lit(y) < col("y0") + col("ny")
-        && col("x0") <= x && lit(x) < col("x0") + col("nx"))
+    intersecting(z, z + 1, y, y + 1, x, x + 1)
       .map { c =>
         val i = ((z - c.z0).toInt * c.ny + (y - c.y0).toInt) * c.nx + (x - c.x0).toInt
         ChunkKernels.decodeLong(c.data, i, bpp, unsigned)

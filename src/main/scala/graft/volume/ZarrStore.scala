@@ -2,6 +2,7 @@ package graft.volume
 
 import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.udf
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import java.io.ByteArrayOutputStream
@@ -812,7 +813,8 @@ object ZarrStore {
 
   /** Read a zarr v2 array directory as a ChunkVolume. The full chunk grid
     * is planned from `.zarray` alone (no directory listing); absent chunk
-    * files decode as fill_value per the spec.
+    * files decode as fill_value per the spec; a chunk filter on the
+    * geometry columns prunes before any file is read ([[readArray]]).
     */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
@@ -897,14 +899,14 @@ object ZarrStore {
     }
 
   /** A chunk grid planned from metadata alone (no listing) as C-order
-    * linear cell indices spread over the cluster:
-    * range → repartition(defaultParallelism).
+    * linear cell indices: one `range` cut into min(cells,
+    * defaultParallelism) contiguous slices, one task each, with no shuffle.
     */
   private[volume] def gridIndices(spark: SparkSession, grid: Seq[Int]): Dataset[Long] = {
     import spark.implicits._
-    spark.range(grid.map(_.toLong).product)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    val n = grid.map(_.toLong).product
+    val slices = math.max(1L, math.min(n, spark.sparkContext.defaultParallelism.toLong))
+    spark.range(0, n, 1, slices.toInt).as[Long]
   }
 
   /** C-order linear cell index → (cz, cy, cx) on a grid of ncy×ncx cells per plane. */
@@ -912,16 +914,26 @@ object ZarrStore {
     ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
 
   /** Read every chunk of the planned grid from its `key`; absent files
-    * decode as fill_value.
+    * decode as fill_value. Two steps: each cell's geometry (`cellOf` +
+    * [[VolumeMeta.cell]]) as plain columns, then `data` from a
+    * deterministic decode UDF in a projection over them. Catalyst pushes a
+    * Column predicate on the geometry below that projection, so a pruned
+    * read ([[ChunkVolume.pointLookup]], [[ChunkVolume.cropVoxels]]) reads
+    * and decodes only the cells it keeps; a full scan decodes every cell
+    * once.
     */
   private[volume] def readArray(spark: SparkSession, dir: String, zm: ZarrMeta, vm: VolumeMeta,
       key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume = {
     import spark.implicits._
     val (ncy, ncx) = (vm.ncy, vm.ncx)
-    val chunks = gridIndices(spark, zm.gridShape).map { idx =>
+    val cells = gridIndices(spark, zm.gridShape).map { idx =>
       val (cz, cy, cx) = cellOf(idx, ncy, ncx)
-      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
+      val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
+      (cz, cy, cx, z0, y0, x0, nz, ny, nx)
+    }.toDF("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
+    val decode = udf { (cz: Int, cy: Int, cx: Int) =>
+      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx).data
     }
-    ChunkVolume(chunks, vm)
+    ChunkVolume(cells.withColumn("data", decode($"cz", $"cy", $"cx")).as[Chunk], vm)
   }
 }
