@@ -596,11 +596,10 @@ object VolumeQueries {
     ),
     // The same streamed ingest into a SPEC-COMPLIANT zarr v2 array — the
     // sink the reference's toolchain reads directly. Same oracle again:
-    // format choice must not change a single voxel. Chunk grid (4,8,8)
-    // divides the dims exactly: zarr v2 requires a UNIFORM chunk grid, and
-    // ×2 children of divisor-grid chunks stay uniform (the non-aligned
-    // edge-chunk path rides the internal-store gate above, which has no
-    // such constraint).
+    // format choice must not change a single voxel. Chunk grid (4,8,8);
+    // ×s children land on the output's uniform grid whether or not the
+    // grid divides the dims, so the zarr sink takes ragged grids too
+    // (the internal-store gate above runs one).
     Q(
       "vol_stream_upscale_zarr",
       (s, _) => {

@@ -12,24 +12,26 @@ package graft.volume
   */
 object ChunkKernels {
 
-  /** Nearest-neighbor ×s upscale of one chunk, emitted as ALIGNED child
-    * chunks each with the parent's dims — so the output chunk grid is the
-    * s-fold subdivision of the input grid and NO shuffle/rechunk is needed
-    * at any scale (unlike the reference, which rechunks the 3375×-larger
-    * array back to input chunk shape — Screenshots/upscale_streaming.png).
-    * Child (i,j,k) covers global z ∈ [s·z0 + i·nz, s·z0 + (i+1)·nz).
-    * Returns (i, j, k, childData) tuples.
+  /** Nearest-neighbor ×s upscale of one chunk, emitted as child chunks on
+    * the OUTPUT's uniform grid of chunk shape `grid` (default: this chunk's
+    * dims), so NO shuffle/rechunk is needed at any scale (unlike the
+    * reference, which rechunks the 3375×-larger array back to input chunk
+    * shape — Screenshots/upscale_streaming.png). Per axis, child i covers
+    * parent-local output planes [i·g, min((i+1)·g, s·n)): s children of
+    * the parent's dims for an interior chunk, fewer for a ragged edge
+    * chunk, the last one trailing. Returns (i, j, k, childData) tuples.
     *
-    * Emits only the children with z-index i ∈ [iLo, iHi) (all s³ when
+    * Emits only the children with z-index i ∈ [iLo, iHi) (all when
     * iLo = 0, iHi = s), from a source Z-SLAB: `data` holds the chunk's
     * source rows from `srcZOff` on in C order, while nz/ny/nx stay the FULL
-    * chunk dims. The kernel touches source z ∈ [⌊iLo·nz/s⌋, ⌊(iHi·nz−1)/s⌋],
-    * which the caller must cover. This lets MhdReader.readUpscaled plan a
-    * ×s upscale as one task per (chunk, child z-slab).
+    * chunk dims. Child i of extent cnz touches source z ∈ [⌊i·gz/s⌋,
+    * ⌊(i·gz + cnz − 1)/s⌋], which the caller must cover: RawPayload.scan
+    * plans a ×s upscale as one task per (chunk, child z-slab).
     *
-    * `reuse = true` makes every emitted tuple SHARE one child buffer,
-    * overwritten on each `next()`: it elides the JVM zeroing of s³ fresh
-    * arrays, measured at 46% of the ×15 kernel (OPTIMIZATION_r21.md §6).
+    * `reuse = true` makes every full-size child SHARE one buffer (a
+    * trailing child gets its own), overwritten on each `next()`: it elides
+    * the JVM zeroing of s³ fresh arrays, measured at 46% of the ×15 kernel
+    * (OPTIMIZATION_r21.md §6).
     * CONTRACT: callers must fully consume each child (encode/write/fold)
     * before advancing the iterator, and must never retain, collect, sort
     * or shuffle the emitted arrays — safe for the strictly-streaming
@@ -50,40 +52,43 @@ object ChunkKernels {
       iLo: Int,
       iHi: Int,
       reuse: Boolean,
+      grid: Option[(Int, Int, Int)] = None,
   ): Iterator[(Int, Int, Int, Array[Byte])] = {
     require(s >= 1, s"scale must be >= 1, got $s")
+    val (gz, gy, gx) = grid.getOrElse((nz, ny, nx))
+    require(nz <= gz && ny <= gy && nx <= gx, s"chunk ($nz,$ny,$nx) exceeds its grid cell ($gz,$gy,$gx)")
     val srcRowBytes = nx * bpp
-    val outRowBytes = nx * bpp // child dims == parent dims
     var shared: Array[Byte] = null
     for {
-      i <- Iterator.range(iLo, iHi)
-      j <- Iterator.range(0, s)
-      k <- Iterator.range(0, s)
+      i <- Iterator.range(iLo, iHi); cnz = childExtent(i, nz, gz, s) if cnz > 0
+      j <- Iterator.range(0, s); cny = childExtent(j, ny, gy, s) if cny > 0
+      k <- Iterator.range(0, s); cnx = childExtent(k, nx, gx, s) if cnx > 0
     } yield {
+      val outRowBytes = cnx * bpp
       // fully overwritten below (allocBytes documents the measured
       // uninitialized-allocation discard)
       val out =
-        if (reuse) {
-          if (shared == null) shared = ByteKernels.allocBytes(nz * ny * nx * bpp)
+        if (reuse && cnz == gz && cny == gy && cnx == gx) {
+          if (shared == null) shared = ByteKernels.allocBytes(gz * gy * gx * bpp)
           shared
-        } else ByteKernels.allocBytes(nz * ny * nx * bpp)
+        } else ByteKernels.allocBytes(cnz * cny * cnx * bpp)
       var lastSrcRowStart = -1
       var lastOutRowStart = -1
       var zc = 0
-      while (zc < nz) {
-        val srcZ = (i * nz + zc) / s - srcZOff
+      while (zc < cnz) {
+        val srcZ = (i * gz + zc) / s - srcZOff
         var yc = 0
-        while (yc < ny) {
-          val srcY = (j * ny + yc) / s
+        while (yc < cny) {
+          val srcY = (j * gy + yc) / s
           val srcRowStart = (srcZ * ny + srcY) * srcRowBytes
-          val outRowStart = (zc * ny + yc) * outRowBytes
+          val outRowStart = (zc * cny + yc) * outRowBytes
           if (srcRowStart == lastSrcRowStart) {
             // same source row as the previous output row: bulk copy
             System.arraycopy(out, lastOutRowStart, out, outRowStart, outRowBytes)
           } else {
             var xc = 0
-            while (xc < nx) {
-              val srcX = (k * nx + xc) / s
+            while (xc < cnx) {
+              val srcX = (k * gx + xc) / s
               System.arraycopy(data, srcRowStart + srcX * bpp, out, outRowStart + xc * bpp, bpp)
               xc += 1
             }
@@ -97,6 +102,9 @@ object ChunkKernels {
       (i, j, k, out)
     }
   }
+
+  /** Child i's extent on an axis of parent extent n, grid chunk g: ≤ 0 past the last. */
+  def childExtent(i: Int, n: Int, g: Int, s: Int): Int = math.min(g, s * n - i * g)
 
   /** Stride-2 decimation on GLOBAL parity (so chunk boundaries don't shift
     * the sampling lattice). Returns (z0', y0', x0', nz', ny', nx', data')

@@ -18,15 +18,20 @@ final case class Chunk(
     nz: Int, ny: Int, nx: Int,
     data: Array[Byte],
 ) {
-  /** Child (i, j, k) of this chunk under a ×s upscale: one cell of the
-    * s-fold subdivision of its grid cell, with this chunk's dims. Only the
-    * position and dims are read, never `data`.
+  /** The ×s children of this chunk of `meta`'s grid with z-index
+    * i ∈ [iLo, iHi) (ChunkKernels.upscaleChildrenSlab): child (i, j, k) is
+    * cell (cz·s + i, cy·s + j, cx·s + k) of `meta.upscaled(s)`. `data` may
+    * hold only this chunk's source rows from `srcZOff` on.
     */
-  def child(s: Int)(c: (Int, Int, Int, Array[Byte])): Chunk = {
-    val (i, j, k, out) = c
-    Chunk(cz * s + i, cy * s + j, cx * s + k,
-      z0 * s + i.toLong * nz, y0 * s + j.toLong * ny, x0 * s + k.toLong * nx,
-      nz, ny, nx, out)
+  def children(s: Int, meta: VolumeMeta, srcZOff: Int, iLo: Int, iHi: Int, reuse: Boolean): Iterator[Chunk] = {
+    val (gz, gy, gx) = meta.chunkShape
+    ChunkKernels.upscaleChildrenSlab(data, srcZOff, nz, ny, nx, meta.bytesPerVoxel, s, iLo, iHi, reuse,
+      Some((gz, gy, gx))).map { case (i, j, k, out) =>
+      Chunk(cz * s + i, cy * s + j, cx * s + k,
+        z0 * s + i.toLong * gz, y0 * s + j.toLong * gy, x0 * s + k.toLong * gx,
+        ChunkKernels.childExtent(i, nz, gz, s), ChunkKernels.childExtent(j, ny, gy, s),
+        ChunkKernels.childExtent(k, nx, gx, s), out)
+    }
   }
 }
 
@@ -44,10 +49,11 @@ final case class VolumeMeta(
   def isUnsigned: Boolean = elementType.startsWith("MET_U")
   def isFloating: Boolean = elementType == "MET_FLOAT" || elementType == "MET_DOUBLE"
   def nVoxels: Long = dimZ * dimY * dimX
+  def chunkShape: (Int, Int, Int) = (chunkZ, chunkY, chunkX)
 
-  /** The s-fold subdivision of this grid: the meta of a ×s upscale. */
-  def upscaled(s: Int): VolumeMeta = copy(
-    dimZ = dimZ * s, dimY = dimY * s, dimX = dimX * s, ncz = ncz * s, ncy = ncy * s, ncx = ncx * s)
+  /** The meta of a ×s upscale: dims ×s on a uniform grid of this chunk shape. */
+  def upscaled(s: Int): VolumeMeta = VolumeMeta.uniform(dimZ * s, dimY * s, dimX * s,
+    chunkZ, chunkY, chunkX, elementType, (spacingX, spacingY, spacingZ))
 
   /** Origin and extent (z0, y0, x0, nz, ny, nx) of grid cell (cz,cy,cx):
     * the chunk dims, clipped at the volume's far edge.
@@ -84,9 +90,10 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
 
   private def spark: SparkSession = chunks.sparkSession
 
-  /** Nearest-neighbor ×s upscale (T1 scale path): each chunk emits s³
-    * aligned child chunks — embarrassingly parallel, zero shuffle,
-    * unlike the reference's output rechunk (upscale_streaming.py:126).
+  /** Nearest-neighbor ×s upscale (T1 scale path): each chunk emits its
+    * children on `meta.upscaled(s)`'s grid (s³ for an interior chunk) —
+    * embarrassingly parallel, zero shuffle, unlike the reference's output
+    * rechunk (upscale_streaming.py:126).
     *
     * `reuseChildBuffers = true` emits every child in ONE shared per-task
     * buffer, eliding the JVM zeroing of s³ fresh arrays per input chunk —
@@ -101,12 +108,9 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   def upscale(s: Int, reuseChildBuffers: Boolean = false): ChunkVolume = {
     require(s >= 1, s"scale must be >= 1, got $s")
     if (s == 1) return this
-    val bpp = meta.bytesPerVoxel
+    val m = meta // tasks capture the meta, not this volume
     import chunks.sparkSession.implicits._
-    val out = chunks.flatMap { c =>
-      ChunkKernels.upscaleChildrenSlab(c.data, 0, c.nz, c.ny, c.nx, bpp, s,
-        iLo = 0, iHi = s, reuse = reuseChildBuffers).map(c.child(s))
-    }
+    val out = chunks.flatMap(_.children(s, m, srcZOff = 0, iLo = 0, iHi = s, reuseChildBuffers))
     ChunkVolume(out, meta.upscaled(s))
   }
 
@@ -606,16 +610,17 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     * materializing rows): each upscaled child chunk joins its parent
     * chunk (a join over CHUNK rows, |chunks|·s³ of them, not voxels) and
     * a byte kernel asserts label preservation element-wise. Returns
-    * one row: (n_checked, n_match). `up` must be on the s-fold
-    * subdivision of this grid (dims ×s, same chunk shape, grid counts ×s),
-    * else the join would silently drop children: IllegalArgumentException.
+    * one row: (n_checked, n_match). `up` must be on `meta.upscaled(s)`'s
+    * grid (dims, chunk shape and grid counts; not spacing), else the join
+    * would silently drop children: IllegalArgumentException.
     */
   def verifyUpscale(up: ChunkVolume, s: Int): DataFrame = {
     def grid(m: VolumeMeta) = s"dims (${m.dimZ},${m.dimY},${m.dimX}) " +
       s"chunks (${m.chunkZ},${m.chunkY},${m.chunkX}) grid (${m.ncz},${m.ncy},${m.ncx})"
     require(grid(up.meta) == grid(meta.upscaled(s)),
-      s"verifyUpscale: ${grid(up.meta)} is not the x$s subdivision of ${grid(meta)}")
+      s"verifyUpscale: ${grid(up.meta)} is not the x$s grid of ${grid(meta)}")
     val bpp = meta.bytesPerVoxel
+    val (gz, gy, gx) = meta.chunkShape
     import chunks.sparkSession.implicits._
     val parents = chunks
       .map(c => (c.cz, c.cy, c.cx, c.ny, c.nx, c.data))
@@ -632,13 +637,13 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
         var matched = 0L
         var zc = 0
         while (zc < nz) {
-          val sz = (i * nz + zc) / s
+          val sz = (i * gz + zc) / s
           var yc = 0
           while (yc < ny) {
-            val sy = (j * ny + yc) / s
+            val sy = (j * gy + yc) / s
             var xc = 0
             while (xc < nx) {
-              val sx = (k * nx + xc) / s
+              val sx = (k * gx + xc) / s
               val ci = (zc * ny + yc) * nx + xc
               val pi = (sz * pny + sy) * pnx + sx
               checked += 1

@@ -30,8 +30,8 @@ object MhdReader {
   /** Read → ×s nearest-neighbor upscale in one pass: [[RawPayload.scan]]
     * with child-slab task units, (input chunk, child z-index), each
     * reading only the source rows its children map back onto. Output
-    * chunks, bytes and metadata equal `read(...).upscale(s)`; only the
-    * task decomposition differs.
+    * chunks (on the ×s dims' uniform grid), bytes and metadata equal
+    * `read(...).upscale(s)`; only the task decomposition differs.
     *
     * `reuseChildBuffers` has the [[ChunkVolume.upscale]] contract: opt in
     * only when the downstream is a strictly-streaming consumer.

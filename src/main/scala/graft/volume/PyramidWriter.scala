@@ -76,7 +76,7 @@ object PyramidWriter {
       writeLevel: (ChunkVolume, String) => Unit)(finish: String => Unit)(
       implicit fc: FioConf): Unit = {
     val pyr = vol.pyramid(levels)
-    val (bz, by, bx) = (vol.meta.chunkZ, vol.meta.chunkY, vol.meta.chunkX)
+    val (bz, by, bx) = vol.meta.chunkShape
     AtomicDir.stage(path) { dir =>
       pyr.zipWithIndex.foreach { case (level, i) =>
         val uniform =

@@ -17,10 +17,10 @@ object RawPayload {
 
   /** Read the payload on `meta`'s chunk grid, upscaled ×s, with
     * CHILD-SLAB task granularity: the task unit is (input chunk, child
-    * z-index) — nChunks·s units — and each unit reads ONLY the source z
-    * rows its child slab maps back onto, then emits that slab's s²
-    * children (ChunkKernels.upscaleChildrenSlab). At s = 1 a unit is the
-    * whole chunk and emits it as read.
+    * z-index i < s) — nChunks·s units — and each unit reads ONLY the
+    * source z rows its child slab maps back onto, then emits that slab's
+    * children (ChunkKernels.upscaleChildrenSlab; a ragged chunk's units
+    * past its last child emit nothing). At s = 1 a unit is the chunk.
     *
     * Output chunks, bytes and metadata equal `scan(…, s = 1).upscale(s)`;
     * only the task decomposition differs. Whole-chunk tasks of near-equal
@@ -58,42 +58,35 @@ object RawPayload {
         val cy = ((id / ncx) % ncy).toInt
         val cx = (id % ncx).toInt
         val (z0, y0, x0, nz, ny, nx) = meta.cell(cz, cy, cx)
-        // source z rows child-i touches: ⌊i·nz/s⌋ .. ⌊((i+1)·nz − 1)/s⌋
-        val zLo = i * nz / s
-        val slabNz = ((i + 1) * nz - 1) / s - zLo + 1
-        val rowBytes = nx * bpp
-        val slab = new Array[Byte](slabNz * ny * rowBytes)
-        val f = file(path)
-        def at(z: Int, y: Long): Long = offset + (((z0 + zLo + z) * dimY + y) * dimX + x0) * bpp
-        // contiguity fast paths (bytes identical, fewer positioned reads):
-        // a full-plane slab is ONE source run; a full-x slab is one run
-        // per z. 410k 2 KB row reads on a cold page cache measured as the
-        // dominant ambient-sensitive cost of the ×15 scan (r21).
-        if (x0 == 0L && nx.toLong == dimX && y0 == 0L && ny.toLong == dimY) {
-          f.readFully(at(0, 0), slab, 0, slab.length)
-        } else if (x0 == 0L && nx.toLong == dimX) {
-          var z = 0
-          while (z < slabNz) {
-            f.readFully(at(z, y0), slab, z * ny * rowBytes, ny * rowBytes)
-            z += 1
+        val cnz = ChunkKernels.childExtent(i, nz, meta.chunkZ, s)
+        if (cnz <= 0) Iterator.empty else {
+          val zLo = i * meta.chunkZ / s
+          val slabNz = (i * meta.chunkZ + cnz - 1) / s - zLo + 1
+          val rowBytes = nx * bpp
+          val slab = new Array[Byte](slabNz * ny * rowBytes)
+          val f = file(path)
+          def at(z: Int, y: Long): Long = offset + (((z0 + zLo + z) * dimY + y) * dimX + x0) * bpp
+          // one positioned read per contiguous source run (bytes identical
+          // either way): a full-plane slab is ONE run, a full-x slab one
+          // per z, else one per row. 410k 2 KB row reads on a cold page
+          // cache measured as the dominant ambient-sensitive cost of the
+          // ×15 scan (r21).
+          val runBytes =
+            if (x0 != 0L || nx.toLong != dimX) rowBytes
+            else if (y0 == 0L && ny.toLong == dimY) slab.length
+            else ny * rowBytes
+          var off = 0
+          while (off < slab.length) {
+            val row = off / rowBytes // z·ny + y within the slab
+            f.readFully(at(row / ny, y0 + row % ny), slab, off, runBytes)
+            off += runBytes
           }
-        } else {
-          var z = 0
-          while (z < slabNz) {
-            var y = 0
-            while (y < ny) {
-              f.readFully(at(z, y0 + y), slab, (z * ny + y) * rowBytes, rowBytes)
-              y += 1
-            }
-            z += 1
-          }
+          if (bigEndian) ChunkKernels.swapEndianInPlace(slab, bpp)
+          // at s = 1 the slab is the whole chunk
+          val parent = Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, slab)
+          if (s == 1) Iterator.single(parent)
+          else parent.children(s, meta, srcZOff = zLo, iLo = i, iHi = i + 1, reuseChildBuffers)
         }
-        if (bigEndian) ChunkKernels.swapEndianInPlace(slab, bpp)
-        // at s = 1 the slab is the whole chunk
-        val parent = Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, slab)
-        if (s == 1) Iterator.single(parent)
-        else ChunkKernels.upscaleChildrenSlab(slab, zLo, nz, ny, nx, bpp, s,
-          iLo = i, iHi = i + 1, reuse = reuseChildBuffers).map(parent.child(s))
       }
     }
     ChunkVolume(chunks, meta.upscaled(s))

@@ -128,38 +128,32 @@ object UpscaleCli {
       "source" -> a.input, "scale" -> a.scale.toString, "mode" -> a.mode)
     // ProgressBar parity (upscale.py:23): stage-level progress lines
     // stream to `live` DURING execute and join the transcript after.
-    val (_, progress) = graft.plans.ProgressReporter.withProgress(spark.sparkContext, live) {
-      if (a.pyramidLevels > 1)
+    val (written, progress) = graft.plans.ProgressReporter.withProgress(spark.sparkContext, live) {
+      if (a.pyramidLevels > 1) {
         PyramidWriter.write(processed, a.pyramidLevels, a.output, a.scale, zarrCodec(a.compressor))
-      else if (a.format == "zarr")
+        s"OME-Zarr pyramid (${a.pyramidLevels} levels)"
+      } else if (a.format == "zarr") {
         ZarrStore.write(processed, a.output, zarrCodec(a.compressor), extraAttrs = provenance)
-      else if (a.format == "zarr3")
+        s"Zarr array (${a.compressor})"
+      } else if (a.format == "zarr3") {
         Zarr3Store.write(processed, a.output, zarrCodec(a.compressor), extraAttrs = provenance)
-      else if (a.format == "zarr3-sharded") {
+        s"Zarr v3 array (${a.compressor})"
+      } else if (a.format == "zarr3-sharded") {
         // shard = 2× the chunk shape per axis, inner = the chunk shape:
         // 8× fewer objects at unchanged read granularity. No dim clamps:
         // an oversized shard is legal (grid cell count just hits 1) and
         // clamping could break the divisibility contract.
         val m = processed.meta
-        Zarr3Store.writeSharded(
-          processed.rechunk(m.chunkZ * 2, m.chunkY * 2, m.chunkX * 2),
-          a.output,
-          innerShape = (m.chunkZ, m.chunkY, m.chunkX),
-          zarrCodec(a.compressor), extraAttrs = provenance)
-      }
-      else
+        Zarr3Store.writeSharded(processed.rechunk(m.chunkZ * 2, m.chunkY * 2, m.chunkX * 2),
+          a.output, innerShape = m.chunkShape, zarrCodec(a.compressor), extraAttrs = provenance)
+        s"Sharded zarr v3 array (${a.compressor})"
+      } else {
         ChunkStore.write(processed, a.output, extraProvenance = provenance)
+        "Chunk store"
+      }
     }
     out ++= progress
-    out += (if (a.pyramidLevels > 1)
-      s"Finished. OME-Zarr pyramid (${a.pyramidLevels} levels) written to: ${a.output}"
-    else if (a.format == "zarr")
-      s"Finished. Zarr array (${a.compressor}) written to: ${a.output}"
-    else if (a.format == "zarr3")
-      s"Finished. Zarr v3 array (${a.compressor}) written to: ${a.output}"
-    else if (a.format == "zarr3-sharded")
-      s"Finished. Sharded zarr v3 array (${a.compressor}) written to: ${a.output}"
-    else s"Finished. Chunk store written to: ${a.output}")
+    out += s"Finished. $written written to: ${a.output}"
     out.result()
   }
 

@@ -730,7 +730,7 @@ object ZarrStore {
     * (`Zarr3Store`, plain and sharded).
     */
   private[graft] def encodeChunkBytes(c: Chunk, meta: VolumeMeta, codec: Codec): Array[Byte] = {
-    val (ckZ, ckY, ckX) = (meta.chunkZ, meta.chunkY, meta.chunkX)
+    val (ckZ, ckY, ckX) = meta.chunkShape
     val bpp = meta.bytesPerVoxel
     // zarr requires a UNIFORM grid (edge chunks trail); reject inputs
     // whose grid drifted (e.g. raw decimate output) instead of

@@ -42,18 +42,38 @@ class ChunkKernelsSpec extends AnyFunSuite {
   }
 
   test("upscaleChildren: label preservation, coverage, s^3 count (exhaustive sweep)") {
-    for (nz <- 1 to 4; ny <- 1 to 4; nx <- 1 to 4; s <- 1 to 3) {
+    // interior parents (grid chunk = parent extent) make s children per
+    // axis with the parent's dims; ragged parents (grid chunk > extent)
+    // make ⌈s·n/c⌉, the last one trailing
+    val ragged = Seq((1, 2, 3) -> (2, 3, 5), (3, 1, 2) -> (4, 4, 3), (2, 3, 1) -> (5, 4, 2),
+      (3, 3, 3) -> (4, 5, 7))
+    val cases =
+      (for (nz <- 1 to 4; ny <- 1 to 4; nx <- 1 to 4; s <- 1 to 3) yield ((nz, ny, nx), (nz, ny, nx), s)) ++
+        (for ((n, g) <- ragged; s <- Seq(2, 3, 7, 15)) yield (n, g, s))
+    for (((nz, ny, nx), (cz, cy, cx), s) <- cases) {
       def label(z: Int, y: Int, x: Int): Long = (z * 100 + y * 10 + x + 7).toLong
+      def count(n: Int, c: Int) = (s * n + c - 1) / c
+      val what = s"dims($nz,$ny,$nx) grid($cz,$cy,$cx) scale=$s"
       val data = pack(nz, ny, nx, label)
       val children = ChunkKernels.upscaleChildrenSlab(data, 0, nz, ny, nx, 4, s,
-        iLo = 0, iHi = s, reuse = false).toSeq
-      assert(children.size === s * s * s)
-      for ((i, j, k, child) <- children; zc <- 0 until nz; yc <- 0 until ny; xc <- 0 until nx) {
-        val gz = i * nz + zc; val gy = j * ny + yc; val gx = k * nx + xc
-        val expected = label(gz / s, gy / s, gx / s)
-        assert(at(child, ny, nx, zc, yc, xc) === expected,
-          s"child($i,$j,$k) voxel($zc,$yc,$xc) global($gz,$gy,$gx) dims($nz,$ny,$nx) scale=$s")
+        iLo = 0, iHi = s, reuse = false, grid = Some((cz, cy, cx))).toSeq
+      assert(children.size === count(nz, cz) * count(ny, cy) * count(nx, cx), what)
+      if ((nz, ny, nx) == ((cz, cy, cx))) assert(children.size === s * s * s, what)
+      val covered = scala.collection.mutable.HashSet.empty[(Int, Int, Int)]
+      for ((i, j, k, child) <- children) {
+        val (cnz, cny, cnx) = (math.min(cz, s * nz - i * cz), math.min(cy, s * ny - j * cy),
+          math.min(cx, s * nx - k * cx))
+        assert(child.length === cnz * cny * cnx * 4, s"child($i,$j,$k) size, $what")
+        for (zc <- 0 until cnz; yc <- 0 until cny; xc <- 0 until cnx) {
+          val gz = i * cz + zc; val gy = j * cy + yc; val gx = k * cx + xc
+          assert(covered.add((gz, gy, gx)), s"($gz,$gy,$gx) covered twice, $what")
+          assert(at(child, cny, cnx, zc, yc, xc) === label(gz / s, gy / s, gx / s),
+            s"child($i,$j,$k) voxel($zc,$yc,$xc) global($gz,$gy,$gx) $what")
+        }
       }
+      // exactly [0, s·n)³: every output voxel once, none outside
+      assert(covered.size === s * nz * s * ny * s * nx, what)
+      assert(covered.forall { case (z, y, x) => z < s * nz && y < s * ny && x < s * nx }, what)
     }
   }
 

@@ -51,9 +51,13 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("verifyUpscale: checks every voxel on the x2 subdivision, rejects another grid") {
-    val n = dz * dy * dx * 8
-    val r = vol.verifyUpscale(vol.upscale(2), 2).collect().head
-    assert((r.getLong(0), r.getLong(1)) === ((n, n)))
+    // (5,4,6) is ragged on every axis: the x3 edge chunks make 2 children
+    // on z (6 planes: 5 + 1), 2 on y (6: 4 + 2) and 1 on x (6)
+    for (s <- Seq(2, 3)) {
+      val n = dz * dy * dx * s * s * s
+      val r = vol.verifyUpscale(vol.upscale(s), s).collect().head
+      assert((r.getLong(0), r.getLong(1)) === ((n, n)), s"x$s")
+    }
     // same dims, other chunk shape: the chunk join would drop children
     val regridded = vol.upscale(2).rechunk(10, 8, 12)
     val e = intercept[IllegalArgumentException](vol.verifyUpscale(regridded, 2))

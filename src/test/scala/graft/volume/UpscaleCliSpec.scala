@@ -163,6 +163,41 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
       .select("label").collect().head.getLong(0) === 15564L + (2 / 2) * 10 + (4 / 4))
   }
 
+  test("a default plan that does not divide z feeds every zarr sink with no rechunk") {
+    // 100 planes of 8×10 uint32: --chunk-mb 1 plans (94,8,10), and
+    // 100 = 94 + 6, so the x2 edge chunk is one 12-plane child at z0 = 188
+    // on the output's 94-plane grid (the full atlas's 456 = 12·37 + 12)
+    val dir = Files.createTempDirectory("cli_ragged")
+    val mhd = MhdFixture.write(dir, 100, 8, 10, "MET_UINT", 4, msb = false)
+    val meta = MhdMeta.parse(mhd)
+    assert(ChunkPlanner.chooseChunks(meta.shapeZyx, 4, 1) === ((94, 8, 10)))
+    /** Every voxel of `vol` is the fixture's value at ×s. */
+    def assertUpscaled(vol: ChunkVolume, s: Int, what: String): Unit = {
+      assert((vol.meta.dimZ, vol.meta.dimY, vol.meta.dimX) === ((100L * s, 8L * s, 10L * s)), what)
+      val chunks = vol.chunks.collect()
+      assert(chunks.map(c => c.nz.toLong * c.ny * c.nx).sum === 8000L * s * s * s, what)
+      for (c <- chunks; z <- 0 until c.nz; y <- 0 until c.ny; x <- 0 until c.nx) {
+        val (gz, gy, gx) = (c.z0 + z, c.y0 + y, c.x0 + x)
+        assert(ChunkKernels.decodeLong(c.data, (z * c.ny + y) * c.nx + x, 4, unsigned = true) ===
+          MhdFixture.value(gz / s, gy / s, gx / s, 4), s"$what: voxel ($gz,$gy,$gx)")
+      }
+    }
+    def run(out: String, format: String, levels: Int = 1): Unit =
+      UpscaleCli.run(spark, UpscaleCli.Args(input = mhd, output = dir.resolve(out).toString,
+        chunkMb = 1, format = format, pyramidLevels = levels, force = true))
+    run("z2", "zarr")
+    assertUpscaled(ZarrStore.read(spark, dir.resolve("z2").toString), 2, "zarr")
+    for (format <- Seq("zarr3", "zarr3-sharded")) {
+      run(format, format)
+      assertUpscaled(Zarr3Store.read(spark, dir.resolve(format).toString), 2, format)
+    }
+    // --pyramid-levels 2: level 1 decimates ×2 back to the source
+    run("pyr", "zarr", levels = 2)
+    val pyr = dir.resolve("pyr").toString
+    assertUpscaled(PyramidWriter.readLevel(spark, pyr, 0), 2, "pyramid level 0")
+    assertUpscaled(PyramidWriter.readLevel(spark, pyr, 1), 1, "pyramid level 1")
+  }
+
   test("dry-run executes nothing; guards reject oversized jobs; force overrides") {
     val lines = UpscaleCli.run(spark, UpscaleCli.Args(
       input = fixtureDir.resolve("f.mhd").toString, scale = 2, dryRun = true))

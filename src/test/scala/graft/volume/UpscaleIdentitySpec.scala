@@ -13,9 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *   2. child sets — fused equals composed on ragged grids, several
   *      scales (incl. s > nz), dtypes and byte orders;
   *   3. stores — every sink writes byte-identical stores for the four
-  *      variants, which also proves the object chain between the kernel
-  *      and the foreachPartition writers never retains a shared child
-  *      (retention would repeat the last child's bytes across files);
+  *      variants on a grid ragged on every axis, whose edge chunks make
+  *      fewer, trailing children; this also proves the object chain
+  *      between the kernel and the foreachPartition writers never retains
+  *      a shared child (retention would repeat the last child's bytes
+  *      across files);
   *   4. task units — the fused plan is nChunks·s-grained.
   */
 class UpscaleIdentitySpec extends AnyFunSuite with SparkSpec {
@@ -51,17 +53,17 @@ class UpscaleIdentitySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  // divisible dims (the zarr sinks require a uniform child grid), chunked
-  // on every axis: 6 = 3·2, 8 = 2·4
+  // ragged on every axis, as above: the ×3 edge chunks make 2 children
+  // on z (9 planes: 5 + 4), 2 on y (6: 4 + 2) and 2 on x (6: 5 + 1)
   private lazy val storeMhd =
-    MhdMeta.parse(MhdFixture.write(Files.createTempDirectory("ident"), 6, 8, 8, "MET_UINT", 4, msb = false))
+    MhdMeta.parse(MhdFixture.write(Files.createTempDirectory("ident"), 13, 10, 12, "MET_UINT", 4, msb = false))
 
   /** The four ×3 variants; composed-allocating first, the reference. */
   private def variants: Seq[(String, ChunkVolume)] = Seq(
-    "composed-allocating" -> MhdReader.read(spark, storeMhd, 2, 4, 4).upscale(3),
-    "composed-reusing" -> MhdReader.read(spark, storeMhd, 2, 4, 4).upscale(3, reuseChildBuffers = true),
-    "fused-reusing" -> MhdReader.readUpscaled(spark, storeMhd, 2, 4, 4, 3, reuseChildBuffers = true),
-    "fused-allocating" -> MhdReader.readUpscaled(spark, storeMhd, 2, 4, 4, 3))
+    "composed-allocating" -> MhdReader.read(spark, storeMhd, 5, 4, 5).upscale(3),
+    "composed-reusing" -> MhdReader.read(spark, storeMhd, 5, 4, 5).upscale(3, reuseChildBuffers = true),
+    "fused-reusing" -> MhdReader.readUpscaled(spark, storeMhd, 5, 4, 5, 3, reuseChildBuffers = true),
+    "fused-allocating" -> MhdReader.readUpscaled(spark, storeMhd, 5, 4, 5, 3))
 
   /** Write every variant with `write` and compare each to the reference. */
   private def assertSinkIdentity(name: String, chunkFilesOnly: Boolean)(
@@ -90,7 +92,7 @@ class UpscaleIdentitySpec extends AnyFunSuite with SparkSpec {
   test("zarr v3 sharded sink: four upscale variants, identical shard files") {
     val codec = ZarrStore.BloscCodec("zstd", 3, shuffle = 1)
     assertSinkIdentity("ident_zarr3", chunkFilesOnly = false)((v, p) =>
-      Zarr3Store.writeSharded(v, p, innerShape = (1, 2, 2), codec = codec))
+      Zarr3Store.writeSharded(v, p, innerShape = (1, 2, 5), codec = codec))
   }
 
   test("task units: 3 chunks at s = 3 plan 9 partitions") {
