@@ -112,8 +112,6 @@ object AtomicDir {
     }
   }
 
-  def deleteRecursively(dir: String)(implicit fc: FioConf): Unit = { Fio.delete(dir); () }
-
   /** Sweep crash leftovers (`<dest>.__tmp-*`, `<dest>.__trash-*`) into
     * background deletes. Lists only `dest`'s parent — O(siblings), not
     * O(chunk files).

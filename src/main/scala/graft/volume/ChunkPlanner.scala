@@ -36,16 +36,6 @@ object ChunkPlanner {
     )
   }
 
-  /** Per-axis scale factors derived from a target shape instead of an
-    * explicit factor (anno_upsampling.py:40–47, S7 target-shape probe).
-    */
-  def scalesForTarget(srcZyx: (Long, Long, Long), tgtZyx: (Long, Long, Long)): (Double, Double, Double) =
-    (
-      tgtZyx._1.toDouble / srcZyx._1,
-      tgtZyx._2.toDouble / srcZyx._2,
-      tgtZyx._3.toDouble / srcZyx._3,
-    )
-
   /** Estimated stored output in GB for an upscale (+ optional pyramid
     * overhead ≈ Σ 8^-i = 1/7) — upscale_streaming_enhance.py:145–167.
     */

@@ -90,6 +90,13 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
 
   private def spark: SparkSession = chunks.sparkSession
 
+  /** The driver-side reader of one grid cell, set only by
+    * [[ChunkVolume.ofCells]] on the volume a zarr reader returns. Every
+    * derived volume (`copy`, upscale, rechunk, a filter) is a new
+    * instance, so it has none and its lookups run on Spark.
+    */
+  private var cellLoader: Option[CellLoader] = None
+
   /** Nearest-neighbor ×s upscale (T1 scale path): each chunk emits its
     * children on `meta.upscaled(s)`'s grid (s³ for an interior chunk) —
     * embarrassingly parallel, zero shuffle, unlike the reference's output
@@ -712,24 +719,34 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     }.toDF("z", "y", "x", "value")
   }
 
-  /** Point lookup WITHOUT a volume scan (P4): the one-voxel box of
-    * [[intersecting]] keeps only the owning chunk, then one element is
-    * decoded. On a zarr read Catalyst pushes that predicate below the
-    * decode, so exactly one chunk file is read, as verify_labels.py:21 /
-    * view_with_labels.py:24 touch one zarr chunk. MHD and TIFF reads
-    * still read their chunks in partition order until the owner turns up.
+  /** Point lookup WITHOUT a volume scan (P4): the value at (z, y, x), or
+    * `None` off the array. On the volume a zarr reader returns, the owning
+    * grid cell is found from `meta` and read and decoded on the driver by
+    * the reader's own cell loader, so the lookup runs no Spark job and
+    * reads one chunk file (a shard's index and one blob when sharded), as
+    * verify_labels.py:21 / view_with_labels.py:24 read one zarr chunk.
+    * Every other volume, a volume derived from a zarr read included, runs
+    * a job: the one-voxel box of [[intersecting]] keeps only the owning
+    * chunk, then one element is decoded. Its predicate prunes below the
+    * decode on a zarr grid and becomes scan filters on a parquet store;
+    * MHD and TIFF reads still read their chunks in partition order until
+    * the owner turns up.
     */
   def pointLookup(z: Long, y: Long, x: Long): Option[Long] = {
     require(!meta.isFloating, "pointLookup decodes integral labels")
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
-    import chunks.sparkSession.implicits._
-    intersecting(z, z + 1, y, y + 1, x, x + 1)
-      .map { c =>
-        val i = ((z - c.z0).toInt * c.ny + (y - c.y0).toInt) * c.nx + (x - c.x0).toInt
-        ChunkKernels.decodeLong(c.data, i, bpp, unsigned)
-      }
-      .take(1).headOption
+    cellLoader match {
+      case Some(load) =>
+        if (z < 0 || y < 0 || x < 0 || z >= meta.dimZ || y >= meta.dimY || x >= meta.dimX) None
+        else Some(valueAt(load((z / meta.chunkZ).toInt, (y / meta.chunkY).toInt, (x / meta.chunkX).toInt),
+          z, y, x, bpp, unsigned))
+      case None =>
+        import chunks.sparkSession.implicits._
+        intersecting(z, z + 1, y, y + 1, x, x + 1)
+          .map(valueAt(_, z, y, x, bpp, unsigned))
+          .take(1).headOption
+    }
   }
 
   /** Chunk-store write (K1/K2): compressed parquet, one chunk per row,
@@ -793,6 +810,19 @@ object ChunkVolume {
     ChunkVolume(out, meta)
   }
 
+  /** Reads grid cell (cz, cy, cx) of a volume's `meta` on the driver. */
+  private[volume] type CellLoader = (Int, Int, Int) => Chunk
+
+  /** The volume of a store reader whose `chunks` hold, at each grid cell
+    * of `meta`, exactly the chunk `load` returns for it: its
+    * [[ChunkVolume.pointLookup]] calls `load` instead of running a job.
+    */
+  private[volume] def ofCells(chunks: Dataset[Chunk], meta: VolumeMeta, load: CellLoader): ChunkVolume = {
+    val v = ChunkVolume(chunks, meta)
+    v.cellLoader = Some(load)
+    v
+  }
+
   /** Read back a chunk store written by [[ChunkVolume.write]]. */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     val meta = readSidecar(path)
@@ -818,6 +848,11 @@ object ChunkVolume {
       (bz + z, by + rem / nx, bx + rem % nx, ChunkKernels.decodeLong(box, i, bpp, unsigned))
     }
   }
+
+  /** The element of chunk `c` at global voxel (z, y, x), which `c` must hold. */
+  private[volume] def valueAt(c: Chunk, z: Long, y: Long, x: Long, bpp: Int, unsigned: Boolean): Long =
+    ChunkKernels.decodeLong(c.data,
+      ((z - c.z0).toInt * c.ny + (y - c.y0).toInt) * c.nx + (x - c.x0).toInt, bpp, unsigned)
 
   private[volume] def jsonStr(s: String): String =
     "\"" + s.flatMap {

@@ -28,14 +28,16 @@ object RegionTable {
     */
   def lookupById(regions: DataFrame, input: String): String =
     if (!input.forall(_.isDigit) || input.isEmpty) s"Invalid input: $input"
-    else {
-      val id = input.toLong
-      regions.filter(col("Region") === id)
-        .select(col("RegionName"), col("RegionAbbr"), col("Level"))
-        .collect()
-        .headOption
-        .map(r => s"Region $id: ${r.getString(0)} (${r.getString(1)}), level ${r.getInt(2)}")
-        .getOrElse(s"Unknown region ID: $id")
+    else input.toLongOption match {
+      // all digits past Long range: a valid id that names no region
+      case None => s"Unknown region ID: $input"
+      case Some(id) =>
+        regions.filter(col("Region") === id)
+          .select(col("RegionName"), col("RegionAbbr"), col("Level"))
+          .collect()
+          .headOption
+          .map(r => s"Region $id: ${r.getString(0)} (${r.getString(1)}), level ${r.getInt(2)}")
+          .getOrElse(s"Unknown region ID: $id")
     }
 
   /** Walk the ontology upward from a region to the root via iterative

@@ -357,9 +357,9 @@ object Zarr3Store {
   // the file. This is how a v3 store holds 100 TB on object storage
   // without billions of keys: object count scales with SHARDS while read
   // granularity stays one INNER chunk — a point lookup GETs the index
-  // range and one inner-chunk range, never the shard body (the
-  // pointLookupSharded path below does exactly those positioned reads,
-  // and the gate pins it).
+  // range and one inner-chunk range, never the shard body (readInnerCell
+  // below does exactly those positioned reads for pointLookupSharded and
+  // a sharded read's pointLookup, and the gate pins it).
 
   /** Sentinel for an absent inner chunk: offset = nbytes = 2^64−1. */
   private val Missing = -1L
@@ -381,6 +381,7 @@ object Zarr3Store {
     */
   private[volume] def encodeShard(
       c: Chunk, zm: ZarrMeta, sh: ShardingMeta, ivm: VolumeMeta): Array[Byte] = {
+    ZarrStore.requireOnGrid(c, ZarrStore.volumeMeta(zm))
     val bpp = zm.bpp
     val Seq(iz, iy, ix) = sh.innerChunks
     val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
@@ -508,6 +509,28 @@ object Zarr3Store {
   private def shardOfFile(raf: graft.io.FioRandom, zm: ZarrMeta, sh: ShardingMeta) =
     new ShardFile(raf.path, raf.size, raf.readAt, zm, sh)
 
+  /** Inner cell (gcz, gcy, gcx) of a sharded array, read with positioned
+    * reads of its one shard file (the index, then the cell's blob) and
+    * decoded; an absent shard file or cell decodes as fill_value. With
+    * the chunk come the bytes read and the file's size, `None` when the
+    * shard file is absent: the evidence [[pointLookupSharded]] reports.
+    */
+  private def readInnerCell(dir: String, zm: ZarrMeta, sh: ShardingMeta, gcz: Int, gcy: Int, gcx: Int)(
+      implicit fc: FioConf): (Chunk, Option[(Long, Long)]) = {
+    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
+    val cell = ((gcz % nIz) * nIy + gcy % nIy) * nIx + gcx % nIx
+    val raf = Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, gcz / nIz, gcy / nIy, gcx / nIx)))
+    try {
+      val read = raf.map { r =>
+        val shard = shardOfFile(r, zm, sh)
+        val blob = shard.blob(cell)
+        (blob, (shard.indexLen + blob.map(_.length.toLong).getOrElse(0L), r.size))
+      }
+      (ZarrStore.decodeChunk(read.flatMap(_._1), innerMeta(zm, sh), innerVm(zm, sh), gcz, gcy, gcx),
+        read.map(_._2))
+    } finally raf.foreach(_.close())
+  }
+
   /** The inner cells the box [z0,z1)×[y0,y1)×[x0,x1) touches, grouped by
     * shard (sorted shard-grid coordinates), each cell as its global
     * inner-grid (z, y, x) and its C-order index in the shard. The box is
@@ -561,7 +584,9 @@ object Zarr3Store {
     * the INNER grid (absent shards/cells decode as fill_value). The
     * returned volume's chunk grid is the inner grid — downstream
     * operators see the fine granularity, exactly as if the array were
-    * unsharded.
+    * unsharded. Its cell loader is [[readInnerCell]], so its
+    * [[ChunkVolume.pointLookup]] reads one shard index and one blob on
+    * the driver and runs no job.
     */
   private def readSharded(
       spark: SparkSession, dir: String, zm: ZarrMeta, sh: ShardingMeta)(
@@ -583,7 +608,7 @@ object Zarr3Store {
           ZarrStore.decodeChunk(shard.flatMap(_.blob(cell)), izm, ivm, gcz, gcy, gcx))
       }
     }
-    ChunkVolume(chunks, ivm)
+    ChunkVolume.ofCells(chunks, ivm, readInnerCell(dir, zm, sh, _, _, _)._1)
   }
 
   /** Compact an UNSHARDED zarr v3 array into a sharded one — the
@@ -698,22 +723,12 @@ object Zarr3Store {
     require(z >= 0 && y >= 0 && x >= 0
       && z < zm.shape(0) && y < zm.shape(1) && x < zm.shape(2),
       s"point ($z,$y,$x) outside array ${zm.shape.mkString("x")}")
-    // a point is the one-voxel box: one shard, one inner cell
-    val Seq(((scz, scy, scx), Seq((gcz, gcy, gcx, cell)))) =
-      boxCells(zm, sh, z, z + 1, y, y + 1, x, x + 1)
-    Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, scz, scy, scx))) match {
-      case None => ShardProbe(zm.fillValue, shardsOpened = 0, bytesRead = 0L, fileBytes = 0L)
-      case Some(raf) =>
-        try {
-          val shard = shardOfFile(raf, zm, sh)
-          val blob = shard.blob(cell)
-          val ivm = innerVm(zm, sh)
-          val inner = ZarrStore.decodeChunk(blob, innerMeta(zm, sh), ivm, gcz, gcy, gcx)
-          val vi = (((z - inner.z0) * inner.ny + (y - inner.y0)) * inner.nx + (x - inner.x0)).toInt
-          val label = ChunkKernels.decodeLong(inner.data, vi, zm.bpp, ivm.isUnsigned)
-          ShardProbe(label, shardsOpened = 1,
-            bytesRead = shard.indexLen + blob.map(_.length.toLong).getOrElse(0L), fileBytes = raf.size)
-        } finally raf.close()
+    val Seq(iz, iy, ix) = sh.innerChunks
+    readInnerCell(dir, zm, sh, (z / iz).toInt, (y / iy).toInt, (x / ix).toInt) match {
+      case (_, None) => ShardProbe(zm.fillValue, shardsOpened = 0, bytesRead = 0L, fileBytes = 0L)
+      case (inner, Some((bytesRead, fileBytes))) =>
+        ShardProbe(ChunkVolume.valueAt(inner, z, y, x, zm.bpp, innerVm(zm, sh).isUnsigned),
+          shardsOpened = 1, bytesRead = bytesRead, fileBytes = fileBytes)
     }
   }
 }

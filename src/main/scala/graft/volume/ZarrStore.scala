@@ -732,14 +732,7 @@ object ZarrStore {
   private[graft] def encodeChunkBytes(c: Chunk, meta: VolumeMeta, codec: Codec): Array[Byte] = {
     val (ckZ, ckY, ckX) = meta.chunkShape
     val bpp = meta.bytesPerVoxel
-    // zarr requires a UNIFORM grid (edge chunks trail); reject inputs
-    // whose grid drifted (e.g. raw decimate output) instead of
-    // silently misplacing voxels — callers rechunk first.
-    require(
-      meta.cell(c.cz, c.cy, c.cx) == ((c.z0, c.y0, c.x0, c.nz, c.ny, c.nx)),
-      s"chunk (${c.cz},${c.cy},${c.cx}) at (${c.z0},${c.y0},${c.x0}) size " +
-        s"(${c.nz},${c.ny},${c.nx}) is not on the uniform ($ckZ,$ckY,$ckX) grid — " +
-        "rechunk before ZarrStore.write")
+    requireOnGrid(c, meta)
     val full = c.nz == ckZ && c.ny == ckY && c.nx == ckX
     val payload =
       if (full) c.data
@@ -750,6 +743,18 @@ object ZarrStore {
       }
     codec.compress(payload)
   }
+
+  /** zarr requires a UNIFORM grid (edge chunks trail): reject a chunk
+    * that is not exactly its cell of `meta`'s grid (e.g. raw decimate
+    * output) instead of misplacing voxels — callers rechunk first. The
+    * one grid check of every zarr writer, sharded included.
+    */
+  private[volume] def requireOnGrid(c: Chunk, meta: VolumeMeta): Unit =
+    require(
+      meta.cell(c.cz, c.cy, c.cx) == ((c.z0, c.y0, c.x0, c.nz, c.ny, c.nx)),
+      s"chunk (${c.cz},${c.cy},${c.cx}) at (${c.z0},${c.y0},${c.x0}) size " +
+        s"(${c.nz},${c.ny},${c.nx}) is not on the uniform (${meta.chunkZ},${meta.chunkY},${meta.chunkX}) " +
+        "grid — rechunk before writing zarr")
 
   /** Create an array directory with its `.zarray` only (no chunks yet) —
     * the driver-side step of the DSv2 write path; executors then land
@@ -814,7 +819,8 @@ object ZarrStore {
   /** Read a zarr v2 array directory as a ChunkVolume. The full chunk grid
     * is planned from `.zarray` alone (no directory listing); absent chunk
     * files decode as fill_value per the spec; a chunk filter on the
-    * geometry columns prunes before any file is read ([[readArray]]).
+    * geometry columns prunes before any file is read, and a point lookup
+    * reads its one chunk file on the driver ([[readArray]]).
     */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
@@ -918,9 +924,11 @@ object ZarrStore {
     * [[VolumeMeta.cell]]) as plain columns, then `data` from a
     * deterministic decode UDF in a projection over them. Catalyst pushes a
     * Column predicate on the geometry below that projection, so a pruned
-    * read ([[ChunkVolume.pointLookup]], [[ChunkVolume.cropVoxels]]) reads
-    * and decodes only the cells it keeps; a full scan decodes every cell
-    * once.
+    * read ([[ChunkVolume.cropVoxels]]) reads and decodes only the cells it
+    * keeps; a full scan decodes every cell once. The UDF's body is the
+    * one cell loader `load`, which the returned volume also carries, so
+    * its [[ChunkVolume.pointLookup]] reads its one chunk file on the
+    * driver and runs no job.
     */
   private[volume] def readArray(spark: SparkSession, dir: String, zm: ZarrMeta, vm: VolumeMeta,
       key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume = {
@@ -931,9 +939,9 @@ object ZarrStore {
       val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
       (cz, cy, cx, z0, y0, x0, nz, ny, nx)
     }.toDF("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
-    val decode = udf { (cz: Int, cy: Int, cx: Int) =>
-      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx).data
-    }
-    ChunkVolume(cells.withColumn("data", decode($"cz", $"cy", $"cx")).as[Chunk], vm)
+    val load = (cz: Int, cy: Int, cx: Int) =>
+      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
+    val decode = udf((cz: Int, cy: Int, cx: Int) => load(cz, cy, cx).data)
+    ChunkVolume.ofCells(cells.withColumn("data", decode($"cz", $"cy", $"cx")).as[Chunk], vm, load)
   }
 }

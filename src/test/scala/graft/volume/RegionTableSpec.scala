@@ -35,6 +35,16 @@ class RegionTableSpec extends AnyFunSuite with SparkSpec {
     assert(RegionTable.lookupById(df, "999") === "Unknown region ID: 999")
   }
 
+  test("an all-digit id past Long range names no region, in the lookup and the REPL") {
+    val df = RegionTable.readCsv(spark, csvPath)
+    val huge = "99999999999999999999"
+    assert(RegionTable.lookupById(df, huge) === s"Unknown region ID: $huge")
+    val out = Seq.newBuilder[String]
+    LookupRepl.loop(df, Iterator(huge, "15857"), out += _)
+    assert(out.result() === Seq("Loaded 5 regions.", LookupRepl.Prompt, s"Unknown region ID: $huge",
+      LookupRepl.Prompt, "Region 15857: secondary prosencephalon (SP), level 2", "Bye."))
+  }
+
   test("LookupRepl: golden transcript — load, prompt, hit, invalid, miss, quit") {
     val df = RegionTable.readCsv(spark, csvPath)
     val out = Seq.newBuilder[String]

@@ -87,6 +87,19 @@ class Zarr3ShardSpec extends AnyFunSuite with SparkSpec {
       Zarr3Store.writeSharded(vol, tmp(), innerShape = (4, 2, 2)))
   }
 
+  test("writeSharded rejects an off-grid chunk (a raw decimate level) by name") {
+    // 15 planes on 5-plane chunks: decimated chunk 1 holds planes 3..4
+    // and chunk 2 planes 5..7, but the 8-plane level's (3,3,2) grid has
+    // cells 3..5 and 6..7
+    val vox = spark.range(15 * 9 * 8).select(
+      expr("id div 72").as("z"), expr("(id div 8) % 9").as("y"), expr("id % 8").as("x"),
+      (col("id") % 251).as("label"))
+    val level = ChunkVolume.fromVoxels(vox, 15, 9, 8, 5, 6, 4).decimate()
+    val e = intercept[Exception](Zarr3Store.writeSharded(level, tmp(), innerShape = (3, 3, 2)))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("is not on the uniform (3,3,2) grid")), e.toString)
+  }
+
   test("point lookup: one shard opened, index + one inner chunk read, body untouched") {
     val p = tmp()
     Zarr3Store.writeSharded(vol, p, innerShape = (3, 2, 2), ZstdCodec(3))

@@ -2,14 +2,20 @@ package graft.volume
 
 import graft.SparkSpec
 import graft.plans.PlanAudit
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The planned-grid zarr reader prunes before it decodes: a chunk
-  * predicate on the geometry columns runs below the decode, so a point
-  * lookup or a one-chunk crop reads only the chunk file that owns it; and
-  * the grid plan itself moves no data through a shuffle.
+  * predicate on the geometry columns runs below the decode, so a
+  * one-chunk crop reads only the chunk file that owns it; a point lookup
+  * on the volume a zarr reader returns reads its one chunk on the driver
+  * and runs no Spark job; and the grid plan itself moves no data through
+  * a shuffle.
   */
 class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
 
@@ -52,26 +58,67 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     Layout("zarr v3", (v, p) => Zarr3Store.write(v, p, ZarrStore.ZstdCodec(3)),
       Zarr3Store.read(spark, _), (z, y, x) => s"c/$z/$y/$x", _.startsWith("c/")))
 
+  // (4,3,3) shards of (2,3,3) inner chunks: 8 shard files of 2 cells, so
+  // grid cell (cz, cy, cx) lives in shard (cz / 2, cy, cx)
+  private val shardedV3 = Layout("sharded zarr v3",
+    (v, p) => Zarr3Store.writeSharded(v.rechunk(4, 3, 3), p, (2, 3, 3)),
+    Zarr3Store.read(spark, _), (z, y, x) => s"c/${z / 2}/$y/$x", _.startsWith("c/"))
+
+  /** Overwrite every chunk file of `store` but the one holding grid cell
+    * (cz, cy, cx) with bytes no codec decodes; `n` files are expected.
+    */
+  private def garbleAllBut(store: String, l: Layout, cz: Int, cy: Int, cx: Int, n: Int): Unit = {
+    val owner = Paths.get(store).resolve(l.key(cz, cy, cx))
+    val others = chunkFiles(store, l.isChunk).filterNot(_ == owner)
+    assert(others.size === n, s"${l.name}: files besides $owner")
+    others.foreach(Files.write(_, Array.tabulate[Byte](257)(i => (i * 37 + 11).toByte)))
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
   test("pointLookup and a one-chunk cropVoxels read only the owning chunk file (v2 and plain v3)") {
-    val garbage = Array.tabulate[Byte](257)(i => (i * 37 + 11).toByte)
     for (l <- layouts; (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
       val store = tmp("arr")
       l.write(vol, store)
-      val owner = Paths.get(store).resolve(l.key(cz, cy, cx))
-      val others = chunkFiles(store, l.isChunk).filterNot(_ == owner)
-      assert(others.size === 15, s"${l.name}: chunk files besides $owner")
-      others.foreach(Files.write(_, garbage))
+      garbleAllBut(store, l, cz, cy, cx, 15)
 
       val back = l.read(store)
       val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
-      assert(back.pointLookup(z, y, x) === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
+      val (got, jobs) = jobsDuring(back.pointLookup(z, y, x))
+      assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
+      assert(jobs === 0, s"${l.name} lookup ($z,$y,$x) ran $jobs jobs")
 
       val (z0, y0, x0) = (cz * 2L, cy * 3L, cx * 3L)
-      val got = back.cropVoxels(z0, z0 + 2, y0 + 1, y0 + 3, x0, x0 + 2).collect()
+      val crop = back.cropVoxels(z0, z0 + 2, y0 + 1, y0 + 3, x0, x0 + 2).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
       val want = for (z <- z0 until z0 + 2; y <- y0 + 1 until y0 + 3; x <- x0 until x0 + 2)
         yield (z, y, x, label(z, y, x))
-      assert(got === want, s"${l.name} crop of chunk ($cz,$cy,$cx)")
+      assert(crop === want, s"${l.name} crop of chunk ($cz,$cy,$cx)")
+    }
+  }
+
+  test("pointLookup on a sharded v3 read reads only the owning shard, with no Spark job") {
+    for ((cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
+      val store = tmp("arr")
+      shardedV3.write(vol, store)
+      garbleAllBut(store, shardedV3, cz, cy, cx, 7)
+      val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
+      val (got, jobs) = jobsDuring(shardedV3.read(store).pointLookup(z, y, x))
+      assert(got === Some(label(z, y, x)) && jobs === 0, s"lookup ($z,$y,$x): $got after $jobs jobs")
     }
   }
 
@@ -87,6 +134,49 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     for ((name, back) <- reads) {
       assert(PlanAudit.shuffleExchanges(back.chunks.toDF()) === 0, s"$name chunks")
       assert(PlanAudit.shuffleExchanges(back.cropVoxels(5, 6, 4, 5, 3, 4)) === 0, s"$name point")
+    }
+  }
+
+  test("pointLookup off the array is None and runs no Spark job") {
+    for (l <- layouts :+ shardedV3) {
+      val store = tmp("arr")
+      l.write(vol, store)
+      val back = l.read(store)
+      for ((z, y, x) <- Seq((-1L, 0L, 0L), (0L, -1L, 0L), (0L, 0L, -1L),
+          (dz, 0L, 0L), (0L, dy, 0L), (0L, 0L, dx), (Long.MaxValue, 0L, 0L))) {
+        val (got, jobs) = jobsDuring(back.pointLookup(z, y, x))
+        assert(got === None && jobs === 0, s"${l.name} ($z,$y,$x): $got after $jobs jobs")
+      }
+    }
+  }
+
+  test("pointLookup of an absent chunk or shard file returns fill_value, as the Spark path does") {
+    for (l <- layouts :+ shardedV3) {
+      val store = tmp("arr")
+      l.write(vol, store)
+      val doc = Seq(".zarray", "zarr.json").map(Paths.get(store).resolve(_)).find(Files.exists(_)).get
+      val body = new String(Files.readAllBytes(doc), UTF_8)
+      assert(body.contains("\"fill_value\": 0"), s"${l.name}: $doc")
+      Files.write(doc, body.replace("\"fill_value\": 0", "\"fill_value\": 7").getBytes(UTF_8))
+      Files.delete(Paths.get(store).resolve(l.key(2, 1, 0)))
+      val back = l.read(store)
+      val (got, jobs) = jobsDuring(back.pointLookup(5, 4, 1))
+      assert(got === Some(7L) && jobs === 0, s"${l.name}: $got after $jobs jobs")
+      assert(back.copy(chunks = back.chunks).pointLookup(5, 4, 1) === Some(7L), s"${l.name} on Spark")
+    }
+  }
+
+  test("a volume derived from a zarr read looks up on Spark: a filter and an upscale") {
+    for (l <- layouts :+ shardedV3) {
+      val store = tmp("arr")
+      l.write(vol, store)
+      val back = l.read(store)
+      val (z, y, x) = (3L, 4L, 2L) // grid cell (1, 1, 0)
+      val owner = col("cz") === 1 && col("cy") === 1 && col("cx") === 0
+      val (dropped, filterJobs) = jobsDuring(back.copy(chunks = back.chunks.filter(!owner)).pointLookup(z, y, x))
+      assert(dropped === None && filterJobs > 0, s"${l.name}: filtered lookup $dropped after $filterJobs jobs")
+      val (up, upJobs) = jobsDuring(back.upscale(2).pointLookup(2 * z + 1, 2 * y, 2 * x + 1))
+      assert(up === Some(label(z, y, x)) && upJobs > 0, s"${l.name}: upscaled lookup $up after $upJobs jobs")
     }
   }
 }
