@@ -44,8 +44,6 @@ object LookupRepl {
       val regions =
         if (argv(0).endsWith(".csv")) RegionTable.readCsv(spark, argv(0))
         else spark.read.parquet(argv(0))
-      // the 2,692-row dim table answers interactively from driver memory
-      regions.cache().count()
       val stdin = Iterator.continually(scala.io.StdIn.readLine()).takeWhile(_ != null)
       loop(regions, stdin, println(_))
     } finally spark.stop()

@@ -2,13 +2,11 @@ package graft.volume
 
 import graft.SparkSpec
 import graft.plans.PlanAudit
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.TestListenerBus.jobsDuring
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The planned-grid zarr reader prunes before it decodes: a chunk
   * predicate on the geometry columns runs below the decode, so a
@@ -74,21 +72,7 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     others.foreach(Files.write(_, Array.tabulate[Byte](257)(i => (i * 37 + 11).toByte)))
   }
 
-  /** `body`'s result and the Spark jobs started while it ran. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    TestListenerBus.drain(sc)
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(counter)
-    try {
-      val out = body
-      TestListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(counter)
-  }
+  private def sc = spark.sparkContext
 
   test("pointLookup and a one-chunk cropVoxels read only the owning chunk file (v2 and plain v3)") {
     for (l <- layouts; (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
@@ -98,7 +82,7 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
 
       val back = l.read(store)
       val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
-      val (got, jobs) = jobsDuring(back.pointLookup(z, y, x))
+      val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
       assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
       assert(jobs === 0, s"${l.name} lookup ($z,$y,$x) ran $jobs jobs")
 
@@ -117,7 +101,7 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       shardedV3.write(vol, store)
       garbleAllBut(store, shardedV3, cz, cy, cx, 7)
       val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
-      val (got, jobs) = jobsDuring(shardedV3.read(store).pointLookup(z, y, x))
+      val (got, jobs) = jobsDuring(sc)(shardedV3.read(store).pointLookup(z, y, x))
       assert(got === Some(label(z, y, x)) && jobs === 0, s"lookup ($z,$y,$x): $got after $jobs jobs")
     }
   }
@@ -144,7 +128,7 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       val back = l.read(store)
       for ((z, y, x) <- Seq((-1L, 0L, 0L), (0L, -1L, 0L), (0L, 0L, -1L),
           (dz, 0L, 0L), (0L, dy, 0L), (0L, 0L, dx), (Long.MaxValue, 0L, 0L))) {
-        val (got, jobs) = jobsDuring(back.pointLookup(z, y, x))
+        val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
         assert(got === None && jobs === 0, s"${l.name} ($z,$y,$x): $got after $jobs jobs")
       }
     }
@@ -160,7 +144,7 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       Files.write(doc, body.replace("\"fill_value\": 0", "\"fill_value\": 7").getBytes(UTF_8))
       Files.delete(Paths.get(store).resolve(l.key(2, 1, 0)))
       val back = l.read(store)
-      val (got, jobs) = jobsDuring(back.pointLookup(5, 4, 1))
+      val (got, jobs) = jobsDuring(sc)(back.pointLookup(5, 4, 1))
       assert(got === Some(7L) && jobs === 0, s"${l.name}: $got after $jobs jobs")
       assert(back.copy(chunks = back.chunks).pointLookup(5, 4, 1) === Some(7L), s"${l.name} on Spark")
     }
@@ -173,9 +157,9 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       val back = l.read(store)
       val (z, y, x) = (3L, 4L, 2L) // grid cell (1, 1, 0)
       val owner = col("cz") === 1 && col("cy") === 1 && col("cx") === 0
-      val (dropped, filterJobs) = jobsDuring(back.copy(chunks = back.chunks.filter(!owner)).pointLookup(z, y, x))
+      val (dropped, filterJobs) = jobsDuring(sc)(back.copy(chunks = back.chunks.filter(!owner)).pointLookup(z, y, x))
       assert(dropped === None && filterJobs > 0, s"${l.name}: filtered lookup $dropped after $filterJobs jobs")
-      val (up, upJobs) = jobsDuring(back.upscale(2).pointLookup(2 * z + 1, 2 * y, 2 * x + 1))
+      val (up, upJobs) = jobsDuring(sc)(back.upscale(2).pointLookup(2 * z + 1, 2 * y, 2 * x + 1))
       assert(up === Some(label(z, y, x)) && upJobs > 0, s"${l.name}: upscaled lookup $up after $upJobs jobs")
     }
   }
