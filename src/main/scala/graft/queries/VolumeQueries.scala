@@ -1487,15 +1487,16 @@ object VolumeQueries {
         SELECT z, y, x, label FROM vox ORDER BY z, y, x
       """),
     ),
-    // P4 ROI on the sharded store: the box plan touches only the
-    // intersecting shards, and each task positioned-reads its shard's
-    // index plus only the inner chunks the box covers — never a shard
-    // body, never a scan. Evidence (4 of 8 shards, 12 of 64 inner
-    // chunks, bytes ≪ files) is shape-pinned (shardedBoxShape).
+    // P4 ROI on the sharded store: a crop of the planned inner grid,
+    // whose geometry filter runs below the decode, so only the inner
+    // cells the box touches are loaded (their shard's index plus one
+    // blob each) — never a shard body, never a scan. Evidence (4 of 8
+    // shards, 12 of 64 inner cells kept, filter below the decode) is
+    // shape-pinned (shardedBoxShape).
     Q(
       "vol_zarr3_sharded_box",
-      (s, _) => graft.volume.Zarr3Store.readBoxSharded(
-        s, zarr3ShardedStore(s), 2, 7, 4, 11, 5, 14)
+      (s, _) => graft.volume.Zarr3Store.read(s, zarr3ShardedStore(s))
+        .cropVoxels(2, 7, 4, 11, 5, 14)
         .orderBy("z", "y", "x"),
       Some(s"""$voxCte
         SELECT z, y, x, label FROM vox

@@ -384,7 +384,18 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
     intersecting(z0, z1, y0, y1, x0, x1)
-      .flatMap(voxelsInBox(_, z0, z1, y0, y1, x0, x1, bpp, unsigned))
+      .flatMap { c =>
+        val bz = math.max(z0, c.z0); val ez = math.min(z1, c.z0 + c.nz)
+        val by = math.max(y0, c.y0); val ey = math.min(y1, c.y0 + c.ny)
+        val bx = math.max(x0, c.x0); val ex = math.min(x1, c.x0 + c.nx)
+        val (nz, ny, nx) = ((ez - bz).toInt, (ey - by).toInt, (ex - bx).toInt)
+        val box = ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp,
+          (bz - c.z0).toInt, (by - c.y0).toInt, (bx - c.x0).toInt, nz, ny, nx)
+        Iterator.range(0, nz * ny * nx).map { i =>
+          val z = i / (ny * nx); val rem = i % (ny * nx)
+          (bz + z, by + rem / nx, bx + rem % nx, ChunkKernels.decodeLong(box, i, bpp, unsigned))
+        }
+      }
       .toDF("z", "y", "x", "label")
   }
 
@@ -828,25 +839,6 @@ object ChunkVolume {
     val meta = readSidecar(path)
     import spark.implicits._
     ChunkVolume(spark.read.parquet(path).as[Chunk], meta)
-  }
-
-  /** The (z, y, x, label) voxels of chunk `c` inside the box
-    * [z0,z1)×[y0,y1)×[x0,x1), cut out with one extractBox — the kernel
-    * of [[ChunkVolume.cropVoxels]] and the sharded box read. `c` must
-    * intersect the box.
-    */
-  private[volume] def voxelsInBox(c: Chunk, z0: Long, z1: Long, y0: Long, y1: Long,
-      x0: Long, x1: Long, bpp: Int, unsigned: Boolean): Iterator[(Long, Long, Long, Long)] = {
-    val bz = math.max(z0, c.z0); val ez = math.min(z1, c.z0 + c.nz)
-    val by = math.max(y0, c.y0); val ey = math.min(y1, c.y0 + c.ny)
-    val bx = math.max(x0, c.x0); val ex = math.min(x1, c.x0 + c.nx)
-    val (nz, ny, nx) = ((ez - bz).toInt, (ey - by).toInt, (ex - bx).toInt)
-    val box = ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp,
-      (bz - c.z0).toInt, (by - c.y0).toInt, (bx - c.x0).toInt, nz, ny, nx)
-    Iterator.range(0, nz * ny * nx).map { i =>
-      val z = i / (ny * nx); val rem = i % (ny * nx)
-      (bz + z, by + rem / nx, bx + rem % nx, ChunkKernels.decodeLong(box, i, bpp, unsigned))
-    }
   }
 
   /** The element of chunk `c` at global voxel (z, y, x), which `c` must hold. */

@@ -46,7 +46,8 @@ object RegionTable {
     * `spark.sql.autoBroadcastJoinThreshold` (`-1` turns it off). Any other
     * table runs a filter + collect job per call. Both give one answer:
     * the first row in collect order for a duplicated id, no match for a
-    * null `Region`.
+    * null `Region`, and `null` in the line for an empty name, abbreviation
+    * or `Level` cell.
     */
   def lookupById(regions: DataFrame, input: String): String =
     if (!input.forall(_.isDigit) || input.isEmpty) s"Invalid input: $input"
@@ -63,7 +64,7 @@ object RegionTable {
               .headOption
         }
         named
-          .map(r => s"Region $id: ${r.getString(0)} (${r.getString(1)}), level ${r.getInt(2)}")
+          .map(r => s"Region $id: ${r.getString(0)} (${r.getString(1)}), level ${r.get(2)}")
           .getOrElse(s"Unknown region ID: $id")
     }
 

@@ -2,7 +2,7 @@ package graft.volume
 
 import graft.io.{Fio, FioConf}
 import graft.volume.ZarrStore.{BloscCodec, Codec, GzipCodec, Raw, ZarrMeta, ZstdCodec, num}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -20,9 +20,11 @@ import org.json4s.jackson.JsonMethods
   * codecs. Supported codecs: `bytes` (both endians) alone, or followed by
   * ONE of `blosc` (all reference cnames/shuffles), `zstd`, `gzip`
   * (RFC-1952 — distinct from v2's RFC-1950 `zlib`). `sharding_indexed`
-  * is fully supported (writeSharded/readSharded/pointLookupSharded/
-  * readBoxSharded below — one file per shard with the spec's crc32c'd
-  * uint64-LE index, read and verified in one place, [[ShardFile]]);
+  * is fully supported: [[writeSharded]] lands one file per shard with
+  * the spec's crc32c'd uint64-LE index, and [[read]] plans a sharded
+  * array on its inner grid through the same planned-grid reader, each
+  * cell loaded by positioned reads of its shard's index and blob
+  * ([[ShardFile]] reads and verifies the index in one place);
   * [[parseZarrJson]], the unsharded parser the appender checks an
   * existing document with, refuses sharded documents by name.
   */
@@ -336,16 +338,19 @@ object Zarr3Store {
   /** Read a zarr v3 array directory as a ChunkVolume: grid planned from
     * `zarr.json` alone, absent chunk files decode as fill_value, chunk
     * keys resolved through the `default` encoding (`c` prefix + the
-    * configured separator).
+    * configured separator). A sharded array reads on its INNER grid —
+    * downstream operators see the fine granularity, exactly as if the
+    * array were unsharded — with [[readInnerCell]] as the cell loader, so
+    * a crop reads only the shard indexes and inner blobs it keeps.
     */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val dir = Fio.qualify(path)
     readDoc(dir) match {
-      case (zm, Some(sh)) => readSharded(spark, dir, zm, sh)
+      case (zm, Some(sh)) => ZarrStore.readArray(spark, innerVm(zm, sh), readInnerCell(dir, zm, sh, _, _, _)._1)
       case (zm, None) =>
-        val sep = zm.dimSeparator
-        ZarrStore.readArray(spark, dir, zm, ZarrStore.volumeMeta(zm), chunkKey(sep, _, _, _))
+        val vm = ZarrStore.volumeMeta(zm)
+        ZarrStore.readArray(spark, vm, ZarrStore.chunkFiles(dir, zm, vm, chunkKey(zm.dimSeparator, _, _, _)))
     }
   }
 
@@ -356,10 +361,11 @@ object Zarr3Store {
   // inner cells, optionally crc32c-checksummed, at the start or end of
   // the file. This is how a v3 store holds 100 TB on object storage
   // without billions of keys: object count scales with SHARDS while read
-  // granularity stays one INNER chunk — a point lookup GETs the index
-  // range and one inner-chunk range, never the shard body (readInnerCell
-  // below does exactly those positioned reads for pointLookupSharded and
-  // a sharded read's pointLookup, and the gate pins it).
+  // granularity stays one INNER chunk — loading a cell GETs the index
+  // range and one inner-chunk range, never the shard body. readInnerCell
+  // below does exactly those positioned reads for every cell a sharded
+  // read loads (scan, crop or pointLookup) and for pointLookupSharded,
+  // whose evidence the point gate pins.
 
   /** Sentinel for an absent inner chunk: offset = nbytes = 2^64−1. */
   private val Missing = -1L
@@ -456,20 +462,17 @@ object Zarr3Store {
     out
   }
 
-  /** One shard file opened for cell reads, over `readAt(offset, length)`
-    * of its whole-file bytes or of a positioned [[graft.io.FioRandom]]:
+  /** One shard file opened for cell reads by positioned reads of `raf`:
     * the index is read from its declared location and its crc32c
     * verified when declared, and every cell's blob is bounds-checked
     * against the file before it is read.
     */
-  private final class ShardFile(
-      name: String, size: Long, readAt: (Long, Int) => Array[Byte],
-      zm: ZarrMeta, sh: ShardingMeta) {
+  private final class ShardFile(raf: graft.io.FioRandom, zm: ZarrMeta, sh: ShardingMeta) {
     val indexLen: Int = sh.indexLen(zm.chunks)
-    require(size >= indexLen, s"shard $name: $size bytes is shorter than its $indexLen-byte index")
+    require(raf.size >= indexLen, s"shard ${raf.path}: ${raf.size} bytes is shorter than its $indexLen-byte index")
     private val entries: Array[Long] = {
       val nCells = sh.innerGridPerShard(zm.chunks).product
-      val idx = readAt(if (sh.indexAtEnd) size - indexLen else 0L, indexLen)
+      val idx = raf.readAt(if (sh.indexAtEnd) raf.size - indexLen else 0L, indexLen)
       if (sh.indexCrc32c) {
         val want = java.nio.ByteBuffer.wrap(idx, nCells * 16, 4)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
@@ -477,37 +480,24 @@ object Zarr3Store {
         crc.update(idx, 0, nCells * 16)
         val got = crc.getValue.toInt
         require(got == want,
-          f"shard $name: index crc32c mismatch (stored 0x$want%08x, computed 0x$got%08x) — " +
+          f"shard ${raf.path}: index crc32c mismatch (stored 0x$want%08x, computed 0x$got%08x) — " +
             "refusing to address chunks off a corrupt index")
       }
       val buf = java.nio.ByteBuffer.wrap(idx, 0, nCells * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       Array.fill(nCells * 2)(buf.getLong)
     }
 
-    /** Stored bytes of inner `cell` (C-order in the shard); 0 if missing. */
-    def blobLen(cell: Int): Long = {
+    /** Inner `cell`'s blob (C-order in the shard); `None` = missing = all fill_value. */
+    def blob(cell: Int): Option[Array[Byte]] = {
       val off = entries(cell * 2); val len = entries(cell * 2 + 1)
-      if (off == Missing) 0L
+      if (off == Missing) None
       else {
-        require(off >= 0 && len >= 0 && len <= Int.MaxValue && off + len <= size,
-          s"shard $name: inner cell $cell addresses [$off, ${off + len}) outside the file")
-        len
+        require(off >= 0 && len >= 0 && len <= Int.MaxValue && off + len <= raf.size,
+          s"shard ${raf.path}: inner cell $cell addresses [$off, ${off + len}) outside the file")
+        Some(raf.readAt(off, len.toInt))
       }
     }
-
-    /** Inner `cell`'s blob; `None` = missing = all fill_value. */
-    def blob(cell: Int): Option[Array[Byte]] = {
-      val len = blobLen(cell)
-      if (entries(cell * 2) == Missing) None else Some(readAt(entries(cell * 2), len.toInt))
-    }
   }
-
-  private def shardOfBytes(name: String, b: Array[Byte], zm: ZarrMeta, sh: ShardingMeta) =
-    new ShardFile(name, b.length.toLong, (off, len) =>
-      java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + len), zm, sh)
-
-  private def shardOfFile(raf: graft.io.FioRandom, zm: ZarrMeta, sh: ShardingMeta) =
-    new ShardFile(raf.path, raf.size, raf.readAt, zm, sh)
 
   /** Inner cell (gcz, gcy, gcx) of a sharded array, read with positioned
     * reads of its one shard file (the index, then the cell's blob) and
@@ -522,36 +512,13 @@ object Zarr3Store {
     val raf = Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, gcz / nIz, gcy / nIy, gcx / nIx)))
     try {
       val read = raf.map { r =>
-        val shard = shardOfFile(r, zm, sh)
+        val shard = new ShardFile(r, zm, sh)
         val blob = shard.blob(cell)
         (blob, (shard.indexLen + blob.map(_.length.toLong).getOrElse(0L), r.size))
       }
       (ZarrStore.decodeChunk(read.flatMap(_._1), innerMeta(zm, sh), innerVm(zm, sh), gcz, gcy, gcx),
         read.map(_._2))
     } finally raf.foreach(_.close())
-  }
-
-  /** The inner cells the box [z0,z1)×[y0,y1)×[x0,x1) touches, grouped by
-    * shard (sorted shard-grid coordinates), each cell as its global
-    * inner-grid (z, y, x) and its C-order index in the shard. The box is
-    * clamped to the array [0, shape) first: a box reaching below 0 or
-    * past the shape plans no shard outside the grid, and a box wholly
-    * outside plans none.
-    */
-  private def boxCells(zm: ZarrMeta, sh: ShardingMeta,
-      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long)
-      : Seq[((Int, Int, Int), Seq[(Int, Int, Int, Int)])] = {
-    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    def axis(lo: Long, hi: Long, d: Int): Range = {
-      val (a, b) = (math.max(lo, 0L), math.min(hi, zm.shape(d)))
-      val i = sh.innerChunks(d)
-      if (a >= b) Range(0, 0) else (a / i).toInt to ((b - 1) / i).toInt
-    }
-    val cells = for {
-      gcz <- axis(z0, z1, 0); gcy <- axis(y0, y1, 1); gcx <- axis(x0, x1, 2)
-    } yield (gcz, gcy, gcx, ((gcz % nIz) * nIy + gcy % nIy) * nIx + gcx % nIx)
-    cells.groupBy { case (gcz, gcy, gcx, _) => (gcz / nIz, gcy / nIy, gcx / nIx) }
-      .toSeq.sortBy(_._1)
   }
 
   /** Write a ChunkVolume as a SHARDED zarr v3 array: the volume's chunk
@@ -577,38 +544,6 @@ object Zarr3Store {
     val ivm = innerVm(zm, sh)
     ZarrStore.writeArray(vol.chunks, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)),
       chunkKey("/", _, _, _), c => encodeShard(c, zm, sh, ivm))
-  }
-
-  /** Scan a sharded array: one task per shard reads the file once,
-    * verifies the index, and emits its inner cells as engine chunks on
-    * the INNER grid (absent shards/cells decode as fill_value). The
-    * returned volume's chunk grid is the inner grid — downstream
-    * operators see the fine granularity, exactly as if the array were
-    * unsharded. Its cell loader is [[readInnerCell]], so its
-    * [[ChunkVolume.pointLookup]] reads one shard index and one blob on
-    * the driver and runs no job.
-    */
-  private def readSharded(
-      spark: SparkSession, dir: String, zm: ZarrMeta, sh: ShardingMeta)(
-      implicit fc: FioConf): ChunkVolume = {
-    val (izm, ivm) = (innerMeta(zm, sh), innerVm(zm, sh))
-    val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
-    val Seq(_, nscy, nscx) = zm.gridShape
-    val sep = zm.dimSeparator
-    import spark.implicits._
-    val chunks = ZarrStore.gridIndices(spark, zm.gridShape).flatMap { idx =>
-      val (scz, scy, scx) = ZarrStore.cellOf(idx, nscy, nscx)
-      val f = Fio.child(dir, chunkKey(sep, scz, scy, scx))
-      val shard = Fio.readAllIfExists(f).map(shardOfBytes(f, _, zm, sh))
-      Iterator.range(0, nIz * nIy * nIx).flatMap { cell =>
-        val (lz, ly, lx) = ZarrStore.cellOf(cell, nIy, nIx)
-        val (gcz, gcy, gcx) = (scz * nIz + lz, scy * nIy + ly, scx * nIx + lx)
-        if (gcz >= ivm.ncz || gcy >= ivm.ncy || gcx >= ivm.ncx) Iterator.empty
-        else Iterator.single(
-          ZarrStore.decodeChunk(shard.flatMap(_.blob(cell)), izm, ivm, gcz, gcy, gcx))
-      }
-    }
-    ChunkVolume.ofCells(chunks, ivm, readInnerCell(dir, zm, sh, _, _, _)._1)
   }
 
   /** Compact an UNSHARDED zarr v3 array into a sharded one — the
@@ -650,72 +585,6 @@ object Zarr3Store {
     */
   final case class ShardProbe(
       label: Long, shardsOpened: Int, bytesRead: Long, fileBytes: Long)
-
-  /** ROI box read against a sharded store: the P4 contract generalized —
-    * tasks cover only the INTERSECTING shards, and each task positioned-
-    * reads its shard's index plus only the inner chunks the box touches
-    * (never the shard body). Returns (z, y, x, label) voxels of
-    * [z0,z1)×[y0,y1)×[x0,x1) ∩ the array; [[boxProbeSharded]] carries the
-    * matching evidence for the shape pin.
-    */
-  def readBoxSharded(
-      spark: SparkSession, path: String,
-      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): DataFrame = {
-    require(z0 < z1 && y0 < y1 && x0 < x1, s"empty ROI [$z0,$z1)×[$y0,$y1)×[$x0,$x1)")
-    implicit val fc: FioConf = FioConf.of(spark)
-    val (dir, zm, sh) = openSharded(path)
-    val (izm, ivm) = (innerMeta(zm, sh), innerVm(zm, sh))
-    val sep = zm.dimSeparator
-    val plan = boxCells(zm, sh, z0, z1, y0, y1, x0, x1)
-    import spark.implicits._
-    spark.createDataset(plan)
-      .repartition(math.max(1, math.min(plan.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { case ((scz, scy, scx), cells) =>
-        val raf = Fio.openRandomIfExists(Fio.child(dir, chunkKey(sep, scz, scy, scx)))
-        try {
-          val shard = raf.map(shardOfFile(_, zm, sh))
-          // strict over `cells`: every read completes before the file closes
-          cells.flatMap { case (gcz, gcy, gcx, cell) =>
-            val c = ZarrStore.decodeChunk(shard.flatMap(_.blob(cell)), izm, ivm, gcz, gcy, gcx)
-            ChunkVolume.voxelsInBox(c, z0, z1, y0, y1, x0, x1, zm.bpp, ivm.isUnsigned)
-          }
-        } finally raf.foreach(_.close())
-      }
-      .toDF("z", "y", "x", "label")
-  }
-
-  /** Evidence for [[readBoxSharded]]'s access pattern: how many shards
-    * the box plan touches (vs the store total), how many inner chunks it
-    * reads (vs the store total), and the bytes those positioned reads
-    * cover vs the touched shard files' sizes.
-    */
-  final case class ShardBoxProbe(
-      shardsPlanned: Int, shardsTotal: Int,
-      innerChunksRead: Int, innerChunksTotal: Int,
-      bytesRead: Long, fileBytes: Long)
-
-  def boxProbeSharded(
-      path: String,
-      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long)(
-      implicit fc: FioConf): ShardBoxProbe = {
-    val (dir, zm, sh) = openSharded(path)
-    val plan = boxCells(zm, sh, z0, z1, y0, y1, x0, x1)
-    var innerRead = 0
-    var bytesRead = 0L
-    var fileBytes = 0L
-    for (((scz, scy, scx), cells) <- plan)
-      Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, scz, scy, scx))).foreach { raf =>
-        try {
-          val shard = shardOfFile(raf, zm, sh)
-          fileBytes += raf.size
-          bytesRead += shard.indexLen
-          cells.foreach { case (_, _, _, cell) => innerRead += 1; bytesRead += shard.blobLen(cell) }
-        } finally raf.close()
-      }
-    val ivm = innerVm(zm, sh)
-    ShardBoxProbe(plan.size, zm.gridShape.product,
-      innerRead, ivm.ncz * ivm.ncy * ivm.ncx, bytesRead, fileBytes)
-  }
 
   def pointLookupSharded(path: String, z: Long, y: Long, x: Long)(
       implicit fc: FioConf): ShardProbe = {

@@ -826,15 +826,16 @@ object ZarrStore {
     implicit val fc: FioConf = FioConf.of(spark)
     val (zm, vm) = readMeta(path)
     val sep = zm.dimSeparator
-    readArray(spark, Fio.qualify(path), zm, vm, chunkKey(sep, _, _, _))
+    readArray(spark, vm, chunkFiles(Fio.qualify(path), zm, vm, chunkKey(sep, _, _, _)))
   }
 
   // ------------------------------------------------------------------
   // The zarr layout layer, shared by this store and the v3 dialect
   // ([[Zarr3Store]], plain and sharded). A dialect supplies only its
-  // metadata documents, its chunk key and its per-chunk encoder; staging,
-  // executor-side chunk landing, the append document check and the
-  // planned-grid reader are written once, here.
+  // metadata documents, its chunk key, its per-chunk encoder and, when
+  // sharded, its cell loader; staging, executor-side chunk landing, the
+  // append document check and the planned-grid reader are written once,
+  // here.
 
   /** v2 chunk key: `z<sep>y<sep>x` in chunk-grid coordinates. */
   private[graft] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
@@ -904,43 +905,36 @@ object ZarrStore {
       it.foreach(c => Fio.writeBytes(Fio.child(dir, key(c.cz, c.cy, c.cx)), encode(c)))
     }
 
-  /** A chunk grid planned from metadata alone (no listing) as C-order
-    * linear cell indices: one `range` cut into min(cells,
-    * defaultParallelism) contiguous slices, one task each, with no shuffle.
+  /** The cell loader of an unsharded array: grid cell (cz, cy, cx) is
+    * the chunk file at its `key`, an absent file decoding as fill_value.
     */
-  private[volume] def gridIndices(spark: SparkSession, grid: Seq[Int]): Dataset[Long] = {
-    import spark.implicits._
-    val n = grid.map(_.toLong).product
-    val slices = math.max(1L, math.min(n, spark.sparkContext.defaultParallelism.toLong))
-    spark.range(0, n, 1, slices.toInt).as[Long]
-  }
+  private[volume] def chunkFiles(dir: String, zm: ZarrMeta, vm: VolumeMeta,
+      key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume.CellLoader =
+    (cz, cy, cx) => decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
 
-  /** C-order linear cell index → (cz, cy, cx) on a grid of ncy×ncx cells per plane. */
-  private[volume] def cellOf(idx: Long, ncy: Int, ncx: Int): (Int, Int, Int) =
-    ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
-
-  /** Read every chunk of the planned grid from its `key`; absent files
-    * decode as fill_value. Two steps: each cell's geometry (`cellOf` +
-    * [[VolumeMeta.cell]]) as plain columns, then `data` from a
-    * deterministic decode UDF in a projection over them. Catalyst pushes a
-    * Column predicate on the geometry below that projection, so a pruned
-    * read ([[ChunkVolume.cropVoxels]]) reads and decodes only the cells it
-    * keeps; a full scan decodes every cell once. The UDF's body is the
-    * one cell loader `load`, which the returned volume also carries, so
-    * its [[ChunkVolume.pointLookup]] reads its one chunk file on the
-    * driver and runs no job.
+  /** Read every cell of `vm`'s grid, planned from metadata alone (no
+    * listing), through `load`. Two steps: each cell's geometry as plain
+    * columns, from C-order linear cell indices over one `range` cut into
+    * min(cells, defaultParallelism) contiguous slices, one task each, with
+    * no shuffle; then `data` from a deterministic decode UDF in a
+    * projection over them. Catalyst pushes a Column predicate on the
+    * geometry below that projection, so a pruned read
+    * ([[ChunkVolume.cropVoxels]]) loads only the cells it keeps; a full
+    * scan loads every cell once. The returned volume carries `load` too,
+    * so its [[ChunkVolume.pointLookup]] loads its one cell on the driver
+    * and runs no job.
     */
-  private[volume] def readArray(spark: SparkSession, dir: String, zm: ZarrMeta, vm: VolumeMeta,
-      key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume = {
+  private[volume] def readArray(spark: SparkSession, vm: VolumeMeta,
+      load: ChunkVolume.CellLoader): ChunkVolume = {
     import spark.implicits._
     val (ncy, ncx) = (vm.ncy, vm.ncx)
-    val cells = gridIndices(spark, zm.gridShape).map { idx =>
-      val (cz, cy, cx) = cellOf(idx, ncy, ncx)
+    val n = vm.ncz.toLong * ncy * ncx
+    val slices = math.max(1L, math.min(n, spark.sparkContext.defaultParallelism.toLong))
+    val cells = spark.range(0, n, 1, slices.toInt).as[Long].map { idx =>
+      val (cz, cy, cx) = ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
       val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
       (cz, cy, cx, z0, y0, x0, nz, ny, nx)
     }.toDF("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
-    val load = (cz: Int, cy: Int, cx: Int) =>
-      decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
     val decode = udf((cz: Int, cy: Int, cx: Int) => load(cz, cy, cx).data)
     ChunkVolume.ofCells(cells.withColumn("data", decode($"cz", $"cy", $"cx")).as[Chunk], vm, load)
   }

@@ -160,6 +160,14 @@ class RegionTableSpec extends AnyFunSuite with SparkSpec {
     assert(indexOff(RegionTable.lookupById(RegionTable.readCsv(spark, path), "15857")) === want)
   }
 
+  test("an empty Level cell reads null, on the index and the job path") {
+    val path = csvOf("5,A,alpha,,0", "6,B,beta,2,5")
+    for ((id, want) <- Seq("5" -> "Region 5: alpha (A), level null", "6" -> "Region 6: beta (B), level 2")) {
+      assert(RegionTable.lookupById(RegionTable.readCsv(spark, path), id) === want)
+      assert(indexOff(RegionTable.lookupById(RegionTable.readCsv(spark, path), id)) === want)
+    }
+  }
+
   test("a row with a null Region is ignored") {
     val path = csvOf(",GH,ghost region,4,15566", "15857,SP,secondary prosencephalon,2,15566")
     val df = RegionTable.readCsv(spark, path)

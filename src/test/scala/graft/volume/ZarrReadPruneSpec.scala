@@ -5,12 +5,14 @@ import graft.plans.PlanAudit
 import org.apache.spark.TestListenerBus.jobsDuring
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
 /** The planned-grid zarr reader prunes before it decodes: a chunk
   * predicate on the geometry columns runs below the decode, so a
-  * one-chunk crop reads only the chunk file that owns it; a point lookup
+  * one-chunk crop reads only the chunk file that owns it (on a sharded
+  * store, that shard's index and the owning inner blob); a point lookup
   * on the volume a zarr reader returns reads its one chunk on the driver
   * and runs no Spark job; and the grid plan itself moves no data through
   * a shuffle.
@@ -72,15 +74,32 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     others.foreach(Files.write(_, Array.tabulate[Byte](257)(i => (i * 37 + 11).toByte)))
   }
 
+  /** Overwrite in place the blob of the other inner cell in grid cell
+    * (cz, cy, cx)'s shard, leaving the shard's index and its crc32c intact.
+    */
+  private def garbleSibling(store: String, cz: Int, cy: Int, cx: Int): Unit = {
+    val f = Paths.get(store).resolve(shardedV3.key(cz, cy, cx))
+    val bytes = Files.readAllBytes(f)
+    // index at the end: (offset, nbytes) of the shard's 2 cells, then crc32c
+    val idx = ByteBuffer.wrap(bytes, bytes.length - 36, 32).order(ByteOrder.LITTLE_ENDIAN)
+    val entries = Array.fill(4)(idx.getLong.toInt)
+    val sibling = 1 - cz % 2
+    val (off, len) = (entries(2 * sibling), entries(2 * sibling + 1))
+    for (i <- off until off + len) bytes(i) = (i * 37 + 11).toByte
+    Files.write(f, bytes)
+  }
+
   private def sc = spark.sparkContext
 
-  test("pointLookup and a one-chunk cropVoxels read only the owning chunk file (v2 and plain v3)") {
-    for (l <- layouts; (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
+  test("pointLookup and a one-chunk cropVoxels read only the owning chunk file (v2, plain and sharded v3)") {
+    for ((l, others) <- layouts.map(_ -> 15) :+ (shardedV3 -> 7); (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
       val store = tmp("arr")
       l.write(vol, store)
-      garbleAllBut(store, l, cz, cy, cx, 15)
+      garbleAllBut(store, l, cz, cy, cx, others)
+      if (l == shardedV3) garbleSibling(store, cz, cy, cx)
 
       val back = l.read(store)
+      intercept[Exception](back.chunks.collect())
       val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
       val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
       assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
@@ -92,17 +111,6 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       val want = for (z <- z0 until z0 + 2; y <- y0 + 1 until y0 + 3; x <- x0 until x0 + 2)
         yield (z, y, x, label(z, y, x))
       assert(crop === want, s"${l.name} crop of chunk ($cz,$cy,$cx)")
-    }
-  }
-
-  test("pointLookup on a sharded v3 read reads only the owning shard, with no Spark job") {
-    for ((cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
-      val store = tmp("arr")
-      shardedV3.write(vol, store)
-      garbleAllBut(store, shardedV3, cz, cy, cx, 7)
-      val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
-      val (got, jobs) = jobsDuring(sc)(shardedV3.read(store).pointLookup(z, y, x))
-      assert(got === Some(label(z, y, x)) && jobs === 0, s"lookup ($z,$y,$x): $got after $jobs jobs")
     }
   }
 
