@@ -16,14 +16,16 @@ import java.nio.ByteOrder;
  *       read passes for uint32). This form reads each 8-element group once
  *       (sequential longs) and scatters its bytes to all planes from
  *       registers -- one read pass, {@code t} sequential write streams.</li>
- *   <li>Per-chunk unsigned/signed min-max ({@code minMax}): the generic
+ *   <li>Per-chunk unsigned/signed min-max ({@code minMax}, the entries of
+ *       {@code ChunkStore}'s label value index): the generic
  *       per-byte {@code decodeLong} loop costs ~6 ops/byte; these widen a
  *       whole element per load and let C2 keep the running min/max in
  *       registers.</li>
  * </ul>
  *
  * All methods are exact drop-ins for the Scala forms they replace; the
- * ZarrInteropSpec / ChunkStore round-trip suites pin equivalence.
+ * ZarrInteropSpec round-trips and the ChunkStore value-index suite pin
+ * equivalence.
  */
 public final class ByteKernels {
   private ByteKernels() {}

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * The reference has no analog (single-node memmaps don't shuffle); this is
   * pure engine surface for the harness star schema, the same "pay at write
-  * time" trade the graftchunks store makes for chunk-coordinate pruning.
+  * time" trade a zarr array's chunk grid makes for chunk-coordinate pruning.
   */
 object Bucketing {
 

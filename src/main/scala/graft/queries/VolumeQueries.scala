@@ -566,14 +566,13 @@ object VolumeQueries {
     // §7 streaming north star, oracle-gated: chunk files land in TWO
     // arrival waves (half the grid before the stream starts, the rest
     // mid-flight), stream through VolumeStreams.upscaleIngest's ×2
-    // micro-batch kernel into the internal chunk store, and the
+    // micro-batch kernel into the value-indexed zarr sink, and the
     // read-back must equal the one-shot batch upscale — the SAME oracle
     // as vol_chunk_upscale_x2, proving the incremental pipeline computes
     // the batch answer (upscale_streaming.py:42–127's whole premise).
     Q(
       "vol_stream_upscale",
       (s, _) => {
-        import graft.volume.ChunkStore
         val dir = java.nio.file.Files.createTempDirectory("graft_vstream")
         dir.toFile.deleteOnExit()
         val inDir = dir.resolve("in").toString
@@ -586,7 +585,7 @@ object VolumeQueries {
           vol.chunks.filter(col("cz") > 0).write.mode("append").parquet(inDir)
           q.processAllAvailable()
         } finally q.stop()
-        ChunkStore.read(s, outDir).toVoxels.orderBy("z", "y", "x")
+        graft.volume.ZarrStore.read(s, outDir).toVoxels.orderBy("z", "y", "x")
       },
       Some(s"""$voxCte
         SELECT 2 * v.z + dz.range AS z, 2 * v.y + dy.range AS y, 2 * v.x + dx.range AS x, v.label
@@ -900,17 +899,18 @@ object VolumeQueries {
         SELECT z, y, x, label FROM vox ORDER BY z, y, x
       """),
     ),
-    // S4/K1 via the DataSource V2 connector: grid → zstd chunk store on
-    // disk → `format("graftchunks")` scan → decode → must equal the grid.
+    // S4/K1 via the DataSource V2 connector: grid → value-indexed zarr
+    // store on disk (ChunkStore) → `format("zarr")` scan → decode → must
+    // equal the grid.
     Q(
       "vol_dsv2_roundtrip",
       (s, _) => {
-        import graft.volume.{Chunk, ChunkStore, ChunkVolume => CV}
+        import graft.volume.{Chunk, ChunkStore, ChunkVolume => CV, ZarrStore}
         val store = java.nio.file.Files.createTempDirectory("graft_dsv2").toString + "/store"
         ChunkStore.write(chunked(s), store)
-        val meta = CV.readSidecar(store)
+        val (_, meta) = ZarrStore.readMeta(store)
         import s.implicits._
-        val df = s.read.format("graftchunks").load(store)
+        val df = s.read.format("zarr").load(store)
         CV(df.as[Chunk], meta).toVoxels.orderBy("z", "y", "x")
       },
       Some(s"""$voxCte
@@ -1363,9 +1363,9 @@ object VolumeQueries {
       """),
     ),
     // Value-indexed label search over a written store: "which chunks
-    // contain label L, how often" — candidates resolve from the
-    // consolidated stats index / 64-byte header peeks (no decompression),
-    // only candidates decode for exact counts. The oracle recomputes the
+    // contain label L, how often" — candidates resolve from the store's
+    // label min/max index (one driver read, no decompression), only
+    // candidates decode for exact counts. The oracle recomputes the
     // per-chunk census from the grid formula.
     Q(
       "vol_label_search",

@@ -3,8 +3,8 @@ package graft.sources
 import graft.io.{Fio, FioConf}
 import graft.volume.AtomicDir
 
-/** Where a DSv2 chunk-store batch write (zarr, graftchunks) stages files
-  * and how job commit publishes them atomically:
+/** Where a DSv2 zarr batch write stages files and how job commit
+  * publishes them atomically:
   *
   *  - [[StoreStaging.Swap]] (overwrite / fresh store): build the whole
   *    store in a temp sibling, publish with O(1) renames via
@@ -16,11 +16,6 @@ import graft.volume.AtomicDir
   *    never see staging (they address chunks by coordinate and never
   *    list).
   *
-  * `commit(finalize)` runs the builder's finalizer (e.g. the graftchunks
-  * stats-index merge) against the staged tree BEFORE a swap publishes
-  * it, or against the destination AFTER an append lands its files — so
-  * a store is never visible with missing store-level metadata.
-  *
   * Paths are Hadoop-FS strings (graft.io.Fio): the same commit protocol
   * runs on `file://` and `hdfs://`; see [[AtomicDir]] for the
   * object-store rename caveat.
@@ -28,7 +23,7 @@ import graft.volume.AtomicDir
 private[sources] sealed trait StoreStaging {
   /** Directory tasks (and driver-side store init) write into. */
   def writeDir: String
-  def commit(finalize: String => Unit): Unit
+  def commit(): Unit
   def abort(): Unit
 }
 
@@ -37,10 +32,7 @@ private[sources] object StoreStaging {
   /** Overwrite / fresh store: build in a temp sibling, swap at commit. */
   final case class Swap(dest: String)(implicit fc: FioConf) extends StoreStaging {
     val writeDir: String = AtomicDir.tempSibling(dest)
-    override def commit(finalize: String => Unit): Unit = {
-      finalize(writeDir)
-      AtomicDir.publish(writeDir, dest)
-    }
+    override def commit(): Unit = AtomicDir.publish(writeDir, dest)
     override def abort(): Unit = AtomicDir.deleteInBackground(writeDir)
   }
 
@@ -55,14 +47,13 @@ private[sources] object StoreStaging {
         Fio.listNames(stagingRoot).foreach(n => AtomicDir.deleteInBackground(Fio.child(stagingRoot, n)))
       Fio.child(stagingRoot, java.util.UUID.randomUUID().toString.take(8))
     }
-    override def commit(finalize: String => Unit): Unit = {
+    override def commit(): Unit = {
       publishFiles(writeDir, dest)
       Fio.delete(writeDir)
       // drop the (now usually empty) staging root; a concurrent writer's
       // live dir makes this fail harmlessly
       if (Fio.isDirectory(stagingRoot) && Fio.listNames(stagingRoot).isEmpty)
         Fio.delete(stagingRoot)
-      finalize(dest)
     }
     override def abort(): Unit = AtomicDir.deleteInBackground(writeDir)
 

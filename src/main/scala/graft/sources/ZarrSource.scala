@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.io.{Fio, FioConf}
-import graft.volume.{AtomicDir, Chunk, UpscaleCli, VolumeMeta, ZarrStore}
+import graft.volume.{AtomicDir, Chunk, ChunkStore, UpscaleCli, VolumeMeta, ZarrStore}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -58,6 +58,38 @@ object ZarrSource {
   ))
 
   val CoordCols: Set[String] = Set("cz", "cy", "cx")
+
+  /** Can a chunk with these known column values satisfy the filter?
+    * Unknown/unrelated filter shapes keep the chunk (sound pruning).
+    */
+  private[sources] def filterKeeps(f: Filter, known: Map[String, Long]): Boolean = f match {
+    case EqualTo(a, v: Number) if known.contains(a) => known(a) == v.longValue()
+    case In(a, vs) if known.contains(a) => vs.exists(v => v.asInstanceOf[Number].longValue() == known(a))
+    case LessThan(a, v: Number) if known.contains(a) => known(a) < v.longValue()
+    case LessThanOrEqual(a, v: Number) if known.contains(a) => known(a) <= v.longValue()
+    case GreaterThan(a, v: Number) if known.contains(a) => known(a) > v.longValue()
+    case GreaterThanOrEqual(a, v: Number) if known.contains(a) => known(a) >= v.longValue()
+    case And(l, r) => filterKeeps(l, known) && filterKeeps(r, known)
+    case Or(l, r) => filterKeeps(l, known) || filterKeeps(r, known)
+    case _ => true
+  }
+
+  /** Geometry of the first DSv2 write to a new store: options
+    * `dimZ dimY dimX chunkZ chunkY chunkX` (required) and `elementType`
+    * (MET_* tag, default MET_UINT).
+    */
+  private[sources] def firstWriteMeta(opts: CaseInsensitiveStringMap): VolumeMeta = {
+    def req(k: String): Long = {
+      val v = opts.get(k)
+      require(v != null,
+        s"$Name write to a new store requires option '$k' " +
+          "(dimZ/dimY/dimX/chunkZ/chunkY/chunkX)")
+      v.toLong
+    }
+    VolumeMeta.uniform(req("dimZ"), req("dimY"), req("dimX"),
+      req("chunkZ").toInt, req("chunkY").toInt, req("chunkX").toInt,
+      Option(opts.get("elementType")).getOrElse("MET_UINT"))
+  }
 }
 
 class ZarrTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -172,14 +204,22 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
         if (appendToExisting) ZarrStore.readMeta(dest)
         else {
           val codec = UpscaleCli.zarrCodec(Option(opts.get("compressor")).getOrElse("zstd"))
-          ZarrStore.initArray(writeDir, ChunkStoreSource.firstWriteMeta(opts, ZarrSource.Name), codec)
+          ZarrStore.initArray(writeDir, ZarrSource.firstWriteMeta(opts), codec)
         }
       new ZarrWriterFactory(writeDir, zm.dimSeparator,
         ZarrStore.forElements(zm.codec, vm.bytesPerVoxel), vm, fc)
     }
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit =
-      staging.commit(_ => ()) // chunk + metadata files ARE the store; nothing to finalize
+    override def commit(messages: Array[WriterCommitMessage]): Unit = {
+      staging match {
+        // chunks landing in an existing array outdate a ChunkStore value
+        // index: drop it before they publish
+        case a: StoreStaging.Append =>
+          ChunkStore.dropStatsIndex(a.dest)(FioConf.of(org.apache.spark.sql.SparkSession.active))
+        case _: StoreStaging.Swap => ()
+      }
+      staging.commit() // chunk + metadata files ARE the store
+    }
     override def abort(messages: Array[WriterCommitMessage]): Unit = staging.abort()
   }
 }
@@ -234,7 +274,7 @@ class ZarrScan(path: String, filters: Array[Filter], targetBytes: Long)
       cy <- (0 until vm.ncy).iterator
       cx <- (0 until vm.ncx).iterator
       known = Map("cz" -> cz.toLong, "cy" -> cy.toLong, "cx" -> cx.toLong)
-      if filters.forall(f => ChunkStoreSource.filterKeeps(f, known))
+      if filters.forall(f => ZarrSource.filterKeeps(f, known))
     } yield (cz, cy, cx)
     val bpv = vm.bytesPerVoxel.toLong
     def payloadBytes(c: (Int, Int, Int)): Long = {
@@ -263,9 +303,8 @@ class ZarrReaderFactory extends PartitionReaderFactory {
       override def next(): Boolean = {
         if (!it.hasNext) return false
         val (cz, cy, cx) = it.next()
-        val bytes = Fio.readAllIfExists(
-          Fio.child(p.dir, ZarrStore.chunkKey(p.zm.dimSeparator, cz, cy, cx)))(p.fc)
-        val c = ZarrStore.decodeChunk(bytes, p.zm, p.vm, cz, cy, cx)
+        val file = Fio.child(p.dir, ZarrStore.chunkKey(p.zm.dimSeparator, cz, cy, cx))
+        val c = ZarrStore.decodeChunk(Fio.readAllIfExists(file)(p.fc), p.zm, p.vm, cz, cy, cx, file)
         row = new GenericInternalRow(Array[Any](
           c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data))
         true

@@ -18,6 +18,9 @@ import org.apache.spark.sql.SparkSession
   *
   * `--compressor lz4` / `zstd-bit` reproduce the reference CLI's exact
   * Blosc BITSHUFFLE output formats (upscale_streaming.py:103–108).
+  * `--format graftchunks` writes a zarr v2 array (zstd level 1) plus its
+  * per-chunk label value index ([[ChunkStore]]); `--compressor` does not
+  * apply to it.
   */
 object UpscaleCli {
 
@@ -31,7 +34,7 @@ object UpscaleCli {
       maxGb: Double = 500.0,
       dryRun: Boolean = false,
       force: Boolean = false,
-      format: String = "zarr", // zarr (parity) | zarr3 | zarr3-sharded (object-storage) | graftchunks
+      format: String = "zarr", // zarr (parity) | zarr3 | zarr3-sharded (object-storage) | graftchunks (zarr + value index)
       compressor: String = "zstd", // zstd|zlib|blosc-zstd|blosc-zlib|lz4|zstd-bit|none
   )
 

@@ -81,9 +81,9 @@ object VolumeBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** The measured flow into the zstd chunk store (ChunkStore, the
-    * Zarr-DirectoryStore analog — the reference's ×2 sink was
-    * uncompressed Zarr; ours compresses AND is faster).
+  /** The measured flow into the value-indexed sink ([[ChunkStore]]: a
+    * zstd-1 zarr v2 array plus its label min/max index — the reference's
+    * ×2 sink was uncompressed Zarr; ours compresses AND is faster).
     */
   def upscale(spark: SparkSession, mhdPath: String, s: Int, outDir: String): Double =
     timedUpscale(spark, mhdPath, s) { vol =>
@@ -192,9 +192,9 @@ object VolumeBench {
     * zarr/zarr3s once: 5 executions at 3 reps, 10 if the gate re-runs it.
     *
     * Sinks at the same scale are sampled as INTERLEAVED rep-tuples —
-    * rep i runs (internal, zarr, bitshuffle) back-to-back before rep
+    * rep i runs (value-indexed, zarr, bitshuffle) back-to-back before rep
     * i+1 — so an ambient-I/O window on the box hits all sinks equally
-    * and the internal store becomes an in-artifact control for the zarr
+    * and the value-indexed store becomes an in-artifact control for the zarr
     * numbers (r8: consecutive per-sink blocks left "zarr 2.6× over
     * baseline" indistinguishable from "disk degraded mid-bench").
     */
@@ -258,7 +258,7 @@ object VolumeBench {
     entries += ("vol_disk_probe_pre" -> pre)
     val cold = upscale(spark, mhd, 2, s"$workDir/out_x2")
     entries += ("vol_atlas_upscale_x2_cold" -> cold)
-    // the ×2 headline into three sinks: the internal zstd chunk store,
+    // the ×2 headline into three sinks: the value-indexed zstd zarr store,
     // the spec-compliant blosc-zstd zarr, and the reference CLI's EXACT
     // default output (Blosc zstd BITSHUFFLE, upscale_streaming.py:104)
     val midProbe = gated("x2", Seq(

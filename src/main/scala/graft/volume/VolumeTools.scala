@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *  - `metadata <mhd>`              — print_metadata.py: spacing/dims/physical size
   *  - `verify <mhd> <store> <s> [z y x]` — verify_labels.py: the label-preservation
   *    spot check `orig[z,y,x] == upscaled[s·z, s·y, s·x]` against a written
-  *    store (graftchunks or zarr, auto-detected)
+  *    store (zarr v2 or v3, auto-detected)
   *  - `lookup <mhd> <region_csv> <z> <y> <x>` — lookup_test2.py: voxel point
   *    read + region-table join, "Unknown region ID" on miss
   *  - `head <region_csv>`           — lookup_test.py: first rows + count
@@ -18,15 +18,16 @@ import org.apache.spark.sql.SparkSession
   */
 object VolumeTools {
 
-  /** A store written by UpscaleCli: zarr v2 (`.zarray`), zarr v3
-    * (`zarr.json`, plain or sharded) or the internal chunk store.
+  /** A store written by UpscaleCli: zarr v2 (`.zarray`; `--format
+    * graftchunks` too) or zarr v3 (`zarr.json`, plain or sharded).
     */
   private def readStore(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: graft.io.FioConf = graft.io.FioConf.of(spark)
     def has(doc: String) = graft.io.Fio.exists(graft.io.Fio.child(path, doc))
     if (has(".zarray")) ZarrStore.read(spark, path)
     else if (has("zarr.json")) Zarr3Store.read(spark, path)
-    else ChunkStore.read(spark, path)
+    else throw new IllegalArgumentException(
+      s"$path is not a zarr array: it holds neither .zarray (zarr v2) nor zarr.json (zarr v3)")
   }
 
   def loadTest(spark: SparkSession, mhdPath: String, z: Long, y: Long, x: Long): Seq[String] = {
@@ -78,7 +79,7 @@ object VolumeTools {
   def head(spark: SparkSession, csvPath: String, n: Int = 5): Seq[String] = {
     val regions = RegionTable.readCsv(spark, csvPath)
     val rows = regions.limit(n).collect().map { r =>
-      s"${r.getLong(0)}  ${r.getString(1)}  ${r.getString(2)}  level=${r.getInt(3)} parent=${r.getLong(4)}"
+      s"${r.getLong(0)}  ${r.getString(1)}  ${r.getString(2)}  level=${r.get(3)} parent=${r.get(4)}"
     }
     rows.toSeq :+ s"Number of regions: ${regions.count()}"
   }

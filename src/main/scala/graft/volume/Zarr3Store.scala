@@ -314,8 +314,8 @@ object Zarr3Store {
       extraAttrs: Map[String, String] = Map.empty): Unit = {
     val zm = metaOf(vol.meta, codec)
     val (meta, eff) = (vol.meta, zm.codec)
-    ZarrStore.writeArray(vol.chunks, path, Seq("zarr.json" -> zarrJson(zm, extraAttrs)),
-      chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff))
+    ZarrStore.writeArray(vol.chunks.sparkSession, path, Seq("zarr.json" -> zarrJson(zm, extraAttrs)))(
+      ZarrStore.landChunks(vol.chunks, _, chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff)))
   }
 
   /** Append chunk files into a zarr v3 array — the incremental-ingest
@@ -331,8 +331,8 @@ object Zarr3Store {
       codec: Codec = ZstdCodec()): Unit = {
     val zm = metaOf(meta, codec)
     val eff = zm.codec
-    ZarrStore.appendArray(chunks, path, "zarr.json", zarrJson(zm), zm, parseZarrJson,
-      chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff))
+    ZarrStore.appendArray(chunks.sparkSession, path, "zarr.json", zarrJson(zm), zm, parseZarrJson)(
+      ZarrStore.landChunks(chunks, _, chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff)))
   }
 
   /** Read a zarr v3 array directory as a ChunkVolume: grid planned from
@@ -509,14 +509,16 @@ object Zarr3Store {
       implicit fc: FioConf): (Chunk, Option[(Long, Long)]) = {
     val Seq(nIz, nIy, nIx) = sh.innerGridPerShard(zm.chunks)
     val cell = ((gcz % nIz) * nIy + gcy % nIy) * nIx + gcx % nIx
-    val raf = Fio.openRandomIfExists(Fio.child(dir, chunkKey(zm.dimSeparator, gcz / nIz, gcy / nIy, gcx / nIx)))
+    val shardFile = Fio.child(dir, chunkKey(zm.dimSeparator, gcz / nIz, gcy / nIy, gcx / nIx))
+    val raf = Fio.openRandomIfExists(shardFile)
     try {
       val read = raf.map { r =>
         val shard = new ShardFile(r, zm, sh)
         val blob = shard.blob(cell)
         (blob, (shard.indexLen + blob.map(_.length.toLong).getOrElse(0L), r.size))
       }
-      (ZarrStore.decodeChunk(read.flatMap(_._1), innerMeta(zm, sh), innerVm(zm, sh), gcz, gcy, gcx),
+      (ZarrStore.decodeChunk(read.flatMap(_._1), innerMeta(zm, sh), innerVm(zm, sh), gcz, gcy, gcx,
+        s"shard $shardFile (inner cell $cell)"),
         read.map(_._2))
     } finally raf.foreach(_.close())
   }
@@ -542,8 +544,8 @@ object Zarr3Store {
     val sh = ShardingMeta(inner, indexCrc32c = true, indexAtEnd = indexAtEnd)
     val zm = metaOf(m, codec)
     val ivm = innerVm(zm, sh)
-    ZarrStore.writeArray(vol.chunks, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)),
-      chunkKey("/", _, _, _), c => encodeShard(c, zm, sh, ivm))
+    ZarrStore.writeArray(vol.chunks.sparkSession, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)))(
+      ZarrStore.landChunks(vol.chunks, _, chunkKey("/", _, _, _), c => encodeShard(c, zm, sh, ivm)))
   }
 
   /** Compact an UNSHARDED zarr v3 array into a sharded one — the

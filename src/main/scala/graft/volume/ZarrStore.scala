@@ -36,8 +36,8 @@ import java.util.zip.{Deflater, Inflater}
   * reader serve both dialects — each supplies only its documents, its
   * key and its per-chunk encoder.
   *
-  * This store is interop-first; the sibling [[ChunkStore]] (GCS2 headers
-  * with per-chunk label stats) remains the value-indexed internal format.
+  * [[ChunkStore]] writes this same format with a per-chunk label min/max
+  * index beside it — the value-indexed sink.
   */
 object ZarrStore {
 
@@ -89,12 +89,20 @@ object ZarrStore {
   }
 
   /** numcodecs `zstd`: plain zstd frames (zstd-jni, already on Spark's
-    * classpath for shuffle compression).
+    * classpath for shuffle compression), compressed through the calling
+    * thread's reused native context ([[BloscCodec.scratch]]) — the static
+    * `Zstd.compress` entry builds and frees one per chunk.
     */
   final case class ZstdCodec(level: Int = 3) extends Codec {
     val id: Option[String] = Some("zstd")
-    def compress(src: Array[Byte]): Array[Byte] =
-      com.github.luben.zstd.Zstd.compress(src, level)
+    def compress(src: Array[Byte]): Array[Byte] = {
+      // one allocation per chunk: the frame lands in the thread's reused
+      // destination buffer and only its exact length is copied out
+      val scr = BloscCodec.scratch.get()
+      val dst = scr.ensureDst(com.github.luben.zstd.Zstd.compressBound(src.length.toLong).toInt)
+      val n = scr.zctx(level).compressByteArray(dst, 0, dst.length, src, 0, src.length)
+      java.util.Arrays.copyOf(dst, n)
+    }
     def decompress(src: Array[Byte], rawLen: Int): Array[Byte] = {
       val out = new Array[Byte](rawLen)
       com.github.luben.zstd.Zstd.decompressByteArray(out, 0, rawLen, src, 0, src.length)
@@ -693,26 +701,41 @@ object ZarrStore {
   def write(vol: ChunkVolume, path: String, codec: Codec = ZstdCodec(),
       extraAttrs: Map[String, String] = Map.empty): Unit = {
     val zm = metaOf(vol.meta, codec)
-    // .zattrs: spacing + provenance (user attrs per the spec; zarr/dask
-    // readers ignore unknown keys). Spacing is stored (x,y,z) like MHD's
-    // ElementSpacing so round-trips preserve the header convention.
+    val (meta, eff) = (vol.meta, zm.codec)
+    writeArray(vol.chunks.sparkSession, path, Seq(".zarray" -> zarrayJson(zm), ".zattrs" -> zattrs(meta, extraAttrs)))(
+      landChunks(vol.chunks, _, chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff)))
+  }
+
+  /** A v2 array's `.zattrs`: spacing and provenance (user attrs per the
+    * spec; zarr/dask readers ignore unknown keys). Spacing is stored
+    * (x,y,z) like MHD's ElementSpacing so round-trips preserve the header
+    * convention.
+    */
+  private[volume] def zattrs(meta: VolumeMeta, extraAttrs: Map[String, String]): String = {
     val attrs = Map(
-      "graft:spacing" -> s"[${vol.meta.spacingX}, ${vol.meta.spacingY}, ${vol.meta.spacingZ}]",
-      "graft:elementType" -> ChunkVolume.jsonStr(vol.meta.elementType),
+      "graft:spacing" -> s"[${meta.spacingX}, ${meta.spacingY}, ${meta.spacingZ}]",
+      "graft:elementType" -> ChunkVolume.jsonStr(meta.elementType),
     ) ++ extraAttrs.map { case (k, v) => k -> ChunkVolume.jsonStr(v) }
-    val zattrs = attrs.toSeq.sortBy(_._1)
+    attrs.toSeq.sortBy(_._1)
       .map { case (k, v) => s"    ${ChunkVolume.jsonStr(k)}: $v" }
       .mkString("{\n", ",\n", "\n}")
-    val (meta, eff) = (vol.meta, zm.codec)
-    writeArray(vol.chunks, path, Seq(".zarray" -> zarrayJson(zm), ".zattrs" -> zattrs),
-      chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
+  }
+
+  /** The `.zattrs` an append lands with the array's first chunks, so a
+    * streamed array keeps its spacing; an existing one is left as is.
+    */
+  private[volume] def ensureAttrs(dir: String, meta: VolumeMeta)(implicit fc: FioConf): Unit = {
+    val doc = Fio.child(dir, ".zattrs")
+    if (!Fio.exists(doc)) Fio.writeString(doc, zattrs(meta, Map.empty))
   }
 
   /** Append chunk files into a zarr v2 array directory — the
     * incremental-ingest building block: zarr chunks are independent
     * files, so streaming micro-batches append idempotently (a re-landed
-    * chunk coordinate overwrites its own file). Writes `.zarray` on first
-    * call; later calls fail loud if it describes another layout.
+    * chunk coordinate overwrites its own file). Writes `.zarray` and
+    * `.zattrs` on first call; later calls fail loud if `.zarray`
+    * describes another layout. A [[ChunkStore]] value index in the
+    * array is dropped, as these chunks would outdate it.
     */
   def appendChunks(
       chunks: org.apache.spark.sql.Dataset[Chunk],
@@ -721,8 +744,12 @@ object ZarrStore {
       codec: Codec = ZstdCodec()): Unit = {
     val zm = metaOf(meta, codec)
     val eff = zm.codec
-    appendArray(chunks, path, ".zarray", zarrayJson(zm), zm, parseZarray,
-      chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+    appendArray(chunks.sparkSession, path, ".zarray", zarrayJson(zm), zm, parseZarray) { dir =>
+      ensureAttrs(dir, meta)
+      ChunkStore.dropStatsIndex(dir)
+      landChunks(chunks, dir, chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
+    }
   }
 
   /** Validate, pad, and compress ONE chunk to its zarr file bytes — the
@@ -786,11 +813,12 @@ object ZarrStore {
 
   /** Decode one chunk file's bytes to the engine's trimmed little-endian
     * payload for grid cell (cz,cy,cx); `None` bytes = absent file =
-    * all-fill chunk.
+    * all-fill chunk. `file` names where the bytes came from (the chunk
+    * key's path, or a shard file and inner cell) in a decode failure.
     */
   private[graft] def decodeChunk(
       bytes: Option[Array[Byte]], zm: ZarrMeta, vm: VolumeMeta,
-      cz: Int, cy: Int, cx: Int): Chunk = {
+      cz: Int, cy: Int, cx: Int, file: => String): Chunk = {
     val bpp = zm.bpp
     val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
     val data = bytes match {
@@ -806,7 +834,7 @@ object ZarrStore {
           try zm.codec.decompress(raw, zm.chunkElems * bpp)
           catch {
             case e: Exception => throw new IllegalStateException(
-              s"zarr chunk ($cz,$cy,$cx) failed to decode " +
+              s"zarr chunk ($cz,$cy,$cx) in $file failed to decode " +
                 s"(${raw.length} bytes, codec ${zm.codec.id.getOrElse("raw")}): ${e.getMessage}", e)
           }
         if (zm.bigEndian) ChunkKernels.swapEndianInPlace(full, bpp)
@@ -850,31 +878,30 @@ object ZarrStore {
   }
 
   /** Write a whole array all-or-nothing ([[AtomicDir.stage]]): the
-    * metadata `docs` (file name → body) from the driver, then every
-    * chunk encoded and landed under its `key` from executor tasks.
+    * metadata `docs` (file name → body) from the driver, then `land`
+    * fills the staged directory ([[landChunks]], or [[ChunkStore]]'s
+    * indexed form).
     */
-  private[volume] def writeArray(
-      chunks: Dataset[Chunk], path: String, docs: Seq[(String, String)],
-      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+  private[volume] def writeArray(spark: SparkSession, path: String, docs: Seq[(String, String)])(
+      land: String => Unit): Unit = {
+    implicit val fc: FioConf = FioConf.of(spark)
     AtomicDir.stage(path) { dir =>
       docs.foreach { case (name, body) => Fio.writeString(Fio.child(dir, name), body) }
-      landChunks(chunks, dir, key, encode)
+      land(dir)
     }
   }
 
   /** Land chunks into an array in place: write its document `docName`
     * if absent, else require the one on disk (read back by `parse`) to
-    * describe the layout `zm` these chunks are encoded with.
+    * describe the layout `zm` these chunks are encoded with; then `land`
+    * fills the directory.
     */
-  private[volume] def appendArray(
-      chunks: Dataset[Chunk], path: String, docName: String, doc: => String,
-      zm: ZarrMeta, parse: String => ZarrMeta,
-      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+  private[volume] def appendArray(spark: SparkSession, path: String, docName: String, doc: => String,
+      zm: ZarrMeta, parse: String => ZarrMeta)(land: String => Unit): Unit = {
+    implicit val fc: FioConf = FioConf.of(spark)
     val dir = Fio.qualify(path)
     ensureDocument(dir, docName, doc, zm, parse)
-    landChunks(chunks, dir, key, encode)
+    land(dir)
   }
 
   private def ensureDocument(dir: String, docName: String, doc: => String,
@@ -898,19 +925,25 @@ object ZarrStore {
     s"shape [${m.shape.mkString(", ")}], chunks [${m.chunks.mkString(", ")}], " +
       s"dtype ${m.dtype}, codec ${forElements(m.codec, m.bpp)}, separator '${m.dimSeparator}'"
 
-  private def landChunks(chunks: Dataset[Chunk], dir: String,
-      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte])(implicit fc: FioConf): Unit =
+  /** Encode every chunk and land it under its `key` from executor tasks. */
+  private[volume] def landChunks(chunks: Dataset[Chunk], dir: String,
+      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
     chunks.foreachPartition { (it: Iterator[Chunk]) =>
       // FileSystem.create makes parents, so nested keys need no mkdirs
       it.foreach(c => Fio.writeBytes(Fio.child(dir, key(c.cz, c.cy, c.cx)), encode(c)))
     }
+  }
 
   /** The cell loader of an unsharded array: grid cell (cz, cy, cx) is
     * the chunk file at its `key`, an absent file decoding as fill_value.
     */
   private[volume] def chunkFiles(dir: String, zm: ZarrMeta, vm: VolumeMeta,
       key: (Int, Int, Int) => String)(implicit fc: FioConf): ChunkVolume.CellLoader =
-    (cz, cy, cx) => decodeChunk(Fio.readAllIfExists(Fio.child(dir, key(cz, cy, cx))), zm, vm, cz, cy, cx)
+    (cz, cy, cx) => {
+      val file = Fio.child(dir, key(cz, cy, cx))
+      decodeChunk(Fio.readAllIfExists(file), zm, vm, cz, cy, cx, file)
+    }
 
   /** Read every cell of `vm`'s grid, planned from metadata alone (no
     * listing), through `load`. Two steps: each cell's geometry as plain
@@ -935,7 +968,7 @@ object ZarrStore {
       val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
       (cz, cy, cx, z0, y0, x0, nz, ny, nx)
     }.toDF("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
-    val decode = udf((cz: Int, cy: Int, cx: Int) => load(cz, cy, cx).data)
+    val decode = udf((cz: Int, cy: Int, cx: Int) => load(cz, cy, cx).data).withName("zarr_chunk_decode")
     ChunkVolume.ofCells(cells.withColumn("data", decode($"cz", $"cy", $"cx")).as[Chunk], vm, load)
   }
 }

@@ -93,7 +93,7 @@ class FioSpec extends AnyFunSuite with SparkSpec {
     val dest = s"file://$dir/store"
     val vol = smallVolume()
     ChunkStore.write(vol, dest)
-    val back = ChunkStore.read(spark, dest)
+    val back = ZarrStore.read(spark, dest)
     assert(voxelSums(back) == voxelSums(vol))
     implicit val fc: FioConf = FioConf.of(spark)
     assert(ChunkStore.readStatsIndex(Fio.qualify(dest)).nonEmpty)

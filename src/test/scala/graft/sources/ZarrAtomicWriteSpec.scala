@@ -52,17 +52,6 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
       .repartition(4, col("cz"), col("cy"), col("cx"))
   }
 
-  /** graftchunks poison: one chunk claims more voxels than its payload
-    * holds → the writer's stats pass fails that task after siblings
-    * already landed files.
-    */
-  private def poisonedChunkFrame(seed: Long) = {
-    vol(seed).chunks.toDF()
-      .withColumn("nz", when(col("cz") === 1 && col("cy") === 1 && col("cx") === 1,
-        lit(1000)).otherwise(col("nz")))
-      .repartition(4, col("cz"), col("cy"), col("cx"))
-  }
-
   private def siblings(dest: Path): Seq[String] = {
     val base = dest.getFileName.toString
     val it = Files.list(dest.getParent)
@@ -157,26 +146,27 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("graftchunks DSv2 overwrite failure is a no-op; commit publishes store WITH stats index") {
+  test("ChunkStore.write failure is a no-op; a published store carries its stats index") {
     import graft.volume.ChunkStore
     val dest = Paths.get(Files.createTempDirectory("gcs_atomic").toString, "s.gcs")
     ChunkStore.write(vol(7), dest.toString)
-    val expect = collectVox(ChunkStore.read(spark, dest.toString).toVoxels)
-    def withStats(df: org.apache.spark.sql.DataFrame) = // table schema carries (ignored) stats cols
-      df.withColumn("lmin", lit(0L)).withColumn("lmax", lit(0L))
-    intercept[Exception] {
-      geomOpts(withStats(poisonedChunkFrame(13)).write.format("graftchunks"))
-        .mode("overwrite").save(dest.toString)
-    }
-    assert(collectVox(ChunkStore.read(spark, dest.toString).toVoxels) === expect)
+    val expect = collectVox(ZarrStore.read(spark, dest.toString).toVoxels)
+    val index = Files.readString(dest.resolve(ChunkStore.StatsIndexName))
+    import spark.implicits._
+    val poisonedVol = ChunkVolume(
+      vol(13).chunks.map { c =>
+        if (c.cz == 1 && c.cy == 1 && c.cx == 1) c.copy(z0 = 99L) else c
+      }.repartition(4), vol(13).meta)
+    intercept[Exception] { ChunkStore.write(poisonedVol, dest.toString) }
+    assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) === expect)
+    assert(Files.readString(dest.resolve(ChunkStore.StatsIndexName)) === index)
     AtomicDir.awaitQuiescent()
     assert(siblings(dest).isEmpty)
     // successful overwrite publishes atomically, stats index included
-    geomOpts(withStats(vol(31).chunks.toDF()).write.format("graftchunks"))
-      .mode("overwrite").save(dest.toString)
-    assert(ChunkStore.readStatsIndex(dest.toString).exists(_.nonEmpty),
+    ChunkStore.write(vol(31), dest.toString)
+    assert(ChunkStore.readStatsIndex(dest.toString).exists(_.size === 8),
       "published store is missing its stats index")
-    assert(collectVox(ChunkStore.read(spark, dest.toString).toVoxels) ===
+    assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) ===
       collectVox(mkVox(31)))
     AtomicDir.awaitQuiescent()
     assert(siblings(dest).isEmpty)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.volume.{ChunkStore, ChunkVolume}
+import graft.volume.{ChunkVolume, ZarrStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -23,22 +23,27 @@ class VolumeStreamsSpec extends AnyFunSuite with SparkSpec {
       expr(s"id % $dx").as("x"),
       expr(s"id % 97").as("label"),
     )
-    val vol = ChunkVolume.fromVoxels(vox, dz, dy, dx, 4, 3, 3)
+    val vol = ChunkVolume.fromVoxels(vox, dz, dy, dx, 4, 3, 3, spacing = (2.0, 3.0, 4.0))
 
     // batch 1: the lower half of the volume lands first
     vol.chunks.filter(col("cz") === 0).write.mode("append").parquet(inDir)
     val query = VolumeStreams.upscaleIngest(spark, inDir, outDir, vol.meta, s = 2)
     try {
       query.processAllAvailable()
-      val mid = ChunkStore.read(spark, outDir)
-      assert(mid.chunks.count() === vol.chunks.filter(col("cz") === 0).count() * 8)
+      // a zarr read fills absent cells, so count the chunk files landed
+      val landed = Files.list(java.nio.file.Paths.get(outDir))
+      try assert(landed.toArray.count(_.toString.matches(".*/\\d+\\.\\d+\\.\\d+")) ===
+        vol.chunks.filter(col("cz") === 0).count() * 8)
+      finally landed.close()
 
       // batch 2: the rest lands
       vol.chunks.filter(col("cz") === 1).write.mode("append").parquet(inDir)
       query.processAllAvailable()
     } finally query.stop()
 
-    val streamed = ChunkStore.read(spark, outDir).toVoxels.collect()
+    val back = ZarrStore.read(spark, outDir)
+    assert((back.meta.spacingX, back.meta.spacingY, back.meta.spacingZ) === ((2.0, 3.0, 4.0)))
+    val streamed = back.toVoxels.collect()
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
     val batch = vol.upscale(2).toVoxels.collect()
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap

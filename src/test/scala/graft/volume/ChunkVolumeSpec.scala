@@ -278,16 +278,20 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
   test("ChunkStore: zarr-style directory store round-trip + overwrite") {
     val dir = Files.createTempDirectory("cstore").toString + "/vol"
     ChunkStore.write(vol, dir, extraProvenance = Map("source" -> "fixture"))
-    // one file per chunk named cz.cy.cx + sidecar
+    // one file per chunk named cz.cy.cx + the zarr documents + the index
     val names = Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.toString)
     assert(names.exists(_.endsWith("/0.0.0")))
-    assert(names.exists(_.endsWith(ChunkVolume.SidecarName)))
-    val back = ChunkStore.read(spark, dir)
+    assert(Seq(".zarray", ".zattrs", ChunkStore.StatsIndexName).forall(d => names.exists(_.endsWith("/" + d))))
+    assert(Files.readString(java.nio.file.Paths.get(dir, ".zattrs")).contains("\"source\": \"fixture\""))
+    val back = ZarrStore.read(spark, dir)
     assert(back.meta === vol.meta)
     assert(collectVox(back.toVoxels) === collectVox(vox))
-    // overwrite replaces wholesale (reference rmtree semantics)
-    ChunkStore.write(vol.decimate(), dir)
-    val dec = ChunkStore.read(spark, dir)
+    // overwrite replaces wholesale (reference rmtree semantics); a zarr
+    // grid is uniform, so the decimated level is rechunked onto its own
+    val decimated = vol.decimate()
+    val dm = decimated.meta
+    ChunkStore.write(decimated.rechunk(dm.chunkZ, dm.chunkY, dm.chunkX), dir)
+    val dec = ZarrStore.read(spark, dir)
     assert(dec.meta.dimZ === (dz + 1) / 2)
     assert(collectVox(dec.toVoxels) === collectVox(vol.decimate().toVoxels))
   }

@@ -50,7 +50,7 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
       s"no progress lines in transcript:\n${lines.mkString("\n")}")
     assert(lines.exists(_.matches("\\[progress\\] stage \\d+ completed .*")))
     // verify_labels.py semantics on the written artifact
-    val back = ChunkStore.read(spark, outStore)
+    val back = ZarrStore.read(spark, outStore)
     assert(back.meta.dimZ === 12)
     assert(back.pointLookup(4, 8, 6) === Some(15564L + (2 / 2) * 10 + (4 / 4)))
   }
@@ -71,7 +71,7 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     assert(lines.exists(_.startsWith("Source shape (z,y,x): (16, 16, 16), dtype=MET_USHORT")))
     assert(lines.exists(_.contains("TIFF page granularity")))
     assert(lines.exists(_.startsWith("Upscaled shape (z,y,x): (32, 32, 32)")))
-    val back = ChunkStore.read(spark, outStore)
+    val back = ZarrStore.read(spark, outStore)
     assert(back.meta.dimZ === 32)
     // grid formula survives the upscale: voxel (9,9,9) ← source (4,4,4)
     assert(back.pointLookup(9, 9, 9) === Some(111L))

@@ -80,7 +80,7 @@ class UpscaleIdentitySpec extends AnyFunSuite with SparkSpec {
 
   test("internal chunk store: four upscale variants, identical stores") {
     val paths = assertSinkIdentity("ident_gcs", chunkFilesOnly = true)((v, p) => ChunkStore.write(v, p))
-    val voxels = paths.map(p => ChunkStore.read(spark, p.toString).toVoxels.collect().map(_.toString).sorted.toSeq)
+    val voxels = paths.map(p => ZarrStore.read(spark, p.toString).toVoxels.collect().map(_.toString).sorted.toSeq)
     voxels.tail.foreach(v => assert(v === voxels.head))
   }
 

@@ -63,6 +63,11 @@ class VolumeToolsSpec extends AnyFunSuite with SparkSpec {
     ChunkStore.write(up, storeOut)
     assert(VolumeTools.run(spark, Seq("verify", mhd, storeOut, "2", "1", "5", "3")).last ===
       "MATCH: label preserved")
+    // a directory that holds no zarr document is named, not misread
+    val bare = Files.createDirectory(dir.resolve("not_a_store")).toString
+    val e = intercept[IllegalArgumentException](VolumeTools.run(spark, Seq("verify", mhd, bare, "2", "1", "5", "3")))
+    assert(e.getMessage.contains(bare) && e.getMessage.contains(".zarray") && e.getMessage.contains("zarr.json"),
+      e.getMessage)
     // a zarr v3 store (`zarr.json`, no engine sidecar), as `UpscaleCli --format zarr3` writes
     val zarr3Out = dir.resolve("up3.zarr").toString
     Zarr3Store.write(up, zarr3Out)
@@ -83,6 +88,17 @@ class VolumeToolsSpec extends AnyFunSuite with SparkSpec {
     val lines = VolumeTools.run(spark, Seq("head", csv))
     assert(lines.last === "Number of regions: 2")
     assert(lines.head.startsWith("15564  mouse  Mus musculus"))
+    // an empty Level or Parent cell renders as null, as lookupById does
+    val sparse = dir.resolve("sparse_regions.csv")
+    Files.writeString(sparse,
+      """Region,RegionAbbr,RegionName,Level,Parent
+        |15564,mouse,Mus musculus,-1,0
+        |15575,NT,neural tube,,
+        |""".stripMargin)
+    assert(VolumeTools.run(spark, Seq("head", sparse.toString)) === Seq(
+      "15564  mouse  Mus musculus  level=-1 parent=0",
+      "15575  NT  neural tube  level=null parent=null",
+      "Number of regions: 2"))
   }
 
   test("usage error on unknown subcommand") {

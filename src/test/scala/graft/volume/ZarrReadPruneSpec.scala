@@ -66,13 +66,19 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
 
   /** Overwrite every chunk file of `store` but the one holding grid cell
     * (cz, cy, cx) with bytes no codec decodes; `n` files are expected.
+    * Returns the garbled files.
     */
-  private def garbleAllBut(store: String, l: Layout, cz: Int, cy: Int, cx: Int, n: Int): Unit = {
+  private def garbleAllBut(store: String, l: Layout, cz: Int, cy: Int, cx: Int, n: Int): Seq[Path] = {
     val owner = Paths.get(store).resolve(l.key(cz, cy, cx))
     val others = chunkFiles(store, l.isChunk).filterNot(_ == owner)
     assert(others.size === n, s"${l.name}: files besides $owner")
     others.foreach(Files.write(_, Array.tabulate[Byte](257)(i => (i * 37 + 11).toByte)))
+    others
   }
+
+  /** Every message in `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
 
   /** Overwrite in place the blob of the other inner cell in grid cell
     * (cz, cy, cx)'s shard, leaving the shard's index and its crc32c intact.
@@ -95,11 +101,15 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     for ((l, others) <- layouts.map(_ -> 15) :+ (shardedV3 -> 7); (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
       val store = tmp("arr")
       l.write(vol, store)
-      garbleAllBut(store, l, cz, cy, cx, others)
+      val garbled = garbleAllBut(store, l, cz, cy, cx, others)
       if (l == shardedV3) garbleSibling(store, cz, cy, cx)
 
       val back = l.read(store)
-      intercept[Exception](back.chunks.collect())
+      // the failure names the file it could not decode (for a shard: the
+      // shard file, whose index or inner blob is garbled)
+      val failed = messages(intercept[Exception](back.chunks.collect()))
+      val files = if (l == shardedV3) garbled :+ Paths.get(store).resolve(l.key(cz, cy, cx)) else garbled
+      assert(files.exists(f => failed.contains(f.toString)), s"${l.name}: no chunk file named in\n$failed")
       val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
       val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
       assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")

@@ -235,6 +235,14 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
       assert(back.meta.elementType === "MET_UINT")
       assert(collectVox(back.toVoxels) === expect, s"codec $codec")
     }
+    // the reused per-thread context writes the static entry's exact frames,
+    // also right after a blosc encode set it to another level
+    val src = Array.tabulate[Byte](1 << 16)(i => ((i * 7) % 97).toByte)
+    for (level <- Seq(1, 3, 1)) {
+      ZarrStore.BloscCodec("zstd", 5).compress(src)
+      assert(java.util.Arrays.equals(ZarrStore.ZstdCodec(level).compress(src),
+        com.github.luben.zstd.Zstd.compress(src, level)), s"zstd level $level")
+    }
   }
 
   test("blosc: container metadata round-trips; multi-block + stored blocks; every (codec, shuffle)") {
