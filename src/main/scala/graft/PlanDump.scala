@@ -11,11 +11,11 @@ object PlanDump {
       println(s"##### PLAN $name")
       SparkEntry.queries(name)(spark, d).explain("formatted")
     }
-    // point-lookup pruning evidence on a written store
+    // point-lookup pruning evidence on a written zarr store: the filter
+    // sits below the zarr_chunk_decode projection
     import graft.volume._
-    val vol = graft.queries.VolumeQueries.chunked(spark)
-    vol.write("/tmp/graft_plans/store")
-    val back = ChunkVolume.read(spark, "/tmp/graft_plans/store")
+    ZarrStore.write(graft.queries.VolumeQueries.chunked(spark), "/tmp/graft_plans/store")
+    val back = ZarrStore.read(spark, "/tmp/graft_plans/store")
     println("##### PLAN point_lookup_filter")
     import org.apache.spark.sql.functions._
     back.chunks.filter(col("z0") <= 7 && lit(7L) < col("z0") + col("nz")

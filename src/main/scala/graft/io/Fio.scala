@@ -115,7 +115,6 @@ final class FioRandomWrite private[io] (private val ch: java.nio.channels.FileCh
     while (bb.hasRemaining) p += ch.write(bb, p)
   }
   def writeFully(pos: Long, buf: Array[Byte]): Unit = writeFully(pos, buf, 0, buf.length)
-  def truncateTo(len: Long): Unit = { ch.truncate(len); () }
   def force(): Unit = ch.force(false)
   def close(): Unit = ch.close()
 }

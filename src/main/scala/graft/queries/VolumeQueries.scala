@@ -1057,7 +1057,7 @@ object VolumeQueries {
         val path = java.nio.file.Files.createTempDirectory("graft_btiff")
           .resolve("vol.tif").toString
         graft.volume.BigTiff.write(chunked(s), path)
-        graft.volume.BigTiff.read(s, path).toVoxels.orderBy("z", "y", "x")
+        graft.volume.Tiff.read(s, path).toVoxels.orderBy("z", "y", "x")
       },
       Some(s"""$voxCte
         SELECT z, y, x, label FROM vox ORDER BY z, y, x

@@ -44,6 +44,9 @@ class ZarrSource extends TableProvider with DataSourceRegister {
 object ZarrSource {
   val Name = "zarr"
 
+  /** A chunk row (the [[graft.volume.Chunk]] fields): this source's table
+    * and the streaming ingest's parquet input.
+    */
   val schema: StructType = StructType(Seq(
     StructField("cz", IntegerType, nullable = false),
     StructField("cy", IntegerType, nullable = false),

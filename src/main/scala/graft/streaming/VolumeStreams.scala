@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.sources.ZarrSource
 import graft.volume.{Chunk, ChunkStore, ChunkVolume, VolumeMeta, Zarr3Store, ZarrStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** Streaming volume ingest (SURVEY §7 north star, layered on §2.9's
   * observation that every volume operator is chunk-local): newly-landed
@@ -14,20 +14,6 @@ import org.apache.spark.sql.types._
   * no rewrites of previously-ingested output, idempotent per chunk file.
   */
 object VolumeStreams {
-
-  /** Schema of a chunk row on disk (matches the Chunk case class). */
-  val chunkSchema: StructType = StructType(Seq(
-    StructField("cz", IntegerType, nullable = false),
-    StructField("cy", IntegerType, nullable = false),
-    StructField("cx", IntegerType, nullable = false),
-    StructField("z0", LongType, nullable = false),
-    StructField("y0", LongType, nullable = false),
-    StructField("x0", LongType, nullable = false),
-    StructField("nz", IntegerType, nullable = false),
-    StructField("ny", IntegerType, nullable = false),
-    StructField("nx", IntegerType, nullable = false),
-    StructField("data", BinaryType, nullable = false),
-  ))
 
   /** Watch `inDir` for chunk parquet files; upscale ×s each micro-batch
     * and append the child chunks to the array at `outDir`, whose metadata
@@ -49,7 +35,7 @@ object VolumeStreams {
       s"unknown ingest format: $format")
     val outMeta = inputMeta.upscaled(s)
     spark.readStream
-      .schema(chunkSchema)
+      .schema(ZarrSource.schema)
       .parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -1,11 +1,10 @@
 package graft.volume
 
-import org.apache.spark.sql.SparkSession
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** BigTIFF multi-page slice export/import (K5 sink + S5 scan, reference
+/** BigTIFF multi-page slice export (K5 sink, reference
   * anno_upsampling.py:112–118 `TiffWriter(..., bigtiff=True)` writing one
-  * photometric-minisblack page per z slice).
+  * photometric-minisblack page per z slice). [[Tiff.read]] scans it back.
   *
   * Self-contained little-endian BigTIFF (magic 43, 8-byte offsets), one
   * uncompressed single-strip page per z. Every byte's file position is a
@@ -16,8 +15,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * chunks from executor tasks — no slab collect, no driver serialization
   * point, I/O parallelism = task parallelism. (Requires the output path
   * on a shared POSIX mount in multi-node deployments, like any side-file
-  * sink.) The reader mirrors the pattern: driver parses the tiny IFD
-  * chain, executors read their slices positionally.
+  * sink.)
   */
 object BigTiff {
 
@@ -81,16 +79,4 @@ object BigTiff {
       }
     }
   }
-
-  /** Scan a BigTIFF written by [[write]] back into a ChunkVolume (one
-    * (1, dimY, dimX) chunk per page; rechunk for other layouts).
-    * Delegates to the general [[Tiff.read]] scan (TiffForeignSpec pins
-    * bit-identical output on this format). The former own-format parser
-    * `readAllBytes`'d the WHOLE file on the driver just to reach the IFD
-    * chain — a multi-TB export would have OOM'd the driver before the
-    * first task launched; Tiff.parseMeta touches only the IFD structures
-    * with positioned reads.
-    */
-  def read(spark: SparkSession, path: String, spacing: (Double, Double, Double) = (1.0, 1.0, 1.0)): ChunkVolume =
-    Tiff.read(spark, path, spacing)
 }

@@ -147,39 +147,6 @@ object ChunkKernels {
     (ze / 2, ye / 2, xe / 2, onz, ony, onx, out)
   }
 
-  /** Extract the local-z = `z` face plane: (ny × nx) elements. */
-  def planeZ(data: Array[Byte], z: Int, ny: Int, nx: Int, bpp: Int): Array[Byte] = {
-    val out = ByteKernels.allocBytes(ny * nx * bpp)
-    System.arraycopy(data, z * ny * nx * bpp, out, 0, out.length)
-    out
-  }
-
-  /** Extract the local-y = `y` face plane: (nz × nx) elements. */
-  def planeY(data: Array[Byte], y: Int, nz: Int, ny: Int, nx: Int, bpp: Int): Array[Byte] = {
-    val out = ByteKernels.allocBytes(nz * nx * bpp)
-    var z = 0
-    while (z < nz) {
-      System.arraycopy(data, (z * ny + y) * nx * bpp, out, z * nx * bpp, nx * bpp)
-      z += 1
-    }
-    out
-  }
-
-  /** Extract the local-x = `x` face plane: (nz × ny) elements. */
-  def planeX(data: Array[Byte], x: Int, nz: Int, ny: Int, nx: Int, bpp: Int): Array[Byte] = {
-    val out = ByteKernels.allocBytes(nz * ny * bpp)
-    var z = 0
-    while (z < nz) {
-      var y = 0
-      while (y < ny) {
-        System.arraycopy(data, ((z * ny + y) * nx + x) * bpp, out, (z * ny + y) * bpp, bpp)
-        y += 1
-      }
-      z += 1
-    }
-    out
-  }
-
   /** 6-neighborhood outline stencil over one chunk given its six halo face
     * planes (wrap-around semantics supplied by the caller's halo exchange —
     * da.roll parity, upscale_streaming_enhance.py:107–119). A voxel keeps

@@ -19,16 +19,18 @@ object ChunkStore {
     */
   val StatsIndexName = ".graft_stats"
 
+  /** Chunk files are plain zstd level-1 frames. */
+  private val Codec = ZarrStore.ZstdCodec(level = 1)
+
   /** Overwrite semantics like the reference's rmtree, but ATOMIC
     * ([[ZarrStore.writeArray]]'s staging): a crashed overwrite never
     * leaves a mixed old/new store, and a published store always carries
     * its index.
     */
-  def write(vol: ChunkVolume, path: String, level: Int = 1,
-      extraProvenance: Map[String, String] = Map.empty): Unit = {
-    val zm = ZarrStore.metaOf(vol.meta, ZarrStore.ZstdCodec(level))
+  def write(vol: ChunkVolume, path: String, extraProvenance: Map[String, String] = Map.empty): Unit = {
+    val zm = ZarrStore.metaOf(vol.meta, Codec)
     val docs = Seq(".zarray" -> ZarrStore.zarrayJson(zm), ".zattrs" -> ZarrStore.zattrs(vol.meta, extraProvenance))
-    ZarrStore.writeArray(vol.chunks.sparkSession, path, docs)(landIndexed(vol.chunks, _, vol.meta, level))
+    ZarrStore.writeArray(vol.chunks.sparkSession, path, docs)(landIndexed(vol.chunks, _, vol.meta))
   }
 
   /** Append chunk files into a store in place — the incremental-ingest
@@ -37,13 +39,13 @@ object ChunkStore {
     * describes another layout; a chunk re-appearing overwrites its own
     * file and its index entry.
     */
-  def appendChunks(chunks: Dataset[Chunk], path: String, meta: VolumeMeta, level: Int = 1): Unit = {
-    val zm = ZarrStore.metaOf(meta, ZarrStore.ZstdCodec(level))
+  def appendChunks(chunks: Dataset[Chunk], path: String, meta: VolumeMeta): Unit = {
+    val zm = ZarrStore.metaOf(meta, Codec)
     implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
     ZarrStore.appendArray(chunks.sparkSession, path, ".zarray", ZarrStore.zarrayJson(zm), zm,
       ZarrStore.parseZarray) { dir =>
       ZarrStore.ensureAttrs(dir, meta)
-      landIndexed(chunks, dir, meta, level)
+      landIndexed(chunks, dir, meta)
     }
   }
 
@@ -51,14 +53,13 @@ object ChunkStore {
     * its chunks' `(key, lmin, lmax)` (integral element types only), and
     * merge those into the index.
     */
-  private def landIndexed(chunks: Dataset[Chunk], dir: String, meta: VolumeMeta, level: Int): Unit = {
+  private def landIndexed(chunks: Dataset[Chunk], dir: String, meta: VolumeMeta): Unit = {
     implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
     import chunks.sparkSession.implicits._
-    val codec = ZarrStore.ZstdCodec(level)
     val (bpp, unsigned, integral) = (meta.bytesPerVoxel, meta.isUnsigned, !meta.isFloating)
     val stats = chunks.mapPartitions(_.flatMap { c =>
       val key = ZarrStore.chunkKey(".", c.cz, c.cy, c.cx)
-      Fio.writeBytes(Fio.child(dir, key), ZarrStore.encodeChunkBytes(c, meta, codec))
+      Fio.writeBytes(Fio.child(dir, key), ZarrStore.encodeChunkBytes(c, meta, Codec))
       if (!integral) None
       else {
         val mm = ByteKernels.minMax(c.data, c.nz * c.ny * c.nx, bpp, unsigned)

@@ -1,6 +1,5 @@
 package graft.volume
 
-import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -267,16 +266,18 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     val CORE = 0; val ZM = 1; val ZP = 2; val YM = 3; val YP = 4; val XM = 5; val XP = 6
 
     val msgs = chunks.flatMap { c =>
-      import ChunkKernels._
       val core = (c.cz, c.cy, c.cx, CORE, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data)
+      // one-voxel-thick face slab at local (bz, by, bx)
+      def face(bz: Int, by: Int, bx: Int, bnz: Int, bny: Int, bnx: Int): Array[Byte] =
+        ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp, bz, by, bx, bnz, bny, bnx)
       // my top plane becomes the z-minus halo of chunk cz+1 (mod ncz), etc.
       val faces = Iterator(
-        (((c.cz + 1) % ncz, c.cy, c.cx), ZM, planeZ(c.data, c.nz - 1, c.ny, c.nx, bpp)),
-        (((c.cz - 1 + ncz) % ncz, c.cy, c.cx), ZP, planeZ(c.data, 0, c.ny, c.nx, bpp)),
-        ((c.cz, (c.cy + 1) % ncy, c.cx), YM, planeY(c.data, c.ny - 1, c.nz, c.ny, c.nx, bpp)),
-        ((c.cz, (c.cy - 1 + ncy) % ncy, c.cx), YP, planeY(c.data, 0, c.nz, c.ny, c.nx, bpp)),
-        ((c.cz, c.cy, (c.cx + 1) % ncx), XM, planeX(c.data, c.nx - 1, c.nz, c.ny, c.nx, bpp)),
-        ((c.cz, c.cy, (c.cx - 1 + ncx) % ncx), XP, planeX(c.data, 0, c.nz, c.ny, c.nx, bpp)),
+        (((c.cz + 1) % ncz, c.cy, c.cx), ZM, face(c.nz - 1, 0, 0, 1, c.ny, c.nx)),
+        (((c.cz - 1 + ncz) % ncz, c.cy, c.cx), ZP, face(0, 0, 0, 1, c.ny, c.nx)),
+        ((c.cz, (c.cy + 1) % ncy, c.cx), YM, face(0, c.ny - 1, 0, c.nz, 1, c.nx)),
+        ((c.cz, (c.cy - 1 + ncy) % ncy, c.cx), YP, face(0, 0, 0, c.nz, 1, c.nx)),
+        ((c.cz, c.cy, (c.cx + 1) % ncx), XM, face(0, 0, c.nx - 1, c.nz, c.ny, 1)),
+        ((c.cz, c.cy, (c.cx - 1 + ncx) % ncx), XP, face(0, 0, 0, c.nz, c.ny, 1)),
       ).map { case ((tz, ty, tx), side, plane) =>
         (tz, ty, tx, side, 0L, 0L, 0L, 0, 0, 0, plane)
       }
@@ -402,9 +403,8 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   /** The chunks that meet the half-open box [z0,z1)×[y0,y1)×[x0,x1), as
     * one Column predicate on the geometry columns. On a zarr read
     * Catalyst pushes it below the decode projection, so a dropped chunk's
-    * file is never read, and a parquet chunk store ([[ChunkVolume.read]])
-    * gets its upper bounds as scan filters. Chunks from an MHD or TIFF
-    * scan are all read, then dropped here.
+    * file is never read. Chunks from an MHD or TIFF scan are all read,
+    * then dropped here.
     */
   private def intersecting(z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): Dataset[Chunk] =
     chunks.filter(col("z0") < z1 && lit(z0) < col("z0") + col("nz")
@@ -739,9 +739,8 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     * Every other volume, a volume derived from a zarr read included, runs
     * a job: the one-voxel box of [[intersecting]] keeps only the owning
     * chunk, then one element is decoded. Its predicate prunes below the
-    * decode on a zarr grid and becomes scan filters on a parquet store;
-    * MHD and TIFF reads still read their chunks in partition order until
-    * the owner turns up.
+    * decode on a zarr grid; MHD and TIFF reads still read their chunks in
+    * partition order until the owner turns up.
     */
   def pointLookup(z: Long, y: Long, x: Long): Option[Long] = {
     require(!meta.isFloating, "pointLookup decodes integral labels")
@@ -759,35 +758,9 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
           .take(1).headOption
     }
   }
-
-  /** Chunk-store write (K1/K2): compressed parquet, one chunk per row,
-    * sorted WITHIN each task's partition by grid coordinate so point
-    * lookups prune on per-file/row-group min-max stats; plus the JSON
-    * provenance sidecar (K4, `.atlas_upscale_meta.json` analog).
-    *
-    * Deliberately NO global repartition: producers (reader, upscale)
-    * already emit locality-grouped chunks, and a range shuffle here would
-    * move the entire volume body through the shuffle for no pruning gain
-    * (per-file stats carry the same information). Use [[rechunk]]-style
-    * repartitioning explicitly if a different layout is required.
-    */
-  def write(
-      path: String,
-      extraProvenance: Map[String, String] = Map.empty,
-      compression: String = "zstd",
-  ): Unit = {
-    chunks.toDF()
-      .sortWithinPartitions(col("cz"), col("cy"), col("cx"))
-      .write.mode("overwrite")
-      .option("compression", compression)
-      .parquet(path)
-    writeSidecar(path, meta, extraProvenance)
-  }
 }
 
 object ChunkVolume {
-
-  val SidecarName = ".graft_volume_meta.json"
 
   /** Assemble a ChunkVolume from a dense VoxelTable (z,y,x,label) on a
     * uniform chunk grid — the inverse of toVoxels. Voxels absent from the
@@ -834,13 +807,6 @@ object ChunkVolume {
     v
   }
 
-  /** Read back a chunk store written by [[ChunkVolume.write]]. */
-  def read(spark: SparkSession, path: String): ChunkVolume = {
-    val meta = readSidecar(path)
-    import spark.implicits._
-    ChunkVolume(spark.read.parquet(path).as[Chunk], meta)
-  }
-
   /** The element of chunk `c` at global voxel (z, y, x), which `c` must hold. */
   private[volume] def valueAt(c: Chunk, z: Long, y: Long, x: Long, bpp: Int, unsigned: Boolean): Long =
     ChunkKernels.decodeLong(c.data,
@@ -853,37 +819,4 @@ object ChunkVolume {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-
-  def writeSidecar(path: String, meta: VolumeMeta, extra: Map[String, String])(
-      implicit fc: FioConf): Unit = {
-    Fio.mkdirs(path)
-    val fields = Seq(
-      "dimZ" -> meta.dimZ.toString, "dimY" -> meta.dimY.toString, "dimX" -> meta.dimX.toString,
-      "chunkZ" -> meta.chunkZ.toString, "chunkY" -> meta.chunkY.toString, "chunkX" -> meta.chunkX.toString,
-      "ncz" -> meta.ncz.toString, "ncy" -> meta.ncy.toString, "ncx" -> meta.ncx.toString,
-      "spacingX" -> meta.spacingX.toString, "spacingY" -> meta.spacingY.toString, "spacingZ" -> meta.spacingZ.toString,
-    ).map { case (k, v) => s"  ${jsonStr(k)}: $v" } ++
-      Seq(s"  ${jsonStr("elementType")}: ${jsonStr(meta.elementType)}") ++
-      extra.toSeq.sortBy(_._1).map { case (k, v) => s"  ${jsonStr(k)}: ${jsonStr(v)}" }
-    val json = fields.mkString("{\n", ",\n", "\n}\n")
-    Fio.writeString(Fio.child(path, SidecarName), json)
-  }
-
-  def readSidecar(path: String)(implicit fc: FioConf): VolumeMeta = {
-    val json = Fio.readString(Fio.child(path, SidecarName))
-    def num(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*([-0-9.Ee+]+)").r.findFirstMatchIn(json)
-      m.getOrElse(throw new IllegalArgumentException(s"sidecar missing $k")).group(1)
-    }
-    def str(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json)
-      m.getOrElse(throw new IllegalArgumentException(s"sidecar missing $k")).group(1)
-    }
-    VolumeMeta(
-      dimZ = num("dimZ").toLong, dimY = num("dimY").toLong, dimX = num("dimX").toLong,
-      chunkZ = num("chunkZ").toInt, chunkY = num("chunkY").toInt, chunkX = num("chunkX").toInt,
-      ncz = num("ncz").toInt, ncy = num("ncy").toInt, ncx = num("ncx").toInt,
-      elementType = str("elementType"),
-      spacingX = num("spacingX").toDouble, spacingY = num("spacingY").toDouble, spacingZ = num("spacingZ").toDouble)
-  }
 }

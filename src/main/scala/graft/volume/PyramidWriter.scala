@@ -104,10 +104,29 @@ object PyramidWriter {
       Fio.writeString(Fio.child(dir, ".zgroup"), "{\n    \"zarr_format\": 2\n}")
       Fio.writeString(Fio.child(dir, ".zattrs"), multiscalesJson(vol.meta, upscaleFactor, levels))
       writeConsolidatedMetadata(dir, levels)
-      ChunkVolume.writeSidecar(dir, vol.meta, Map(
+      writeSidecar(dir, vol.meta, Map(
         "pyramid_levels" -> levels.toString,
         "upscale_factor" -> upscaleFactor.toString))
     }
+  }
+
+  /** The group's JSON provenance sidecar (K4, the reference's
+    * `.atlas_upscale_meta.json` analog): level 0's dims, chunk grid,
+    * spacing and element type, then the `extra` fields sorted by key.
+    */
+  private val SidecarName = ".graft_volume_meta.json"
+
+  private def writeSidecar(path: String, meta: VolumeMeta, extra: Map[String, String])(
+      implicit fc: FioConf): Unit = {
+    val fields = Seq(
+      "dimZ" -> meta.dimZ.toString, "dimY" -> meta.dimY.toString, "dimX" -> meta.dimX.toString,
+      "chunkZ" -> meta.chunkZ.toString, "chunkY" -> meta.chunkY.toString, "chunkX" -> meta.chunkX.toString,
+      "ncz" -> meta.ncz.toString, "ncy" -> meta.ncy.toString, "ncx" -> meta.ncx.toString,
+      "spacingX" -> meta.spacingX.toString, "spacingY" -> meta.spacingY.toString, "spacingZ" -> meta.spacingZ.toString,
+    ).map { case (k, v) => s"  ${jsonStr(k)}: $v" } ++
+      Seq(s"  ${jsonStr("elementType")}: ${jsonStr(meta.elementType)}") ++
+      extra.toSeq.sortBy(_._1).map { case (k, v) => s"  ${jsonStr(k)}: ${jsonStr(v)}" }
+    Fio.writeString(Fio.child(path, SidecarName), fields.mkString("{\n", ",\n", "\n}\n"))
   }
 
   /** Zarr v2 CONSOLIDATED metadata (`.zmetadata`,

@@ -14,7 +14,7 @@ import java.util.zip.Inflater
   * specs. [[BigTiff]] remains the engine's own page-per-slice export
   * format; this reader accepts FOREIGN files the engine never wrote.
   *
-  * Scale shape mirrors [[BigTiff.read]]: the driver parses only the IFD
+  * Scale shape mirrors [[BigTiff.write]]: the driver parses only the IFD
   * chain and strip/tile tables with positioned reads — O(pages + strips)
   * metadata, never the pixel data, never `readAllBytes` of a multi-TB
   * file — and executor tasks then read/decode exactly their pages'

@@ -381,8 +381,9 @@ object Zarr3Store {
 
   /** Encode one SHARD chunk (the full shard extent, trimmed at array
     * edges) into its shard-file bytes: split into inner chunks on the
-    * global inner grid, encode each through the inner pipeline, lay the
-    * index out per `sh`. Inner cells wholly outside the array are
+    * global inner grid, encode each through the inner pipeline, and put
+    * the index after the data (the NGFF default, `index_location` "end";
+    * `sh` must declare it). Inner cells wholly outside the array are
     * recorded missing.
     */
   private[volume] def encodeShard(
@@ -437,8 +438,7 @@ object Zarr3Store {
     // fully overwritten: data cells pack contiguously, the index span
     // (16·nCells + optional crc) is written entry by entry below
     val out = ByteKernels.allocBytes(total.toInt)
-    val dataBase = if (sh.indexAtEnd) 0 else idxLen
-    var off = dataBase.toLong
+    var off = 0L
     cell = 0
     while (cell < nCells) {
       if (blobs(cell) != null) {
@@ -449,12 +449,10 @@ object Zarr3Store {
       }
       cell += 1
     }
-    val idx = java.nio.ByteBuffer.wrap(out,
-      if (sh.indexAtEnd) (total - idxLen).toInt else 0, idxLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val idxStart = (total - idxLen).toInt
+    val idx = java.nio.ByteBuffer.wrap(out, idxStart, idxLen).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     entries.foreach(idx.putLong)
     if (sh.indexCrc32c) {
-      val idxStart = if (sh.indexAtEnd) (total - idxLen).toInt else 0
       val crcTmp = new java.util.zip.CRC32C
       crcTmp.update(out, idxStart, nCells * 16)
       idx.putInt(crcTmp.getValue.toInt)
@@ -528,20 +526,21 @@ object Zarr3Store {
     * executor task assembles and lands its shards' files independently —
     * zero shuffle, the BigTiff positioned-write discipline at shard
     * granularity. `innerShape` must divide the volume's chunk shape.
+    * Each shard's crc32c'd index sits at the end of its file (the NGFF
+    * default); [[read]] accepts either index location.
     */
   def writeSharded(
       vol: ChunkVolume,
       path: String,
       innerShape: (Int, Int, Int),
       codec: Codec = ZstdCodec(),
-      indexAtEnd: Boolean = true,
       extraAttrs: Map[String, String] = Map.empty): Unit = {
     val m = vol.meta
     val inner = Seq(innerShape._1, innerShape._2, innerShape._3)
     require(Seq(m.chunkZ, m.chunkY, m.chunkX).zip(inner).forall { case (s, i) => i > 0 && s % i == 0 },
       s"inner shape ${inner.mkString(",")} must divide the shard (chunk) shape " +
         s"(${m.chunkZ},${m.chunkY},${m.chunkX}) — rechunk the volume to the shard grid first")
-    val sh = ShardingMeta(inner, indexCrc32c = true, indexAtEnd = indexAtEnd)
+    val sh = ShardingMeta(inner, indexCrc32c = true, indexAtEnd = true)
     val zm = metaOf(m, codec)
     val ivm = innerVm(zm, sh)
     ZarrStore.writeArray(vol.chunks.sparkSession, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)))(

@@ -110,7 +110,7 @@ class FioSpec extends AnyFunSuite with SparkSpec {
     // BigTIFF positioned-write sink, read back through the TIFF scan
     val bt = s"file://$dir/vol.tif"
     BigTiff.write(vol, bt)
-    val backT = BigTiff.read(spark, bt)
+    val backT = Tiff.read(spark, bt)
     assert(voxelSums(backT) == voxelSums(vol))
   }
 

@@ -23,7 +23,7 @@ class BigTiffSpec extends AnyFunSuite with SparkSpec {
       val vol = mkVol(5, 6, 7, et)
       val path = Files.createTempDirectory("btiff").resolve(s"v_$et.tif").toString
       BigTiff.write(vol, path)
-      val back = BigTiff.read(spark, path)
+      val back = Tiff.read(spark, path)
       assert(back.meta.elementType === et)
       assert(back.meta.dimZ === 5 && back.meta.dimY === 6 && back.meta.dimX === 7)
       val a = vol.toVoxels.collect().map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
@@ -73,7 +73,7 @@ class BigTiffSpec extends AnyFunSuite with SparkSpec {
     val vol = MhdReader.read(spark, MhdMeta.parse(dir.resolve("f.mhd").toString), 2, 3, 4)
     val path = dir.resolve("f.tif").toString
     BigTiff.write(vol, path)
-    val back = BigTiff.read(spark, path)
+    val back = Tiff.read(spark, path)
     assert(back.meta.elementType === "MET_FLOAT")
     val vals = back.toVoxelsDouble.orderBy("z", "y", "x").collect().map(_.getDouble(3))
     assert(vals.toSeq === (0 until (dz * dy * dx).toInt).map(_ * 0.5))

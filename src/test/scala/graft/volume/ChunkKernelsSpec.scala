@@ -103,11 +103,13 @@ class ChunkKernelsSpec extends AnyFunSuite {
     def label(z: Int, y: Int, x: Int): Long = (z / 2 * 100 + y / 2 * 10 + x / 3).toLong
     val data = pack(nz, ny, nx, label)
     import ChunkKernels._
+    def face(bz: Int, by: Int, bx: Int, bnz: Int, bny: Int, bnx: Int): Array[Byte] =
+      extractBox(data, ny, nx, 4, bz, by, bx, bnz, bny, bnx)
     val out = outline(
       data, nz, ny, nx, 4,
-      zm = planeZ(data, nz - 1, ny, nx, 4), zp = planeZ(data, 0, ny, nx, 4),
-      ym = planeY(data, ny - 1, nz, ny, nx, 4), yp = planeY(data, 0, nz, ny, nx, 4),
-      xm = planeX(data, nx - 1, nz, ny, nx, 4), xp = planeX(data, 0, nz, ny, nx, 4))
+      zm = face(nz - 1, 0, 0, 1, ny, nx), zp = face(0, 0, 0, 1, ny, nx),
+      ym = face(0, ny - 1, 0, nz, 1, nx), yp = face(0, 0, 0, nz, 1, nx),
+      xm = face(0, 0, nx - 1, nz, ny, 1), xp = face(0, 0, 0, nz, ny, 1))
     for (z <- 0 until nz; y <- 0 until ny; x <- 0 until nx) {
       val v = label(z, y, x)
       val differs = Seq(

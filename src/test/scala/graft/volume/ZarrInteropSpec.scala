@@ -91,7 +91,7 @@ class ZarrInteropSpec extends AnyFunSuite with SparkSpec {
     Zarr3Store.write(vol, plain, ZarrStore.GzipCodec(5))
     // inner (1,3,2) splits each (2,3,4) shard into 4 cells; the z = 5
     // cells of the last shard row lie outside the array (missing entries)
-    Zarr3Store.writeSharded(vol, sharded, (1, 3, 2), ZarrStore.GzipCodec(5), indexAtEnd = true)
+    Zarr3Store.writeSharded(vol, sharded, (1, 3, 2), ZarrStore.GzipCodec(5))
     // independent reader of the v3 spec: zarr.json, c/-prefixed keys, the
     // bytes+gzip pipeline, and the sharding_indexed (offset, nbytes)
     // uint64-LE index with its crc32c (Castagnoli, written out here)

@@ -191,6 +191,17 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
       "0/0.0.1 0/0.0.2 0/0.1.0 0/0.1.1 0/0.1.2 0/1.0.0 0/1.0.1 0/1.0.2 0/1.1.0 " +
       "0/1.1.1 0/1.1.2 0/2.0.0 0/2.0.1 0/2.0.2 0/2.1.0 0/2.1.1 0/2.1.2 1/.zarray " +
       "1/.zattrs 1/0.0.0 1/0.0.1 1/1.0.0 1/1.0.1"))
+    // the provenance sidecar: level 0's geometry plus the pyramid fields
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val side = JsonMethods.parse(Files.readString(Paths.get(pyr, ".graft_volume_meta.json")))
+    assert(side.asInstanceOf[JObject].obj.toMap === Map[String, JValue](
+      "dimZ" -> JInt(7), "dimY" -> JInt(6), "dimX" -> JInt(5),
+      "chunkZ" -> JInt(3), "chunkY" -> JInt(4), "chunkX" -> JInt(2),
+      "ncz" -> JInt(3), "ncy" -> JInt(2), "ncx" -> JInt(3),
+      "spacingX" -> JDouble(0.5), "spacingY" -> JDouble(0.25), "spacingZ" -> JDouble(2.0),
+      "elementType" -> JString("MET_UINT"),
+      "pyramid_levels" -> JString("2"), "upscale_factor" -> JString("2")))
   }
 
   test("parseZarray: spec fields, defaults, and unsupported-codec guard") {
