@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.io.{Fio, FioConf}
-import graft.volume.{AtomicDir, Chunk, ChunkStore, UpscaleCli, VolumeMeta, ZarrStore}
+import graft.volume.{Chunk, Landing, UpscaleCli, VolumeMeta, ZarrStore}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -149,28 +149,24 @@ object ChunkPacking {
 }
 
 /** DSv2 WRITE path: `chunkDf.write.format("zarr").save(path)` lands chunk
-  * files from executor tasks; the driver writes `.zarray` once up front
-  * (array geometry from write options on first write, or the existing
-  * store's metadata on append). Rows must match [[ZarrSource.schema]]
-  * (what `format("zarr")` reads and `ChunkVolume.chunks.toDF` produces).
+  * files from executor tasks; the driver stages `.zarray` and `.zattrs`
+  * up front (geometry from write options on first write, or the existing
+  * store's metadata on append, `.zattrs` then only if absent). Rows must
+  * match [[ZarrSource.schema]] (what `format("zarr")` reads and
+  * `ChunkVolume.chunks.toDF` produces).
   *
-  * Both modes publish ATOMICALLY at job commit; a job that fails (or a
-  * driver that crashes) before commit leaves the destination exactly as
-  * it was — never a partial store where missing chunks read as
-  * fill_value sparsity (reference overwrite semantics,
-  * upscale_streaming.py:118–127):
-  *
-  *  - `mode("overwrite")` (and first write to a fresh path) stages the
-  *    whole array in a temp sibling; commit swaps it in with O(1)
-  *    renames and retires the old tree in the background ([[AtomicDir]])
-  *    — no O(files) driver truncate walk, ever.
-  *  - `mode("append")` upserts chunk files idempotently (a re-landed
-  *    coordinate overwrites its own file — the streaming-ingest
-  *    contract). Tasks stage into a hidden `.__staging/<id>/` inside the
-  *    store (invisible to readers, which address chunks by coordinate
-  *    and never list); commit publishes each staged file with an atomic
-  *    per-file rename, so readers see each chunk old-or-new, never torn,
-  *    and an uncommitted job publishes nothing.
+  * The write goes through the batch writers' [[Landing]], each task
+  * landing each chunk through their one step ([[ZarrStore.ChunkSink]]),
+  * and publishes ATOMICALLY at job commit: a job that fails (or a driver
+  * that crashes) before commit leaves the destination exactly as it was
+  * (reference overwrite semantics, upscale_streaming.py:118–127).
+  * `mode("overwrite")` and a first write are a swap: the array is staged
+  * in a temp sibling and swapped in with O(1) renames — no O(files)
+  * driver truncate walk, ever. `mode("append")` to an existing array
+  * upserts chunk files idempotently (a re-landed coordinate replaces its
+  * own file — the streaming-ingest contract): staged inside the store,
+  * published by per-file atomic renames, so readers see each chunk
+  * old-or-new, never torn.
   *
   * First-write options: `dimZ dimY dimX chunkZ chunkY chunkX`
   * (required), `elementType` (MET_* tag, default MET_UINT), and
@@ -186,60 +182,40 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
   override def build(): Write = new Write with BatchWrite {
     override def toBatch: BatchWrite = this
 
-    // resolved on the driver in createBatchWriterFactory, consumed by
+    // opened on the driver in createBatchWriterFactory, consumed by
     // commit/abort (DSv2 calls them on the same BatchWrite instance)
-    @volatile private var staging: StoreStaging = _
+    @volatile private var landing: Landing = _
 
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
-      // driver-side init: pick the staging layout, then resolve-or-create
-      // the array metadata so every task sees a consistent geometry
       implicit val fc: FioConf = FioConf.of(org.apache.spark.sql.SparkSession.active)
-      val dest = Fio.qualify(path)
-      AtomicDir.sweepLeftovers(dest)
-      val appendToExisting = !doTruncate && Fio.exists(Fio.child(dest, ".zarray"))
-      staging =
-        if (appendToExisting) StoreStaging.Append(dest)
-        else StoreStaging.Swap(dest)
-      val writeDir = staging.writeDir
-      Fio.mkdirs(writeDir)
-      val opts = info.options
-      val (zm, vm) =
-        if (appendToExisting) ZarrStore.readMeta(dest)
-        else {
-          val codec = UpscaleCli.zarrCodec(Option(opts.get("compressor")).getOrElse("zstd"))
-          ZarrStore.initArray(writeDir, ZarrSource.firstWriteMeta(opts), codec)
-        }
-      new ZarrWriterFactory(writeDir, zm.dimSeparator,
-        ZarrStore.forElements(zm.codec, vm.bytesPerVoxel), vm, fc)
+      landing = Landing.open(path, if (doTruncate) None else Some(".zarray"))
+      val (zm, vm) = landing match {
+        case _: Landing.Append => ZarrStore.readMeta(landing.dest)
+        case _: Landing.Swap =>
+          val opts = info.options
+          val vm = ZarrSource.firstWriteMeta(opts)
+          (ZarrStore.metaOf(vm, UpscaleCli.zarrCodec(Option(opts.get("compressor")).getOrElse("zstd"))), vm)
+      }
+      val files = ZarrStore.v2Files(zm, vm, Map.empty)
+      files.stage(landing)
+      new ZarrWriterFactory(landing.dir, files.sink, fc)
     }
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      staging match {
-        // chunks landing in an existing array outdate a ChunkStore value
-        // index: drop it before they publish
-        case a: StoreStaging.Append =>
-          ChunkStore.dropStatsIndex(a.dest)(FioConf.of(org.apache.spark.sql.SparkSession.active))
-        case _: StoreStaging.Swap => ()
-      }
-      staging.commit() // chunk + metadata files ARE the store
-    }
-    override def abort(messages: Array[WriterCommitMessage]): Unit = staging.abort()
+    override def commit(messages: Array[WriterCommitMessage]): Unit = landing.commit(None)
+    override def abort(messages: Array[WriterCommitMessage]): Unit = landing.abort()
   }
 }
 
-class ZarrWriterFactory(dir: String, sep: String, codec: ZarrStore.Codec, vm: VolumeMeta, fc: FioConf)
+private[sources] class ZarrWriterFactory(dir: String, sink: ZarrStore.ChunkSink, fc: FioConf)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      override def write(row: InternalRow): Unit = {
-        val c = Chunk(
+      override def write(row: InternalRow): Unit =
+        sink.land(dir, Chunk(
           row.getInt(0), row.getInt(1), row.getInt(2),
           row.getLong(3), row.getLong(4), row.getLong(5),
           row.getInt(6), row.getInt(7), row.getInt(8),
-          row.getBinary(9))
-        Fio.writeBytes(Fio.child(dir, ZarrStore.chunkKey(sep, c.cz, c.cy, c.cx)),
-          ZarrStore.encodeChunkBytes(c, vm, codec))(fc)
-      }
+          row.getBinary(9)))(fc)
       override def commit(): WriterCommitMessage = new WriterCommitMessage {}
       override def abort(): Unit = ()
       override def close(): Unit = ()

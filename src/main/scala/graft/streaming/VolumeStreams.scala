@@ -12,6 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Because upscale emits aligned child chunks with no shuffle, the
   * incremental pipeline is exactly the batch pipeline per micro-batch —
   * no rewrites of previously-ingested output, idempotent per chunk file.
+  * Each micro-batch publishes all-or-nothing ([[graft.volume.Landing]]):
+  * a failed batch leaves the array as it was, or absent if it was first.
   */
 object VolumeStreams {
 

@@ -7,39 +7,35 @@ import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
 /** Atomic publish/retire for store directories (zarr arrays, OME-Zarr
-  * groups).
+  * groups): the primitives under [[Landing]]. Its swap stages a store in
+  * a [[tempSibling]] and [[publish]]es it; both of its forms retire what
+  * an aborted write landed with [[deleteInBackground]].
   *
   * The reference's overwrite is all-or-nothing: pre-delete the store,
-  * then write it fully (upscale_streaming.py:118–127). Reproducing that
-  * literally on Spark has two scale problems: a driver-side recursive
-  * delete of the existing store is an O(files) stall (minutes at the ~1M
-  * chunk files of a 100 TB array), and a job that crashes mid-write
-  * publishes a partial store where missing chunks are indistinguishable
-  * from legitimate fill_value sparsity. This helper restores both
-  * properties with O(1) synchronous driver work:
+  * then write it fully (upscale_streaming.py:118–127). Literally on Spark
+  * that is an O(files) driver-side delete (minutes at the ~1M chunk files
+  * of a 100 TB array), and a job that crashes mid-write publishes a
+  * partial store whose missing chunks read as fill_value sparsity. These
+  * primitives keep both properties with O(1) synchronous driver work:
   *
-  *  - writers build the new store in a hidden TEMP SIBLING
+  *  - the new store is built in a hidden TEMP SIBLING
   *    (`<store>.__tmp-<id>`) while readers keep seeing the old store;
   *  - publish = at most two metadata-only renames (existing store aside
   *    to `<store>.__trash-<id>`, temp into place) — atomic on POSIX
   *    filesystems and HDFS, so a concurrent reader sees the OLD store or
-  *    the NEW one, never a mixture, and a job failure before publish
-  *    leaves the old store untouched;
-  *  - the retired tree is deleted on a background daemon thread, and
-  *    temp/trash leftovers from crashed processes are swept
-  *    opportunistically by the next write to the same destination, so no
-  *    job ever blocks on an O(files) delete.
+  *    the NEW one, never a mixture;
+  *  - retired trees are deleted on a background daemon thread, and
+  *    temp/trash leftovers of crashed processes are swept by the next
+  *    write to the same destination, so no job blocks on an O(files)
+  *    delete.
   *
   * Paths resolve through the Hadoop FileSystem API (graft.io.Fio), so the
-  * same publish protocol runs on `file://` and `hdfs://`. CAVEAT — object
-  * stores: S3A "rename" is a server-side copy, O(bytes) and non-atomic,
-  * so on `s3a://` this protocol degrades to eventual-publish without the
-  * atomicity guarantee; production object-store deployments should point
-  * stores at a posix/HDFS tier or accept the copy cost (the Hadoop
-  * S3A committer literature documents the same tradeoff).
-  *
-  * Concurrent writers to the SAME destination are undefined (as in the
-  * reference).
+  * same protocol runs on `file://` and `hdfs://`. CAVEAT — object stores:
+  * S3A "rename" is a server-side copy, O(bytes) and non-atomic, so on
+  * `s3a://` this degrades to eventual-publish without the atomicity
+  * guarantee (the Hadoop S3A committer literature documents the same
+  * tradeoff). Concurrent writers to the SAME destination are undefined
+  * (as in the reference).
   */
 object AtomicDir {
 
@@ -57,21 +53,6 @@ object AtomicDir {
 
   /** A fresh hidden sibling to stage a new store tree in. */
   def tempSibling(dest: String)(implicit fc: FioConf): String = sibling(dest, ".__tmp-")
-
-  /** Build a new store tree at `dest` all-or-nothing: sweep crash
-    * leftovers, let `body` fill a fresh temp sibling, then [[publish]]
-    * it — or, if `body` throws, delete the sibling in the background and
-    * rethrow, leaving any existing store untouched.
-    */
-  def stage(dest: String)(body: String => Unit)(implicit fc: FioConf): Unit = {
-    val d = Fio.qualify(dest)
-    sweepLeftovers(d)
-    val dir = tempSibling(d)
-    Fio.mkdirs(dir)
-    try body(dir)
-    catch { case e: Throwable => deleteInBackground(dir); throw e }
-    publish(dir, d)
-  }
 
   /** Publish `tmp` at `dest`: rename any existing `dest` aside, move
     * `tmp` into place, retire the old tree in the background. If the

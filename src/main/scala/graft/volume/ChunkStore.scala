@@ -22,57 +22,52 @@ object ChunkStore {
   /** Chunk files are plain zstd level-1 frames. */
   private val Codec = ZarrStore.ZstdCodec(level = 1)
 
-  /** Overwrite semantics like the reference's rmtree, but ATOMIC
-    * ([[ZarrStore.writeArray]]'s staging): a crashed overwrite never
-    * leaves a mixed old/new store, and a published store always carries
-    * its index.
-    */
-  def write(vol: ChunkVolume, path: String, extraProvenance: Map[String, String] = Map.empty): Unit = {
-    val zm = ZarrStore.metaOf(vol.meta, Codec)
-    val docs = Seq(".zarray" -> ZarrStore.zarrayJson(zm), ".zattrs" -> ZarrStore.zattrs(vol.meta, extraProvenance))
-    ZarrStore.writeArray(vol.chunks.sparkSession, path, docs)(landIndexed(vol.chunks, _, vol.meta))
-  }
+  /** One index entry: chunk key, lmin, lmax. */
+  type IndexEntry = (String, Long, Long)
 
-  /** Append chunk files into a store in place — the incremental-ingest
-    * building block used by the streaming path. Writes `.zarray` and
-    * `.zattrs` on the first call and refuses a store whose `.zarray`
-    * describes another layout; a chunk re-appearing overwrites its own
-    * file and its index entry.
+  /** Overwrite semantics like the reference's rmtree, but ATOMIC (a
+    * [[Landing.Swap]]): a crashed overwrite never leaves a mixed old/new
+    * store, and a published store always carries its index.
     */
-  def appendChunks(chunks: Dataset[Chunk], path: String, meta: VolumeMeta): Unit = {
-    val zm = ZarrStore.metaOf(meta, Codec)
+  def write(vol: ChunkVolume, path: String, extraProvenance: Map[String, String] = Map.empty): Unit =
+    land(vol.chunks, path, vol.meta, extraProvenance, append = false)
+
+  /** Append chunk files into a store — the streaming path's building
+    * block, as [[ZarrStore.appendChunks]], but a chunk re-appearing also
+    * replaces its index entry once the files publish.
+    */
+  def appendChunks(chunks: Dataset[Chunk], path: String, meta: VolumeMeta): Unit =
+    land(chunks, path, meta, Map.empty, append = true)
+
+  /** Encode and land every chunk from executor tasks through one
+    * [[Landing]], each task returning its chunks' `(key, lmin, lmax)`
+    * (integral element types only), which the landing's commit writes
+    * into the index.
+    */
+  private def land(chunks: Dataset[Chunk], path: String, meta: VolumeMeta,
+      attrs: Map[String, String], append: Boolean): Unit = {
     implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    ZarrStore.appendArray(chunks.sparkSession, path, ".zarray", ZarrStore.zarrayJson(zm), zm,
-      ZarrStore.parseZarray) { dir =>
-      ZarrStore.ensureAttrs(dir, meta)
-      landIndexed(chunks, dir, meta)
+    import chunks.sparkSession.implicits._
+    val files = ZarrStore.v2Files(ZarrStore.metaOf(meta, Codec), meta, attrs)
+    val (bpp, unsigned, integral) = (meta.bytesPerVoxel, meta.isUnsigned, !meta.isFloating)
+    Landing.run(path, if (append) Some(".zarray") else None) { l =>
+      files.stage(l)
+      val (dir, sink) = (l.dir, files.sink)
+      Some(chunks.mapPartitions(_.flatMap { c =>
+        val key = sink.land(dir, c)
+        if (!integral) None
+        else {
+          val mm = ByteKernels.minMax(c.data, c.nz * c.ny * c.nx, bpp, unsigned)
+          Some((key, mm(0), mm(1)))
+        }
+      }).collect().toSeq) // ~40 B per chunk: 1M chunks ≈ 40 MB on the driver, once per write
     }
   }
 
-  /** Encode and land every chunk from executor tasks, each task returning
-    * its chunks' `(key, lmin, lmax)` (integral element types only), and
-    * merge those into the index.
+  /** Merge (key, lmin, lmax) entries into the index of the store at
+    * `dir` atomically (re-appended coords take the newest entry).
     */
-  private def landIndexed(chunks: Dataset[Chunk], dir: String, meta: VolumeMeta): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    import chunks.sparkSession.implicits._
-    val (bpp, unsigned, integral) = (meta.bytesPerVoxel, meta.isUnsigned, !meta.isFloating)
-    val stats = chunks.mapPartitions(_.flatMap { c =>
-      val key = ZarrStore.chunkKey(".", c.cz, c.cy, c.cx)
-      Fio.writeBytes(Fio.child(dir, key), ZarrStore.encodeChunkBytes(c, meta, Codec))
-      if (!integral) None
-      else {
-        val mm = ByteKernels.minMax(c.data, c.nz * c.ny * c.nx, bpp, unsigned)
-        Some((key, mm(0), mm(1)))
-      }
-    }).collect() // ~40 B per chunk: 1M chunks ≈ 40 MB on the driver, once per write
-    mergeStatsIndex(dir, stats)
-  }
-
-  /** Merge (key, lmin, lmax) entries into the index atomically
-    * (re-appended coords take the newest entry).
-    */
-  private def mergeStatsIndex(dir: String, entries: Seq[(String, Long, Long)])(
+  private[volume] def mergeStatsIndex(dir: String, entries: Seq[IndexEntry])(
       implicit fc: FioConf): Unit = {
     val merged = readStatsIndex(dir).getOrElse(Map.empty) ++
       entries.map { case (n, lo, hi) => n -> (lo, hi) }
@@ -96,12 +91,13 @@ object ChunkStore {
     }.toMap)
   }
 
-  /** Drop the index of a store that another writer is about to land
-    * chunks into ([[ZarrStore.appendChunks]], a `format("zarr")` append):
-    * its entries would be stale, and without it [[findLabel]] decodes
-    * every landed chunk — slower, never wrong.
+  /** Drop the index of a store that an unindexed append is about to
+    * publish chunks into ([[Landing.Append]]'s commit, for
+    * [[ZarrStore.appendChunks]] and a `format("zarr")` append): its
+    * entries would be stale, and without it [[findLabel]] decodes every
+    * landed chunk — slower, never wrong.
     */
-  private[graft] def dropStatsIndex(dir: String)(implicit fc: FioConf): Unit =
+  private[volume] def dropStatsIndex(dir: String)(implicit fc: FioConf): Unit =
     Fio.delete(Fio.child(dir, StatsIndexName))
 
   /** "Which chunks contain label X, and how often?" over any zarr v2

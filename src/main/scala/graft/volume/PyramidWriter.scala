@@ -60,11 +60,12 @@ object PyramidWriter {
        |}
        |""".stripMargin
 
-  /** The one level loop of both dialects: build the pyramid, hand level
-    * i to `writeLevel` at `<group>/i`, then let `finish` add the group
-    * documents — all staged and published as one group ([[AtomicDir]]):
-    * overwrite semantics like the reference's rmtree, but atomic and
-    * without an O(files) driver delete. Levels execute sequentially, each
+  /** The one level loop of both dialects: build the pyramid, land level
+    * i's array (the files `levelFiles` gives for its metadata) straight
+    * into `<group>/i`, then let `finish` add the group documents — all
+    * staged and published as one group ([[Landing.Swap]]): overwrite
+    * semantics like the reference's rmtree, but atomic and without an
+    * O(files) driver delete. Levels execute sequentially, each
     * a chunk-local decimation of the previous — same lifecycle as the
     * reference's per-level `da.store` loop. One chunk tuple serves every
     * level (reference: create_dataset(..., chunks=chunks) per level):
@@ -73,11 +74,11 @@ object PyramidWriter {
     * shape clamped to its dims — zarr requires uniform chunks.
     */
   private def writeGroup(vol: ChunkVolume, levels: Int, path: String)(
-      writeLevel: (ChunkVolume, String) => Unit)(finish: String => Unit)(
+      levelFiles: VolumeMeta => ZarrStore.ArrayFiles)(finish: String => Unit)(
       implicit fc: FioConf): Unit = {
     val pyr = vol.pyramid(levels)
     val (bz, by, bx) = vol.meta.chunkShape
-    AtomicDir.stage(path) { dir =>
+    Landing.run(path, appendTo = None) { l =>
       pyr.zipWithIndex.foreach { case (level, i) =>
         val uniform =
           if (i == 0) level
@@ -85,9 +86,10 @@ object PyramidWriter {
             math.min(bz.toLong, level.meta.dimZ).toInt,
             math.min(by.toLong, level.meta.dimY).toInt,
             math.min(bx.toLong, level.meta.dimX).toInt)
-        writeLevel(uniform, Fio.child(dir, i.toString))
+        ZarrStore.fillArray(uniform.chunks, Fio.child(l.dir, i.toString), levelFiles(uniform.meta))
       }
-      finish(dir)
+      finish(l.dir)
+      None
     }
   }
 
@@ -100,7 +102,7 @@ object PyramidWriter {
   def write(vol: ChunkVolume, levels: Int, path: String, upscaleFactor: Int = 1,
       codec: ZarrStore.Codec = ZarrStore.ZstdCodec()): Unit = {
     implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    writeGroup(vol, levels, path)(ZarrStore.write(_, _, codec)) { dir =>
+    writeGroup(vol, levels, path)(m => ZarrStore.v2Files(ZarrStore.metaOf(m, codec), m, Map.empty)) { dir =>
       Fio.writeString(Fio.child(dir, ".zgroup"), "{\n    \"zarr_format\": 2\n}")
       Fio.writeString(Fio.child(dir, ".zattrs"), multiscalesJson(vol.meta, upscaleFactor, levels))
       writeConsolidatedMetadata(dir, levels)
@@ -286,10 +288,10 @@ object PyramidWriter {
       codec: ZarrStore.Codec = ZarrStore.ZstdCodec(),
       shardInner: Option[(Int, Int, Int)] = None): Unit = {
     implicit val fc: FioConf = FioConf.of(vol.chunks.sparkSession)
-    writeGroup(vol, levels, path) { (level, dir) =>
+    writeGroup(vol, levels, path) { m =>
       shardInner match {
-        case Some(inner) => Zarr3Store.writeSharded(level, dir, inner, codec)
-        case None => Zarr3Store.write(level, dir, codec)
+        case Some(inner) => Zarr3Store.shardedFiles(m, inner, codec, Map.empty)
+        case None => Zarr3Store.plainFiles(m, codec, Map.empty)
       }
     } { dir =>
       Fio.writeString(Fio.child(dir, "zarr.json"), ngff05GroupJson(vol.meta, upscaleFactor, levels))

@@ -13,10 +13,10 @@ import org.json4s.jackson.JsonMethods
   * metadata and layout dialect over the v2 store's machinery, which is
   * exactly how zarr-python implemented it too: this object supplies only
   * its documents, its chunk key ([[chunkKey]]) and, for sharded arrays,
-  * its per-shard encoder; staging and AtomicDir publish, executor-side
-  * chunk landing, the append document check and the planned-grid reader
-  * are [[ZarrStore]]'s layout layer, and the blosc container incl.
-  * bitshuffle, zstd, chunk encode/decode and fill-value semantics are its
+  * its per-shard encoder; the [[Landing]] of every write and append,
+  * executor-side chunk landing, the append document check and the
+  * planned-grid reader are [[ZarrStore]]'s layout layer, and the blosc
+  * container incl. bitshuffle, zstd, chunk encode/decode and fill-value semantics are its
   * codecs. Supported codecs: `bytes` (both endians) alone, or followed by
   * ONE of `blosc` (all reference cnames/shuffles), `zstd`, `gzip`
   * (RFC-1952 — distinct from v2's RFC-1950 `zlib`). `sharding_indexed`
@@ -304,36 +304,36 @@ object Zarr3Store {
     parseZarrJsonAny(Fio.readString(Fio.child(dir, "zarr.json")))
 
   /** Write a ChunkVolume as a zarr v3 array: driver writes `zarr.json`,
-    * executors land `c/z/y/x` chunk files (same AtomicDir all-or-nothing
-    * publish and executor-parallel scaling as the v2 writer).
+    * executors land `c/z/y/x` chunk files (same all-or-nothing
+    * [[Landing]] and executor-parallel scaling as the v2 writer).
     */
   def write(
       vol: ChunkVolume,
       path: String,
       codec: Codec = ZstdCodec(),
-      extraAttrs: Map[String, String] = Map.empty): Unit = {
-    val zm = metaOf(vol.meta, codec)
-    val (meta, eff) = (vol.meta, zm.codec)
-    ZarrStore.writeArray(vol.chunks.sparkSession, path, Seq("zarr.json" -> zarrJson(zm, extraAttrs)))(
-      ZarrStore.landChunks(vol.chunks, _, chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff)))
+      extraAttrs: Map[String, String] = Map.empty): Unit =
+    ZarrStore.landArray(vol.chunks, path, plainFiles(vol.meta, codec, extraAttrs), append = false)
+
+  /** The files of a plain v3 array: `zarr.json` and `c/z/y/x` chunks. */
+  private[volume] def plainFiles(meta: VolumeMeta, codec: Codec, attrs: Map[String, String]): ZarrStore.ArrayFiles = {
+    val zm = metaOf(meta, codec)
+    ZarrStore.ArrayFiles(Seq("zarr.json" -> zarrJson(zm, attrs)), zm, parseZarrJson,
+      ZarrStore.ChunkSink(chunkKey("/", _, _, _), ZarrStore.encodeChunkBytes(_, meta, zm.codec)))
   }
 
   /** Append chunk files into a zarr v3 array — the incremental-ingest
     * building block (v3 chunks are independent files, so micro-batches
-    * append idempotently; a re-landed coordinate overwrites its own
-    * file). Writes `zarr.json` on first call; later calls fail loud if it
-    * describes another layout, or a sharded array.
+    * append idempotently; a re-landed coordinate replaces its own file).
+    * The first call lands `zarr.json` with its chunks; later calls fail
+    * loud if it describes another layout, or a sharded array. Each call
+    * publishes all-or-nothing ([[Landing]]).
     */
   def appendChunks(
       chunks: org.apache.spark.sql.Dataset[Chunk],
       path: String,
       meta: VolumeMeta,
-      codec: Codec = ZstdCodec()): Unit = {
-    val zm = metaOf(meta, codec)
-    val eff = zm.codec
-    ZarrStore.appendArray(chunks.sparkSession, path, "zarr.json", zarrJson(zm), zm, parseZarrJson)(
-      ZarrStore.landChunks(chunks, _, chunkKey("/", _, _, _), c => ZarrStore.encodeChunkBytes(c, meta, eff)))
-  }
+      codec: Codec = ZstdCodec()): Unit =
+    ZarrStore.landArray(chunks, path, plainFiles(meta, codec, Map.empty), append = true)
 
   /** Read a zarr v3 array directory as a ChunkVolume: grid planned from
     * `zarr.json` alone, absent chunk files decode as fill_value, chunk
@@ -534,8 +534,12 @@ object Zarr3Store {
       path: String,
       innerShape: (Int, Int, Int),
       codec: Codec = ZstdCodec(),
-      extraAttrs: Map[String, String] = Map.empty): Unit = {
-    val m = vol.meta
+      extraAttrs: Map[String, String] = Map.empty): Unit =
+    ZarrStore.landArray(vol.chunks, path, shardedFiles(vol.meta, innerShape, codec, extraAttrs), append = false)
+
+  /** The files of a sharded v3 array: `zarr.json` and a file per shard. */
+  private[volume] def shardedFiles(m: VolumeMeta, innerShape: (Int, Int, Int), codec: Codec,
+      attrs: Map[String, String]): ZarrStore.ArrayFiles = {
     val inner = Seq(innerShape._1, innerShape._2, innerShape._3)
     require(Seq(m.chunkZ, m.chunkY, m.chunkX).zip(inner).forall { case (s, i) => i > 0 && s % i == 0 },
       s"inner shape ${inner.mkString(",")} must divide the shard (chunk) shape " +
@@ -543,8 +547,8 @@ object Zarr3Store {
     val sh = ShardingMeta(inner, indexCrc32c = true, indexAtEnd = true)
     val zm = metaOf(m, codec)
     val ivm = innerVm(zm, sh)
-    ZarrStore.writeArray(vol.chunks.sparkSession, path, Seq("zarr.json" -> shardedZarrJson(zm, sh, extraAttrs)))(
-      ZarrStore.landChunks(vol.chunks, _, chunkKey("/", _, _, _), c => encodeShard(c, zm, sh, ivm)))
+    ZarrStore.ArrayFiles(Seq("zarr.json" -> shardedZarrJson(zm, sh, attrs)), zm, parseZarrJson,
+      ZarrStore.ChunkSink(chunkKey("/", _, _, _), encodeShard(_, zm, sh, ivm)))
   }
 
   /** Compact an UNSHARDED zarr v3 array into a sharded one — the

@@ -31,10 +31,13 @@ import java.util.zip.{Deflater, Inflater}
   * The end of this object is the zarr LAYOUT LAYER that the v3 dialect
   * ([[Zarr3Store]], plain and sharded) shares: [[chunkKey]] here and
   * `Zarr3Store.chunkKey` are the only code that turns chunk coordinates
-  * into paths, and one writer, one appender (which checks an existing
-  * document against the layout it would write) and one planned-grid
-  * reader serve both dialects — each supplies only its documents, its
-  * key and its per-chunk encoder.
+  * into paths, and one landing path and one planned-grid reader serve
+  * both dialects — each supplies only its documents, its key and its
+  * per-chunk encoder. Every write and append, DSv2 included, lands its
+  * chunk files through one step into a [[Landing]] that publishes them
+  * all-or-nothing: a swap for a new or overwritten array, an append
+  * (which first checks the existing document against the layout it
+  * would write) for an existing one.
   *
   * [[ChunkStore]] writes this same format with a per-chunk label min/max
   * index beside it — the value-indexed sink.
@@ -671,7 +674,7 @@ object ZarrStore {
     * typesize set from the dtype; `.` separator — [[Zarr3Store]] swaps
     * in `/`).
     */
-  private[volume] def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta = ZarrMeta(
+  private[graft] def metaOf(vol: VolumeMeta, codec: Codec): ZarrMeta = ZarrMeta(
     shape = Seq(vol.dimZ, vol.dimY, vol.dimX),
     chunks = Seq(vol.chunkZ, vol.chunkY, vol.chunkX),
     dtype = DtypeOf(vol.elementType),
@@ -690,21 +693,13 @@ object ZarrStore {
   /** Write a ChunkVolume as a zarr v2 array directory: `.zarray` and
     * `.zattrs` from the driver, chunk files straight from executor tasks,
     * so the write parallelizes like the reference's dask `to_zarr` and
-    * scales with the cluster, not the driver.
-    *
-    * Overwrite is ALL-OR-NOTHING like the reference's pre-delete+rewrite
-    * (upscale_streaming.py:118–127), but via [[AtomicDir]]: the new store
-    * is staged in a temp sibling and published with O(1) renames, so a
-    * failure leaves the old store untouched and no driver walk ever
-    * deletes O(files) synchronously.
+    * scales with the cluster, not the driver. Overwrite is ALL-OR-NOTHING
+    * like the reference's pre-delete+rewrite (upscale_streaming.py:118–127),
+    * as a [[Landing.Swap]]: a failure leaves the old store untouched.
     */
   def write(vol: ChunkVolume, path: String, codec: Codec = ZstdCodec(),
-      extraAttrs: Map[String, String] = Map.empty): Unit = {
-    val zm = metaOf(vol.meta, codec)
-    val (meta, eff) = (vol.meta, zm.codec)
-    writeArray(vol.chunks.sparkSession, path, Seq(".zarray" -> zarrayJson(zm), ".zattrs" -> zattrs(meta, extraAttrs)))(
-      landChunks(vol.chunks, _, chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff)))
-  }
+      extraAttrs: Map[String, String] = Map.empty): Unit =
+    landArray(vol.chunks, path, v2Files(metaOf(vol.meta, codec), vol.meta, extraAttrs), append = false)
 
   /** A v2 array's `.zattrs`: spacing and provenance (user attrs per the
     * spec; zarr/dask readers ignore unknown keys). Spacing is stored
@@ -721,36 +716,29 @@ object ZarrStore {
       .mkString("{\n", ",\n", "\n}")
   }
 
-  /** The `.zattrs` an append lands with the array's first chunks, so a
-    * streamed array keeps its spacing; an existing one is left as is.
+  /** The files of a v2 array of layout `zm`: `.zarray`, `.zattrs`
+    * (spacing and `attrs`), and chunks keyed with the layout's separator.
     */
-  private[volume] def ensureAttrs(dir: String, meta: VolumeMeta)(implicit fc: FioConf): Unit = {
-    val doc = Fio.child(dir, ".zattrs")
-    if (!Fio.exists(doc)) Fio.writeString(doc, zattrs(meta, Map.empty))
+  private[graft] def v2Files(zm: ZarrMeta, meta: VolumeMeta, attrs: Map[String, String]): ArrayFiles = {
+    val (sep, codec) = (zm.dimSeparator, forElements(zm.codec, meta.bytesPerVoxel))
+    ArrayFiles(Seq(".zarray" -> zarrayJson(zm), ".zattrs" -> zattrs(meta, attrs)), zm, parseZarray,
+      ChunkSink(chunkKey(sep, _, _, _), encodeChunkBytes(_, meta, codec)))
   }
 
   /** Append chunk files into a zarr v2 array directory — the
-    * incremental-ingest building block: zarr chunks are independent
-    * files, so streaming micro-batches append idempotently (a re-landed
-    * chunk coordinate overwrites its own file). Writes `.zarray` and
-    * `.zattrs` on first call; later calls fail loud if `.zarray`
-    * describes another layout. A [[ChunkStore]] value index in the
-    * array is dropped, as these chunks would outdate it.
+    * incremental-ingest building block: a re-landed chunk coordinate
+    * replaces its own file, and each call publishes all-or-nothing
+    * ([[Landing]]). The first call lands `.zarray` and `.zattrs` with its
+    * chunks; later calls fail loud if `.zarray` describes another layout.
+    * A [[ChunkStore]] value index in the array is dropped, as these chunks
+    * would outdate it.
     */
   def appendChunks(
       chunks: org.apache.spark.sql.Dataset[Chunk],
       path: String,
       meta: VolumeMeta,
-      codec: Codec = ZstdCodec()): Unit = {
-    val zm = metaOf(meta, codec)
-    val eff = zm.codec
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    appendArray(chunks.sparkSession, path, ".zarray", zarrayJson(zm), zm, parseZarray) { dir =>
-      ensureAttrs(dir, meta)
-      ChunkStore.dropStatsIndex(dir)
-      landChunks(chunks, dir, chunkKey(".", _, _, _), c => encodeChunkBytes(c, meta, eff))
-    }
-  }
+      codec: Codec = ZstdCodec()): Unit =
+    landArray(chunks, path, v2Files(metaOf(meta, codec), meta, Map.empty), append = true)
 
   /** Validate, pad, and compress ONE chunk to its zarr file bytes — the
     * one encoder of the v2 writers (batch and DSv2) and the v3 writers
@@ -782,18 +770,6 @@ object ZarrStore {
       s"chunk (${c.cz},${c.cy},${c.cx}) at (${c.z0},${c.y0},${c.x0}) size " +
         s"(${c.nz},${c.ny},${c.nx}) is not on the uniform (${meta.chunkZ},${meta.chunkY},${meta.chunkX}) " +
         "grid — rechunk before writing zarr")
-
-  /** Create an array directory with its `.zarray` only (no chunks yet) —
-    * the driver-side step of the DSv2 write path; executors then land
-    * chunk files independently. Returns the effective (zarr, volume)
-    * metadata; an existing `.zarray` must describe the same layout.
-    */
-  private[graft] def initArray(path: String, meta: VolumeMeta, codec: Codec)(
-      implicit fc: FioConf): (ZarrMeta, VolumeMeta) = {
-    val zm = metaOf(meta, codec)
-    ensureDocument(Fio.qualify(path), ".zarray", zarrayJson(zm), zm, parseZarray)
-    readMeta(path)
-  }
 
   /** Read `.zarray` (+ spacing attr if present) into engine metadata. */
   def readMeta(path: String)(implicit fc: FioConf): (ZarrMeta, VolumeMeta) = {
@@ -861,9 +837,10 @@ object ZarrStore {
   // The zarr layout layer, shared by this store and the v3 dialect
   // ([[Zarr3Store]], plain and sharded). A dialect supplies only its
   // metadata documents, its chunk key, its per-chunk encoder and, when
-  // sharded, its cell loader; staging, executor-side chunk landing, the
-  // append document check and the planned-grid reader are written once,
-  // here.
+  // sharded, its cell loader ([[ArrayFiles]]); the one landing step of a
+  // chunk file ([[ChunkSink.land]]), the landing of a whole write through
+  // [[Landing]] with the append document check, and the planned-grid
+  // reader are written once, here.
 
   /** v2 chunk key: `z<sep>y<sep>x` in chunk-grid coordinates. */
   private[graft] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
@@ -877,63 +854,68 @@ object ZarrStore {
     VolumeMeta.uniform(dz, dy, dx, cz, cy, cx, zm.elementType, spacing)
   }
 
-  /** Write a whole array all-or-nothing ([[AtomicDir.stage]]): the
-    * metadata `docs` (file name → body) from the driver, then `land`
-    * fills the staged directory ([[landChunks]], or [[ChunkStore]]'s
-    * indexed form).
+  /** How one chunk becomes a file of its array: its key and its bytes.
+    * [[land]] is the one step that writes a chunk file; every zarr writer
+    * and appender, DSv2 included, lands each chunk through it into a
+    * [[Landing]]'s directory, never at the chunk's live path.
     */
-  private[volume] def writeArray(spark: SparkSession, path: String, docs: Seq[(String, String)])(
-      land: String => Unit): Unit = {
-    implicit val fc: FioConf = FioConf.of(spark)
-    AtomicDir.stage(path) { dir =>
-      docs.foreach { case (name, body) => Fio.writeString(Fio.child(dir, name), body) }
-      land(dir)
+  private[graft] final case class ChunkSink(key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]) {
+    /** Encode `c` and write it under its key in `dir`; returns the key. */
+    def land(dir: String, c: Chunk)(implicit fc: FioConf): String = {
+      val k = key(c.cz, c.cy, c.cx)
+      // FileSystem.create makes parents, so nested keys need no mkdirs
+      Fio.writeBytes(Fio.child(dir, k), encode(c))
+      k
     }
   }
 
-  /** Land chunks into an array in place: write its document `docName`
-    * if absent, else require the one on disk (read back by `parse`) to
-    * describe the layout `zm` these chunks are encoded with; then `land`
-    * fills the directory.
+  /** What a write of one array lands: its documents (name → body, the
+    * array document first), the layout `zm` they describe, the `parse`r
+    * of the array document, and its chunk sink. [[stage]] stages the
+    * documents; an append first requires the store's to describe `zm`.
     */
-  private[volume] def appendArray(spark: SparkSession, path: String, docName: String, doc: => String,
-      zm: ZarrMeta, parse: String => ZarrMeta)(land: String => Unit): Unit = {
-    implicit val fc: FioConf = FioConf.of(spark)
-    val dir = Fio.qualify(path)
-    ensureDocument(dir, docName, doc, zm, parse)
-    land(dir)
+  private[graft] final case class ArrayFiles(
+      docs: Seq[(String, String)], zm: ZarrMeta, parse: String => ZarrMeta, sink: ChunkSink) {
+    def stage(l: Landing): Unit = l.stageDocs(docs) { body =>
+      val (onDisk, wanted) = (layoutOf(parse(body)), layoutOf(zm))
+      require(onDisk == wanted,
+        s"${l.dest}/${docs.head._1} describes $onDisk, but this append would write $wanted — " +
+          "refusing to land chunk files the document would mis-describe")
+    }
   }
 
-  private def ensureDocument(dir: String, docName: String, doc: => String,
-      zm: ZarrMeta, parse: String => ZarrMeta)(implicit fc: FioConf): Unit = {
-    Fio.mkdirs(dir)
-    val docPath = Fio.child(dir, docName)
-    Fio.readStringIfExists(docPath) match {
-      case None => Fio.writeString(docPath, doc)
-      case Some(body) =>
-        val (onDisk, wanted) = (layoutOf(parse(body)), layoutOf(zm))
-        require(onDisk == wanted,
-          s"$docPath describes $onDisk, but this append would write $wanted — " +
-            "refusing to land chunk files the document would mis-describe")
+  /** Land `chunks` as the array `files` describe at `path` through one
+    * [[Landing]]: an append extends an existing array, any other write
+    * replaces the store.
+    */
+  private[volume] def landArray(chunks: Dataset[Chunk], path: String, files: ArrayFiles, append: Boolean): Unit = {
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+    Landing.run(path, if (append) Some(files.docs.head._1) else None) { l =>
+      files.stage(l)
+      landChunks(chunks, l.dir, files.sink)
+      None
     }
+  }
+
+  /** Write `files` and `chunks` straight into `dir`, a directory a
+    * caller's landing already stages (a pyramid level inside its group).
+    */
+  private[volume] def fillArray(chunks: Dataset[Chunk], dir: String, files: ArrayFiles): Unit = {
+    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
+    files.docs.foreach { case (name, body) => Fio.writeString(Fio.child(dir, name), body) }
+    landChunks(chunks, dir, files.sink)
   }
 
   /** The layout an append must agree on; blosc's typesize is set from the
-    * dtype on both sides, as the DSv2 write path does.
+    * dtype on both sides, as the writer does.
     */
   private def layoutOf(m: ZarrMeta): String =
     s"shape [${m.shape.mkString(", ")}], chunks [${m.chunks.mkString(", ")}], " +
       s"dtype ${m.dtype}, codec ${forElements(m.codec, m.bpp)}, separator '${m.dimSeparator}'"
 
-  /** Encode every chunk and land it under its `key` from executor tasks. */
-  private[volume] def landChunks(chunks: Dataset[Chunk], dir: String,
-      key: (Int, Int, Int) => String, encode: Chunk => Array[Byte]): Unit = {
-    implicit val fc: FioConf = FioConf.of(chunks.sparkSession)
-    chunks.foreachPartition { (it: Iterator[Chunk]) =>
-      // FileSystem.create makes parents, so nested keys need no mkdirs
-      it.foreach(c => Fio.writeBytes(Fio.child(dir, key(c.cz, c.cy, c.cx)), encode(c)))
-    }
-  }
+  /** Land every chunk through `sink` into `dir` from executor tasks. */
+  private def landChunks(chunks: Dataset[Chunk], dir: String, sink: ChunkSink)(implicit fc: FioConf): Unit =
+    chunks.foreachPartition((it: Iterator[Chunk]) => it.foreach(sink.land(dir, _)))
 
   /** The cell loader of an unsharded array: grid cell (cz, cy, cx) is
     * the chunk file at its `key`, an absent file decoding as fill_value.

@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.volume.{AtomicDir, Chunk, ChunkVolume, ZarrStore}
+import graft.volume.{AtomicDir, Chunk, ChunkStore, ChunkVolume, Zarr3Store, ZarrStore}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
@@ -10,8 +11,9 @@ import java.nio.file.{Files, Path, Paths}
   * (reference overwrite is all-or-nothing: upscale_streaming.py:118–127).
   *
   *  - a job that FAILS mid-write leaves the destination byte-identical
-  *    to the previous store (overwrite AND append), with no temp/trash
-  *    debris surviving the background sweep;
+  *    to the previous store (overwrite AND append, through `format("zarr")`
+  *    and every batch appender), with no temp/trash debris surviving the
+  *    background sweep; a failed FIRST append leaves no store at all;
   *  - overwrite never deletes the old store before/during the job (no
   *    O(files) driver truncate walk) — the old tree stays readable until
   *    the O(1)-rename publish at job commit, and stale files are retired
@@ -76,37 +78,105 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
     assert(siblings(dest).isEmpty, "temp/trash sibling survived the sweep")
   }
 
-  test("append job failure publishes nothing: no staged chunk visible") {
-    val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "a.zarr")
-    val v1 = vol(7)
-    ZarrStore.write(v1, dest.toString)
-    val expect = collectVox(ZarrStore.read(spark, dest.toString).toVoxels)
+  /** One way to append a chunk frame to a store, with the writer that
+    * makes such a store and the reader that reads it back.
+    */
+  private case class Appender(
+      name: String,
+      write: (ChunkVolume, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      read: String => ChunkVolume,
+      v2: Boolean = true)
 
-    intercept[Exception] {
-      poisoned(29).write.format("zarr").mode("append").save(dest.toString)
+  private def appenders: Seq[Appender] = {
+    import spark.implicits._
+    val meta = vol(7).meta
+    Seq(
+      Appender("ZarrStore.appendChunks", ZarrStore.write(_, _),
+        (df, p) => ZarrStore.appendChunks(df.as[Chunk], p, meta), ZarrStore.read(spark, _)),
+      Appender("Zarr3Store.appendChunks", Zarr3Store.write(_, _),
+        (df, p) => Zarr3Store.appendChunks(df.as[Chunk], p, meta), Zarr3Store.read(spark, _), v2 = false),
+      Appender("ChunkStore.appendChunks", ChunkStore.write(_, _),
+        (df, p) => ChunkStore.appendChunks(df.as[Chunk], p, meta), ZarrStore.read(spark, _)),
+      // geometry options only matter when the append creates the array
+      Appender("format(\"zarr\")", ZarrStore.write(_, _),
+        (df, p) => geomOpts(df.write.format("zarr")).mode("append").save(p), ZarrStore.read(spark, _)))
+  }
+
+  /** Every file of the store at `dest` (its path under `dest` → its
+    * bytes), staged ones aside.
+    */
+  private def storeFiles(dest: Path): Map[String, Seq[Byte]] = {
+    // staged files may still be retiring in the background: never walk them
+    def walk(p: Path): Seq[Path] =
+      if (!Files.isDirectory(p)) Seq(p)
+      else {
+        val it = Files.list(p)
+        try it.toArray.map(_.asInstanceOf[Path]).toSeq
+          .filterNot(_.getFileName.toString == ".__staging").flatMap(walk)
+        finally it.close()
+      }
+    walk(dest).map(p => dest.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
+  /** No staged file left inside the store. */
+  private def assertNoStaging(dest: Path, clue: String): Unit = {
+    val root = dest.resolve(".__staging")
+    if (Files.isDirectory(root)) {
+      val kids = { val it = Files.list(root); try it.count() finally it.close() }
+      assert(kids === 0, s"$clue: staged files survived")
     }
-    assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) === expect)
-    AtomicDir.awaitQuiescent()
-    // The abort deletes the staged tree in the background, but Spark kills
-    // the job's other tasks ASYNCHRONOUSLY — a zombie task can land one
-    // more staged file after the delete walked its subtree (observed once
-    // under full-suite load, r21). The DOCUMENTED contract
-    // (StoreStaging.Append) is reader invisibility — asserted above — plus
-    // sweep-on-next-append, not instantaneous emptiness; assert exactly
-    // that: after the next append's staging-create sweep, nothing staged
-    // survives. Bounded-wait for the aborted job's zombies to die first,
-    // so the sweep cannot itself be raced by a late staged write.
+  }
+
+  /** The abort deletes a failed job's landed files in the background,
+    * but Spark kills the job's other tasks ASYNCHRONOUSLY — a zombie task
+    * can land one more file after the delete walked its tree (seen under
+    * full-suite load). The contract ([[graft.volume.Landing]]) is reader
+    * invisibility plus sweep-on-next-write, not instantaneous emptiness:
+    * bounded-wait for the zombies to die, so the next write's sweep cannot
+    * itself be raced by a late file.
+    */
+  private def awaitNoJobs(): Unit = {
     val tracker = spark.sparkContext.statusTracker
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     while ((tracker.getActiveJobIds().nonEmpty || tracker.getActiveStageIds().nonEmpty)
         && System.nanoTime() < deadline) Thread.sleep(50)
-    v1.chunks.toDF().write.format("zarr").mode("append").save(dest.toString)
-    assert(collectVox(ZarrStore.read(spark, dest.toString).toVoxels) === expect)
-    AtomicDir.awaitQuiescent()
-    val root = dest.resolve(".__staging")
-    if (Files.isDirectory(root)) {
-      val kids = { val it = Files.list(root); try it.count() finally it.close() }
-      assert(kids === 0, "staged chunks survived abort + sweep")
+  }
+
+  test("append job failure publishes nothing: no staged chunk visible") {
+    for (a <- appenders) {
+      val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "a.zarr")
+      a.write(vol(7), dest.toString)
+      val before = storeFiles(dest)
+      val expect = collectVox(a.read(dest.toString).toVoxels)
+
+      // a poisoned re-append of every chunk with new content: its sibling
+      // tasks land their chunks before the job fails
+      intercept[Exception](a.append(poisoned(29), dest.toString))
+      assert(storeFiles(dest) === before, s"${a.name}: a live file changed")
+      assert(collectVox(a.read(dest.toString).toVoxels) === expect, a.name)
+      // after the next append's staging-create sweep, nothing staged survives
+      awaitNoJobs()
+      a.append(vol(7).chunks.toDF(), dest.toString)
+      assert(collectVox(a.read(dest.toString).toVoxels) === expect, a.name)
+      AtomicDir.awaitQuiescent()
+      assertNoStaging(dest, a.name)
+    }
+  }
+
+  test("a first append to an absent array is a swap: a failed one leaves no store") {
+    for (a <- appenders) {
+      val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "f.zarr")
+      intercept[Exception](a.append(poisoned(29), dest.toString))
+      assert(!Files.exists(dest), s"${a.name}: a failed first append left a store")
+      awaitNoJobs()
+      a.append(vol(31).chunks.toDF(), dest.toString)
+      assert(collectVox(a.read(dest.toString).toVoxels) === collectVox(mkVox(31)), a.name)
+      // the first append lands the spacing attrs with the array
+      if (a.v2) assert(Files.exists(dest.resolve(".zattrs")), a.name)
+      AtomicDir.awaitQuiescent()
+      assert(siblings(dest).isEmpty, s"${a.name}: temp sibling survived the sweep")
+      assertNoStaging(dest, a.name)
     }
   }
 
@@ -143,6 +213,16 @@ class ZarrAtomicWriteSpec extends AnyFunSuite with SparkSpec {
       }
       AtomicDir.awaitQuiescent()
       assert(siblings(dest).isEmpty)
+    }
+    // every appender: upsert every chunk of an existing store
+    for (a <- appenders) {
+      val dest = Paths.get(Files.createTempDirectory("zarr_atomic").toString, "u.zarr")
+      a.write(vol(7), dest.toString)
+      a.append(vol(31).chunks.toDF(), dest.toString)
+      assert(collectVox(a.read(dest.toString).toVoxels) === collectVox(mkVox(31)), a.name)
+      AtomicDir.awaitQuiescent()
+      assert(siblings(dest).isEmpty, a.name)
+      assert(!Files.exists(dest.resolve(".__staging")), s"${a.name}: staging root left behind")
     }
   }
 
