@@ -1,11 +1,12 @@
 package graft.sources
 
-import graft.io.{Fio, FioConf}
-import graft.volume.{Chunk, Landing, UpscaleCli, VolumeMeta, ZarrStore}
+import graft.io.FioConf
+import graft.volume.{Chunk, ChunkVolume, Landing, VolumeMeta, ZarrStore}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources._
@@ -17,11 +18,15 @@ import java.util
   * `spark.read.format("zarr").load(path)` exposes the chunk grid as a SQL
   * table with `SupportsPushDownFilters` on the chunk coordinates.
   *
-  * Planning reads ONE file (`.zarray`) — the grid is a pure function of
-  * shape/chunks, so coordinate predicates prune partitions with zero
-  * directory I/O, and a point lookup plans exactly one task reading
-  * exactly one chunk file. Absent chunk files decode as fill_value rows
-  * per the zarr spec (the task probes existence, not the planner).
+  * This file is only the DSv2 plumbing; how cells become tasks and how a
+  * cell is read are the zarr layout layer's, as in [[ZarrStore.read]].
+  * Planning reads ONE file (`.zarray`): the grid is a pure function of
+  * shape/chunks, so coordinate predicates prune cells with zero directory
+  * I/O, and the kept cells are cut into [[ZarrStore.gridSlices]]
+  * contiguous C-order slices, one task each. A point lookup plans exactly
+  * one task reading exactly one chunk file. Each cell loads through the
+  * array's v2 cell loader ([[ZarrStore.v2Cells]]); an absent chunk file
+  * decodes as fill_value rows per the zarr spec.
   */
 class ZarrSource extends TableProvider with DataSourceRegister {
 
@@ -67,7 +72,8 @@ object ZarrSource {
     */
   private[sources] def filterKeeps(f: Filter, known: Map[String, Long]): Boolean = f match {
     case EqualTo(a, v: Number) if known.contains(a) => known(a) == v.longValue()
-    case In(a, vs) if known.contains(a) => vs.exists(v => v.asInstanceOf[Number].longValue() == known(a))
+    // a null element never makes IN true
+    case In(a, vs) if known.contains(a) => vs.exists(v => v != null && v.asInstanceOf[Number].longValue() == known(a))
     case LessThan(a, v: Number) if known.contains(a) => known(a) < v.longValue()
     case LessThanOrEqual(a, v: Number) if known.contains(a) => known(a) <= v.longValue()
     case GreaterThan(a, v: Number) if known.contains(a) => known(a) > v.longValue()
@@ -76,6 +82,16 @@ object ZarrSource {
     case Or(l, r) => filterKeeps(l, known) || filterKeeps(r, known)
     case _ => true
   }
+
+  /** The C-order linear indices in [from, until) of the cells of `vm`'s
+    * grid that every one of `filters` keeps.
+    */
+  private[sources] def keptCells(vm: VolumeMeta, filters: Array[Filter], from: Long, until: Long): Iterator[Long] =
+    Iterator.iterate(from)(_ + 1).takeWhile(_ < until).filter { idx =>
+      val (cz, cy, cx) = vm.cellAt(idx)
+      val known = Map("cz" -> cz.toLong, "cy" -> cy.toLong, "cx" -> cx.toLong)
+      filters.forall(filterKeeps(_, known))
+    }
 
   /** Geometry of the first DSv2 write to a new store: options
     * `dimZ dimY dimX chunkZ chunkY chunkX` (required) and `elementType`
@@ -100,52 +116,9 @@ class ZarrTable(path: String) extends Table with SupportsRead with SupportsWrite
   override def schema(): StructType = ZarrSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(path, ChunkPacking.targetBytes(options))
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = new ZarrScanBuilder(path)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new ZarrWriteBuilder(path, info)
-}
-
-/** Groups pruned chunk coordinates into multi-chunk InputPartitions up to a
-  * byte target — the moral equivalent of `spark.sql.files.maxPartitionBytes`
-  * file packing. At the reference's 128 MB chunks and 100 TB, one task per
-  * chunk file is ~800k tasks: schedulable, but task-launch overhead dominates
-  * small-chunk stores and the driver holds ~800k partition objects. Packing
-  * bounds the partition count by ceil(totalBytes / target) while coordinate
-  * pruning stays per-chunk (a point lookup still plans exactly one partition
-  * with exactly one chunk).
-  */
-object ChunkPacking {
-  val OptionName = "maxPartitionBytes"
-  val DefaultTargetBytes: Long = 128L * 1024 * 1024
-
-  def targetBytes(options: CaseInsensitiveStringMap): Long = {
-    val t = options.getLong(OptionName, DefaultTargetBytes)
-    require(t > 0, s"$OptionName must be positive, got $t")
-    t
-  }
-
-  /** Greedy pack in input order (row-major grid order → neighboring chunks
-    * share a partition). A single item never splits; a partition takes at
-    * least one item regardless of size, so count ≤ max(1, items).
-    */
-  def pack[A](items: Iterator[A], sizeOf: A => Long, target: Long): Iterator[Seq[A]] =
-    new Iterator[Seq[A]] {
-      private val it = items.buffered
-      override def hasNext: Boolean = it.hasNext
-      override def next(): Seq[A] = {
-        val group = Seq.newBuilder[A]
-        var bytes = 0L
-        var first = true
-        while (it.hasNext && (first || bytes + sizeOf(it.head) <= target)) {
-          val a = it.next()
-          group += a
-          bytes += sizeOf(a)
-          first = false
-        }
-        group.result()
-      }
-    }
 }
 
 /** DSv2 WRITE path: `chunkDf.write.format("zarr").save(path)` lands chunk
@@ -194,7 +167,7 @@ class ZarrWriteBuilder(path: String, info: LogicalWriteInfo)
         case _: Landing.Swap =>
           val opts = info.options
           val vm = ZarrSource.firstWriteMeta(opts)
-          (ZarrStore.metaOf(vm, UpscaleCli.zarrCodec(Option(opts.get("compressor")).getOrElse("zstd"))), vm)
+          (ZarrStore.metaOf(vm, ZarrStore.codecNamed(Option(opts.get("compressor")).getOrElse("zstd"))), vm)
       }
       val files = ZarrStore.v2Files(zm, vm, Map.empty)
       files.stage(landing)
@@ -222,8 +195,7 @@ private[sources] class ZarrWriterFactory(dir: String, sink: ZarrStore.ChunkSink,
     }
 }
 
-class ZarrScanBuilder(path: String, targetBytes: Long)
-    extends ScanBuilder with SupportsPushDownFilters {
+class ZarrScanBuilder(path: String) extends ScanBuilder with SupportsPushDownFilters {
   private var pushed: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -233,57 +205,56 @@ class ZarrScanBuilder(path: String, targetBytes: Long)
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new ZarrScan(path, pushed, targetBytes)
+  override def build(): Scan = new ZarrScan(path, pushed)
 }
 
-class ZarrScan(path: String, filters: Array[Filter], targetBytes: Long)
-    extends Scan with Batch {
+class ZarrScan(path: String, filters: Array[Filter]) extends Scan with Batch {
   override def readSchema(): StructType = ZarrSource.schema
   override def toBatch: Batch = this
 
+  /** The kept cells, cut as `spark.range` cuts a full read's grid: slice i
+    * of s holds the kept cells of rank [i*k/s, (i+1)*k/s). A partition is
+    * the linear index range from its slice's first kept cell to the next
+    * slice's, so the driver holds O(slices) however many cells it keeps.
+    */
   override def planInputPartitions(): Array[InputPartition] = {
-    implicit val fc: FioConf = FioConf.of(org.apache.spark.sql.SparkSession.active)
-    val (zm, vm) = ZarrStore.readMeta(path) // the ONLY planning I/O
-    val pathStr = Fio.qualify(path)
-    // prune per chunk (zero I/O — the grid is a pure function of the
-    // metadata), then pack surviving coordinates to the byte target using
-    // the uncompressed payload size (what the task must hold in memory)
-    val coords = for {
-      cz <- (0 until vm.ncz).iterator
-      cy <- (0 until vm.ncy).iterator
-      cx <- (0 until vm.ncx).iterator
-      known = Map("cz" -> cz.toLong, "cy" -> cy.toLong, "cx" -> cx.toLong)
-      if filters.forall(f => ZarrSource.filterKeeps(f, known))
-    } yield (cz, cy, cx)
-    val bpv = vm.bytesPerVoxel.toLong
-    def payloadBytes(c: (Int, Int, Int)): Long = {
-      val (_, _, _, nz, ny, nx) = vm.cell(c._1, c._2, c._3)
-      nz.toLong * ny * nx * bpv
+    val spark = SparkSession.active
+    implicit val fc: FioConf = FioConf.of(spark)
+    val (vm, load) = ZarrStore.v2Cells(path) // the ONLY planning I/O
+    val n = vm.nCells
+    def kept = ZarrSource.keptCells(vm, filters, 0, n)
+    val k = kept.foldLeft(0L)((c, _) => c + 1)
+    if (k == 0) Array.empty
+    else {
+      val s = ZarrStore.gridSlices(spark, k)
+      def slice(rank: Long): Long = ((rank + 1) * s - 1) / k // the slice of the rank-th kept cell
+      val starts = kept.zipWithIndex
+        .collect { case (idx, r) if r == 0 || slice(r) != slice(r - 1) => idx }
+      (starts ++ Iterator(n)).sliding(2)
+        .map { case Seq(from, until) => ZarrCellsPartition(vm, load, filters, from, until): InputPartition }
+        .toArray
     }
-    ChunkPacking.pack(coords, payloadBytes, targetBytes)
-      .map(g => ZarrChunksPartition(pathStr, zm, vm, g, fc): InputPartition)
-      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new ZarrReaderFactory
 }
 
-final case class ZarrChunksPartition(
-    dir: String, zm: ZarrStore.ZarrMeta, vm: VolumeMeta,
-    coords: Seq[(Int, Int, Int)], fc: FioConf) extends InputPartition
+/** The cells of `vm`'s grid with C-order linear indices in [from, until)
+  * that `filters` keep, each read through `load`.
+  */
+final case class ZarrCellsPartition(
+    vm: VolumeMeta, load: ChunkVolume.CellLoader, filters: Array[Filter],
+    from: Long, until: Long) extends InputPartition
 
 class ZarrReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrChunksPartition]
+    val p = partition.asInstanceOf[ZarrCellsPartition]
     new PartitionReader[InternalRow] {
-      private val it = p.coords.iterator
+      private val cells = ZarrSource.keptCells(p.vm, p.filters, p.from, p.until).map(p.vm.cellAt)
       private var row: InternalRow = _
 
-      override def next(): Boolean = {
-        if (!it.hasNext) return false
-        val (cz, cy, cx) = it.next()
-        val file = Fio.child(p.dir, ZarrStore.chunkKey(p.zm.dimSeparator, cz, cy, cx))
-        val c = ZarrStore.decodeChunk(Fio.readAllIfExists(file)(p.fc), p.zm, p.vm, cz, cy, cx, file)
+      override def next(): Boolean = cells.hasNext && {
+        val c = p.load.tupled(cells.next())
         row = new GenericInternalRow(Array[Any](
           c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data))
         true

@@ -49,6 +49,11 @@ final case class VolumeMeta(
   def isFloating: Boolean = elementType == "MET_FLOAT" || elementType == "MET_DOUBLE"
   def nVoxels: Long = dimZ * dimY * dimX
   def chunkShape: (Int, Int, Int) = (chunkZ, chunkY, chunkX)
+  def nCells: Long = ncz.toLong * ncy * ncx
+
+  /** Grid cell (cz, cy, cx) at C-order linear cell index `idx`. */
+  def cellAt(idx: Long): (Int, Int, Int) =
+    ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
 
   /** The meta of a ×s upscale: dims ×s on a uniform grid of this chunk shape. */
   def upscaled(s: Int): VolumeMeta = VolumeMeta.uniform(dimZ * s, dimY * s, dimX * s,
@@ -795,7 +800,7 @@ object ChunkVolume {
   }
 
   /** Reads grid cell (cz, cy, cx) of a volume's `meta` on the driver. */
-  private[volume] type CellLoader = (Int, Int, Int) => Chunk
+  private[graft] type CellLoader = (Int, Int, Int) => Chunk
 
   /** The volume of a store reader whose `chunks` hold, at each grid cell
     * of `meta`, exactly the chunk `load` returns for it: its

@@ -38,19 +38,6 @@ object UpscaleCli {
       compressor: String = "zstd", // zstd|zlib|blosc-zstd|blosc-zlib|lz4|zstd-bit|none
   )
 
-  private[graft] def zarrCodec(compressor: String): ZarrStore.Codec = compressor match {
-    case "zstd" => ZarrStore.ZstdCodec()
-    case "zlib" => ZarrStore.Zlib()
-    case "blosc-zstd" => ZarrStore.BloscCodec("zstd")
-    case "blosc-zlib" => ZarrStore.BloscCodec("zlib")
-    // the reference CLI's exact output worlds (upscale_streaming.py:
-    // 103-108): Blosc(cname, clevel=5, shuffle=BITSHUFFLE)
-    case "lz4" => ZarrStore.BloscCodec("lz4", 5, shuffle = 2)
-    case "zstd-bit" => ZarrStore.BloscCodec("zstd", 5, shuffle = 2)
-    case "none" => ZarrStore.Raw
-    case other => throw new IllegalArgumentException(s"unknown --compressor: $other")
-  }
-
   def parseArgs(argv: Seq[String]): Args = {
     def loop(rest: List[String], acc: Args): Args = rest match {
       case Nil => acc
@@ -76,7 +63,7 @@ object UpscaleCli {
     require(
       Set("zarr", "zarr3", "zarr3-sharded", "graftchunks").contains(a.format),
       "--format must be zarr|zarr3|zarr3-sharded|graftchunks")
-    zarrCodec(a.compressor) // validate eagerly
+    ZarrStore.codecNamed(a.compressor) // validate eagerly
     a
   }
 
@@ -129,17 +116,18 @@ object UpscaleCli {
     out += s"Upscaled shape (z,y,x): (${z * a.scale}, ${y * a.scale}, ${x * a.scale})"
     val provenance = Map(
       "source" -> a.input, "scale" -> a.scale.toString, "mode" -> a.mode)
+    val codec = ZarrStore.codecNamed(a.compressor)
     // ProgressBar parity (upscale.py:23): stage-level progress lines
     // stream to `live` DURING execute and join the transcript after.
     val (written, progress) = graft.plans.ProgressReporter.withProgress(spark.sparkContext, live) {
       if (a.pyramidLevels > 1) {
-        PyramidWriter.write(processed, a.pyramidLevels, a.output, a.scale, zarrCodec(a.compressor))
+        PyramidWriter.write(processed, a.pyramidLevels, a.output, a.scale, codec)
         s"OME-Zarr pyramid (${a.pyramidLevels} levels)"
       } else if (a.format == "zarr") {
-        ZarrStore.write(processed, a.output, zarrCodec(a.compressor), extraAttrs = provenance)
+        ZarrStore.write(processed, a.output, codec, extraAttrs = provenance)
         s"Zarr array (${a.compressor})"
       } else if (a.format == "zarr3") {
-        Zarr3Store.write(processed, a.output, zarrCodec(a.compressor), extraAttrs = provenance)
+        Zarr3Store.write(processed, a.output, codec, extraAttrs = provenance)
         s"Zarr v3 array (${a.compressor})"
       } else if (a.format == "zarr3-sharded") {
         // shard = 2× the chunk shape per axis, inner = the chunk shape:
@@ -148,7 +136,7 @@ object UpscaleCli {
         // clamping could break the divisibility contract.
         val m = processed.meta
         Zarr3Store.writeSharded(processed.rechunk(m.chunkZ * 2, m.chunkY * 2, m.chunkX * 2),
-          a.output, innerShape = m.chunkShape, zarrCodec(a.compressor), extraAttrs = provenance)
+          a.output, innerShape = m.chunkShape, codec, extraAttrs = provenance)
         s"Sharded zarr v3 array (${a.compressor})"
       } else {
         ChunkStore.write(processed, a.output, extraProvenance = provenance)

@@ -690,6 +690,23 @@ object ZarrStore {
     case c => c
   }
 
+  /** The codec a compressor name selects: the vocabulary of
+    * `UpscaleCli --compressor` and of a first `format("zarr")` write's
+    * `compressor` option.
+    */
+  private[graft] def codecNamed(compressor: String): Codec = compressor match {
+    case "zstd" => ZstdCodec()
+    case "zlib" => Zlib()
+    case "blosc-zstd" => BloscCodec("zstd")
+    case "blosc-zlib" => BloscCodec("zlib")
+    // the reference CLI's exact output worlds (upscale_streaming.py:
+    // 103-108): Blosc(cname, clevel=5, shuffle=BITSHUFFLE)
+    case "lz4" => BloscCodec("lz4", 5, shuffle = 2)
+    case "zstd-bit" => BloscCodec("zstd", 5, shuffle = 2)
+    case "none" => Raw
+    case other => throw new IllegalArgumentException(s"unknown --compressor: $other")
+  }
+
   /** Write a ChunkVolume as a zarr v2 array directory: `.zarray` and
     * `.zattrs` from the driver, chunk files straight from executor tasks,
     * so the write parallelizes like the reference's dask `to_zarr` and
@@ -792,7 +809,7 @@ object ZarrStore {
     * all-fill chunk. `file` names where the bytes came from (the chunk
     * key's path, or a shard file and inner cell) in a decode failure.
     */
-  private[graft] def decodeChunk(
+  private[volume] def decodeChunk(
       bytes: Option[Array[Byte]], zm: ZarrMeta, vm: VolumeMeta,
       cz: Int, cy: Int, cx: Int, file: => String): Chunk = {
     val bpp = zm.bpp
@@ -828,9 +845,18 @@ object ZarrStore {
     */
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
+    val (vm, load) = v2Cells(path)
+    readArray(spark, vm, load)
+  }
+
+  /** The grid and the cell loader of the v2 array at `path`, from
+    * `.zarray` alone: cell (cz, cy, cx) is the chunk file at its v2 key.
+    * [[read]] plans over it, and a `format("zarr")` scan loads each cell
+    * it keeps with it.
+    */
+  private[graft] def v2Cells(path: String)(implicit fc: FioConf): (VolumeMeta, ChunkVolume.CellLoader) = {
     val (zm, vm) = readMeta(path)
-    val sep = zm.dimSeparator
-    readArray(spark, vm, chunkFiles(Fio.qualify(path), zm, vm, chunkKey(sep, _, _, _)))
+    (vm, chunkFiles(Fio.qualify(path), zm, vm, chunkKey(zm.dimSeparator, _, _, _)))
   }
 
   // ------------------------------------------------------------------
@@ -843,7 +869,7 @@ object ZarrStore {
   // reader are written once, here.
 
   /** v2 chunk key: `z<sep>y<sep>x` in chunk-grid coordinates. */
-  private[graft] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
+  private[volume] def chunkKey(sep: String, cz: Int, cy: Int, cx: Int): String =
     s"$cz$sep$cy$sep$cx"
 
   /** Engine metadata for a zarr array's chunk grid. */
@@ -927,12 +953,19 @@ object ZarrStore {
       decodeChunk(Fio.readAllIfExists(file), zm, vm, cz, cy, cx, file)
     }
 
+  /** The number of contiguous C-order slices, one task each, that a read
+    * of `cells` grid cells is cut into: min(cells, defaultParallelism),
+    * at least one. [[readArray]] and a `format("zarr")` scan both cut this way.
+    */
+  private[graft] def gridSlices(spark: SparkSession, cells: Long): Int =
+    math.max(1L, math.min(cells, spark.sparkContext.defaultParallelism.toLong)).toInt
+
   /** Read every cell of `vm`'s grid, planned from metadata alone (no
     * listing), through `load`. Two steps: each cell's geometry as plain
     * columns, from C-order linear cell indices over one `range` cut into
-    * min(cells, defaultParallelism) contiguous slices, one task each, with
-    * no shuffle; then `data` from a deterministic decode UDF in a
-    * projection over them. Catalyst pushes a Column predicate on the
+    * [[gridSlices]] contiguous slices, one task each, with no shuffle;
+    * then `data` from a deterministic decode UDF in a projection over
+    * them. Catalyst pushes a Column predicate on the
     * geometry below that projection, so a pruned read
     * ([[ChunkVolume.cropVoxels]]) loads only the cells it keeps; a full
     * scan loads every cell once. The returned volume carries `load` too,
@@ -942,11 +975,9 @@ object ZarrStore {
   private[volume] def readArray(spark: SparkSession, vm: VolumeMeta,
       load: ChunkVolume.CellLoader): ChunkVolume = {
     import spark.implicits._
-    val (ncy, ncx) = (vm.ncy, vm.ncx)
-    val n = vm.ncz.toLong * ncy * ncx
-    val slices = math.max(1L, math.min(n, spark.sparkContext.defaultParallelism.toLong))
-    val cells = spark.range(0, n, 1, slices.toInt).as[Long].map { idx =>
-      val (cz, cy, cx) = ((idx / (ncy.toLong * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
+    val n = vm.nCells
+    val cells = spark.range(0, n, 1, gridSlices(spark, n)).as[Long].map { idx =>
+      val (cz, cy, cx) = vm.cellAt(idx)
       val (z0, y0, x0, nz, ny, nx) = vm.cell(cz, cy, cx)
       (cz, cy, cx, z0, y0, x0, nz, ny, nx)
     }.toDF("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")

@@ -58,41 +58,21 @@ class ChunkStoreSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("coordinate filters prune input partitions with zero I/O (file-name pruning)") {
-    // maxPartitionBytes=1 → one partition per chunk: per-chunk PRUNING is
-    // what this test pins down (packing is exercised separately below)
-    val df = spark.read.format("zarr").option("maxPartitionBytes", 1).load(storePath)
-    val all = df.rdd.getNumPartitions
-    assert(all === vol.chunks.count())
+    // the kept cells are cut into min(kept, defaultParallelism) slices
+    val par = spark.sparkContext.defaultParallelism.toLong
+    val df = spark.read.format("zarr").load(storePath)
+    assert(df.rdd.getNumPartitions === math.min(vol.chunks.count(), par))
     val one = df.filter(col("cz") === 1 && col("cy") === 0 && col("cx") === 0)
     assert(one.rdd.getNumPartitions === 1) // exactly the one owning file planned
     assert(one.count() === 1)
     val slab = df.filter(col("cz") === 1)
-    assert(slab.rdd.getNumPartitions === (vol.meta.ncy * vol.meta.ncx))
+    val slabCells = vol.meta.ncy * vol.meta.ncx
+    assert(slab.rdd.getNumPartitions === math.min(slabCells, par))
+    assert(slab.count() === slabCells)
+    // a null never makes IN true: isin(1, null) keeps what cz = 1 keeps
+    assert(df.filter(col("cz").isin(1, null)).count() === slabCells)
     // row-level residual filters still apply on non-pruned columns
-    assert(df.filter(col("z0") === 4L).count() === (vol.meta.ncy * vol.meta.ncx))
-  }
-
-  test("scan packs files per InputPartition to the byte target") {
-    // fixture grid is aligned: 2*2*2 = 8 uniform chunks of 4*3*3 voxels
-    val chunkB = 4L * 3 * 3 * vol.meta.bytesPerVoxel
-    def parts(target: Long): Int = spark.read.format("zarr")
-      .option("maxPartitionBytes", target).load(storePath).rdd.getNumPartitions
-    assert(parts(chunkB) === 8)
-    assert(parts(chunkB * 3) === 3) // ceil(8/3)
-    assert(parts(chunkB * 4) === 2)
-    // default ~128 MB target swallows the whole tiny store in ONE task
-    val packed = spark.read.format("zarr").load(storePath)
-    assert(packed.rdd.getNumPartitions === 1)
-    // point lookup still plans one single-file partition at the default
-    // target (pruning runs before packing)
-    val one = packed.filter(col("cz") === 1 && col("cy") === 1 && col("cx") === 0)
-    assert(one.rdd.getNumPartitions === 1)
-    assert(one.count() === 1)
-    // packed read is content-identical to the per-file read
-    def digest(df: org.apache.spark.sql.DataFrame) =
-      df.select(sum(length(col("data"))), sum(expr("cz*100 + crc32(data) % 1000"))).collect().head
-    assert(digest(packed) ===
-      digest(spark.read.format("zarr").option("maxPartitionBytes", 1).load(storePath)))
+    assert(df.filter(col("z0") === 4L).count() === slabCells)
   }
 
   test("SQL over the chunk table") {
@@ -110,6 +90,10 @@ class ChunkStoreSourceSpec extends AnyFunSuite with SparkSpec {
     assert(!ZarrSource.filterKeeps(Or(EqualTo("cz", 9), EqualTo("cx", 5)), c))
     assert(ZarrSource.filterKeeps(EqualTo("z0", 99L), c)) // unknown column: keep
     assert(ZarrSource.filterKeeps(IsNotNull("cz"), c)) // unknown shape: keep
+    // a null element of an IN list never matches
+    assert(ZarrSource.filterKeeps(In("cz", Array(3, null)), c))
+    assert(!ZarrSource.filterKeeps(In("cz", Array(1, null)), c))
+    assert(!ZarrSource.filterKeeps(In("cz", Array(null)), c))
   }
 
   test("stats index: written by write, trusted by findLabel, every cell a candidate without it") {

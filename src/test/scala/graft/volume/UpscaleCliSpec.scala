@@ -136,7 +136,7 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     val up = composedX2
     val m = up.meta
     Zarr3Store.writeSharded(up.rechunk(m.chunkZ * 2, m.chunkY * 2, m.chunkX * 2), ref.toString,
-      innerShape = (m.chunkZ, m.chunkY, m.chunkX), UpscaleCli.zarrCodec("zstd"))
+      innerShape = (m.chunkZ, m.chunkY, m.chunkX), ZarrStore.codecNamed("zstd"))
     UpscaleIdentitySpec.assertSameStore(ref, Paths.get(outSh), chunkFilesOnly = true)
   }
 
@@ -227,7 +227,7 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     // chunk files byte-identical to the composed plan's
     val ref = fixtureDir.resolve("pyr_ref")
     PyramidWriter.write(composedX2.outline(), 2, ref.toString, 2,
-      UpscaleCli.zarrCodec("zstd"))
+      ZarrStore.codecNamed("zstd"))
     UpscaleIdentitySpec.assertSameStore(ref, Paths.get(outP), chunkFilesOnly = true)
   }
 

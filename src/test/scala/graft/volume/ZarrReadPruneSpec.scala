@@ -15,7 +15,8 @@ import java.nio.file.{Files, Path, Paths}
   * store, that shard's index and the owning inner blob); a point lookup
   * on the volume a zarr reader returns reads its one chunk on the driver
   * and runs no Spark job; and the grid plan itself moves no data through
-  * a shuffle.
+  * a shuffle. A `format("zarr")` scan prunes by its pushed coordinate
+  * filters and cuts the cells it keeps into the read's slices.
   */
 class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
 
@@ -64,6 +65,15 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     (v, p) => Zarr3Store.writeSharded(v.rechunk(4, 3, 3), p, (2, 3, 3)),
     Zarr3Store.read(spark, _), (z, y, x) => s"c/${z / 2}/$y/$x", _.startsWith("c/"))
 
+  // format("zarr") over a v2 store: it prunes by its pushed coordinate
+  // filters, so the owning chunk reads back through a cz/cy/cx filter
+  private val dsv2 = layouts.head.copy(name = "format(\"zarr\")", read = p => {
+    import spark.implicits._
+    ChunkVolume(spark.read.format("zarr").load(p).as[Chunk], vol.meta)
+  })
+
+  private def fields(c: Chunk) = (c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data.toSeq)
+
   /** Overwrite every chunk file of `store` but the one holding grid cell
     * (cz, cy, cx) with bytes no codec decodes; `n` files are expected.
     * Returns the garbled files.
@@ -98,7 +108,8 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
   private def sc = spark.sparkContext
 
   test("pointLookup and a one-chunk cropVoxels read only the owning chunk file (v2, plain and sharded v3)") {
-    for ((l, others) <- layouts.map(_ -> 15) :+ (shardedV3 -> 7); (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
+    for ((l, others) <- (layouts :+ dsv2).map(_ -> 15) :+ (shardedV3 -> 7);
+         (cz, cy, cx) <- Seq((0, 0, 0), (1, 1, 0), (3, 1, 1))) {
       val store = tmp("arr")
       l.write(vol, store)
       val garbled = garbleAllBut(store, l, cz, cy, cx, others)
@@ -110,17 +121,41 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
       val failed = messages(intercept[Exception](back.chunks.collect()))
       val files = if (l == shardedV3) garbled :+ Paths.get(store).resolve(l.key(cz, cy, cx)) else garbled
       assert(files.exists(f => failed.contains(f.toString)), s"${l.name}: no chunk file named in\n$failed")
-      val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
-      val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
-      assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
-      assert(jobs === 0, s"${l.name} lookup ($z,$y,$x) ran $jobs jobs")
+      if (l == dsv2) {
+        val owner = col("cz") === cz && col("cy") === cy && col("cx") === cx
+        val got = back.chunks.filter(owner).collect().map(fields).toSeq
+        assert(got === vol.chunks.filter(owner).collect().map(fields).toSeq, s"${l.name}: chunk ($cz,$cy,$cx)")
+      } else {
+        val (z, y, x) = (cz * 2L + 1, cy * 3L + 2, cx * 3L)
+        val (got, jobs) = jobsDuring(sc)(back.pointLookup(z, y, x))
+        assert(got === Some(label(z, y, x)), s"${l.name} lookup ($z,$y,$x)")
+        assert(jobs === 0, s"${l.name} lookup ($z,$y,$x) ran $jobs jobs")
 
-      val (z0, y0, x0) = (cz * 2L, cy * 3L, cx * 3L)
-      val crop = back.cropVoxels(z0, z0 + 2, y0 + 1, y0 + 3, x0, x0 + 2).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
-      val want = for (z <- z0 until z0 + 2; y <- y0 + 1 until y0 + 3; x <- x0 until x0 + 2)
-        yield (z, y, x, label(z, y, x))
-      assert(crop === want, s"${l.name} crop of chunk ($cz,$cy,$cx)")
+        val (z0, y0, x0) = (cz * 2L, cy * 3L, cx * 3L)
+        val crop = back.cropVoxels(z0, z0 + 2, y0 + 1, y0 + 3, x0, x0 + 2).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
+        val want = for (z <- z0 until z0 + 2; y <- y0 + 1 until y0 + 3; x <- x0 until x0 + 2)
+          yield (z, y, x, label(z, y, x))
+        assert(crop === want, s"${l.name} crop of chunk ($cz,$cy,$cx)")
+      }
+    }
+  }
+
+  test("format(\"zarr\") cuts the cells it keeps as ZarrStore.read cuts its grid") {
+    val store = tmp("arr")
+    ZarrStore.write(vol, store, ZarrStore.Zlib(5))
+    val df = spark.read.format("zarr").load(store)
+    assert(sc.defaultParallelism === 4)
+    assert(df.rdd.getNumPartitions === ZarrStore.read(spark, store).chunks.rdd.getNumPartitions)
+    val point = df.filter(col("cz") === 2 && col("cy") === 1 && col("cx") === 0)
+    assert(point.rdd.getNumPartitions === 1)
+    // slabs of the (4, 2, 2) grid: min(slab cells, 4) tasks, each cell once
+    val slabs = Seq((col("cz") === 1 && col("cy") === 0, 2), (col("cz") === 1, 4),
+      (col("cy") === 1 && col("cx") === 0, 4), (col("cz").isin(0, 3), 8), (col("cz") >= 1, 12))
+    for ((slab, cells) <- slabs) {
+      val kept = df.filter(slab)
+      assert(kept.rdd.getNumPartitions === math.min(cells, 4), s"$slab")
+      assert(kept.select("cz", "cy", "cx").distinct().count() === cells && kept.count() === cells, s"$slab")
     }
   }
 

@@ -435,50 +435,23 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
   test("format(\"zarr\") DSv2: reads the grid; coordinate filters prune partitions") {
     val dir = Files.createTempDirectory("zarr").toString + "/d.zarr"
     ZarrStore.write(vol, dir, ZarrStore.ZstdCodec(3))
-    // maxPartitionBytes=1 → one partition per chunk: per-chunk PRUNING is
-    // what this test pins down (packing is exercised separately below)
-    val df = spark.read.format("zarr").option("maxPartitionBytes", 1).load(dir)
-    assert(df.rdd.getNumPartitions === 3 * 2 * 3) // full grid, one per chunk
+    // the kept cells are cut into min(kept, defaultParallelism) slices
+    val par = spark.sparkContext.defaultParallelism
+    val df = spark.read.format("zarr").load(dir)
+    assert(df.rdd.getNumPartitions === math.min(3 * 2 * 3, par)) // full grid
     val one = df.filter(col("cz") === 1 && col("cy") === 0 && col("cx") === 0)
     assert(one.rdd.getNumPartitions === 1) // point query plans ONE chunk
     assert(one.count() === 1)
     val slab = df.filter(col("cz") === 2)
-    assert(slab.rdd.getNumPartitions === 2 * 3)
-    // decode parity with the library reader, through DEFAULT (packed) scan
+    assert(slab.rdd.getNumPartitions === math.min(2 * 3, par))
+    val row = df.filter(col("cz") === 2 && col("cy") === 1)
+    assert(row.rdd.getNumPartitions === math.min(3, par))
+    assert(row.count() === 3)
+    // decode parity with the library reader
     import spark.implicits._
     val (_, meta) = ZarrStore.readMeta(dir)
-    val viaDsv2 = ChunkVolume(spark.read.format("zarr").load(dir).as[Chunk], meta).toVoxels
+    val viaDsv2 = ChunkVolume(df.as[Chunk], meta).toVoxels
     assert(collectVox(viaDsv2) === collectVox(vox))
-  }
-
-  test("DSv2 scan packs chunks per InputPartition to the byte target") {
-    val dir = Files.createTempDirectory("zarr").toString + "/packed.zarr"
-    // aligned grid: 8 uniform chunks of 2*8*8 uint32 = 2048 B payload each
-    val (pz, py, px) = (16L, 8L, 8L)
-    val pvox = spark.range(pz * py * px).selectExpr(
-      s"id div ${py * px} as z", s"(id div $px) % $py as y",
-      s"id % $px as x", "id % 97 as label")
-    val pvol = ChunkVolume.fromVoxels(pvox, pz, py, px, 2, 8, 8)
-    ZarrStore.write(pvol, dir, ZarrStore.ZstdCodec(3))
-    val chunkB = 2L * 8 * 8 * pvol.meta.bytesPerVoxel
-    def parts(target: Long): Int = spark.read.format("zarr")
-      .option("maxPartitionBytes", target).load(dir).rdd.getNumPartitions
-    // uniform chunks → exactly ceil(n / floor(target / chunkBytes))
-    assert(parts(chunkB) === 8)
-    assert(parts(chunkB * 3) === 3) // ceil(8/3)
-    assert(parts(chunkB * 4) === 2)
-    // default ~128 MB target swallows the whole tiny store in ONE task
-    val packed = spark.read.format("zarr").load(dir)
-    assert(packed.rdd.getNumPartitions === 1)
-    // a point lookup still plans exactly one single-chunk partition at the
-    // default target (pruning runs before packing)
-    val one = packed.filter(col("cz") === 3 && col("cy") === 0 && col("cx") === 0)
-    assert(one.rdd.getNumPartitions === 1)
-    assert(one.count() === 1)
-    // packed read is content-identical to the per-chunk read
-    assert(packed.select(sum(length(col("data"))), sum(expr("cz*100 + z0"))).collect().head ===
-      spark.read.format("zarr").option("maxPartitionBytes", 1).load(dir)
-        .select(sum(length(col("data"))), sum(expr("cz*100 + z0"))).collect().head)
   }
 
   test("PyramidWriter emits a real OME-Zarr group: .zgroup + zarr array levels") {
