@@ -1150,6 +1150,11 @@ object PlanAudit {
     // (shell slabs + body once) + output sort. A 4th exchange would mean
     // the stencil stopped being a single exchange of slab messages
     "vol_chunk_boxsum3" -> 3,
+    // the other two body-moving chunk operators: fixture chunk assembly
+    // + ONE groupByKey of body pieces (outline: core + wrapped face
+    // slabs; rechunk: the cut boxes) + output sort
+    "vol_chunk_outline" -> 3,
+    "vol_chunk_rechunk" -> 3,
     // bloom decontamination: bench-gram distinct (broadcast-side), hit
     // rollup, docs-vs-hits report join, output sort. A 5th exchange
     // would mean the corpus side started shuffling BEFORE the bloom

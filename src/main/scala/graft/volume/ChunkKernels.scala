@@ -147,33 +147,22 @@ object ChunkKernels {
     (ze / 2, ye / 2, xe / 2, onz, ony, onx, out)
   }
 
-  /** 6-neighborhood outline stencil over one chunk given its six halo face
-    * planes (wrap-around semantics supplied by the caller's halo exchange —
-    * da.roll parity, upscale_streaming_enhance.py:107–119). A voxel keeps
-    * its element iff it differs bitwise from ≥1 face neighbor, else zeros.
-    *
-    * Halo layouts: zm/zp are (ny×nx); ym/yp are (nz×nx); xm/xp are (nz×ny).
+  /** 6-neighborhood outline stencil over the core cells of a
+    * (nz+2)·(ny+2)·(nx+2) frame whose pad holds the face neighbors
+    * (wrap-around is the caller's halo exchange — da.roll parity,
+    * upscale_streaming_enhance.py:107–119). A voxel keeps its element iff
+    * it differs bitwise from ≥1 face neighbor, else zeros, so any dtype
+    * works. Returns nz·ny·nx elements in C order.
     */
-  def outline(
-      data: Array[Byte],
-      nz: Int,
-      ny: Int,
-      nx: Int,
-      bpp: Int,
-      zm: Array[Byte],
-      zp: Array[Byte],
-      ym: Array[Byte],
-      yp: Array[Byte],
-      xm: Array[Byte],
-      xp: Array[Byte],
-  ): Array[Byte] = {
-    val out = new Array[Byte](data.length)
+  def outline(padded: Array[Byte], nz: Int, ny: Int, nx: Int, bpp: Int): Array[Byte] = {
+    val py = ny + 2; val px = nx + 2
+    val out = new Array[Byte](nz * ny * nx * bpp)
 
-    @inline def neq(a: Array[Byte], ai: Int, b: Array[Byte], bi: Int): Boolean = {
-      var i = 0
-      while (i < bpp) {
-        if (a(ai * bpp + i) != b(bi * bpp + i)) return true
-        i += 1
+    @inline def neq(i: Int, j: Int): Boolean = {
+      var b = 0
+      while (b < bpp) {
+        if (padded(i * bpp + b) != padded(j * bpp + b)) return true
+        b += 1
       }
       false
     }
@@ -182,17 +171,13 @@ object ChunkKernels {
     while (z < nz) {
       var y = 0
       while (y < ny) {
+        val base = ((z + 1) * py + (y + 1)) * px + 1
         var x = 0
         while (x < nx) {
-          val idx = (z * ny + y) * nx + x
-          val differs =
-            (if (z + 1 < nz) neq(data, idx, data, idx + ny * nx) else neq(data, idx, zp, y * nx + x)) ||
-            (if (z - 1 >= 0) neq(data, idx, data, idx - ny * nx) else neq(data, idx, zm, y * nx + x)) ||
-            (if (y + 1 < ny) neq(data, idx, data, idx + nx) else neq(data, idx, yp, z * nx + x)) ||
-            (if (y - 1 >= 0) neq(data, idx, data, idx - nx) else neq(data, idx, ym, z * nx + x)) ||
-            (if (x + 1 < nx) neq(data, idx, data, idx + 1) else neq(data, idx, xp, z * ny + y)) ||
-            (if (x - 1 >= 0) neq(data, idx, data, idx - 1) else neq(data, idx, xm, z * ny + y))
-          if (differs) System.arraycopy(data, idx * bpp, out, idx * bpp, bpp)
+          val i = base + x
+          if (neq(i, i + py * px) || neq(i, i - py * px) || neq(i, i + px) || neq(i, i - px) ||
+              neq(i, i + 1) || neq(i, i - 1))
+            System.arraycopy(padded, i * bpp, out, ((z * ny + y) * nx + x) * bpp, bpp)
           // else: leave zeros
           x += 1
         }
@@ -204,7 +189,8 @@ object ChunkKernels {
   }
 
   /** Copy the local box [bz,bz+bnz)×[by,by+bny)×[bx,bx+bnx) out of a
-    * (nz,ny,nx) chunk into a new contiguous block (rechunk split step).
+    * (nz,ny,nx) chunk into a new contiguous block (the scatter step of
+    * rechunk and the halo exchanges).
     */
   def extractBox(
       data: Array[Byte], ny: Int, nx: Int, bpp: Int,
@@ -244,7 +230,7 @@ object ChunkKernels {
   }
 
   /** Place a (bnz,bny,bnx) block into a (nz,ny,nx) chunk at local offset
-    * (bz,by,bx) (rechunk assemble step).
+    * (bz,by,bx) (the assemble step of rechunk and the halo exchanges).
     */
   def placeBox(
       dst: Array[Byte], ny: Int, nx: Int, bpp: Int,

@@ -36,19 +36,19 @@ object ChunkPlanner {
     )
   }
 
-  /** Estimated stored output in GB for an upscale (+ optional pyramid
-    * overhead ≈ Σ 8^-i = 1/7) — upscale_streaming_enhance.py:145–167.
+  /** Estimated stored output in GB for an upscale (+ the pyramid
+    * overhead ≈ Σ 8^-i = 1/7 when levels > 1) —
+    * upscale_streaming_enhance.py:145–167.
     */
   def estimateOutputGb(
       shapeZyx: (Long, Long, Long),
       bytesPerVoxel: Int,
       scale: Int,
       pyramidLevels: Int,
-      includePyramidOverhead: Boolean = true,
   ): Double = {
     val (z, y, x) = shapeZyx
     var baseBytes = z.toDouble * y * x * math.pow(scale.toDouble, 3) * bytesPerVoxel
-    if (includePyramidOverhead && pyramidLevels > 1) baseBytes *= (1.0 + 1.0 / 7.0)
+    if (pyramidLevels > 1) baseBytes *= (1.0 + 1.0 / 7.0)
     baseBytes / math.pow(1024.0, 3)
   }
 

@@ -20,7 +20,7 @@ object ChunkStore {
   val StatsIndexName = ".graft_stats"
 
   /** Chunk files are plain zstd level-1 frames. */
-  private val Codec = ZarrStore.ZstdCodec(level = 1)
+  private[volume] val Codec = ZarrStore.ZstdCodec(level = 1)
 
   /** One index entry: chunk key, lmin, lmax. */
   type IndexEntry = (String, Long, Long)

@@ -1,6 +1,6 @@
 package graft.volume
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One dense sub-block of a chunked volume. `data` is a packed C-order
@@ -86,8 +86,10 @@ object VolumeMeta {
 
 /** A distributed dense 3D volume: Dataset[Chunk] + metadata. The engine's
   * scale-path representation (SURVEY.md §2.7): every transform below is
-  * either chunk-local (upscale, decimate) or shuffles only face planes
-  * (outline halo exchange) — never the volume body.
+  * chunk-local (upscale, decimate), an aggregate of per-chunk partials, or
+  * moves chunk bodies through the one scatter-and-assemble step
+  * [[assemble]] (rechunk, outline, the halo stencils) — each body byte
+  * once.
   */
 final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   import ChunkVolume._
@@ -249,62 +251,22 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
       .agg(max(col("m")).as("label"))
   }
 
-  /** Outline / edge extraction (T2 scale path): each chunk sends its 6
-    * face planes (≈ 2·(1/cz+1/cy+1/cx) of the data) to its grid neighbors,
-    * then a chunk-local stencil runs. Wrap-around (da.roll parity) comes
-    * from modular chunk-grid neighbor addressing.
-    *
-    * Cost honesty: the groupByKey co-locates chunk bodies with their
-    * incoming halos, so a one-shot call moves the body once (same class of
-    * movement as [[rechunk]], vs SIX body shuffles for the long-form
-    * self-join). The extra payload beyond the body is only the face
-    * planes. A persistent-partitioned volume (cache chunks hash-partitioned
-    * by grid key, send faces each round) would amortize the body movement
-    * away for iterated stencils.
+  /** Outline / edge extraction (T2 scale path): a voxel keeps its label
+    * iff it differs from ≥1 of its 6 face neighbors, with wrap-around at
+    * the volume edges (da.roll parity, upscale_streaming_enhance.py:107–119).
+    * The faces-only, thickness-1, wrapping case of the halo stencils:
+    * each chunk's core and its 6 face planes go through [[assemble]], a
+    * plane that crosses the volume edge landing in the far cell's pad
+    * ([[haloPieces]]), then one kernel pass reads the padded frame. Body
+    * bytes move once plus the face planes (≈ 2·(1/cz+1/cy+1/cx) of the
+    * body), vs SIX body shuffles for the long-form self-join.
     */
   def outline(): ChunkVolume = {
     val bpp = meta.bytesPerVoxel
-    val (ncz, ncy, ncx) = (meta.ncz, meta.ncy, meta.ncx)
     import chunks.sparkSession.implicits._
-
-    // side tags for halo messages
-    val CORE = 0; val ZM = 1; val ZP = 2; val YM = 3; val YP = 4; val XM = 5; val XP = 6
-
-    val msgs = chunks.flatMap { c =>
-      val core = (c.cz, c.cy, c.cx, CORE, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data)
-      // one-voxel-thick face slab at local (bz, by, bx)
-      def face(bz: Int, by: Int, bx: Int, bnz: Int, bny: Int, bnx: Int): Array[Byte] =
-        ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp, bz, by, bx, bnz, bny, bnx)
-      // my top plane becomes the z-minus halo of chunk cz+1 (mod ncz), etc.
-      val faces = Iterator(
-        (((c.cz + 1) % ncz, c.cy, c.cx), ZM, face(c.nz - 1, 0, 0, 1, c.ny, c.nx)),
-        (((c.cz - 1 + ncz) % ncz, c.cy, c.cx), ZP, face(0, 0, 0, 1, c.ny, c.nx)),
-        ((c.cz, (c.cy + 1) % ncy, c.cx), YM, face(0, c.ny - 1, 0, c.nz, 1, c.nx)),
-        ((c.cz, (c.cy - 1 + ncy) % ncy, c.cx), YP, face(0, 0, 0, c.nz, 1, c.nx)),
-        ((c.cz, c.cy, (c.cx + 1) % ncx), XM, face(0, 0, c.nx - 1, c.nz, c.ny, 1)),
-        ((c.cz, c.cy, (c.cx - 1 + ncx) % ncx), XP, face(0, 0, 0, c.nz, c.ny, 1)),
-      ).map { case ((tz, ty, tx), side, plane) =>
-        (tz, ty, tx, side, 0L, 0L, 0L, 0, 0, 0, plane)
-      }
-      Iterator.single(core) ++ faces
+    val out = assemble(haloPieces(1, facesOnly = true, wrap = true), pad = 1) { c =>
+      Iterator.single(c.copy(data = ChunkKernels.outline(c.data, c.nz, c.ny, c.nx, bpp)))
     }
-
-    val out = msgs
-      .groupByKey { case (cz, cy, cx, _, _, _, _, _, _, _, _) => (cz, cy, cx) }
-      .mapGroups { (key, it) =>
-        val (cz, cy, cx) = key
-        var core: (Long, Long, Long, Int, Int, Int, Array[Byte]) = null
-        val planes = new Array[Array[Byte]](7)
-        it.foreach {
-          case (_, _, _, CORE, z0, y0, x0, nz, ny, nx, data) => core = (z0, y0, x0, nz, ny, nx, data)
-          case (_, _, _, side, _, _, _, _, _, _, data) => planes(side) = data
-        }
-        val (z0, y0, x0, nz, ny, nx, data) = core
-        val res = ChunkKernels.outline(
-          data, nz, ny, nx, bpp,
-          planes(ZM), planes(ZP), planes(YM), planes(YP), planes(XM), planes(XP))
-        Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, res)
-      }
     ChunkVolume(out, meta)
   }
 
@@ -312,21 +274,18 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     * general dense-stencil pattern (smoothing / local density /
     * convolution) that [[outline]]'s 6-face exchange is the special case
     * of. Each chunk sends the thickness-1 slab adjacent to each of its
-    * 26 grid neighbors (faces = planes, edges = lines, corners = single
-    * voxels; total shell ≈ 2·(1/cz+1/cy+1/cx) of the body, the diagonal
-    * slabs are asymptotically free), the receiver assembles a zero-padded
-    * (nz+2)·(ny+2)·(nx+2) frame and one dense kernel pass sums the 27
-    * neighbors of every core cell. Volume edges are ZERO-padded (out-of-
-    * grid targets are skipped), deliberately unlike outline's wrap-around
-    * roll parity: a blur must not bleed across the volume boundary.
+    * 26 grid neighbors (the diagonal slabs are asymptotically free), the
+    * receiver assembles a zero-padded (nz+2)·(ny+2)·(nx+2) frame and one
+    * dense kernel pass sums the 27 neighbors of every core cell. Volume
+    * edges are ZERO-padded: a blur must not bleed across the volume
+    * boundary.
     *
     * Returns voxel rows (z,y,x,boxsum) for the relational surface —
     * sums of uint32 labels exceed the input dtype, and the store has no
     * 8-byte integer element type, so a chunk-native result would be a
-    * lossy cast. Body bytes move once (groupByKey co-location, same
-    * class as [[outline]]/[[rechunk]]); a separable 3-pass (z,y,x)
-    * variant trades 3 body moves for face-only halos and wins only when
-    * chunks are so small the diagonal shell dominates.
+    * lossy cast. Body bytes move once ([[assemble]]); a separable 3-pass
+    * (z,y,x) variant trades 3 body moves for face-only halos and wins
+    * only when chunks are so small the diagonal shell dominates.
     */
   def boxSumVoxels: DataFrame =
     haloStencilVoxels("boxsum", facesOnly = false)(ChunkKernels.boxSum3(_, _, _, _, _, _))
@@ -498,77 +457,75 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
       .select(col("label"), col("n_voxels"), col("sum_i"), col("min_i"), col("max_i"))
   }
 
-  /** Shared halo-exchange stencil plumbing: each chunk sends the
-    * thickness-1 slab adjacent to each in-grid neighbor (all 26 for a
-    * dense 3×3×3 kernel; just the 6 faces when `facesOnly` — edge/corner
-    * slabs are only needed by kernels that read diagonal neighbors), the
-    * receiver assembles a zero-padded (nz+2)·(ny+2)·(nx+2) frame, and
+  /** The halo stencils' plumbing: [[haloPieces]] without wrap (volume
+    * edges are ZERO-padded, deliberately unlike [[outline]]'s wrap-around
+    * roll parity), [[assemble]] with pad `thickness`, then
     * `kernel(padded, nz, ny, nx, bpp, unsigned)` produces the core cells
-    * in C order. Volume edges are ZERO-padded (out-of-grid targets are
-    * skipped), deliberately unlike outline's wrap-around roll parity.
-    * Body bytes move once (groupByKey co-location, same class as
-    * [[outline]]/[[rechunk]]); shell traffic ≈ 2·(1/cz+1/cy+1/cx) of the
-    * body.
+    * in C order. Zero bytes decode as 0 under every integral dtype, so
+    * the untouched pad IS the zero padding.
     */
   private def haloStencilVoxels(outName: String, facesOnly: Boolean, thickness: Int = 1)(
       kernel: (Array[Byte], Int, Int, Int, Int, Boolean) => Array[Long]): DataFrame = {
     require(!meta.isFloating, s"halo stencil requires an integral element type, got ${meta.elementType}")
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
-    val t = thickness
-    val (ncz, ncy, ncx) = (meta.ncz, meta.ncy, meta.ncx)
     import chunks.sparkSession.implicits._
+    assemble(haloPieces(thickness, facesOnly, wrap = false), pad = thickness) { c =>
+      val out = kernel(c.data, c.nz, c.ny, c.nx, bpp, unsigned)
+      Iterator.range(0, c.nz * c.ny * c.nx).map { i =>
+        val z = i / (c.ny * c.nx); val rem = i % (c.ny * c.nx)
+        (c.z0 + z, c.y0 + rem / c.nx, c.x0 + rem % c.nx, out(i))
+      }
+    }.toDF("z", "y", "x", outName)
+  }
 
-    // message: (tcz, tcy, tcx, isCore, gz0, gy0, gx0, bnz, bny, bnx, data)
-    val msgs = chunks.flatMap { c =>
-      val core = (c.cz, c.cy, c.cx, 1, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data)
+  /** Each chunk as its own core piece plus the thickness-`t` slab it owes
+    * each grid neighbor: the 6 face neighbors when `facesOnly` (kernels
+    * that read no diagonal neighbor), else all 26 (faces = planes, edges
+    * = lines, corners = blocks; the shell is ≈ 2t·(1/cz+1/cy+1/cx) of the
+    * body). Past the volume edge there is no neighbor (zero padding)
+    * unless `wrap`: then the slab goes to the cell on the far side with
+    * its origin shifted by ∓dim, so it lands in that cell's −t…−1 or
+    * n…n+t−1 pad — which also covers the 1- and 2-cell axes.
+    */
+  private def haloPieces(t: Int, facesOnly: Boolean, wrap: Boolean): Dataset[Piece] = {
+    val bpp = meta.bytesPerVoxel
+    val (ncz, ncy, ncx) = (meta.ncz, meta.ncy, meta.ncx)
+    val (dimZ, dimY, dimX) = (meta.dimZ, meta.dimY, meta.dimX)
+    import chunks.sparkSession.implicits._
+    chunks.flatMap { c =>
+      // the cell one step `d` from `cell` on an axis of `n` cells and
+      // extent `dim`, and the origin shift of a slab sent there
+      def hop(cell: Int, d: Int, n: Int, dim: Long): Option[(Int, Long)] =
+        if (cell + d < 0) Option.when(wrap)((n - 1, dim))
+        else if (cell + d >= n) Option.when(wrap)((0, -dim))
+        else Some((cell + d, 0L))
+      // local start and extent of the slab toward `d` on an axis of extent `n`
+      def cut(d: Int, n: Int): (Int, Int) = {
+        val k = math.min(t, n)
+        if (d == 1) (n - k, k) else if (d == -1) (0, k) else (0, n)
+      }
       val slabs = for {
         dz <- -1 to 1; dy <- -1 to 1; dx <- -1 to 1
-        if dz != 0 || dy != 0 || dx != 0
-        if !facesOnly || math.abs(dz) + math.abs(dy) + math.abs(dx) == 1
-        tz = c.cz + dz; ty = c.cy + dy; tx = c.cx + dx
-        if tz >= 0 && tz < ncz && ty >= 0 && ty < ncy && tx >= 0 && tx < ncx
+        if (dz != 0 || dy != 0 || dx != 0) && (!facesOnly || dz.abs + dy.abs + dx.abs == 1)
+        (tz, sz) <- hop(c.cz, dz, ncz, dimZ)
+        (ty, sy) <- hop(c.cy, dy, ncy, dimY)
+        (tx, sx) <- hop(c.cx, dx, ncx, dimX)
       } yield {
-        // the thickness-t slab of THIS chunk adjacent to neighbor (dz,dy,dx)
-        val tzs = math.min(t, c.nz); val tys = math.min(t, c.ny); val txs = math.min(t, c.nx)
-        val (bz, bnz) = if (dz == 1) (c.nz - tzs, tzs) else if (dz == -1) (0, tzs) else (0, c.nz)
-        val (by, bny) = if (dy == 1) (c.ny - tys, tys) else if (dy == -1) (0, tys) else (0, c.ny)
-        val (bx, bnx) = if (dx == 1) (c.nx - txs, txs) else if (dx == -1) (0, txs) else (0, c.nx)
-        val box = ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp, bz, by, bx, bnz, bny, bnx)
-        (tz, ty, tx, 0, c.z0 + bz, c.y0 + by, c.x0 + bx, bnz, bny, bnx, box)
+        val (bz, bnz) = cut(dz, c.nz); val (by, bny) = cut(dy, c.ny); val (bx, bnx) = cut(dx, c.nx)
+        (tz, ty, tx, false, c.z0 + bz + sz, c.y0 + by + sy, c.x0 + bx + sx, bnz, bny, bnx,
+          ChunkKernels.extractBox(c.data, c.ny, c.nx, bpp, bz, by, bx, bnz, bny, bnx))
       }
-      Iterator.single(core) ++ slabs.iterator
+      Iterator.single((c.cz, c.cy, c.cx, true, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, c.data)) ++ slabs
     }
-
-    msgs
-      .groupByKey { case (tz, ty, tx, _, _, _, _, _, _, _, _) => (tz, ty, tx) }
-      .flatMapGroups { (_, it) =>
-        val parts = it.toArray
-        val (_, _, _, _, z0, y0, x0, nz, ny, nx, _) = parts.find(_._4 == 1).get
-        val (pz, py, px) = (nz + 2 * t, ny + 2 * t, nx + 2 * t)
-        // zero bytes decode as label 0 under every integral dtype — the
-        // untouched pad IS the zero padding
-        val padded = new Array[Byte](pz * py * px * bpp)
-        parts.foreach { case (_, _, _, _, gz0, gy0, gx0, bnz, bny, bnx, data) =>
-          ChunkKernels.placeBox(padded, py, px, bpp,
-            (gz0 - (z0 - t)).toInt, (gy0 - (y0 - t)).toInt, (gx0 - (x0 - t)).toInt,
-            bnz, bny, bnx, data)
-        }
-        val out = kernel(padded, nz, ny, nx, bpp, unsigned)
-        Iterator.range(0, nz * ny * nx).map { i =>
-          val z = i / (ny * nx); val rem = i % (ny * nx)
-          (z0 + z, y0 + rem / nx, x0 + rem % nx, out(i))
-        }
-      }
-      .toDF("z", "y", "x", outName)
   }
 
   /** Re-block to a new uniform chunk grid (T4, the reference's
-    * `up.rechunk(out_chunks)` — upscale_streaming.py:126). The ONLY
-    * volume-body shuffle in the engine, and an explicit opt-in: each chunk
-    * splits into the sub-boxes that intersect target chunks, the boxes
-    * shuffle by target key, and receivers assemble. Shuffled bytes = the
-    * volume body exactly once (no halo, no amplification).
+    * `up.rechunk(out_chunks)` — upscale_streaming.py:126), an explicit
+    * opt-in: each chunk cuts the sub-boxes that meet target cells and
+    * [[assemble]] places them into each target cell, allocated once from
+    * the new grid. Shuffled bytes = the volume body exactly once (no
+    * halo, no amplification).
     */
   def rechunk(newChunkZ: Int, newChunkY: Int, newChunkX: Int): ChunkVolume = {
     val bpp = meta.bytesPerVoxel
@@ -585,27 +542,45 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
         val gz0 = math.max(c.z0, tz * newChunkZ); val gz1 = math.min(c.z0 + c.nz, (tz + 1) * newChunkZ)
         val gy0 = math.max(c.y0, ty * newChunkY); val gy1 = math.min(c.y0 + c.ny, (ty + 1) * newChunkY)
         val gx0 = math.max(c.x0, tx * newChunkX); val gx1 = math.min(c.x0 + c.nx, (tx + 1) * newChunkX)
-        val box = ChunkKernels.extractBox(
-          c.data, c.ny, c.nx, bpp,
-          (gz0 - c.z0).toInt, (gy0 - c.y0).toInt, (gx0 - c.x0).toInt,
-          (gz1 - gz0).toInt, (gy1 - gy0).toInt, (gx1 - gx0).toInt)
-        (tz.toInt, ty.toInt, tx.toInt, gz0, gy0, gx0,
-          (gz1 - gz0).toInt, (gy1 - gy0).toInt, (gx1 - gx0).toInt, box)
+        val (bnz, bny, bnx) = ((gz1 - gz0).toInt, (gy1 - gy0).toInt, (gx1 - gx0).toInt)
+        (tz.toInt, ty.toInt, tx.toInt, false, gz0, gy0, gx0, bnz, bny, bnx, ChunkKernels.extractBox(
+          c.data, c.ny, c.nx, bpp, (gz0 - c.z0).toInt, (gy0 - c.y0).toInt, (gx0 - c.x0).toInt, bnz, bny, bnx))
       }
     }
-    val out = pieces
-      .groupByKey(p => (p._1, p._2, p._3))
-      .mapGroups { (key, it) =>
-        val (tz, ty, tx) = key
-        val (z0, y0, x0, nz, ny, nx) = grid.cell(tz, ty, tx)
-        val data = new Array[Byte](nz * ny * nx * bpp)
-        it.foreach { case (_, _, _, gz0, gy0, gx0, bnz, bny, bnx, box) =>
-          ChunkKernels.placeBox(data, ny, nx, bpp,
-            (gz0 - z0).toInt, (gy0 - y0).toInt, (gx0 - x0).toInt, bnz, bny, bnx, box)
-        }
-        Chunk(tz, ty, tx, z0, y0, x0, nz, ny, nx, data)
+    ChunkVolume(assemble(pieces, pad = 0, Some(grid))(Iterator.single(_)), grid)
+  }
+
+  /** The one step that moves chunk bodies ([[rechunk]], [[outline]], the
+    * halo stencils): ONE groupByKey on the pieces' target cells, then
+    * each cell places its pieces by global origin (`ChunkKernels.placeBox`)
+    * into one zeroed frame, the cell's extent padded by `pad` voxels a
+    * side, and `emit` turns the cell — a Chunk whose `data` is that
+    * frame — into output rows. The extent is `grid.cell` when a grid is
+    * given (pieces stream into the frame), else the cell's core piece's:
+    * [[decimate]] leaves a grid that is not uniform, so `meta.cell` would
+    * misplace a halo stencil run on it. Each body byte moves once.
+    */
+  private def assemble[U: Encoder](pieces: Dataset[Piece], pad: Int, grid: Option[VolumeMeta] = None)(
+      emit: Chunk => Iterator[U]): Dataset[U] = {
+    val bpp = meta.bytesPerVoxel
+    import chunks.sparkSession.implicits._
+    pieces.groupByKey(p => (p._1, p._2, p._3)).flatMapGroups { (key, it) =>
+      val (cz, cy, cx) = key
+      val (parts, (z0, y0, x0, nz, ny, nx)) = grid match {
+        case Some(g) => (it, g.cell(cz, cy, cx))
+        case None =>
+          val all = it.toArray
+          val core = all.find(_._4).get
+          (all.iterator, (core._5, core._6, core._7, core._8, core._9, core._10))
       }
-    ChunkVolume(out, grid)
+      val (py, px) = (ny + 2 * pad, nx + 2 * pad)
+      val frame = new Array[Byte]((nz + 2 * pad) * py * px * bpp)
+      parts.foreach { case (_, _, _, _, gz0, gy0, gx0, bnz, bny, bnx, data) =>
+        ChunkKernels.placeBox(frame, py, px, bpp,
+          (gz0 - z0 + pad).toInt, (gy0 - y0 + pad).toInt, (gx0 - x0 + pad).toInt, bnz, bny, bnx, data)
+      }
+      emit(Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, frame))
+    }
   }
 
   /** Long-form VoxelTable view: DataFrame(z,y,x,label) — for joining into
@@ -798,6 +773,13 @@ object ChunkVolume {
       }
     ChunkVolume(out, meta)
   }
+
+  /** A box of chunk body bound for grid cell (cz, cy, cx) — whether it
+    * is that cell's own core, its global origin (z0, y0, x0), extents
+    * (nz, ny, nx) and C-order bytes — the unit [[ChunkVolume.assemble]]
+    * moves.
+    */
+  private type Piece = (Int, Int, Int, Boolean, Long, Long, Long, Int, Int, Int, Array[Byte])
 
   /** Reads grid cell (cz, cy, cx) of a volume's `meta` on the driver. */
   private[graft] type CellLoader = (Int, Int, Int) => Chunk

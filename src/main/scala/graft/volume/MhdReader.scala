@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   */
 object MhdReader {
 
-  def read(spark: SparkSession, mhdPath: String, targetChunkMb: Int = 128): ChunkVolume = {
+  def read(spark: SparkSession, mhdPath: String): ChunkVolume = {
     val mhd = MhdMeta.parse(mhdPath)(FioConf.of(spark))
-    val (cz, cy, cx) = ChunkPlanner.chooseChunks(mhd.shapeZyx, mhd.bytesPerVoxel, targetChunkMb)
+    val (cz, cy, cx) = ChunkPlanner.chooseChunks(mhd.shapeZyx, mhd.bytesPerVoxel)
     read(spark, mhd, cz, cy, cx)
   }
 

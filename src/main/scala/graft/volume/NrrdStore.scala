@@ -155,10 +155,9 @@ object NrrdStore {
     } finally in.close()
   }
 
-  def read(spark: SparkSession, path: String, targetChunkMb: Int = 128): ChunkVolume = {
+  def read(spark: SparkSession, path: String): ChunkVolume = {
     val n = parseHeader(path)(FioConf.of(spark))
-    val (cz, cy, cx) = ChunkPlanner.chooseChunks(
-      (n.dimZ, n.dimY, n.dimX), n.bytesPerVoxel, targetChunkMb)
+    val (cz, cy, cx) = ChunkPlanner.chooseChunks((n.dimZ, n.dimY, n.dimX), n.bytesPerVoxel)
     read(spark, n, cz, cy, cx)
   }
 

@@ -260,6 +260,18 @@ object Tiff {
       throw new IllegalArgumentException(
         s"unsupported TIFF sample type (bits=$bits, format=$sampleFormat)"))
 
+  /** The first page of a stack, which every page must match in shape
+    * and dtype.
+    */
+  private def firstPage(tm: TiffMeta, path: String): Page = {
+    require(tm.pages.nonEmpty, s"no pages in $path")
+    val p0 = tm.pages.head
+    require(tm.pages.forall(p => p.width == p0.width && p.height == p0.height &&
+        p.bits == p0.bits && p.sampleFormat == p0.sampleFormat),
+      s"$path: pages disagree on shape/dtype")
+    p0
+  }
+
   /** The volume header of a TIFF stack as a synthetic [[MhdMeta]] — what
     * lets the CLI lifecycle (chunk planning, size estimate, admission
     * control, plan report) treat `--input vol.tif` exactly like an MHD,
@@ -268,11 +280,7 @@ object Tiff {
     */
   def mhdMeta(path: String)(implicit fc: FioConf): MhdMeta = {
     val tm = parseMeta(path)
-    require(tm.pages.nonEmpty, s"no pages in $path")
-    val p0 = tm.pages.head
-    require(tm.pages.forall(p => p.width == p0.width && p.height == p0.height &&
-        p.bits == p0.bits && p.sampleFormat == p0.sampleFormat),
-      s"$path: pages disagree on shape/dtype")
+    val p0 = firstPage(tm, path)
     val abs = Fio.qualify(path)
     MhdMeta(
       dimX = p0.width.toLong, dimY = p0.height.toLong, dimZ = tm.pages.length.toLong,
@@ -439,19 +447,14 @@ object Tiff {
     * little-endian chunk layout at read, same as [[MhdReader]] does for
     * ByteOrderMSB raws.
     */
-  def read(spark: SparkSession, path: String,
-      spacing: (Double, Double, Double) = (1.0, 1.0, 1.0)): ChunkVolume = {
+  def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val tm = parseMeta(path)
-    require(tm.pages.nonEmpty, s"no pages in $path")
-    val p0 = tm.pages.head
-    require(tm.pages.forall(p => p.width == p0.width && p.height == p0.height &&
-        p.bits == p0.bits && p.sampleFormat == p0.sampleFormat),
-      s"$path: pages disagree on shape/dtype")
+    val p0 = firstPage(tm, path)
     val elementType = elementTypeOf(p0.bits, p0.sampleFormat)
     val bpp = p0.bits / 8
     val meta = VolumeMeta.uniform(tm.pages.length, p0.height, p0.width, 1, p0.height, p0.width,
-      elementType, spacing)
+      elementType)
     // per-page strip/tile tables ship in the task closure: O(pages·strips)
     // longs — IFD metadata, not pixel data
     val pages = tm.pages.toArray

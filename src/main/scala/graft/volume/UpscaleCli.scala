@@ -20,7 +20,9 @@ import org.apache.spark.sql.SparkSession
   * Blosc BITSHUFFLE output formats (upscale_streaming.py:103–108).
   * `--format graftchunks` writes a zarr v2 array (zstd level 1) plus its
   * per-chunk label value index ([[ChunkStore]]); `--compressor` does not
-  * apply to it.
+  * apply to it. `--pyramid-levels > 1` writes an OME-Zarr v2 group under
+  * `--format zarr` and an OME-NGFF 0.5 (zarr v3) group under `zarr3`;
+  * the other two formats take no pyramid.
   */
 object UpscaleCli {
 
@@ -54,7 +56,11 @@ object UpscaleCli {
       case "--compressor" :: v :: t => loop(t, acc.copy(compressor = v))
       case other :: _ => throw new IllegalArgumentException(s"unknown argument: $other")
     }
-    val a = loop(argv.toList, Args())
+    validate(loop(argv.toList, Args()))
+  }
+
+  /** `a`, if its flags are consistent; checked before any I/O. */
+  private def validate(a: Args): Args = {
     require(a.input.nonEmpty, "--input is required")
     require(a.output.nonEmpty || a.dryRun, "--output is required unless --dry-run")
     require(a.scale >= 1, "--scale must be >= 1")
@@ -63,6 +69,8 @@ object UpscaleCli {
     require(
       Set("zarr", "zarr3", "zarr3-sharded", "graftchunks").contains(a.format),
       "--format must be zarr|zarr3|zarr3-sharded|graftchunks")
+    require(a.pyramidLevels == 1 || a.format == "zarr" || a.format == "zarr3",
+      s"--pyramid-levels ${a.pyramidLevels} needs --format zarr|zarr3, got --format ${a.format}")
     ZarrStore.codecNamed(a.compressor) // validate eagerly
     a
   }
@@ -73,6 +81,7 @@ object UpscaleCli {
     * without --force.
     */
   def run(spark: SparkSession, a: Args, live: String => Unit = null): Seq[String] = {
+    validate(a)
     val out = Seq.newBuilder[String]
     // --input *.tif/*.tiff takes the reference's legacy TIFF path
     // (anno_upsampling.py:33): same lifecycle, general Tiff scan
@@ -87,8 +96,8 @@ object UpscaleCli {
     out += (if (isTiff) s"Using input chunks (z,y,x): $chunks  (TIFF page granularity)"
             else s"Using input chunks (z,y,x): $chunks  (~${a.chunkMb} MB target per chunk)")
     val est = ChunkPlanner.estimateOutputGb(meta.shapeZyx, meta.bytesPerVoxel, a.scale, a.pyramidLevels)
-    out += ChunkPlanner.planReport(meta, a.scale, a.chunkMb, chunks, a.mode, a.pyramidLevels,
-      a.output, "zstd")
+    out += ChunkPlanner.planReport(meta, a.scale, a.chunkMb, chunks, a.mode, a.pyramidLevels, a.output,
+      if (a.format == "graftchunks") s"zstd level ${ChunkStore.Codec.level} (graftchunks)" else a.compressor)
     ChunkPlanner.guard(a.scale, est, a.maxGb, a.pyramidLevels, a.force) match {
       case ChunkPlanner.Admitted => ()
       case ChunkPlanner.Rejected(reasons) =>
@@ -120,7 +129,10 @@ object UpscaleCli {
     // ProgressBar parity (upscale.py:23): stage-level progress lines
     // stream to `live` DURING execute and join the transcript after.
     val (written, progress) = graft.plans.ProgressReporter.withProgress(spark.sparkContext, live) {
-      if (a.pyramidLevels > 1) {
+      if (a.pyramidLevels > 1 && a.format == "zarr3") {
+        PyramidWriter.writeV3(processed, a.pyramidLevels, a.output, a.scale, codec)
+        s"OME-NGFF 0.5 pyramid (${a.pyramidLevels} levels)"
+      } else if (a.pyramidLevels > 1) {
         PyramidWriter.write(processed, a.pyramidLevels, a.output, a.scale, codec)
         s"OME-Zarr pyramid (${a.pyramidLevels} levels)"
       } else if (a.format == "zarr") {

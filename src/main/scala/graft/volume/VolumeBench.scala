@@ -102,10 +102,10 @@ object VolumeBench {
     * shuffling would dominate).
     */
   def upscaleZarr(spark: SparkSession, mhdPath: String, s: Int, outDir: String,
-      shuffle: Int = 1, cname: String = "zstd", clevel: Int = 3): Double =
+      shuffle: Int = 1, clevel: Int = 3): Double =
     timedUpscale(spark, mhdPath, s) { vol =>
       ZarrStore.write(vol, outDir,
-        ZarrStore.BloscCodec(cname, clevel, shuffle = shuffle),
+        ZarrStore.BloscCodec("zstd", clevel, shuffle = shuffle),
         extraAttrs = Map("source" -> mhdPath, "scale" -> s.toString))
     }
 

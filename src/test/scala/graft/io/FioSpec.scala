@@ -105,7 +105,7 @@ class FioSpec extends AnyFunSuite with SparkSpec {
     // NRRD: positioned-write sink (posix escape hatch) then Fio read-back
     val nrrd = s"file://$dir/vol.nrrd"
     NrrdStore.write(vol, nrrd)
-    val backN = NrrdStore.read(spark, nrrd, targetChunkMb = 1)
+    val backN = NrrdStore.read(spark, nrrd)
     assert(voxelSums(backN) == voxelSums(vol))
     // BigTIFF positioned-write sink, read back through the TIFF scan
     val bt = s"file://$dir/vol.tif"

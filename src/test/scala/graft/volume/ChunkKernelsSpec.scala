@@ -101,15 +101,15 @@ class ChunkKernelsSpec extends AnyFunSuite {
     // single chunk == whole volume: halo planes are the wrap-around faces
     val (nz, ny, nx) = (5, 4, 6)
     def label(z: Int, y: Int, x: Int): Long = (z / 2 * 100 + y / 2 * 10 + x / 3).toLong
-    val data = pack(nz, ny, nx, label)
-    import ChunkKernels._
-    def face(bz: Int, by: Int, bx: Int, bnz: Int, bny: Int, bnx: Int): Array[Byte] =
-      extractBox(data, ny, nx, 4, bz, by, bx, bnz, bny, bnx)
-    val out = outline(
-      data, nz, ny, nx, 4,
-      zm = face(nz - 1, 0, 0, 1, ny, nx), zp = face(0, 0, 0, 1, ny, nx),
-      ym = face(0, ny - 1, 0, nz, 1, nx), yp = face(0, 0, 0, nz, 1, nx),
-      xm = face(0, 0, nx - 1, nz, ny, 1), xp = face(0, 0, 0, nz, ny, 1))
+    // the (nz+2, ny+2, nx+2) frame the halo exchange assembles: the core
+    // plus the wrap-around face planes in its pad. Edge and corner cells
+    // are never shipped; a sentinel there fails a kernel that reads them
+    def outside(p: Int, n: Int): Int = if (p == 0 || p == n + 1) 1 else 0
+    val frame = pack(nz + 2, ny + 2, nx + 2, { (pz, py, px) =>
+      if (outside(pz, nz) + outside(py, ny) + outside(px, nx) > 1) 999999L
+      else label((pz - 1 + nz) % nz, (py - 1 + ny) % ny, (px - 1 + nx) % nx)
+    })
+    val out = ChunkKernels.outline(frame, nz, ny, nx, 4)
     for (z <- 0 until nz; y <- 0 until ny; x <- 0 until nx) {
       val v = label(z, y, x)
       val differs = Seq(

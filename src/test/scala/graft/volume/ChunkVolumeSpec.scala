@@ -79,6 +79,19 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     assert(chunkForm === longForm)
   }
 
+  test("outline and the halo stencils on a decimated grid equal the long forms") {
+    // (5,4,6) on (12,10,14) decimates to z extents 3, 2, 1 under a meta
+    // chunkZ of 3: not uniform, so each frame must take its extent from
+    // the cell's own core, not from meta.cell
+    val dec = vol.decimate()
+    assert(dec.chunks.collect().map(_.nz).distinct.sorted.toSeq === Seq(1, 2, 3))
+    val (ddz, ddy, ddx) = (dec.meta.dimZ, dec.meta.dimY, dec.meta.dimX)
+    val decVox = VoxelOps.decimate(vox)
+    assert(collectVox(dec.outline().toVoxels) === collectVox(VoxelOps.outline(decVox, ddz, ddy, ddx)))
+    assert(collectVox(dec.erodeVoxels) === collectVox(VoxelOps.erode6(decVox, ddz, ddy, ddx)))
+    assert(collectVox(dec.boxSumVoxels) === collectVox(VoxelOps.boxSum3(decVox, ddz, ddy, ddx)))
+  }
+
   test("pointLookup without a cell loader runs a job; None off the array") {
     // fromVoxels has no driver-side cell loader, so each lookup runs the
     // one-voxel-box job

@@ -213,6 +213,46 @@ class UpscaleCliSpec extends AnyFunSuite with SparkSpec {
     val forced = UpscaleCli.run(spark, UpscaleCli.Args(
       input = fixtureDir.resolve("f.mhd").toString, scale = 21, dryRun = true, force = true))
     assert(forced.last === "Dry run: no compute executed.")
+
+    // the plan names the codec the chosen format really writes
+    def compressorLine(a: UpscaleCli.Args): String =
+      UpscaleCli.run(spark, a).mkString("\n").linesIterator.find(_.contains("Compressor")).get.trim
+    val dry = UpscaleCli.Args(input = fixtureDir.resolve("f.mhd").toString, dryRun = true)
+    assert(compressorLine(dry.copy(compressor = "blosc-zstd")) === "Compressor          : blosc-zstd")
+    assert(compressorLine(dry.copy(format = "graftchunks", compressor = "lz4")) ===
+      "Compressor          : zstd level 1 (graftchunks)")
+  }
+
+  test("--pyramid-levels with --format zarr3 writes an NGFF 0.5 group; sharded and graftchunks refuse") {
+    val out = fixtureDir.resolve("pyr_v3").toString
+    val lines = UpscaleCli.run(spark, UpscaleCli.Args(
+      input = fixtureDir.resolve("f.mhd").toString, output = out, scale = 2, chunkMb = 1,
+      pyramidLevels = 2, format = "zarr3", compressor = "blosc-zstd", force = true))
+    assert(lines.exists(_.startsWith("Finished. OME-NGFF 0.5 pyramid (2 levels) written to:")))
+    val l0 = PyramidWriter.readLevelV3(spark, out, 0)
+    val l1 = PyramidWriter.readLevelV3(spark, out, 1)
+    assert((l0.meta.dimZ, l0.meta.dimY, l0.meta.dimX) === ((12L, 16L, 20L)))
+    assert((l1.meta.dimZ, l1.meta.dimY, l1.meta.dimX) === ((6L, 8L, 10L)))
+    def vox(v: ChunkVolume) = v.toVoxels.orderBy("z", "y", "x").collect()
+    assert(vox(l0) === vox(composedX2))
+    // level 1 decimates the x2 upscale back to the fixture itself
+    assert(vox(l1).forall(r =>
+      r.getLong(3) === 15564L + r.getLong(0) / 2 * 10 + r.getLong(1) / 4))
+    // chunk files byte-identical to the composed plan's, with the same codec
+    val ref = fixtureDir.resolve("pyr_v3_ref")
+    PyramidWriter.writeV3(composedX2, 2, ref.toString, 2, ZarrStore.codecNamed("blosc-zstd"))
+    UpscaleIdentitySpec.assertSameStore(ref, Paths.get(out), chunkFilesOnly = true)
+    // the formats without a pyramid writer are refused before any I/O,
+    // naming both flags: the input does not exist
+    for (format <- Seq("zarr3-sharded", "graftchunks")) {
+      val argv = Seq("--input", "/nonexistent/a.mhd", "--output", "o",
+        "--pyramid-levels", "2", "--format", format)
+      val e = intercept[IllegalArgumentException](UpscaleCli.parseArgs(argv))
+      assert(e.getMessage.contains("--pyramid-levels") && e.getMessage.contains(s"--format $format"))
+      val r = intercept[IllegalArgumentException](UpscaleCli.run(spark, UpscaleCli.Args(
+        input = "/nonexistent/a.mhd", output = "o", pyramidLevels = 2, format = format, force = true)))
+      assert(r.getMessage === e.getMessage)
+    }
   }
 
   test("outline mode and pyramid mode write their artifacts") {
