@@ -56,13 +56,25 @@ object ZarrStore {
   sealed trait Codec {
     def id: Option[String]
     def compress(src: Array[Byte]): Array[Byte]
+    /** [[compress]] of a C-order chunk payload whose rows are `rowLen`
+      * bytes: the same output bytes, which a codec may produce faster by
+      * knowing the row layout ([[BloscCodec]] copies the shuffle of a
+      * repeated row). Every other codec ignores the hint.
+      */
+    def compress(src: Array[Byte], rowLen: Int): Array[Byte] = compress(src)
+    /** The `rawLen` bytes `src` encodes; a stream that decodes to any
+      * other length fails.
+      */
     def decompress(src: Array[Byte], rawLen: Int): Array[Byte]
   }
 
   case object Raw extends Codec {
     val id: Option[String] = None
     def compress(src: Array[Byte]): Array[Byte] = src
-    def decompress(src: Array[Byte], rawLen: Int): Array[Byte] = src
+    def decompress(src: Array[Byte], rawLen: Int): Array[Byte] = {
+      require(src.length == rawLen, s"raw chunk holds ${src.length} bytes, expected $rawLen")
+      src
+    }
   }
 
   /** numcodecs `zlib`: RFC-1950 stream, exactly python zlib.compress. */
@@ -79,14 +91,27 @@ object ZarrStore {
       } finally d.end()
     }
     def decompress(src: Array[Byte], rawLen: Int): Array[Byte] = {
+      val out = new Array[Byte](rawLen)
+      Zlib.inflateInto(src, 0, src.length, out, 0, rawLen)
+      out
+    }
+  }
+
+  object Zlib {
+    /** Inflate the stream `src[off, off+len)` into `dst[dOff, dOff+n)`,
+      * failing unless it holds exactly `n` bytes' worth. A truncated
+      * stream stops when its input runs out (`inflate` returns 0 from then
+      * on, so looping until `finished` would spin forever).
+      */
+    private[volume] def inflateInto(
+        src: Array[Byte], off: Int, len: Int, dst: Array[Byte], dOff: Int, n: Int): Unit = {
       val inf = new Inflater()
       try {
-        inf.setInput(src)
-        val out = new Array[Byte](rawLen)
-        var off = 0
-        while (off < rawLen && !inf.finished()) off += inf.inflate(out, off, rawLen - off)
-        require(off == rawLen, s"zlib chunk shorter than expected: $off/$rawLen")
-        out
+        inf.setInput(src, off, len)
+        var got = 0
+        while (got < n && !inf.finished() && !inf.needsInput() && !inf.needsDictionary())
+          got += inf.inflate(dst, dOff + got, n - got)
+        require(got == n, s"zlib chunk shorter than expected: $got/$n")
       } finally inf.end()
     }
   }
@@ -108,8 +133,21 @@ object ZarrStore {
     }
     def decompress(src: Array[Byte], rawLen: Int): Array[Byte] = {
       val out = new Array[Byte](rawLen)
-      com.github.luben.zstd.Zstd.decompressByteArray(out, 0, rawLen, src, 0, src.length)
+      ZstdCodec.decompressInto(src, 0, src.length, out, 0, rawLen)
       out
+    }
+  }
+
+  object ZstdCodec {
+    /** Decompress the frame(s) `src[off, off+len)` into `dst[dOff, dOff+n)`
+      * through the calling thread's reused native context, failing unless
+      * they decode to exactly `n` bytes: zstd returns a short length
+      * without complaint, which would read back as zero-filled voxels.
+      */
+    private[volume] def decompressInto(
+        src: Array[Byte], off: Int, len: Int, dst: Array[Byte], dOff: Int, n: Int): Unit = {
+      val got = BloscCodec.scratch.get().dctx.decompressByteArray(dst, dOff, n, src, off, len)
+      require(got == n, s"zstd chunk decoded to $got bytes, expected $n")
     }
   }
 
@@ -173,9 +211,11 @@ object ZarrStore {
       decompress(src, 0, rawLen)
     def decompress(src: Array[Byte], off: Int, rawLen: Int): Array[Byte] = {
       val out = new Array[Byte](rawLen)
-      factory.fastDecompressor().decompress(src, off, out, 0, rawLen)
+      decompressInto(src, off, out, 0, rawLen)
       out
     }
+    def decompressInto(src: Array[Byte], off: Int, dst: Array[Byte], dOff: Int, n: Int): Unit =
+      factory.fastDecompressor().decompress(src, off, dst, dOff, n)
   }
 
   /** The bitshuffle transform (kiyo-masui/bitshuffle, as embedded in
@@ -255,9 +295,17 @@ object ZarrStore {
     }
 
     def unshuffle(src: Array[Byte], len: Int, t: Int): Array[Byte] = {
+      val out = new Array[Byte](len)
+      unshuffleInto(src, len, t, out, 0)
+      out
+    }
+
+    /** [[unshuffle]] of `src[0, len)` into `out[ooff, ooff+len)`: the
+      * blosc decoder restores each block straight into the chunk.
+      */
+    def unshuffleInto(src: Array[Byte], len: Int, t: Int, out: Array[Byte], ooff: Int): Unit = {
       val n = len / t
       val m = n - n % 8
-      val out = new Array[Byte](len)
       if (m > 0) {
         val rowB = m >>> 3
         var k = 0
@@ -268,7 +316,7 @@ object ZarrStore {
           val o4 = o3 + rowB; val o5 = o4 + rowB; val o6 = o5 + rowB; val o7 = o6 + rowB
           val stride8 = t << 3
           var q = 0
-          var p = outK
+          var p = ooff + outK
           while (q < rowB) {
             var x = (src(o0 + q) & 0xffL) |
               ((src(o1 + q) & 0xffL) << 8) |
@@ -293,9 +341,7 @@ object ZarrStore {
           k += 1
         }
       }
-      var i = m * t
-      while (i < len) { out(i) = src(i); i += 1 }
-      out
+      System.arraycopy(src, m * t, out, ooff + m * t, len - m * t)
     }
   }
 
@@ -352,7 +398,17 @@ object ZarrStore {
     private[graft] def withTypesize(t: Int): BloscCodec =
       copy(typesize = math.max(1, math.min(t, 255)))
 
-    def compress(src: Array[Byte]): Array[Byte] = {
+    def compress(src: Array[Byte]): Array[Byte] = compress(src, 0)
+
+    /** The container of `src`, a C-order chunk whose rows are `rowLen`
+      * bytes ([[ZarrStore.encodeChunkBytes]] passes `chunkX · bpp`; `0`
+      * means no row layout is known). Only the byte shuffle uses the hint:
+      * a row equal to the row before it in the same block copies that
+      * row's shuffled planes ([[ByteKernels.shuffleRowsInto]]), so a ×s
+      * nearest-neighbour child shuffles each distinct row once. The output
+      * bytes are the same with and without it.
+      */
+    override def compress(src: Array[Byte], rowLen: Int): Array[Byte] = {
       val t = typesize
       val sh = effShuffle
       // one block per typesize·8-aligned MB-scale unit; whole chunk if
@@ -391,7 +447,7 @@ object ZarrStore {
         sh match {
           case 1 =>
             plainArr = scr.ensurePlain(len); plainOff = 0
-            ByteKernels.shuffleInto(src, off, len, t, plainArr)
+            ByteKernels.shuffleRowsInto(src, off, len, t, rowLen, plainArr)
           case 2 =>
             plainArr = scr.ensurePlain(len); plainOff = 0
             BitShuffle.shuffleInto(src, off, len, t, plainArr)
@@ -450,20 +506,24 @@ object ZarrStore {
   }
 
   object BloscCodec {
-    /** Per-thread encoder scratch: one shuffled-block buffer, one zstd
-      * destination buffer, one payload accumulator, and one reused native
-      * zstd context (the static `Zstd.compress` entry builds and frees a
-      * native context per call). Executor task threads are pooled, so the
-      * working set is bounded by thread count × ~3 block sizes and lives
-      * for the JVM — the per-block allocation churn it replaces was ~2×
-      * the volume's logical bytes per sink write.
+    /** Per-thread codec scratch: for the encoder one shuffled-block
+      * buffer, one zstd destination buffer, one payload accumulator and one
+      * reused native zstd context (the static `Zstd.compress` entry builds
+      * and frees a native context per call); for the decoder one
+      * shuffled-block buffer and one native zstd decompression context.
+      * Executor task threads are pooled, so the working set is bounded by
+      * thread count × ~4 block sizes and lives for the JVM — the per-block
+      * allocation churn it replaces was ~2× the volume's logical bytes per
+      * sink write.
       */
     private[volume] final class Scratch {
       private var plain: Array[Byte] = Array.emptyByteArray
       private var dst: Array[Byte] = Array.emptyByteArray
       private var payload: Array[Byte] = Array.emptyByteArray
+      private var block: Array[Byte] = Array.emptyByteArray
       private var ctx: com.github.luben.zstd.ZstdCompressCtx = null
       private var ctxLevel: Int = Int.MinValue
+      lazy val dctx: com.github.luben.zstd.ZstdDecompressCtx = new com.github.luben.zstd.ZstdDecompressCtx()
       def ensurePlain(n: Int): Array[Byte] = {
         if (plain.length < n) plain = ByteKernels.allocBytes(n)
         plain
@@ -475,6 +535,10 @@ object ZarrStore {
       def ensurePayload(n: Int): Array[Byte] = {
         if (payload.length < n) payload = ByteKernels.allocBytes(n)
         payload
+      }
+      def ensureBlock(n: Int): Array[Byte] = {
+        if (block.length < n) block = ByteKernels.allocBytes(n)
+        block
       }
       def zctx(level: Int): com.github.luben.zstd.ZstdCompressCtx = {
         if (ctx == null) ctx = new com.github.luben.zstd.ZstdCompressCtx()
@@ -518,18 +582,15 @@ object ZarrStore {
         return out
       }
       val format = flags >> 5
-      val codec: (Array[Byte], Int, Int, Int) => Array[Byte] = format match {
-        case 1 => (b, off, len, n) => Lz4Block.decompress(b, off, n)
-        case 3 => (b, off, len, n) => Zlib().decompress(java.util.Arrays.copyOfRange(b, off, off + len), n)
-        case 4 => (b, off, len, n) => ZstdCodec().decompress(java.util.Arrays.copyOfRange(b, off, off + len), n)
-        case other => throw new IllegalArgumentException(
-          s"blosc inner codec id $other unsupported (1=lz4, 3=zlib, 4=zstd)")
-      }
+      require(format == 1 || format == 3 || format == 4,
+        s"blosc inner codec id $format unsupported (1=lz4, 3=zlib, 4=zstd)")
       val byteShuffle = (flags & 0x1) != 0
       val bitShuffle = (flags & 0x4) != 0
       require(!(byteShuffle && bitShuffle), "blosc flags set both byte and bit shuffle")
       val nBlocks = math.max(1, (nbytes + blockSize - 1) / blockSize)
-      val bstarts = (0 until nBlocks).map(i => buf.getInt(16 + 4 * i))
+      // streams of a shuffled block land in the thread's block buffer and
+      // are unshuffled into `out`; an unshuffled block decodes in place
+      val block = if (byteShuffle || bitShuffle) scratch.get().ensureBlock(math.min(blockSize, nbytes)) else null
       var b = 0
       while (b < nBlocks) {
         val off = b * blockSize
@@ -537,35 +598,23 @@ object ZarrStore {
         val leftover = neblock != blockSize
         val nsplits = if (!leftover && splitsBlock(format, t, blockSize)) t else 1
         val ne = neblock / nsplits
-        val plain = new Array[Byte](neblock)
-        var p = bstarts(b)
+        val (dst, dOff) = if (block == null) (out, off) else (block, 0)
+        var p = buf.getInt(16 + 4 * b)
         var s = 0
         while (s < nsplits) {
           val csize = buf.getInt(p)
-          val part =
-            if (csize == ne) java.util.Arrays.copyOfRange(src, p + 4, p + 4 + ne)
-            else codec(src, p + 4, csize, ne)
-          System.arraycopy(part, 0, plain, s * ne, ne)
+          val at = dOff + s * ne
+          if (csize == ne) System.arraycopy(src, p + 4, dst, at, ne)
+          else format match {
+            case 1 => Lz4Block.decompressInto(src, p + 4, dst, at, ne)
+            case 3 => Zlib.inflateInto(src, p + 4, csize, dst, at, ne)
+            case _ => ZstdCodec.decompressInto(src, p + 4, csize, dst, at, ne)
+          }
           p += 4 + csize
           s += 1
         }
-        val restored =
-          if (byteShuffle) {
-            val tmp = new Array[Byte](neblock)
-            val n = neblock / t
-            var k = 0
-            while (k < t) {
-              var i = 0
-              while (i < n) { tmp(i * t + k) = plain(k * n + i); i += 1 }
-              k += 1
-            }
-            var r = n * t
-            while (r < neblock) { tmp(r) = plain(r); r += 1 }
-            tmp
-          } else if (bitShuffle) {
-            BitShuffle.unshuffle(plain, neblock, t)
-          } else plain
-        System.arraycopy(restored, 0, out, off, neblock)
+        if (byteShuffle) ByteKernels.unshuffleInto(block, 0, neblock, t, out, off)
+        else if (bitShuffle) BitShuffle.unshuffleInto(block, neblock, t, out, off)
         b += 1
       }
       out
@@ -759,7 +808,10 @@ object ZarrStore {
 
   /** Validate, pad, and compress ONE chunk to its zarr file bytes — the
     * one encoder of the v2 writers (batch and DSv2) and the v3 writers
-    * (`Zarr3Store`, plain and sharded).
+    * (`Zarr3Store`, plain and sharded) and so of the pyramid. The padded
+    * payload's rows are `chunkX · bpp` bytes; the codec gets that row
+    * length ([[Codec.compress]]`(src, rowLen)`), which blosc's byte
+    * shuffle uses to copy repeated rows instead of re-shuffling them.
     */
   private[graft] def encodeChunkBytes(c: Chunk, meta: VolumeMeta, codec: Codec): Array[Byte] = {
     val (ckZ, ckY, ckX) = meta.chunkShape
@@ -773,7 +825,7 @@ object ZarrStore {
         ChunkKernels.placeBox(padded, ckY, ckX, bpp, 0, 0, 0, c.nz, c.ny, c.nx, c.data)
         padded
       }
-    codec.compress(payload)
+    codec.compress(payload, ckX * bpp)
   }
 
   /** zarr requires a UNIFORM grid (edge chunks trail): reject a chunk

@@ -141,6 +141,41 @@ class ZarrReadPruneSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a short or cut-off chunk file fails naming that file, never reads back zero-filled or hangs") {
+    // a (2,3,3) uint32 chunk is 72 bytes; the stray file encodes 64
+    val small = Array.tabulate[Byte](64)(i => (i % 4 + 1).toByte)
+    val blosc = ZarrStore.BloscCodec("zstd", 3, shuffle = 1, typesize = 4)
+    // blosc's header records the short length, which the reader checks;
+    // with the header's nbytes and blocksize set to the full chunk, only
+    // the inner zstd stream is short
+    val bloscInnerShort = {
+      val b = blosc.compress(small)
+      ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).putInt(4, 72).putInt(8, 72)
+      b
+    }
+    for ((name, codec, stray) <- Seq(
+        ("zstd", ZarrStore.ZstdCodec(3), ZarrStore.ZstdCodec(3).compress(small)),
+        ("blosc-zstd", blosc, blosc.compress(small)),
+        ("blosc-zstd inner stream", blosc, bloscInnerShort),
+        ("raw", ZarrStore.Raw, small),
+        // a cut-off file: the inflater runs out of input before the end
+        ("truncated zlib", ZarrStore.Zlib(5), {
+          val z = ZarrStore.Zlib(5).compress(Array.tabulate[Byte](72)(i => (i * 7).toByte))
+          java.util.Arrays.copyOf(z, z.length / 2)
+        }))) {
+      val store = tmp("short")
+      ZarrStore.write(vol, store, codec)
+      val f = Paths.get(store, "1.1.0")
+      Files.write(f, stray)
+      val back = ZarrStore.read(spark, store)
+      for ((how, e) <- Seq("scan" -> intercept[Exception](back.chunks.collect()),
+          "point lookup" -> intercept[Exception](back.pointLookup(2, 3, 0)))) {
+        val failed = messages(e)
+        assert(failed.contains(s"$f failed to decode"), s"$name $how: no chunk file named in\n$failed")
+      }
+    }
+  }
+
   test("format(\"zarr\") cuts the cells it keeps as ZarrStore.read cuts its grid") {
     val store = tmp("arr")
     ZarrStore.write(vol, store, ZarrStore.Zlib(5))

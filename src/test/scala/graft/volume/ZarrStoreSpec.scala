@@ -285,6 +285,40 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("encodeChunkBytes of ×s children is the hint-free blosc container, byte for byte") {
+    // the row-aware byte shuffle must not change one byte of any chunk
+    // file: each ×s child (padded edge chunks included) encodes exactly as
+    // compress(src) encodes its padded payload, for every shuffle mode
+    val codecs = for (cn <- Seq("zstd", "lz4"); sh <- Seq(-1, 0, 1, 2)) yield ZarrStore.BloscCodec(cn, 3, sh)
+    def label(z: Int, y: Int, x: Int): Long = ((z * 7 + y) * 13 + x * 5) % 23 + 1000
+    def children(et: String, dims: (Int, Int, Int), grid: (Int, Int, Int), s: Int) = {
+      val (nz, ny, nx) = dims
+      val meta = VolumeMeta.uniform(nz, ny, nx, grid._1, grid._2, grid._3, et)
+      val bpp = meta.bytesPerVoxel
+      val data = new Array[Byte](nz * ny * nx * bpp)
+      for (z <- 0 until nz; y <- 0 until ny; x <- 0 until nx)
+        ChunkKernels.encodeLong(label(z, y, x), data, (z * ny + y) * nx + x, bpp)
+      val src = Chunk(0, 0, 0, 0, 0, 0, nz, ny, nx, data)
+      (src.children(s, meta, 0, 0, s, reuse = false).toSeq, meta.upscaled(s))
+    }
+    val cases =
+      (for (et <- Seq("MET_UINT", "MET_USHORT"); s <- Seq(1, 2, 3, 15))
+        yield (et, (3, 5, 7), (4, 6, 9), s)) :+
+        // children up to 5.4 MB: two 4 MiB blocks (the second starting
+        // mid-row, as 2112-byte rows do not divide 4 MiB) and a leftover
+        ("MET_UINT", (1, 22, 36), (8, 320, 528), 15)
+    for ((et, dims, grid, s) <- cases) {
+      val (kids, meta) = children(et, dims, grid, s)
+      assert(kids.exists(c => c.nz < grid._1 || c.ny < grid._2 || c.nx < grid._3), s"$et s=$s: no padded child")
+      for (c <- kids; codec <- codecs) {
+        val enc = ZarrStore.forElements(codec, meta.bytesPerVoxel)
+        val padded = ZarrStore.encodeChunkBytes(c, meta, ZarrStore.Raw)
+        assert(java.util.Arrays.equals(ZarrStore.encodeChunkBytes(c, meta, enc), enc.compress(padded)),
+          s"$et s=$s child (${c.cz},${c.cy},${c.cx}) $codec")
+      }
+    }
+  }
+
   test("bitshuffle kernel: matches the naive bit-matrix transpose; involution; tail verbatim") {
     val rnd = new scala.util.Random(11)
     // independent naive reference: out[(k*8+j)*(m/8)+q] bit r = bit j of
